@@ -571,27 +571,6 @@ def run_stream(sf_dir: str, cpus: int, replicate: int) -> dict:
         n_docs,
         "append",
     )
-    # TWS twin LAST: its helper switches the session state-store
-    # provider to RocksDB (a transformWithStateInPandas requirement),
-    # which later-started stateful queries would inherit. Skipped
-    # where google.protobuf (the TWS state-server wire protocol) is
-    # absent — mirrored by the skip-not-fake pytest contract.
-    from pymfe_spark.streaming.neardup import (
-        TWS_AVAILABLE,
-        streaming_neardup_candidates_tws,
-    )
-
-    if TWS_AVAILABLE:
-        drive(
-            streaming_neardup_candidates_tws(
-                spark, ddir, max_files_per_trigger=4
-            ),
-            "neardup_tws",
-            n_docs,
-            "append",
-        )
-    else:
-        out["neardup_tws"] = {"skipped": "google.protobuf unavailable"}
     spark.stop()
     return out
 

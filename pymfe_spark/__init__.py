@@ -13,9 +13,10 @@ Architecture (Spark-first):
   per-conversation aggregates, window lag/lead, sessionization, expanding
   point-in-time frames, as-of merges.
 - **Arrow tier**: matrix-shaped measures (covariance/eigen, pairwise
-  distances, clustering indexes) run as vectorized numpy kernels inside
-  ``groupBy(conv_id).applyInPandas`` — zero per-row Python, one Arrow
-  batch per conversation.
+  distances, clustering indexes) run as vectorized numpy kernels over
+  conversations streamed through one ``mapInPandas`` per partition,
+  which carries a conversation split across Arrow batches over to the
+  next batch — zero per-row Python.
 - **Scale**: salted repartition for mega-conversations, AQE enabled,
   range-partitioned ts buckets for resumable backfill with per-partition
   lineage.

@@ -99,8 +99,5 @@ def register(
 def load_catalog() -> dict[str, QueryEntry]:
     """Import all operator modules (idempotent) and return the catalog."""
     for mod in _OPERATOR_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass  # module not built yet (incremental rounds)
+        importlib.import_module(mod)
     return CATALOG

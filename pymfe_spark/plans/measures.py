@@ -1,6 +1,7 @@
 """Arrow-tier measure kernels — pure-numpy re-implementations of the
-reference's ft_* measures, executed per conversation batch inside
-``applyInPandas`` (zero per-row Python; one Arrow batch per conv).
+reference's ft_* measures, executed once per conversation by the
+``mapInPandas`` conversation stream, which carries a conversation split
+across Arrow batches over to the next batch (zero per-row Python).
 
 The sandbox has no scipy/sklearn, so every kernel is written from the
 published formulas; reference citations mark the parity target.

@@ -52,7 +52,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -62,20 +61,6 @@ from pyspark.sql.types import (
 )
 
 from pymfe_spark.operators.dedup import MAX_BAND_BUCKET, with_band_keys
-
-# transformWithStateInPandas talks to the JVM state server over a
-# protobuf protocol (pyspark/sql/streaming/proto/StateMessage_pb2);
-# the StatefulProcessor CLASS imports fine without protobuf, but any
-# started TWS query crashes its driver worker at state-schema
-# validation if google.protobuf is absent. Gate the entry point the
-# same way the real-codec tiers gate PIL/av: real implementation,
-# clear error where the environment can't run it, skip-not-fake tests.
-try:  # pragma: no cover - environment probe
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    TWS_AVAILABLE = True
-except ImportError:  # pragma: no cover
-    TWS_AVAILABLE = False
 
 DOC_STREAM_SCHEMA = "doc_id long, text string, ts timestamp"
 
@@ -219,154 +204,3 @@ def streaming_neardup_candidates(
         GroupStateTimeout.NoTimeout,
     )
 
-
-# ---------------------------------------------------------------------
-# transformWithStateInPandas twin (round 5) — same emission semantics,
-# different state-cost model
-# ---------------------------------------------------------------------
-
-
-class _BucketPairsProcessor(StatefulProcessor):
-    """Per-bucket MapState processor for the TWS near-dup twin.
-
-    State: one MapState entry per (band, bk) bucket inside the coarse
-    group — ``(band, bk) -> (sat, members)``. Unlike the
-    applyInPandasWithState layout above (ONE value row packing ALL of
-    the group's buckets, re-serialized wholesale every micro-batch the
-    group is touched), MapState reads and writes only the buckets this
-    batch actually hits: per-batch state I/O is O(touched buckets),
-    independent of how much state the group has ACCUMULATED. At
-    sustained volume (corpus >> batch) that asymptotic difference is
-    the whole game — see ``streaming_neardup_candidates_tws``.
-
-    Emission semantics are bit-identical to ``_make_bucket_fn``:
-    buckets in sorted (band, bk) order, new doc_ids sorted within a
-    bucket, saturation at ``max_band_bucket`` members (later arrivals
-    emit nothing and are not remembered)."""
-
-    def __init__(self, max_band_bucket: int):
-        self._cap = max_band_bucket
-
-    def init(self, handle) -> None:
-        self._buckets = handle.getMapState(
-            "buckets", "band int, bk bigint", "sat int, members array<bigint>"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        batch = pd.concat(list(rows), ignore_index=True)
-        out_band: list[int] = []
-        out_bk: list[int] = []
-        out_a: list[int] = []
-        out_b: list[int] = []
-        for (band, bk), g in batch.groupby(["band", "bk"], sort=True):
-            band, bk = int(band), int(bk)
-            cur = self._buckets.getValue((band, bk))
-            if cur is None:
-                saturated, seen = 0, []
-            else:
-                saturated, seen = int(cur[0]), list(cur[1])
-            ids = sorted(set(g["doc_id"].tolist()) - set(seen))
-            if not ids:
-                continue  # nothing new -> no emission, no state write
-            for d in ids:
-                if saturated or len(seen) >= self._cap:
-                    saturated = 1
-                    continue
-                for s in seen:
-                    lo, hi = (s, d) if s < d else (d, s)
-                    out_band.append(band)
-                    out_bk.append(bk)
-                    out_a.append(lo)
-                    out_b.append(hi)
-                seen.append(d)
-            self._buckets.updateValue((band, bk), (saturated, seen))
-        if out_a:
-            yield pd.DataFrame(
-                {
-                    "band": out_band,
-                    "bk": out_bk,
-                    "doc_a": out_a,
-                    "doc_b": out_b,
-                }
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_neardup_candidates_tws(
-    spark: SparkSession,
-    input_dir: str,
-    max_band_bucket: int = MAX_BAND_BUCKET,
-    max_files_per_trigger: int | None = None,
-    n_state_groups: int = N_STATE_GROUPS,
-) -> DataFrame:
-    """``transformWithStateInPandas`` twin of
-    :func:`streaming_neardup_candidates` — identical output rows
-    (pytest-pinned stream == batch == applyInPandasWithState), but
-    per-bucket MapState instead of one packed value row per coarse
-    group.
-
-    Why it exists: the applyInPandasWithState layout re-serializes a
-    group's ENTIRE accumulated membership every micro-batch that
-    touches the group, so per-batch cost grows with corpus size even
-    at constant batch size. MapState point-reads/writes only the
-    buckets the batch touches: per-batch state I/O stays O(batch).
-    The two cost models cross over once accumulated state dwarfs a
-    micro-batch. The cost model (reads bounded by touched buckets)
-    and twin-exact emission semantics are pinned in pure python by
-    tests/test_streaming.py::test_tws_processor_semantics_twin_pure_python;
-    live-query throughput could not be measured in this container
-    (no google.protobuf — see the gate below).
-
-    Requires the RocksDB state-store provider (a hard
-    transformWithStateInPandas requirement); this helper sets
-    ``spark.sql.streaming.stateStore.providerClass`` on the session,
-    which any stateful query started LATER in the same session also
-    inherits — start this stream last, or reset the conf, if that
-    matters. Checkpoints are not interchangeable with the
-    applyInPandasWithState twin's (different operator + state schema).
-
-    Raises :class:`NotImplementedError` when ``google.protobuf`` is
-    not importable: the TWS state-server protocol is protobuf-framed,
-    and a query started without it crashes the driver worker at
-    state-schema validation with an opaque STREAM_FAILED. The
-    applyInPandasWithState front end above has no such dependency.
-    """
-    if not TWS_AVAILABLE:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf "
-            "(state-server wire protocol), which is not importable in "
-            "this environment; use streaming_neardup_candidates (the "
-            "applyInPandasWithState twin) instead"
-        )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    reader = spark.readStream.schema(DOC_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    bands = (
-        with_band_keys(stream)
-        .select("doc_id", F.explode("bands").alias("bv"))
-        .select(
-            "doc_id",
-            F.col("bv.band").alias("band"),
-            F.col("bv.bk").alias("bk"),
-            F.pmod(
-                F.xxhash64(F.col("bv.band"), F.col("bv.bk")),
-                F.lit(n_state_groups),
-            )
-            .cast("int")
-            .alias("sg"),
-        )
-    )
-    return bands.groupBy("sg").transformWithStateInPandas(
-        statefulProcessor=_BucketPairsProcessor(max_band_bucket),
-        outputStructType=OUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )

@@ -109,14 +109,15 @@ def mega_conv_df(spark, n_turns: int = MEGA_GOLDEN_TURNS):
     """The same fixture as a Spark DataFrame with the exact turns()
     schema, ready to unionByName with a real turn table.
 
-    Generated DISTRIBUTED: spark.range drives the partitioning and each
-    task synthesizes only its own index span, so no fixture bytes ride
-    in the task binary (the driver-built createDataFrame form shipped
-    ~1.3 MB per task at 200k turns). The ts prefix sum has no closed
-    form, so each task recomputes the delta cumsum from index 0 with
-    the identical numpy ops as mega_conv_pandas — O(n_turns) vectorized
-    work per task, microseconds at fixture scale, and bit-identical to
-    the pandas twin (asserted by tests/test_hybrid.py)."""
+    Generated DISTRIBUTED: spark.range drives the partitioning, and each
+    task rebuilds the FULL frame with mega_conv_pandas (once, on its
+    first non-empty batch) and slices out its own index span, so no
+    fixture bytes ride in the task binary (the driver-built
+    createDataFrame form shipped ~1.3 MB per task at 200k turns). The
+    ts prefix sum has no closed form, which is why each task recomputes
+    everything from index 0 — O(n_turns) vectorized work per task,
+    milliseconds at fixture scale, and bit-identical to the pandas twin
+    (asserted by tests/test_hybrid.py)."""
 
     def gen(batches):
         full = None
@@ -124,7 +125,7 @@ def mega_conv_df(spark, n_turns: int = MEGA_GOLDEN_TURNS):
             idx = pdf["id"].to_numpy(dtype=np.int64)
             if len(idx) == 0:
                 continue
-            if full is None or len(full) <= idx.max():
+            if full is None:
                 full = mega_conv_pandas(n_turns)
             yield full.iloc[idx].reset_index(drop=True)
 

@@ -371,223 +371,6 @@ def test_streaming_neardup_candidates_match_batch(spark):
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_streaming_neardup_tws_matches_batch_and_twin(spark):
-    """Round 5: the transformWithStateInPandas twin must emit exactly
-    the batch banded_candidate_pairs set across multi-micro-batch
-    replay — same contract as the applyInPandasWithState front end,
-    under the per-bucket MapState cost model (state I/O O(touched
-    buckets), not O(accumulated state)).
-
-    Skip-not-fake (same contract as the PIL/av codec tiers): the TWS
-    state-server protocol is protobuf-framed, and google.protobuf is
-    not installed in this container — the query would crash its
-    driver worker at state-schema validation. The emission semantics
-    are still enforced everywhere by the pure-python processor test
-    below."""
-    import pytest
-
-    from pymfe_spark.streaming.neardup import TWS_AVAILABLE
-
-    if not TWS_AVAILABLE:
-        pytest.skip(
-            "google.protobuf absent: transformWithStateInPandas "
-            "cannot start its state server in this environment"
-        )
-    import pandas as pd
-
-    from pymfe_spark.operators.dedup import (
-        banded_candidate_pairs,
-        gram_hash_table,
-    )
-    from pymfe_spark.streaming.neardup import (
-        streaming_neardup_candidates_tws,
-    )
-
-    in_dir = "/tmp/neardup_tws_in"
-    ckpt = "/tmp/neardup_tws_ckpt"
-    shutil.rmtree(in_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    base = pd.Timestamp("2025-03-01 00:00:00")
-    for i in range(3):
-        (
-            docs.filter(F.pmod("doc_id", F.lit(3)) == i)
-            .withColumn("ts", F.lit(base))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(in_dir)
-        )
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    try:
-        out = streaming_neardup_candidates_tws(
-            spark, in_dir, max_files_per_trigger=1
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("neardup_tws_stream")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        # the helper switches the session to RocksDB (a TWS
-        # requirement); later stateful tests expect the default
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
-
-    got = spark.table("neardup_tws_stream").toPandas()
-    stream_pairs = set(zip(got["doc_a"], got["doc_b"]))
-    batch = banded_candidate_pairs(gram_hash_table(spark, SF_SMOKE)).toPandas()
-    batch_pairs = set(zip(batch["doc_a"], batch["doc_b"]))
-    assert len(batch_pairs) > 0
-    assert stream_pairs == batch_pairs, (
-        f"stream-only: {sorted(stream_pairs - batch_pairs)[:5]}, "
-        f"batch-only: {sorted(batch_pairs - stream_pairs)[:5]}"
-    )
-    # per-bucket pair events unique across micro-batches, like the twin
-    assert not got.duplicated(["band", "bk", "doc_a", "doc_b"]).any()
-    shutil.rmtree(in_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-
-class _FakeGroupState:
-    """Minimal applyInPandasWithState GroupState stand-in."""
-
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
-class _FakeMapState:
-    """Minimal transformWithStateInPandas MapState stand-in; counts
-    point reads/writes so the test can pin the TWS cost model."""
-
-    def __init__(self):
-        self._d = {}
-        self.reads = 0
-        self.writes = 0
-
-    def getValue(self, key):
-        self.reads += 1
-        return self._d.get(tuple(key))
-
-    def updateValue(self, key, value):
-        self.writes += 1
-        self._d[tuple(key)] = value
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.map_state = _FakeMapState()
-
-    def getMapState(self, name, key_schema, value_schema, ttl=None):
-        return self.map_state
-
-
-def test_tws_processor_semantics_twin_pure_python():
-    """The TWS processor's emission semantics must be bit-identical to
-    the applyInPandasWithState bucket function on the same micro-batch
-    replay — enforced in pure python so it runs even where protobuf
-    (and hence a live TWS query) is unavailable. Also pins the cost
-    model the twin exists for: per-batch MapState I/O is bounded by
-    buckets TOUCHED this batch, not buckets accumulated in state."""
-    import numpy as np
-    import pandas as pd
-
-    from pymfe_spark.streaming.neardup import (
-        _BucketPairsProcessor,
-        _make_bucket_fn,
-    )
-
-    cap = 4
-    rng = np.random.RandomState(42)
-    # 3 micro-batches over 12 buckets; doc ids collide across batches
-    # (dedup within bucket) and one hot bucket (band 0, bk 7) receives
-    # 3x cap docs to exercise saturation
-    batches = []
-    for _ in range(3):
-        n = 120
-        band = rng.randint(0, 4, n)
-        bk = rng.randint(0, 3, n).astype("int64")
-        doc = rng.randint(0, 60, n).astype("int64")
-        hot = pd.DataFrame(
-            {
-                "band": np.zeros(cap, dtype=band.dtype),
-                "bk": np.full(cap, 7, dtype="int64"),
-                "doc_id": rng.randint(100, 200, cap).astype("int64"),
-            }
-        )
-        batches.append(
-            pd.concat(
-                [pd.DataFrame({"band": band, "bk": bk, "doc_id": doc}), hot],
-                ignore_index=True,
-            )
-        )
-
-    apply_fn = _make_bucket_fn(cap)
-    gstate = _FakeGroupState()
-    apply_out = []
-    for b in batches:
-        apply_out.extend(apply_fn((0,), iter([b]), gstate))
-
-    proc = _BucketPairsProcessor(cap)
-    handle = _FakeHandle()
-    proc.init(handle)
-    tws_out = []
-    touched_per_batch = []
-    for b in batches:
-        before = handle.map_state.reads
-        tws_out.extend(proc.handleInputRows((0,), iter([b]), None))
-        touched = len(b.groupby(["band", "bk"]))
-        touched_per_batch.append(handle.map_state.reads - before)
-        assert handle.map_state.reads - before <= touched
-
-    a = pd.concat(apply_out, ignore_index=True)
-    t = pd.concat(tws_out, ignore_index=True)
-    pd.testing.assert_frame_equal(
-        a.reset_index(drop=True), t.reset_index(drop=True)
-    )
-    assert len(a) > 0
-    # the hot bucket saturated: exactly C(cap, 2) pairs, never more
-    hot_pairs = a[(a["band"] == 0) & (a["bk"] == 7)]
-    assert len(hot_pairs) == cap * (cap - 1) // 2
-    # cost model: batch 3 touches no more state rows than batch 1 even
-    # though accumulated state tripled (reads bounded by TOUCHED)
-    assert touched_per_batch[2] <= touched_per_batch[0] + 1
-    # final state agrees between layouts
-    bands, bks, sat, offsets, members = gstate.get
-    apply_state = {
-        (int(bands[i]), int(bks[i])): (
-            int(sat[i]),
-            list(members[offsets[i] : offsets[i + 1]]),
-        )
-        for i in range(len(bks))
-    }
-    tws_state = {
-        k: (int(v[0]), list(v[1])) for k, v in handle.map_state._d.items()
-    }
-    assert apply_state == tws_state
-
-
 def test_streaming_drift_counts_match_batch(spark):
     """The streaming drift monitor's per-(event-time window, bin)
     counts over replayed turn files must equal the batch twin exactly
