@@ -17,6 +17,7 @@ no driver collect, no count() short-circuits).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import subprocess
@@ -386,10 +387,13 @@ def run_skew(sf_dir: str, cpus: int, replicate: int, mega: int) -> dict:
     from pymfe_spark.operators.base import turns
     from pymfe_spark.plans.extractor import MFESpark
 
-    # cache key must include the source dir: without it a dir generated
+    # cache key must identify the source dir: without it a dir generated
     # from sf0.01 silently serves an sf0.1 invocation (observed — 1.4M
-    # turns where the protocol expects 5M)
-    src_tag = os.path.basename(os.path.normpath(sf_dir))
+    # turns where the protocol expects 5M). A basename is not enough
+    # either: two different /x/sf0.1 and /y/sf0.1 trees would collide,
+    # so key on a short hash of the full normalized path.
+    src_path = os.path.normpath(os.path.abspath(sf_dir))
+    src_tag = hashlib.sha1(src_path.encode()).hexdigest()[:10]
     skew_dir = os.path.join(
         "/tmp", f"pymfe_skew_{src_tag}_r{replicate}_m{mega}"
     )
@@ -425,35 +429,37 @@ def run_skew(sf_dir: str, cpus: int, replicate: int, mega: int) -> dict:
         # task in its stage is heavy (max/ideal stays ~1-2 even though
         # the max task gates the job wall) and over-weights tiny stages
         # (a 2 s task over a 0.2 s-ideal stage prints ratio 10). Record
-        # the single largest task across substantial stages too — the
+        # the single largest task across every new stage too — the
         # direct wall-gating evidence.
         biggest = {"max_ms": 0.0}
         for sid, s in after.items():
-            # >= 4 tasks: the kernel stage can run below core count
-            # when kernel_partitions derives a small count — skipping
-            # it hid the pure path's mega-conversation straggler
-            if sid in before or s.get("numCompleteTasks", 0) < 4:
+            if sid in before:
                 continue
             ts_ = _task_summary(spark, sid, s.get("attemptId", 0))
-            # straggler ratios only matter on stages with real work
-            if not ts_ or ts_["median_ms"] < 100:
+            if not ts_:
                 continue
             # gate factor: how much one task gates the stage — max task
             # vs the stage's ideal parallel time (sum task time /
             # cores). max/median misleads on union stages that mix big
             # kernel tasks with tiny prefix/exact-tier tasks.
             ideal_ms = s.get("executorRunTime", 0) / cpus
+            # before the substantial-stage filters: a kernel stage with
+            # fewer than 4 tasks can still hold the wall-gating task
+            if ts_["max_ms"] > biggest["max_ms"]:
+                biggest = {
+                    "stage": sid,
+                    "tasks": s.get("numCompleteTasks", 0),
+                    "ideal_parallel_ms": round(ideal_ms, 1),
+                    **{k: round(v, 1) for k, v in ts_.items()},
+                }
+            # straggler ratios only matter on substantial stages: >= 4
+            # tasks and a median task of real work
+            if s.get("numCompleteTasks", 0) < 4 or ts_["median_ms"] < 100:
+                continue
             ratio = ts_["max_ms"] / max(ideal_ms, 1.0)
             if ratio > worst["ratio"]:
                 worst = {
                     "ratio": round(ratio, 2),
-                    "stage": sid,
-                    "tasks": s["numCompleteTasks"],
-                    "ideal_parallel_ms": round(ideal_ms, 1),
-                    **{k: round(v, 1) for k, v in ts_.items()},
-                }
-            if ts_["max_ms"] > biggest["max_ms"]:
-                biggest = {
                     "stage": sid,
                     "tasks": s["numCompleteTasks"],
                     "ideal_parallel_ms": round(ideal_ms, 1),

@@ -67,28 +67,3 @@ def sparsity(col: Column) -> Column:
     n = F.count(col).cast("double")
     d = F.count_distinct(col).cast("double")
     return (n / d - F.lit(1.0)) / F.nullif(n - F.lit(1.0), F.lit(0.0))
-
-
-# ---- oracle-side SQL fragments (DuckDB dialect == ANSI here) ----------
-
-def sql_central_moments(x: str = "text_len") -> str:
-    """CTE fragment computing per-conv n/mean and central moments m2..m4
-    of ``x`` over the transcripts table, avoiding E[x^k] cancellation by
-    joining the mean back (same shape as the Spark plan)."""
-    return f"""
-  base AS (
-    SELECT conv_id, cast(length(text) AS double) AS {x} FROM transcripts
-  ),
-  mu AS (
-    SELECT conv_id, count(*) AS n, avg({x}) AS mean_x FROM base GROUP BY conv_id
-  ),
-  mom AS (
-    SELECT b.conv_id,
-           max(m.n)      AS n,
-           max(m.mean_x) AS mean_x,
-           avg(pow(b.{x} - m.mean_x, 2)) AS m2,
-           avg(pow(b.{x} - m.mean_x, 3)) AS m3,
-           avg(pow(b.{x} - m.mean_x, 4)) AS m4
-    FROM base b JOIN mu m ON b.conv_id = m.conv_id
-    GROUP BY b.conv_id
-  )"""

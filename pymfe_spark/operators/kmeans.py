@@ -3,6 +3,11 @@ the learned coarse quantizer for IVF ANN (the label-based inverted
 lists in operators/similarity.py are the fixed-partition variant; this
 is the general one a 100 TB embedding corpus needs).
 
+The learned-IVF search is one configuration of similarity.py's
+candidate -> exact-rerank pipeline (see the table there):
+``kmeans_ivf_candidates`` is its candidate stage (k-means lists, k=16,
+nprobe 2, unit-vector dot) and the shared ``_topk`` its final stage.
+
 Spark-first shape: the MODEL (k x 64 centroids) lives on the driver —
 collecting it is collecting the model, not the data — while every
 data-sized step is a DataFrame op:
@@ -26,10 +31,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from pymfe_spark.functions.sql_exprs import r
-from pymfe_spark.operators.similarity import N_QUERIES, TOP_K, _dot, _emb, _norm
+from pymfe_spark.operators.similarity import N_QUERIES, TOP_K, _dot, _emb, _norm, _topk
 from pymfe_spark.plans.catalog import register
 
 GROUP = "similarity"
@@ -157,14 +161,11 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("sim_kmeans_ivf_topk", oracle=None, group=GROUP)
-def sim_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN over LEARNED inverted lists: k-means clusters replace
-    the label lists of sim_ivf_topk. Each query probes its
-    nprobe=2 highest-scoring centroids and brute-forces only those
-    clusters (equi-join on cluster id — at 100 TB the lists shard by
-    cluster and only probed shards are read). Rows-gated; recall vs
-    the exact brute force is pytest-asserted."""
+def kmeans_ivf_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vectors in the query's KMEANS_NPROBE highest-scoring k-means
+    clusters, scored by the unit-vector dot (equi-join on cluster id —
+    at scale the lists shard by cluster and only probed shards are
+    read)."""
     centroids = kmeans_fit(spark, sf_dir)
     u = _unit(spark, sf_dir)
     base = u.select(
@@ -202,20 +203,17 @@ def sim_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan = probes.join(base, "cluster").filter(
         F.col("vec_id") != F.col("query_id")
     )
-    cos = _dot(F.col("qu"), F.col("u"))
-    sims = scan.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos")
+    return scan.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        _dot(F.col("qu"), F.col("u")).alias("cos"),
     )
-    rk = F.row_number().over(
-        Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    )
-    return (
-        sims.withColumn("rk", rk)
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rk").cast("int"),
-            r(F.col("cos"), 4).alias("cos"),
-        )
-    )
+
+
+@register("sim_kmeans_ivf_topk", oracle=None, group=GROUP)
+def sim_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN over LEARNED inverted lists: the k-means clusters replace
+    the label lists of sim_ivf_topk; the shared exact top-5 rerank
+    follows. Rows-gated; recall vs the exact brute force is
+    pytest-asserted."""
+    return _topk(kmeans_ivf_candidates(spark, sf_dir), TOP_K)

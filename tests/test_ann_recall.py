@@ -14,12 +14,20 @@ The embeddings are near-isotropic gaussians (hard mode for hyperplane
 LSH — true cosine neighbors are weak), so absolute recall is naturally
 modest for the unlearned methods; the learned spherical-k-means IVF
 shows what structure-aware bucketing buys.
+
+A recall floor alone cannot tell an index from a full scan: a query
+that fell back to scoring every pair would pass all of them. So each
+method's candidate stage is also held to a probed fraction — candidate
+rows over the Q·(N−1) pairs brute force scores — below
+MAX_PROBED_FRACTION.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from pymfe_spark.operators.kmeans import kmeans_ivf_candidates
+from pymfe_spark.operators.similarity import N_QUERIES, ivf_candidates, lsh_candidates
 from pymfe_spark.plans.catalog import load_catalog
 
 SF_BENCH = "/root/testdata/sf0.1"
@@ -31,6 +39,13 @@ FLOORS = {
 }
 
 CATALOG = load_catalog()
+
+MAX_PROBED_FRACTION = 0.5
+CANDIDATES = {
+    "sim_lsh_topk": lsh_candidates,
+    "sim_ivf_topk": ivf_candidates,
+    "zz_sim_kmeans_ivf_topk": kmeans_ivf_candidates,
+}
 
 
 @pytest.fixture(scope="module")
@@ -53,4 +68,14 @@ def test_ann_recall_floor(spark, true_top3, name):
     assert recall >= FLOORS[name], (
         f"{name}: recall@3 {recall:.3f} fell below the pinned floor "
         f"{FLOORS[name]} at sf0.1"
+    )
+
+
+@pytest.mark.parametrize("name", sorted(CANDIDATES))
+def test_ann_probed_fraction(spark, name):
+    n = spark.read.parquet(f"{SF_BENCH}/embeddings.parquet").count()
+    probed = CANDIDATES[name](spark, SF_BENCH).count() / (N_QUERIES * (n - 1))
+    assert probed < MAX_PROBED_FRACTION, (
+        f"{name}: candidate stage scores {probed:.3f} of all query pairs at "
+        f"sf0.1 — no cheaper than a scan (bound {MAX_PROBED_FRACTION})"
     )

@@ -5,7 +5,11 @@ near-identical docs to nearby hashes."""
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pymfe_spark.operators.dedup import (
@@ -56,6 +60,71 @@ def test_minhash_detects_planted_duplicates(spark):
     assert not ((est.doc_a == 1000) & (est.doc_b == 1002)).any() or (
         est[(est.doc_a == 1000) & (est.doc_b == 1002)]["est_jaccard"] < 0.3
     ).all()
+
+
+# MinHash inputs drawn adversarially: arbitrary unicode tokens (accents,
+# CJK, emoji, control characters), runs of spaces between and around
+# them, and documents with fewer than 4 tokens (no 4-gram at all)
+_token = st.text(min_size=1, max_size=8).filter(lambda t: " " not in t)
+_gap = st.text(alphabet=" ", min_size=1, max_size=4)
+_doc = st.one_of(
+    st.text(max_size=40),
+    st.tuples(
+        st.lists(st.tuples(_gap, _token), max_size=9), st.text(alphabet=" ", max_size=3)
+    ).map(lambda d: "".join(g + t for g, t in d[0]) + d[1]),
+)
+_PROPERTY_RUNS = itertools.count()
+
+
+@given(docs=st.lists(_doc, min_size=1, max_size=12))
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_minhash_spark_matches_duckdb_on_random_documents(spark, tmp_path, docs):
+    """The Spark MinHash inputs equal their DuckDB oracle twins on random
+    documents: ``gram_hash_table`` == ``_gram_cte``'s ``hashed`` rows, and
+    ``with_band_keys`` exploded to (doc_id, band, bk) == ``_sig_bands_cte``'s
+    ``bands`` rows. Each example writes its own ``documents.parquet``."""
+    import duckdb
+    import pandas as pd
+
+    from pymfe_spark.operators.dedup import (
+        _docs,
+        _gram_cte,
+        _sig_bands_cte,
+        gram_hash_table,
+        with_band_keys,
+    )
+
+    sf = tmp_path / f"run{next(_PROPERTY_RUNS)}"
+    sf.mkdir()
+    pd.DataFrame(
+        {"doc_id": pd.Series(range(len(docs)), dtype="int64"), "text": docs}
+    ).to_parquet(sf / "documents.parquet", index=False)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
+    )
+
+    def rows(df: pd.DataFrame) -> list[tuple]:
+        return sorted(map(tuple, df.astype("int64").itertuples(index=False)))
+
+    grams = gram_hash_table(spark, str(sf)).toPandas()
+    hashed = con.execute(f"WITH {_gram_cte()} SELECT doc_id, h FROM hashed").df()
+    assert rows(grams) == rows(hashed)
+
+    bands = (
+        with_band_keys(_docs(spark, str(sf)))
+        .select("doc_id", F.explode("bands").alias("b"))
+        .select("doc_id", "b.band", "b.bk")
+        .toPandas()
+    )
+    sig = con.execute(
+        f"WITH {_gram_cte()}, {_sig_bands_cte()} SELECT doc_id, band, bk FROM bands"
+    ).df()
+    assert rows(bands) == rows(sig)
 
 
 def test_simhash_near_duplicates_have_small_hamming(spark):
