@@ -17,10 +17,15 @@ North-rule requirements implemented here:
   repeated, and re-running a completed backfill is a no-op.
 - **per-partition lineage + metrics**: each bucket commit appends a
   lineage row (bucket id, input rows, output rows, wall seconds,
-  engine version, mega-routing mode) to ``_lineage/``. Both row counts come from ONE
-  aggregation over the just-written (small) output — the feature
-  vector carries the conversation's turn count, so input accounting
-  costs no extra input scan.
+  engine version, mega-routing mode) to ``_lineage/``. Both row counts
+  come from a ``pyspark.sql.Observation`` on the bucket write itself —
+  the feature vector carries the conversation's turn count, so the
+  accounting costs neither an input scan nor a re-read of the output.
+  The row is committed without Spark: a single-row parquet file
+  written by pyarrow under a dot-prefixed temp name (invisible to
+  Spark's reader), then renamed to ``part-<bucket>-<uuid>.parquet``.
+  The directory stays an ordinary parquet dataset: ``read_lineage``
+  and the routing guard read it with Spark and ``mergeSchema``.
 
 In production this maps 1:1 onto Iceberg: bucket commit ->
 ``writeTo(tbl).overwritePartitions()`` snapshot; lineage row ->
@@ -36,8 +41,11 @@ from __future__ import annotations
 import os
 import shutil
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pymfe_spark.plans.extractor import (
@@ -53,6 +61,53 @@ LINEAGE_SCHEMA = (
     "wall_sec double, engine_version string, routing string"
 )
 
+# LINEAGE_SCHEMA as a pyarrow schema, for the Spark-free lineage append
+_ARROW_TYPES = {
+    "int": pa.int32(),
+    "long": pa.int64(),
+    "double": pa.float64(),
+    "string": pa.string(),
+}
+_LINEAGE_ARROW = pa.schema(
+    [
+        (name, _ARROW_TYPES[typ])
+        for name, typ in (field.split() for field in LINEAGE_SCHEMA.split(", "))
+    ]
+)
+
+
+def _append_lineage(lineage_dir: str, row: tuple) -> None:
+    """Commit one lineage row (LINEAGE_SCHEMA order) as its own
+    single-row parquet file — no Spark job. The file is written under a
+    dot-prefixed temp name that Spark's reader skips, then renamed into
+    place, so a kill mid-append never leaves a readable partial file
+    (backfill already assumes a local POSIX filesystem for its markers
+    and directory swaps)."""
+    os.makedirs(lineage_dir, exist_ok=True)
+    name = f"part-{row[0]}-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(lineage_dir, f".{name}.tmp")
+    table = pa.table(
+        {f: [v] for f, v in zip(_LINEAGE_ARROW.names, row)},
+        schema=_LINEAGE_ARROW,
+    )
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(lineage_dir, name))
+
+
+def _write_counted(df: DataFrame, path: str) -> tuple[int, int]:
+    """Write a bucket's feature rows to ``path`` and return its lineage
+    counts (input turns, output rows). An Observation on the write
+    itself counts them — the feature vector carries each
+    conversation's turn count — so nothing re-reads the output."""
+    obs = Observation()
+    df.observe(
+        obs,
+        F.count(F.lit(1)).alias("out_rows"),
+        F.sum("n_turns").alias("in_rows"),
+    ).write.mode("overwrite").parquet(path)
+    stats = obs.get
+    return int(stats["in_rows"] or 0), int(stats["out_rows"])
+
 
 def _guard_routing(
     spark: SparkSession,
@@ -66,7 +121,11 @@ def _guard_routing(
     others full-kernel values would otherwise mix two semantics
     silently. Lineage rows written before the routing column existed
     read as null and count as 'unknown' (also a mismatch)."""
-    if not os.path.exists(lineage_dir):
+    # no committed lineage file yet: Spark's reader skips ./_-prefixed
+    # names, so the leftover temp file of a killed append is no lineage
+    if not os.path.isdir(lineage_dir) or all(
+        f.startswith((".", "_")) for f in os.listdir(lineage_dir)
+    ):
         return
     lin = spark.read.option("mergeSchema", "true").parquet(lineage_dir)
     if "routing" in lin.columns:
@@ -168,30 +227,18 @@ def backfill(
             F.map_keys("features").alias("mtf_names"),
             F.map_values("features").alias("mtf_vals"),
         )
-        out.write.mode("overwrite").parquet(bucket_path)
-        # one aggregation over the small written output covers both
-        # lineage counts — no second pass over the input
-        stats = (
-            spark.read.parquet(bucket_path)
-            .agg(
-                F.count("*").alias("out_rows"),
-                F.sum("n_turns").alias("in_rows"),
-            )
-            .collect()[0]
-        )
-        lineage_row = [
+        in_rows, out_rows = _write_counted(out, bucket_path)
+        _append_lineage(
+            lineage_dir,
             (
                 k,
-                int(stats["in_rows"] or 0),
-                int(stats["out_rows"]),
+                in_rows,
+                out_rows,
                 round(time.time() - t0, 3),
                 ENGINE_VERSION,
                 routing,
-            )
-        ]
-        spark.createDataFrame(
-            lineage_row, LINEAGE_SCHEMA
-        ).write.mode("append").parquet(lineage_dir)
+            ),
+        )
         ran.append(k)
     return {
         "buckets_total": n_buckets,
@@ -328,33 +375,23 @@ def backfill_incremental(
         # crash must never leave a directory that read_backfill's
         # bucket=* glob would pick up
         tmp = os.path.join(output_dir, f"_tmp-{delta_id}-bucket-{k}")
-        keep.unionByName(new_rows).write.mode("overwrite").parquet(tmp)
+        in_rows, out_rows = _write_counted(keep.unionByName(new_rows), tmp)
         # directory swap: the tmp write is fully committed before the
         # live path changes, so readers never see a partial bucket
         os.rename(bucket_path, old)
         os.rename(tmp, bucket_path)
         shutil.rmtree(old)
-        stats = (
-            spark.read.parquet(bucket_path)
-            .agg(
-                F.count("*").alias("out_rows"),
-                F.sum("n_turns").alias("in_rows"),
-            )
-            .collect()[0]
+        _append_lineage(
+            lineage_dir,
+            (
+                k,
+                in_rows,
+                out_rows,
+                round(time.time() - t0, 3),
+                f"{ENGINE_VERSION}+{delta_id}",
+                routing,
+            ),
         )
-        spark.createDataFrame(
-            [
-                (
-                    k,
-                    int(stats["in_rows"] or 0),
-                    int(stats["out_rows"]),
-                    round(time.time() - t0, 3),
-                    f"{ENGINE_VERSION}+{delta_id}",
-                    routing,
-                )
-            ],
-            LINEAGE_SCHEMA,
-        ).write.mode("append").parquet(lineage_dir)
         with open(marker, "w") as fh:
             fh.write(delta_id)
         ran.append(k)

@@ -6,11 +6,19 @@ whole O(n) measure pass through ONE Python worker — the straggler the
 round-2 verdict flagged. This module composes the two pieces that
 already existed separately (the ``operators.skew`` salted partial-agg
 pattern and the kernel's ``max_kernel_turns`` prefix cap) into one
-routed plan:
+routed plan.
+
+Routing starts from a driver-side list: the ids of the conversations
+with a ``turn_idx >= mega_turn_threshold`` row are collected once
+(one small job — the list is tiny by definition). When it is empty,
+the "routed plan" is just ``extract()``: no split, no second kernel
+pass, no exact tier — a corpus without mega conversations pays only
+the id collect. Otherwise literal ``conv_id IN (<ids>)`` filters split
+the input:
 
 - conversations with ``<= mega_turn_threshold`` turns take the normal
   kernel path — output BIT-IDENTICAL to ``extract()`` (same kernel,
-  same partitioning, mega rows removed by a broadcast anti-join);
+  same partitioning, mega rows filtered out);
 - mega conversations are split two ways:
 
   * **exact tier** — every measure that is *algebraic over the raw
@@ -333,41 +341,40 @@ def extract_hybrid(
     extractor,
     turns_df: DataFrame,
     mega_turn_threshold: int = MEGA_TURN_THRESHOLD,
-    counts: DataFrame | None = None,
 ) -> DataFrame:
     """Route conversations by size: normal -> the unchanged kernel
     path (bit-identical), mega -> exact salted tier + prefix kernel.
     See the module docstring for the exact/prefix split semantics.
 
-    ``counts``: optional precomputed per-conversation turn counts
-    (columns ``conv_id, n_t``). Callers that already aggregate per
-    conversation (the backfill's final-ts pass) hand theirs in so the
-    mega-id detection shares that exchange instead of adding a scan."""
+    The mega ids are collected on the driver first (one small job; the
+    list is tiny by definition). With none, the result IS
+    ``extractor.extract(turns_df)`` — no routing plan is built at all."""
     if extractor.cfg.measure_time is not None:
         raise ValueError("extract_hybrid does not support measure_time")
     if extractor.relative:
         raise ValueError("extract_hybrid does not support the relative group")
-    if counts is not None:
-        mega_ids = counts.filter(
-            F.col("n_t") > mega_turn_threshold
-        ).select("conv_id")
-    else:
-        # turn_idx is the dense 0-based index (input contract, same
-        # guarantee the prefix filter below uses), so a conversation
-        # exceeds the threshold IFF some row has turn_idx >= threshold:
-        # detection is a pushdown filter + tiny distinct, NOT a
-        # corpus-wide groupBy count. Measured at 1M turns / local[8]
-        # the count-based detection cost the routed path 17% per pass
-        # (round-4 scaling regression 2->8 = 0.777); this form is free.
-        mega_ids = (
-            turns_df.filter(F.col("turn_idx") >= mega_turn_threshold)
-            .select("conv_id")
-            .distinct()
-        )
-    normal = turns_df.join(F.broadcast(mega_ids), "conv_id", "left_anti")
-    out = extractor.extract(normal)
+    # turn_idx is the dense 0-based index (input contract, same
+    # guarantee the prefix filter below uses), so a conversation
+    # exceeds the threshold IFF some row has turn_idx >= threshold:
+    # detection is a pushdown filter + tiny distinct, NOT a
+    # corpus-wide groupBy count. Null ids never matched the old join
+    # routing either, so they stay on the kernel path.
+    mega_ids = [
+        r["conv_id"]
+        for r in turns_df.filter(F.col("turn_idx") >= mega_turn_threshold)
+        .select("conv_id")
+        .distinct()
+        .collect()
+        if r["conv_id"] is not None
+    ]
+    if not mega_ids:
+        return extractor.extract(turns_df)
+    is_mega = F.col("conv_id").isin(mega_ids)
+    out = extractor.extract(
+        turns_df.filter(~is_mega | F.col("conv_id").isNull())
+    )
 
-    mega_t = turns_df.join(F.broadcast(mega_ids), "conv_id")
+    mega_t = turns_df.filter(is_mega)
     cap = extractor.cfg.max_kernel_turns
     # prefix = first `cap` turns. turn_idx is the dense 0-based turn
     # index (input contract: stable (conv_id, turn_idx) ordering), so a

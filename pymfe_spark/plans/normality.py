@@ -26,6 +26,7 @@ all numpy/math, no scipy.
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -134,17 +135,13 @@ def _poly(coefs: tuple, x: float) -> float:
     return float(np.polyval(tuple(reversed(coefs)), x))
 
 
-def shapiro_wilk(x: np.ndarray) -> tuple[float, float]:
-    """(W, p) per AS R94. Raises ValueError for n < 3 or a constant
-    sample — mirroring scipy.stats.shapiro's failure modes, which the
-    reference's exception->NaN containment converts to NaN."""
-    x = np.sort(np.asarray(x, dtype=float))
-    n = x.size
-    if n < 3:
-        raise ValueError("shapiro-wilk needs n >= 3")
-    if x[-1] == x[0]:
-        raise ValueError("constant sample")
-
+@functools.lru_cache(maxsize=512)
+def _sw_weights(n: int) -> np.ndarray:
+    """The n // 2 positive antisymmetric AS R94 weights for a sample of
+    size n >= 3. They depend on n only, so they are computed once per n
+    (an ndtri evaluation per weight) and shared read-only. The cache is
+    bounded: one entry holds n // 2 doubles, and conversation lengths
+    are unbounded."""
     n2 = n // 2
     if n == 3:
         w_pos = np.array([math.sqrt(0.5)])
@@ -164,6 +161,23 @@ def shapiro_wilk(x: np.ndarray) -> tuple[float, float]:
         else:
             fac = math.sqrt((summ2 - 2.0 * m[0] ** 2) / (1.0 - 2.0 * a1 * a1))
             w_pos = np.concatenate(([a1], -m[1:] / fac))
+    w_pos.flags.writeable = False
+    return w_pos
+
+
+def shapiro_wilk(x: np.ndarray) -> tuple[float, float]:
+    """(W, p) per AS R94. Raises ValueError for n < 3 or a constant
+    sample — mirroring scipy.stats.shapiro's failure modes, which the
+    reference's exception->NaN containment converts to NaN."""
+    x = np.sort(np.asarray(x, dtype=float))
+    n = x.size
+    if n < 3:
+        raise ValueError("shapiro-wilk needs n >= 3")
+    if x[-1] == x[0]:
+        raise ValueError("constant sample")
+
+    n2 = n // 2
+    w_pos = _sw_weights(n)
 
     # S = sum of antisymmetric weights * sorted sample
     s = float(np.sum(w_pos * (x[::-1][:n2] - x[:n2])))

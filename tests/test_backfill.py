@@ -267,3 +267,83 @@ def test_backfill_falls_back_when_hybrid_unsupported(spark, tmp_path):
     assert not ex.supports_hybrid()
     out = extract_at_final_turn(t, ex)  # route_mega=True default
     assert out.count() > 0
+
+
+def test_appended_lineage_reads_back_with_schema_types(spark, tmp_path):
+    """Rows committed by the Spark-free lineage append read back
+    through read_lineage with exactly LINEAGE_SCHEMA's column types."""
+    from pymfe_spark.operators.backfill import LINEAGE_SCHEMA, _append_lineage
+
+    out = str(tmp_path / "bf_lin")
+    rows = [
+        (0, 120, 3, 0.25, "0.2.0", "hybrid@100000"),
+        (1, 80, 2, 0.5, "0.2.0+d1", "pure"),
+    ]
+    for row in rows:
+        _append_lineage(os.path.join(out, "_lineage"), row)
+    lin = read_lineage(spark, out)
+    want = spark.createDataFrame([], LINEAGE_SCHEMA).schema
+    assert [(f.name, f.dataType) for f in lin.schema] == [
+        (f.name, f.dataType) for f in want
+    ]
+    assert sorted(tuple(r) for r in lin.collect()) == rows
+
+
+def test_leftover_lineage_temp_file_is_ignored(spark, tmp_path):
+    """A kill between the lineage temp write and its rename leaves a
+    dot-prefixed partial file in _lineage/: read_lineage and the
+    routing guard must both skip it."""
+    import pytest
+
+    from pymfe_spark.operators.backfill import _append_lineage, _guard_routing
+
+    out = str(tmp_path / "bf_tmp")
+    lin_dir = os.path.join(out, "_lineage")
+    os.makedirs(lin_dir)
+    with open(os.path.join(lin_dir, ".part-0-dead.parquet.tmp"), "wb") as fh:
+        fh.write(b"PAR1 truncated")
+    # only the leftover: no lineage recorded, any routing may start
+    _guard_routing(spark, lin_dir, "pure", allow_mixed_routing=False)
+
+    _append_lineage(lin_dir, (0, 10, 1, 0.1, "0.2.0", "hybrid@100000"))
+    assert read_lineage(spark, out).count() == 1
+    _guard_routing(spark, lin_dir, "hybrid@100000", allow_mixed_routing=False)
+    with pytest.raises(ValueError, match="mix"):
+        _guard_routing(spark, lin_dir, "pure", allow_mixed_routing=False)
+
+
+def test_incremental_lineage_rows_tag_and_count(spark, tmp_path):
+    """Every bucket an incremental delta applies appends a lineage row
+    tagged <ENGINE_VERSION>+<delta_id> whose input/output counts are
+    the swapped bucket's turn and conversation counts."""
+    from pyspark.sql import functions as F
+
+    from pymfe_spark.operators.backfill import ENGINE_VERSION, backfill_incremental
+
+    t = turns(spark, SF_SMOKE)
+    ex = MFESpark(groups=("general",))
+    out = str(tmp_path / "bf_inc")
+    early = t.filter(F.col("turn_idx") < 4)
+    late = t.filter(F.col("turn_idx") >= 4)
+    backfill(spark, early, out, n_buckets=2, extractor=ex)
+    s = backfill_incremental(
+        spark, late, out, delta_id="d7", n_buckets=2, extractor=ex
+    )
+    assert s["buckets_run"]
+
+    lin = read_lineage(spark, out).toPandas()
+    inc = lin[lin["engine_version"] == f"{ENGINE_VERSION}+d7"]
+    assert sorted(inc["bucket"]) == s["buckets_run"]
+    truth = {
+        r["bucket"]: (r["in_rows"], r["out_rows"])
+        for r in read_backfill(spark, out)
+        .groupBy("bucket")
+        .agg(
+            F.sum("n_turns").alias("in_rows"),
+            F.count("*").alias("out_rows"),
+        )
+        .collect()
+    }
+    for r in inc.itertuples(index=False):
+        assert (r.input_rows, r.output_rows) == truth[r.bucket], r
+    assert sum(v[0] for v in truth.values()) == t.count()

@@ -210,6 +210,35 @@ def test_hybrid_mega_exact_tier_matches_full_kernel(spark):
         assert (v == hv) or (np.isnan(v) and np.isnan(hv)), (k, v, hv)
 
 
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_hybrid_plan_shape_without_and_with_mega(spark):
+    """With no conversation over the threshold, the routed entry points
+    plan exactly what extract() plans: one kernel pass, no anti-join
+    split. A planted mega conversation still brings the prefix kernel
+    pass and the exact tier's finishing pass."""
+    from pymfe_spark.plans.extractor import extract_at_final_turn
+
+    ex = _ex()
+    t = turns(spark, SF_SMOKE)
+    for df in (ex.extract_hybrid(t), extract_at_final_turn(t, ex)):
+        plan = _optimized_plan(df)
+        assert plan.count("MapInPandas") == 1, plan
+        assert "LeftAnti" not in plan, plan
+
+    tdf = _turns_from(_synth_turns(spark, mega_n=3001))
+    for df in (
+        ex.extract_hybrid(tdf, mega_turn_threshold=500),
+        extract_at_final_turn(tdf, ex, mega_turn_threshold=500),
+    ):
+        plan = _optimized_plan(df)
+        # normal kernel + prefix kernel + exact-tier finish
+        assert plan.count("MapInPandas") == 3, plan
+        assert "pmod" in plan, plan  # the exact tier's salted aggregation
+
+
 def test_hybrid_rejects_unsupported_modes(spark):
     t = turns(spark, SF_SMOKE)
     with pytest.raises(ValueError, match="measure_time"):

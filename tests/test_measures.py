@@ -260,6 +260,21 @@ def test_normality_edge_cases_raise():
         anderson_darling_norm(np.full(50, 3.0))
 
 
+def test_shapiro_weights_cached_equal_fresh_and_read_only():
+    """The per-n Shapiro-Wilk weights come from a cache: every cached
+    array equals a fresh computation and cannot be mutated by a
+    caller (one shared array serves every conversation of that n)."""
+    from pymfe_spark.plans.normality import _sw_weights
+
+    for n in range(3, 301):
+        cached = _sw_weights(n)
+        assert _sw_weights(n) is cached
+        assert np.array_equal(cached, _sw_weights.__wrapped__(n)), n
+        assert cached.shape == (n // 2,)
+        with pytest.raises(ValueError):
+            cached[0] = 0.0
+
+
 def test_shapiro_small_n_branches():
     """n=3 (exact asin p) and 4<=n<=11 (gamma transform) branches."""
     from pymfe_spark.plans.normality import shapiro_wilk

@@ -4,11 +4,18 @@ Runs every catalog query on Spark and its oracle SQL on DuckDB at the
 given sf dir, compares row count, column names, and order-insensitive
 rounded values. Usage:
 
-    python tools/check_oracle.py [sf_dir] [query ...]
+    python tools/check_oracle.py [--json PATH] [sf_dir] [query ...]
+
+``--json PATH`` also writes the sweep as a JSON list with one record
+per query: ``name``, ``status`` (``ok``, ``rows-only`` or ``fail``),
+``rows`` (the Spark result's row count, null when Spark raised) and
+``gate_oracle`` (true for a query with an oracle registered as a gate
+oracle).
 """
 
 from __future__ import annotations
 
+import json
 import sys
 
 import duckdb
@@ -65,6 +72,10 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[st
 
 
 def main() -> int:
+    json_path = None
+    if sys.argv[1:2] == ["--json"]:
+        json_path = sys.argv[2]
+        del sys.argv[1:3]
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
     catalog = load_catalog()
@@ -76,17 +87,25 @@ def main() -> int:
     ):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    failures = 0
+    records = []
     for name, entry in sorted(catalog.items()):
         if only and name not in only:
             continue
+        record = {
+            "name": name,
+            "status": "fail",
+            "rows": None,
+            "gate_oracle": entry.oracle is not None and entry.gate_oracle,
+        }
+        records.append(record)
         try:
             sdf = entry.fn(spark, sf_dir).toPandas()
         except Exception as exc:
             print(f"FAIL {name}: spark error: {exc}")
-            failures += 1
             continue
+        record["rows"] = len(sdf)
         if entry.oracle is None:
+            record["status"] = "rows-only"
             print(f"ok   {name}: rows-only ({len(sdf)} rows)")
             if len(sdf) == 0:
                 print(f"WARN {name}: zero rows")
@@ -95,16 +114,18 @@ def main() -> int:
             ddf = con.execute(entry.oracle).df()
         except Exception as exc:
             print(f"FAIL {name}: duckdb error: {exc}")
-            failures += 1
             continue
         problems = compare(name, sdf, ddf)
         if problems:
-            failures += 1
             print(f"FAIL {name}: " + "; ".join(problems))
         else:
+            record["status"] = "ok"
             print(f"ok   {name}: {len(sdf)} rows match oracle")
     spark.stop()
-    return 1 if failures else 0
+    if json_path:
+        with open(json_path, "w") as fh:
+            json.dump(records, fh, indent=1)
+    return 1 if any(r["status"] == "fail" for r in records) else 0
 
 
 if __name__ == "__main__":
