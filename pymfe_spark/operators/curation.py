@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from pymfe_spark.operators.textops import _FPW_SQL, _P, poly_hash
+from pymfe_spark.operators.textops import poly_hash, poly_hash_sql
 from pymfe_spark.plans.catalog import register
 
 GROUP = "curation"
@@ -62,12 +62,7 @@ def _seeded_key(prefix: str) -> Column:
 
 
 def _seeded_key_sql(prefix: str) -> str:
-    s = f"'{prefix}' || cast(doc_id AS varchar)"
-    return (
-        f"cast(list_aggregate(list_transform(range(1, length({s}) + 1), "
-        f"i -> ascii(({s})[i])::BIGINT * ({_FPW_SQL})[((i - 1) % 8) + 1]), "
-        f"'sum') % {_P} AS BIGINT)"
-    )
+    return poly_hash_sql(f"'{prefix}' || cast(doc_id AS varchar)")
 
 
 _SHUFFLE_ORACLE = f"""

@@ -21,8 +21,8 @@ Scale shape — the asymmetry IS the design:
   table (``doc_id % BENCH_MOD == 0``) per the no-external-data rule;
   in production it would be ``spark.read`` of the real eval suite.
 
-Gram extraction (word 4-grams, tokens materialized once per doc) is
-shared with the dedup family (dedup.py shingle_table) so both
+The grams are the dedup pipeline's shingle stage (dedup.py
+``shingle_table`` and its oracle twin ``_SHINGLE_CTE``), so both
 pipelines agree on what an n-gram is.
 """
 
@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pymfe_spark.functions.sql_exprs import r
-from pymfe_spark.operators.dedup import _docs, _shingles_from_tokens
+from pymfe_spark.operators.dedup import _SHINGLE_CTE, shingle_table
 from pymfe_spark.plans.catalog import register
 
 GROUP = "decontam"
@@ -43,14 +43,7 @@ GROUP = "decontam"
 BENCH_MOD = 20
 
 _DECONTAM_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id,
-         w[i.i] || '_' || w[i.i+1] || '_' || w[i.i+2] || '_' || w[i.i+3] AS s
-  FROM toks, unnest(range(1, greatest(len(w) - 2, 1))) AS i(i)
-), bench AS (
+WITH {_SHINGLE_CTE}, bench AS (
   SELECT DISTINCT s FROM sh WHERE doc_id % {BENCH_MOD} = 0
 ), train AS (
   SELECT * FROM sh WHERE doc_id % {BENCH_MOD} <> 0
@@ -78,14 +71,7 @@ def decontam_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the benchmark. Docs with < 4 words have no grams and are
     absent from the output in both engines (nothing to test overlap
     on)."""
-    d = _docs(spark, sf_dir)
-    toks = d.select(
-        "doc_id",
-        F.filter(F.split("text", " "), lambda x: x != "").alias("w"),
-    )
-    sh = toks.select(
-        "doc_id", F.explode(_shingles_from_tokens(F.col("w"))).alias("s")
-    )
+    sh = shingle_table(spark, sf_dir)
     is_bench = F.col("doc_id") % BENCH_MOD == 0
     bench = sh.filter(is_bench).select("s").distinct()
     train = sh.filter(~is_bench)

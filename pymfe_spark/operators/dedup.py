@@ -1,77 +1,454 @@
-"""Deduplication operators over the ``documents`` table.
+"""Text deduplication over the ``documents`` table, as ONE near-dup
+pipeline of shared stages.
 
-Four strategies, scale-ordered:
+``dedup_exact`` is a hash-groupBy on normalized text: one shuffle, the
+100 TB workhorse. Every pairwise query is a configuration of the same
+stages, each written once in Spark and once as DuckDB oracle SQL:
 
-- **exact**: hash-groupBy on normalized text — one shuffle, the 100 TB
-  workhorse.
-- **n-gram Jaccard**: word 4-gram shingles -> shingle-key self-join ->
-  per-pair intersection counts -> Jaccard. The shingle join only
-  materializes pairs sharing >= 1 shingle (candidate generation, never
-  the full O(n²) cross join).
-- **MinHash + LSH**: k=16 permutations of crc32 shingle hashes, banded
-  1-row/8-band bucketing -> candidate pairs by bucket collision. The
-  sub-linear path when even the shingle join is too hot.
-- **SimHash**: 32-bit sign-aggregated token hashes + byte bands for
-  hamming-bucket lookups.
+=====================  ========================  ==========================
+stage                  Spark                     oracle SQL
+=====================  ========================  ==========================
+word-4-gram shingles   ``shingle_table``         ``_SHINGLE_CTE``
+hashed word 4-grams    ``gram_hash_table``       ``_gram_cte``
+signature + band fold  ``band_table``            ``_sig_bands_cte``
+capped bucket join     ``_capped_join``          ``_capped_cte``,
+                                                 ``_join_sql``
+exact-Jaccard verify   ``_verify_jaccard``       ``_verify_cte``
+=====================  ========================  ==========================
 
-MinHash/SimHash use crc32 (JVM-side, no Python) and deterministic
-affine permutations, so outputs are stable across runs/partitionings;
-they have no DuckDB twin (no crc32) -> rows-only checks + unit tests
-against the exact Jaccard truth.
+======================  ========================  ===============  ================
+query                   bucket key                cap              final
+======================  ========================  ===============  ================
+dedup_ngram_jaccard     shingle                   MAX_SHINGLE_DF   shingle Jaccard
+dedup_minhash_lsh       16 1-row bands (MH_*)     MAX_BAND_BUCKET  bands matched/16
+dedup_minhash_verified  8 4-row bands (BV_*)      MAX_BAND_BUCKET  verify
+dedup_incremental       8 4-row bands; new docs   MAX_BAND_BUCKET  verify, earliest
+                        probe history             (history side)   history match
+dedup_simhash_pairs     4 SimHash bit bands       MAX_BAND_BUCKET  hamming <= 3
+decontam_ngram          shingle; benchmark side   —                hit share
+(decontam.py)           broadcast, no join
+======================  ========================  ===============  ================
+
+Every hash is the cross-engine polynomial hash (``textops.poly_hash``)
+composed with deterministic affine permutations in exact int64
+arithmetic, so outputs are stable across runs and partitionings and
+each query's oracle replicates it bit-for-bit.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from pymfe_spark.functions.sql_exprs import r
+from pymfe_spark.operators.textops import _P, _docs, _tokens, poly_hash, poly_hash_sql
 from pymfe_spark.plans.catalog import register
 
 GROUP = "dedup"
 
-_P = 2147483647  # Mersenne prime for affine minhash permutations
 _RNG = np.random.RandomState(99)
 MINHASH_K = 16
 MH_A = [int(a) for a in _RNG.randint(1, _P, MINHASH_K)]
 MH_B = [int(b) for b in _RNG.randint(0, _P, MINHASH_K)]
 
+# 4-gram combiner weights: the token-hash composition
+# h(gram) = sum_j (h(token_j) * 31^(8j)) mod P continues the per-char
+# weight scheme across token boundaries; the same fold turns a band's
+# minhashes into one band key.
+GRAM_W = 4  # shingle width (tokens per word-gram); independent of BND_R
+GRAM_C = [pow(31, 8 * j, _P) for j in range(GRAM_W)]
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+_TOKS_CTE = """toks AS (
+  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
+  FROM documents
+)"""
 
 
-def _shingles_from_tokens(w: Column, n: int = 4) -> Column:
-    """Distinct word n-gram shingles from a pre-tokenized array column;
-    empty array when < n words.
-
-    Takes a *column reference* (not the tokenizing expression): Catalyst
-    does not CSE subexpressions inside lambda bodies, so tokenizing
-    inline would re-run split+filter per gram element — O(words²) work
-    per document.
-    """
-    k = F.size(w) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-        lambda i: F.array_join(F.slice(w, i, n), "_"),
-    )
-    return F.when(k >= 1, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
+# --- stage: word shingles ------------------------------------------
 
 
 def shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, shingle) exploded distinct shingles — tokens materialized
-    once per doc, grams by array slice."""
-    d = _docs(spark, sf_dir)
-    toks = d.select(
-        "doc_id",
-        F.filter(F.split("text", " "), lambda x: x != "").alias("w"),
+    """``(doc_id, s)``: the distinct word-4-gram shingle strings of
+    every document (Spark twin of ``_SHINGLE_CTE``); docs with < 4
+    words have none.
+
+    The tokens are a column before the grams are sliced: Catalyst does
+    not CSE subexpressions inside lambda bodies, so tokenizing inline
+    would re-run split+filter per gram element — O(words²) work per
+    document."""
+    w = F.col("w")
+    k = F.size(w) - (GRAM_W - 1)
+    grams = F.transform(
+        F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
+        lambda i: F.array_join(F.slice(w, i, GRAM_W), "_"),
     )
-    return toks.select(
-        "doc_id", F.explode(_shingles_from_tokens(F.col("w"))).alias("s")
+    shingles = F.when(k >= 1, F.array_distinct(grams)).otherwise(
+        F.array().cast("array<string>")
     )
+    toks = _docs(spark, sf_dir).select("doc_id", _tokens(F.col("text")).alias("w"))
+    return toks.select("doc_id", F.explode(shingles).alias("s"))
+
+
+_SHINGLE_CTE = f"""{_TOKS_CTE}, sh AS (
+  SELECT DISTINCT doc_id,
+         w[i.i] || '_' || w[i.i+1] || '_' || w[i.i+2] || '_' || w[i.i+3] AS s
+  FROM toks, unnest(range(1, greatest(len(w) - 2, 1))) AS i(i)
+)"""
+
+
+# --- stage: hashed word 4-grams --------------------------------------
+
+
+def _fold(terms: list[Column]) -> Column:
+    """``sum_j (term_j * GRAM_C[j]) mod P``. Each product stays < 2^62
+    and is reduced mod P before summing (at most 4 terms < 4P), so both
+    engines run exact int64 arithmetic."""
+    return F.pmod(
+        sum(F.pmod(t * F.lit(GRAM_C[j]), F.lit(_P)) for j, t in enumerate(terms)),
+        F.lit(_P),
+    )
+
+
+def _fold_sql(terms: list[str]) -> str:
+    """DuckDB twin of ``_fold``."""
+    s = " + ".join(f"({t} * {GRAM_C[j]}) % {_P}" for j, t in enumerate(terms))
+    return f"({s}) % {_P}"
+
+
+def _grams(hw: Column) -> Column:
+    """The hashed word-4-grams (repeats kept) of a token-hash array;
+    empty when it holds fewer than GRAM_W tokens. ``hw`` must be a
+    column or lambda variable, not an expression: the lambda body
+    embeds it once per gram element."""
+    k = F.size(hw) - (GRAM_W - 1)
+    gram = F.transform(
+        F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
+        lambda i: _fold(
+            [F.element_at(hw, (i + j).cast("int")) for j in range(GRAM_W)]
+        ),
+    )
+    return F.when(k >= 1, gram).otherwise(F.array().cast("array<bigint>"))
+
+
+def gram_hash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, h)``: the DISTINCT hashed word-4-gram shingles of
+    every document — the shared input of all MinHash variants (Spark
+    twin of ``_gram_cte``).
+
+    Physical strategy: each TOKEN is poly-hashed once and 4-gram
+    hashes are composed from the token-hash array with fixed weights
+    (GRAM_C) — ~4x less character work than hashing materialized
+    shingle strings (every token sits in up to 4 grams), and the
+    shingle strings are never built at all. The token-hash array is
+    materialized as a column before the explode: lambda bodies and
+    aggregate expressions embed their argument subtrees (no CSE), so
+    inlining would re-hash every token per gram / per aggregate."""
+    th = _docs(spark, sf_dir).select(
+        "doc_id", F.transform(_tokens(F.col("text")), poly_hash).alias("hw")
+    )
+    grams = F.array_distinct(_grams(F.col("hw")))
+    return th.select("doc_id", F.explode(grams).alias("h"))
+
+
+def _gram_cte() -> str:
+    """Shared oracle CTE text: tokenized word arrays -> per-token
+    polynomial hashes -> DISTINCT hashed 4-gram shingles per doc
+    (``hashed(doc_id, h)``). Used verbatim by every MinHash oracle so
+    the gram semantics cannot drift between variants."""
+    gram = _fold_sql([f"hw[i.i + {j}]" for j in range(GRAM_W)])
+    return f"""{_TOKS_CTE}, th AS (
+  SELECT doc_id, list_transform(w, t -> {poly_hash_sql("t")}) AS hw
+  FROM toks
+), hashed AS (
+  SELECT DISTINCT doc_id, {gram} AS h
+  FROM th, unnest(range(1, greatest(len(hw) - 2, 1))) AS i(i)
+)"""
+
+
+# --- stage: MinHash signature + band fold ----------------------------
+#
+# 1-row bands (dedup_minhash_lsh) are the max-recall end of the
+# S-curve; the production point for web-scale near-dup detection is b
+# bands of r rows: candidate iff ALL r minhashes of some band match, so
+# the match probability is 1-(1-j^r)^b — a sharp threshold near
+# (1/b)^(1/r) ~ 0.59 for b=8, r=4, which suppresses the low-jaccard
+# candidate flood that 1-row bands admit at corpus scale. Candidates
+# then get an exact-Jaccard verify on the gram table, restoring
+# precision to 100%. With 1 row per band the fold returns the minhash
+# unchanged (GRAM_C[0] = 1 and 0 <= m < P).
+BND_B = 8  # bands
+BND_R = 4  # rows (minhashes) per band
+BND_K = BND_B * BND_R
+_RNG2 = np.random.RandomState(1234)
+BV_A = [int(a) for a in _RNG2.randint(1, _P, BND_K)]
+BV_B = [int(b) for b in _RNG2.randint(0, _P, BND_K)]
+
+
+def _perm(h: Column, a: int, b: int) -> Column:
+    return F.pmod(F.lit(a) * h + F.lit(b), F.lit(_P))
+
+
+def _band_structs(mins: list[Column], rows: int) -> Column:
+    """``array<struct<band:int, bk:bigint>>``: band ``j`` folds minhashes
+    ``rows*j .. rows*j + rows - 1`` into one key."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(j).alias("band"),
+                _fold(mins[rows * j : rows * (j + 1)]).alias("bk"),
+            )
+            for j in range(len(mins) // rows)
+        ]
+    )
+
+
+def band_table(
+    sh: DataFrame, a: list[int] = BV_A, b: list[int] = BV_B, rows: int = BND_R
+) -> DataFrame:
+    """``(doc_id, band, bk)``: the folded band keys per document from a
+    gram table ``(doc_id, h)`` — a len(a)-way signature agg over the
+    permutations ``(a*h + b) mod P`` + a fold of every ``rows``
+    consecutive minhashes. Defaults: the 8 x 4 production banding."""
+    sig = sh.groupBy("doc_id").agg(
+        *[F.min(_perm(F.col("h"), a[k], b[k])).alias(f"m{k}") for k in range(len(a))]
+    )
+    bands = _band_structs([F.col(f"m{k}") for k in range(len(a))], rows)
+    return sig.select("doc_id", F.explode(bands).alias("bv")).select(
+        "doc_id", F.col("bv.band").alias("band"), F.col("bv.bk").alias("bk")
+    )
+
+
+def _sig_bands_cte(
+    a: list[int] = BV_A, b: list[int] = BV_B, rows: int = BND_R
+) -> str:
+    """Shared oracle CTE text for the banded signatures, twin of
+    ``band_table``: ``sig`` (len(a) affine mins per doc) and ``bands``
+    (the folded band keys per doc)."""
+    sig_cols = ", ".join(
+        f"min(({a[k]}::BIGINT * h + {b[k]}) % {_P}) AS m{k}" for k in range(len(a))
+    )
+    band_rows = "\n  UNION ALL ".join(
+        f"SELECT doc_id, {j} AS band, "
+        f"{_fold_sql([f'm{rows * j + i}' for i in range(rows)])} AS bk FROM sig"
+        for j in range(len(a) // rows)
+    )
+    return f"""sig AS (
+  SELECT doc_id, {sig_cols} FROM hashed GROUP BY doc_id
+), bands AS (
+  {band_rows}
+)"""
+
+
+def _let(value: Column, body) -> Column:
+    """Bind ``value`` to a lambda variable and evaluate ``body`` on it —
+    a let-expression via ``transform(array(value), v -> body(v))[1]``.
+
+    Why: ``withColumn`` intermediates do NOT materialize anything —
+    Catalyst's CollapseProject inlines adjacent projections, so a
+    column referenced k times is recomputed k times unless a generator
+    or aggregation barrier sits between the steps (gram_hash_table
+    relies on its explode for exactly this). A stateless streaming
+    projection has no such barrier; lambda variables are the
+    expression-level fix — bound once per row at runtime, immune to
+    projection collapse. Measured on the band-key projection below:
+    381 s -> 0.7 s at sf0.001 (the collapsed form re-hashed every
+    token per band x row x min — O(words²·k) work)."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def with_band_keys(df: DataFrame) -> DataFrame:
+    """Add a ``bands: array<struct<band:int, bk:bigint>>`` column to any
+    DataFrame with a ``text`` column — the banded MinHash keys as a PURE
+    PROJECTION (no explode/groupBy), bit-identical to ``band_table``
+    (min over the gram array equals min over the exploded distinct
+    grams: duplicates can't change a min; proven by the
+    streaming==batch test).
+
+    This is the streaming-safe form: stateless, usable before a
+    watermark/stateful stage. The token-hash array and gram array are
+    bound as lambda variables (``_let``) so each is computed once per
+    row despite living in a single projection. Docs with < 4 tokens
+    get an empty ``bands`` array (null mins are filtered), matching
+    their absence from the gram table."""
+
+    def bands_of(grams: Column) -> Column:
+        mins = [
+            F.array_min(F.transform(grams, lambda g: _perm(g, BV_A[k], BV_B[k])))
+            for k in range(BND_K)
+        ]
+        return F.filter(_band_structs(mins, BND_R), lambda s: s["bk"].isNotNull())
+
+    hw = F.transform(_tokens(F.col("text")), poly_hash)
+    return df.withColumn("bands", _let(hw, lambda hw: _let(_grams(hw), bands_of)))
+
+
+# --- stage: capped bucket join ---------------------------------------
+
+# document-frequency cap for the shingle join: a shingle shared by
+# more than MAX_SHINGLE_DF documents is boilerplate, carries no dedup
+# signal, and degenerates the self-join quadratically (one stop-shingle
+# in 1M docs = 10^12 pairs). Dropped BEFORE the join in both engines —
+# the Jaccard denominator keeps the full per-doc shingle-set size, so
+# surviving pairs score identically; pairs that shared ONLY hot
+# shingles are (intentionally) not emitted.
+MAX_SHINGLE_DF = 128
+
+# cap on band-bucket size: a (band, value) bucket shared by more than
+# MAX_BAND_BUCKET docs is a mega-cluster of near-identical documents —
+# it belongs to dedup_exact (one groupBy), not to the pairwise LSH path
+# (B docs -> B² pairs). Mirrored in the oracle.
+MAX_BAND_BUCKET = 64
+_BAND_KEYS = ["band", "bk"]
+
+
+def _capped_join(
+    build: DataFrame, keys: list[str], cap: int, probe: DataFrame | None = None
+) -> DataFrame:
+    """Equi-join on ``keys`` against ``build`` with its hot buckets
+    (more than ``cap`` rows) removed first; the probe side is aliased
+    ``a`` and the capped side ``b``. Without ``probe`` it is the
+    self-join of the capped table on ``a.doc_id < b.doc_id``.
+
+    The hot list is a groupBy (map-side combine absorbs the skew — a
+    window over the key would materialize the mega-partition the cap
+    is here to prevent), tiny by construction, so it is BROADCAST into
+    a LEFT ANTI join, which drops hot rows with no shuffle of the big
+    side."""
+    hot = (
+        build.groupBy(*keys)
+        .agg(F.count("*").alias("bsz"))
+        .filter(F.col("bsz") > cap)
+        .select(*keys)
+    )
+    cold = build.join(F.broadcast(hot), keys, "left_anti")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    if probe is None:
+        probe = cold
+        on.append(F.col("a.doc_id") < F.col("b.doc_id"))
+    return probe.alias("a").join(cold.alias("b"), reduce(lambda x, y: x & y, on))
+
+
+def _capped_cte(
+    name: str, src: str, keys: list[str], cap: int, extra: tuple[str, ...] = ()
+) -> str:
+    """Oracle twin of ``_capped_join``'s cap: CTE ``name`` holds the
+    ``src`` rows whose ``keys`` bucket has at most ``cap`` rows."""
+    cols = ", ".join(["doc_id", *extra, *keys])
+    return f"""{name} AS (
+  SELECT {cols}
+  FROM (SELECT {cols},
+               count(*) OVER (PARTITION BY {", ".join(keys)}) AS bsz
+        FROM {src})
+  WHERE bsz <= {cap}
+)"""
+
+
+def _join_sql(probe: str, build: str, keys: list[str]) -> str:
+    """Oracle twin of ``_capped_join``'s join (``a`` probe, ``b``
+    build); the self-join (``probe == build``) keeps a.doc_id <
+    b.doc_id."""
+    on = [f"a.{k} = b.{k}" for k in keys]
+    if probe == build:
+        on.append("a.doc_id < b.doc_id")
+    return f"{probe} a JOIN {build} b\n    ON {' AND '.join(on)}"
+
+
+def _band_pairs(bands: DataFrame, cap: int) -> DataFrame:
+    """``(doc_a, doc_b, n_bands_matched)`` from a band table: the
+    capped (band, bk) self-join, one row per colliding pair."""
+    return (
+        _capped_join(bands, _BAND_KEYS, cap)
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count("*").alias("n_bands_matched"))
+    )
+
+
+_BAND_PAIRS_CTE = f"""{_capped_cte("cold", "bands", _BAND_KEYS, MAX_BAND_BUCKET)},
+pairs AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         cast(count(*) AS bigint) AS n_bands_matched
+  FROM {_join_sql("cold", "cold", _BAND_KEYS)}
+  GROUP BY a.doc_id, b.doc_id
+)"""
+
+
+def banded_candidate_pairs(
+    sh: DataFrame, max_band_bucket: int = MAX_BAND_BUCKET
+) -> DataFrame:
+    """Banded candidate generation over a gram table ``(doc_id, h)``:
+    32-way signature agg -> 8 folded band keys -> mega-bucket
+    broadcast-anti cap -> (band, bk) equi-self-join ->
+    ``(doc_a, doc_b, n_bands_matched)``. Shared by the batch verified
+    pipeline and the streaming twin's equivalence test."""
+    return _band_pairs(band_table(sh), max_band_bucket)
+
+
+# --- stage: exact gram-Jaccard verify --------------------------------
+
+# exact-Jaccard floor for verified pairs, in percent: the filter is
+# evaluated in exact integer arithmetic (inter*100 >= PCT*union) on
+# both engines, so no float-boundary row can flip between them.
+MINHASH_VERIFY_PCT = 35
+
+
+def _verify_jaccard(cand: DataFrame, sh: DataFrame, a: str, b: str) -> DataFrame:
+    """``cand``'s columns + ``jaccard`` for the candidate pairs (doc ids
+    in columns ``a``, ``b``) whose exact gram-Jaccard over the gram
+    table ``sh`` is at least MINHASH_VERIFY_PCT percent. Only candidate
+    docs' grams are joined (candidates << corpus by the S-curve)."""
+    sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    # the gram and size tables are DATA-SIZED (grams ~ tokens x corpus),
+    # but Catalyst's static estimate after the agg/join chain can fall
+    # under the broadcast threshold and statically plan BuildRight
+    # broadcasts — fine at test scale, a driver OOM at 10^6 docs
+    # (measured: "Not enough memory to build and broadcast" at 1.1M
+    # docs). hint("merge") pins the safe sort-merge strategy at plan
+    # time; AQE may still downgrade to broadcast at RUNTIME from real
+    # sizes, which is exactly the right policy.
+    x, y = sh.hint("merge").alias("x"), sh.hint("merge").alias("y")
+    inter = (
+        cand.join(x, F.col(a) == F.col("x.doc_id"))
+        .join(y, (F.col(b) == F.col("y.doc_id")) & (F.col("x.h") == F.col("y.h")))
+        .groupBy(*cand.columns)
+        .agg(F.count("*").alias("ninter"))
+    )
+    za, zb = sz.hint("merge").alias("za"), sz.hint("merge").alias("zb")
+    union = F.col("za.n") + F.col("zb.n") - F.col("ninter")
+    return (
+        inter.join(za, F.col(a) == F.col("za.doc_id"))
+        .join(zb, F.col(b) == F.col("zb.doc_id"))
+        .filter(F.col("ninter") * F.lit(100) >= F.lit(MINHASH_VERIFY_PCT) * union)
+        .select(*cand.columns, r(F.col("ninter") / union).alias("jaccard"))
+    )
+
+
+def _verify_cte(cand: str, cols: list[str]) -> str:
+    """Oracle twin of ``_verify_jaccard``: CTE ``verified`` holds
+    ``cand``'s ``cols`` (the first two are the pair's doc ids) +
+    ``jaccard``, needs ``_gram_cte``'s ``hashed``."""
+    a, b = cols[:2]
+    c_cols = ", ".join(f"c.{c}" for c in cols)
+    i_cols = ", ".join(f"i.{c}" for c in cols)
+    return f"""sz AS (
+  SELECT doc_id, count(*) AS n FROM hashed GROUP BY doc_id
+), inter AS (
+  SELECT {c_cols}, count(*) AS ninter
+  FROM {cand} c
+  JOIN hashed x ON x.doc_id = c.{a}
+  JOIN hashed y ON y.doc_id = c.{b} AND y.h = x.h
+  GROUP BY {c_cols}
+), verified AS (
+  SELECT {i_cols},
+         round(i.ninter * 1.0 / (za.n + zb.n - i.ninter), 6) AS jaccard
+  FROM inter i
+  JOIN sz za ON za.doc_id = i.{a}
+  JOIN sz zb ON zb.doc_id = i.{b}
+  WHERE i.ninter * 100 >= {MINHASH_VERIFY_PCT} * (za.n + zb.n - i.ninter)
+)"""
 
 
 # ---------------------------------------------------------------------
@@ -111,32 +488,12 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# document-frequency cap for the candidate join: a shingle shared by
-# more than MAX_SHINGLE_DF documents is boilerplate, carries no dedup
-# signal, and degenerates the self-join quadratically (one stop-shingle
-# in 1M docs = 10^12 pairs). Dropped BEFORE the join in both engines —
-# the Jaccard denominator keeps the full per-doc shingle-set size, so
-# surviving pairs score identically; pairs that shared ONLY hot
-# shingles are (intentionally) not emitted.
-MAX_SHINGLE_DF = 128
-
 _JACCARD_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id,
-         w[i.i] || '_' || w[i.i+1] || '_' || w[i.i+2] || '_' || w[i.i+3] AS s
-  FROM toks, unnest(range(1, greatest(len(w) - 2, 1))) AS i(i)
-), sizes AS (
+WITH {_SHINGLE_CTE}, sizes AS (
   SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-), cold AS (
-  SELECT doc_id, s
-  FROM (SELECT doc_id, s, count(*) OVER (PARTITION BY s) AS df FROM sh)
-  WHERE df <= {MAX_SHINGLE_DF}
-), shared AS (
+), {_capped_cte("cold", "sh", ["s"], MAX_SHINGLE_DF)}, shared AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM cold a JOIN cold b ON a.s = b.s AND a.doc_id < b.doc_id
+  FROM {_join_sql("cold", "cold", ["s"])}
   GROUP BY a.doc_id, b.doc_id
 )
 SELECT sh.doc_a, sh.doc_b,
@@ -159,37 +516,20 @@ def dedup_ngram_jaccard(
     docstring, and the oracle mirrors it so the gate verifies the
     capped semantics. The intersection counts only sub-cap shingles;
     the union denominator keeps full shingle-set sizes."""
-    from pyspark.sql.window import Window
-
     sh = shingle_table(spark, sf_dir)
-    # shingle-set size and document frequency ride along via windows
-    # BEFORE the self-join: both join sides stay the identical subtree
-    # (one shuffle of the shingle table per window key, physically
-    # reused) and no post-join size lookups. The df window shuffles on
-    # s — the same key the join needs — so the cap costs no extra
-    # exchange on the join side.
+    # shingle-set size rides along via a window BEFORE the self-join:
+    # both join sides stay the identical subtree (one shuffle of the
+    # shingle table per window key, physically reused) and no post-join
+    # size lookups. The cap's hot-list aggregation is built from the
+    # same ``shn`` subtree, so its window exchange is reusable at
+    # runtime too (AQE exchange reuse; measured 2.46 -> 1.9 s at
+    # sf0.1). At 100 TB the shingle table would be staged/persisted
+    # once and every branch would read the materialization instead.
     shn = sh.select(
         "doc_id", "s", F.count("*").over(Window.partitionBy("doc_id")).alias("n")
     )
-    # hot-shingle list via groupBy (map-side combine absorbs the skew —
-    # a window over s would materialize the mega-partition the cap is
-    # here to prevent) -> tiny by construction -> broadcast ANTI join,
-    # which drops hot rows with no shuffle of the big side. Built from
-    # ``shn`` (not ``sh``) so the aggregation branch is the same
-    # subtree as the join sides, making its window exchange reusable at
-    # runtime (AQE exchange reuse; measured 2.46 -> 1.9 s at sf0.1).
-    # At 100 TB the shingle table would be staged/persisted once and
-    # every branch would read the materialization instead.
-    hot = (
-        shn.groupBy("s")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > max_shingle_df)
-        .select("s")
-    )
-    cold = shn.join(F.broadcast(hot), "s", "left_anti")
-    a, b = cold.alias("a"), cold.alias("b")
     return (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        _capped_join(shn, ["s"], max_shingle_df)
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(
             F.count("*").alias("inter"),
@@ -206,140 +546,16 @@ def dedup_ngram_jaccard(
     )
 
 
-# cap on band-bucket size: a (band, value) bucket shared by more than
-# MAX_BAND_BUCKET docs is a mega-cluster of near-identical documents —
-# it belongs to dedup_exact (one groupBy), not to the pairwise LSH path
-# (B docs -> B² pairs). Mirrored in the oracle.
-MAX_BAND_BUCKET = 64
-
-
-def _poly_hash(col: Column) -> Column:
-    """The cross-engine polynomial string hash (same weights and
-    modulus as textops.text_fingerprint, whose oracle proves Spark and
-    DuckDB agree bit-for-bit). Replaces round-1's crc32, which DuckDB
-    lacks — with it the WHOLE MinHash pipeline (hash -> affine
-    permutations -> min -> banding -> candidate join) is
-    oracle-checkable."""
-    from pymfe_spark.operators.textops import poly_hash
-
-    return poly_hash(col)
-
-
-# 4-gram combiner weights: the token-hash composition
-# h(gram) = sum_j (h(token_j) * 31^(8j)) mod P continues the per-char
-# weight scheme across token boundaries. Products stay < 2^62 and each
-# is reduced mod P before summing (4 terms < 4P), so both engines run
-# exact int64 arithmetic.
-GRAM_W = 4  # shingle width (tokens per word-gram); independent of BND_R
-GRAM_C = [pow(31, 8 * j, _P) for j in range(GRAM_W)]
-
-
-def gram_hash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(doc_id, h)``: the DISTINCT hashed word-4-gram shingles of
-    every document — the shared input of all MinHash variants (Spark
-    twin of ``_gram_cte``).
-
-    Physical strategy: each TOKEN is poly-hashed once and 4-gram
-    hashes are composed from the token-hash array with fixed weights
-    (GRAM_C) — ~4x less character work than hashing materialized
-    shingle strings (every token sits in up to 4 grams), and the
-    shingle strings are never built at all. The token-hash array is
-    materialized as a column between steps: lambda bodies and
-    aggregate expressions embed their argument subtrees (no CSE), so
-    inlining would re-hash every token per gram / per aggregate."""
-    from pymfe_spark.operators.textops import poly_hash
-
-    d = _docs(spark, sf_dir)
-    toks = d.select(
-        "doc_id",
-        F.filter(F.split("text", " "), lambda x: x != "").alias("w"),
-    )
-    th = toks.select(
-        "doc_id", F.transform("w", lambda t: poly_hash(t)).alias("hw")
-    )
-    k4 = F.size(F.col("hw")) - (GRAM_W - 1)
-    gram = F.transform(
-        F.sequence(F.lit(1), F.greatest(k4, F.lit(1))),
-        lambda i: F.pmod(
-            sum(
-                F.pmod(
-                    F.element_at(F.col("hw"), (i + j).cast("int"))
-                    * F.lit(GRAM_C[j]),
-                    F.lit(_P),
-                )
-                for j in range(GRAM_W)
-            ),
-            F.lit(_P),
-        ),
-    )
-    grams = F.when(k4 >= 1, F.array_distinct(gram)).otherwise(
-        F.array().cast("array<bigint>")
-    )
-    return th.select("doc_id", F.explode(grams).alias("h"))
-
-
-def _gram_cte() -> str:
-    """Shared oracle CTE text: tokenized word arrays -> per-token
-    polynomial hashes -> DISTINCT hashed 4-gram shingles per doc
-    (``hashed(doc_id, h)``). Used verbatim by every MinHash oracle so
-    the gram semantics cannot drift between variants."""
-    from pymfe_spark.operators.textops import FP_WEIGHTS
-
-    w_sql = "[" + ", ".join(str(w) for w in FP_WEIGHTS) + "]"
-    gram_expr = " + ".join(
-        f"(hw[i.i + {j}] * {GRAM_C[j]}) % {_P}" for j in range(GRAM_W)
-    )
-    return f"""toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents
-), th AS (
-  SELECT doc_id,
-         list_transform(w, t ->
-           cast(list_aggregate(
-             list_transform(range(1, length(t) + 1),
-                            i -> ascii(t[i])::BIGINT * ({w_sql})[((i - 1) % 8) + 1]),
-             'sum') % {_P} AS BIGINT)) AS hw
-  FROM toks
-), hashed AS (
-  SELECT DISTINCT doc_id, ({gram_expr}) % {_P} AS h
-  FROM th, unnest(range(1, greatest(len(hw) - 2, 1))) AS i(i)
-)"""
-
-
-def _minhash_oracle() -> str:
-    sig_cols = ", ".join(
-        f"min(({MH_A[k]}::BIGINT * h + {MH_B[k]}) % {_P}) AS mh{k}"
-        for k in range(MINHASH_K)
-    )
-    band_rows = "\n  UNION ALL ".join(
-        f"SELECT doc_id, {k} AS band, mh{k} AS v FROM sig"
-        for k in range(MINHASH_K)
-    )
-    return f"""
-WITH {_gram_cte()}, sig AS (
-  SELECT doc_id, {sig_cols} FROM hashed GROUP BY doc_id
-), bands AS (
-  {band_rows}
-), cold AS (
-  SELECT doc_id, band, v
-  FROM (SELECT doc_id, band, v,
-               count(*) OVER (PARTITION BY band, v) AS bsz
-        FROM bands)
-  WHERE bsz <= {MAX_BAND_BUCKET}
-), pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         cast(count(*) AS bigint) AS n_bands_matched
-  FROM cold a JOIN cold b
-    ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
+@register(
+    "dedup_minhash_lsh",
+    oracle=f"""
+WITH {_gram_cte()}, {_sig_bands_cte(MH_A, MH_B, 1)}, {_BAND_PAIRS_CTE}
 SELECT doc_a, doc_b, n_bands_matched,
        round(n_bands_matched * 1.0 / {MINHASH_K}, 6) AS est_jaccard
 FROM pairs
-"""
-
-
-@register("dedup_minhash_lsh", oracle=_minhash_oracle(), group=GROUP)
+""",
+    group=GROUP,
+)
 def dedup_minhash_lsh(
     spark: SparkSession, sf_dir: str, max_band_bucket: int = MAX_BAND_BUCKET
 ) -> DataFrame:
@@ -351,53 +567,11 @@ def dedup_minhash_lsh(
     est_jaccard). est_jaccard = matched bands / k is the unbiased
     MinHash estimate; unit tests check it tracks exact Jaccard, and
     the full pipeline (hash, permutations, banding, cap, join) is
-    DuckDB-oracle-checked bit-for-bit. At 100 TB this composes with an
-    exact-Jaccard verify on the candidate pairs (the dedup_ngram
-    oracle shape) — 1-row bands maximize recall, the verify restores
-    precision; ``dedup_minhash_verified`` below IS that composition at
-    the production operating point (8 bands x 4 rows). Gram hashing
-    strategy: see ``gram_hash_table``."""
-    sh = gram_hash_table(spark, sf_dir)
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.pmod(F.lit(MH_A[k]) * F.col("h") + F.lit(MH_B[k]), F.lit(_P))
-            ).alias(f"mh{k}")
-            for k in range(MINHASH_K)
-        ]
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(k).alias("band"), F.col(f"mh{k}").alias("v"))
-                    for k in range(MINHASH_K)
-                ]
-            )
-        ).alias("bv"),
-    ).select("doc_id", F.col("bv.band").alias("band"), F.col("bv.v").alias("v"))
-    # mega-bucket cap via tiny aggregated hot list + broadcast anti
-    # join (same scale shape as the shingle DF cap above)
-    hot = (
-        bands.groupBy("band", "v")
-        .agg(F.count("*").alias("bsz"))
-        .filter(F.col("bsz") > max_band_bucket)
-        .select("band", "v")
-    )
-    cold = bands.join(F.broadcast(hot), ["band", "v"], "left_anti")
-    a, b = cold.alias("a"), cold.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_bands_matched"))
-    )
-    return pairs.select(
+    DuckDB-oracle-checked bit-for-bit. 1-row bands maximize recall;
+    ``dedup_minhash_verified`` is the production operating point
+    (8 bands x 4 rows + exact verify)."""
+    bands = band_table(gram_hash_table(spark, sf_dir), MH_A, MH_B, 1)
+    return _band_pairs(bands, max_band_bucket).select(
         "doc_a",
         "doc_b",
         "n_bands_matched",
@@ -405,244 +579,13 @@ def dedup_minhash_lsh(
     )
 
 
-# --- production operating point: banded MinHash + exact verify -----
-#
-# 1-row bands (above) are the max-recall end of the S-curve; the
-# production point for web-scale near-dup detection is b bands of r
-# rows: candidate iff ALL r minhashes of some band match, so the
-# match probability is 1-(1-j^r)^b — a sharp threshold near
-# (1/b)^(1/r) ~ 0.59 for b=8, r=4, which suppresses the low-jaccard
-# candidate flood that 1-row bands admit at corpus scale. Candidates
-# then get an exact-Jaccard verify on the gram table, restoring
-# precision to 100%.
-BND_B = 8  # bands
-BND_R = 4  # rows (minhashes) per band
-BND_K = BND_B * BND_R
-_RNG2 = np.random.RandomState(1234)
-BV_A = [int(a) for a in _RNG2.randint(1, _P, BND_K)]
-BV_B = [int(b) for b in _RNG2.randint(0, _P, BND_K)]
-# exact-Jaccard floor for verified pairs, in percent: the filter is
-# evaluated in exact integer arithmetic (inter*100 >= PCT*union) on
-# both engines, so no float-boundary row can flip between them.
-MINHASH_VERIFY_PCT = 35
-
-
-def band_table(sh: DataFrame) -> DataFrame:
-    """``(doc_id, band, bk)``: the 8 folded band keys per document from
-    a gram table ``(doc_id, h)`` — 32-way signature agg + band fold."""
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.pmod(F.lit(BV_A[k]) * F.col("h") + F.lit(BV_B[k]), F.lit(_P))
-            ).alias(f"m{k}")
-            for k in range(BND_K)
-        ]
-    )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.pmod(
-                sum(
-                    F.pmod(
-                        F.col(f"m{4 * b + j}") * F.lit(GRAM_C[j]), F.lit(_P)
-                    )
-                    for j in range(BND_R)
-                ),
-                F.lit(_P),
-            ).alias("bk"),
-        )
-        for b in range(BND_B)
-    ]
-    return sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bv")
-    ).select("doc_id", F.col("bv.band").alias("band"), F.col("bv.bk").alias("bk"))
-
-
-def banded_candidate_pairs(
-    sh: DataFrame, max_band_bucket: int = MAX_BAND_BUCKET
-) -> DataFrame:
-    """Banded candidate generation over a gram table ``(doc_id, h)``:
-    32-way signature agg -> 8 folded band keys -> mega-bucket
-    broadcast-anti cap -> (band, bk) equi-self-join ->
-    ``(doc_a, doc_b, n_bands_matched)``. Shared by the batch verified
-    pipeline and the streaming twin's equivalence test."""
-    bands = band_table(sh)
-    hot = (
-        bands.groupBy("band", "bk")
-        .agg(F.count("*").alias("bsz"))
-        .filter(F.col("bsz") > max_band_bucket)
-        .select("band", "bk")
-    )
-    cold = bands.join(F.broadcast(hot), ["band", "bk"], "left_anti")
-    a, b = cold.alias("a"), cold.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_bands_matched"))
-    )
-
-
-def _let(value: Column, body) -> Column:
-    """Bind ``value`` to a lambda variable and evaluate ``body`` on it —
-    a let-expression via ``transform(array(value), v -> body(v))[1]``.
-
-    Why: ``withColumn`` intermediates do NOT materialize anything —
-    Catalyst's CollapseProject inlines adjacent projections, so a
-    column referenced k times is recomputed k times unless a generator
-    or aggregation barrier sits between the steps (gram_hash_table
-    relies on its explode for exactly this). A stateless streaming
-    projection has no such barrier; lambda variables are the
-    expression-level fix — bound once per row at runtime, immune to
-    projection collapse. Measured on the band-key projection below:
-    381 s -> 0.7 s at sf0.001 (the collapsed form re-hashed every
-    token per band x row x min — O(words²·k) work)."""
-    return F.element_at(F.transform(F.array(value), body), 1)
-
-
-def with_band_keys(df: DataFrame) -> DataFrame:
-    """Add a ``bands: array<struct<band:int, bk:bigint>>`` column to any
-    DataFrame with a ``text`` column — the banded MinHash keys as a PURE
-    PROJECTION (no explode/groupBy), bit-identical to the aggregated
-    path in ``banded_candidate_pairs`` (min over the gram array equals
-    min over the exploded distinct grams: duplicates can't change a
-    min; proven by the streaming==batch test).
-
-    This is the streaming-safe form: stateless, usable before a
-    watermark/stateful stage. The token-hash array and gram array are
-    bound as lambda variables (``_let``) so each is computed once per
-    row despite living in a single projection. Docs with < 4 tokens
-    get an empty ``bands`` array (null mins are filtered), matching
-    their absence from the gram table."""
-
-    def bands_of(grams: Column) -> Column:
-        mins = [
-            F.array_min(
-                F.transform(
-                    grams,
-                    lambda g: F.pmod(
-                        F.lit(BV_A[k]) * g + F.lit(BV_B[k]), F.lit(_P)
-                    ),
-                )
-            )
-            for k in range(BND_K)
-        ]
-        return F.filter(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.pmod(
-                            sum(
-                                F.pmod(
-                                    mins[4 * b + j] * F.lit(GRAM_C[j]),
-                                    F.lit(_P),
-                                )
-                                for j in range(BND_R)
-                            ),
-                            F.lit(_P),
-                        ).alias("bk"),
-                    )
-                    for b in range(BND_B)
-                ]
-            ),
-            lambda s: s["bk"].isNotNull(),
-        )
-
-    def grams_of(hw: Column) -> Column:
-        # shingle width is GRAM_W (matches gram_hash_table), NOT BND_R
-        # (rows-per-band) — the two are only coincidentally both 4
-        k4 = F.size(hw) - (GRAM_W - 1)
-        gram = F.transform(
-            F.sequence(F.lit(1), F.greatest(k4, F.lit(1))),
-            lambda i: F.pmod(
-                sum(
-                    F.pmod(
-                        F.element_at(hw, (i + j).cast("int"))
-                        * F.lit(GRAM_C[j]),
-                        F.lit(_P),
-                    )
-                    for j in range(GRAM_W)
-                ),
-                F.lit(_P),
-            ),
-        )
-        return F.when(k4 >= 1, gram).otherwise(
-            F.array().cast("array<bigint>")
-        )
-
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
-    hw_expr = F.transform(toks, lambda t: _poly_hash(t))
-    bands = _let(
-        hw_expr, lambda hw: _let(grams_of(hw), lambda grams: bands_of(grams))
-    )
-    return df.withColumn("bands", bands)
-
-
-def _band_key_sql(b: int) -> str:
-    terms = " + ".join(
-        f"(m{4 * b + j} * {GRAM_C[j]}) % {_P}" for j in range(BND_R)
-    )
-    return f"({terms}) % {_P}"
-
-
-def _sig_bands_cte() -> str:
-    """Shared oracle CTE text for the banded signatures: ``sig`` (32
-    affine mins per doc) and ``bands`` (8 folded band keys per doc)."""
-    sig_cols = ", ".join(
-        f"min(({BV_A[k]}::BIGINT * h + {BV_B[k]}) % {_P}) AS m{k}"
-        for k in range(BND_K)
-    )
-    band_rows = "\n  UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, {_band_key_sql(b)} AS bk FROM sig"
-        for b in range(BND_B)
-    )
-    return f"""sig AS (
-  SELECT doc_id, {sig_cols} FROM hashed GROUP BY doc_id
-), bands AS (
-  {band_rows}
-)"""
-
-
-def _minhash_verified_oracle() -> str:
-    return f"""
-WITH {_gram_cte()}, {_sig_bands_cte()}, cold AS (
-  SELECT doc_id, band, bk
-  FROM (SELECT doc_id, band, bk,
-               count(*) OVER (PARTITION BY band, bk) AS bsz
-        FROM bands)
-  WHERE bsz <= {MAX_BAND_BUCKET}
-), pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         cast(count(*) AS bigint) AS n_bands_matched
-  FROM cold a JOIN cold b
-    ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-), sz AS (
-  SELECT doc_id, count(*) AS n FROM hashed GROUP BY doc_id
-), inter AS (
-  SELECT p.doc_a, p.doc_b, p.n_bands_matched, count(*) AS ninter
-  FROM pairs p
-  JOIN hashed x ON x.doc_id = p.doc_a
-  JOIN hashed y ON y.doc_id = p.doc_b AND y.h = x.h
-  GROUP BY p.doc_a, p.doc_b, p.n_bands_matched
-)
-SELECT i.doc_a, i.doc_b, i.n_bands_matched,
-       round(i.ninter * 1.0 / (za.n + zb.n - i.ninter), 6) AS jaccard
-FROM inter i
-JOIN sz za ON za.doc_id = i.doc_a
-JOIN sz zb ON zb.doc_id = i.doc_b
-WHERE i.ninter * 100 >= {MINHASH_VERIFY_PCT} * (za.n + zb.n - i.ninter)
-"""
-
-
 @register(
     "dedup_minhash_verified",
-    oracle=_minhash_verified_oracle(),
+    oracle=f"""
+WITH {_gram_cte()}, {_sig_bands_cte()}, {_BAND_PAIRS_CTE},
+{_verify_cte("pairs", ["doc_a", "doc_b", "n_bands_matched"])}
+SELECT doc_a, doc_b, n_bands_matched, jaccard FROM verified
+""",
     group=GROUP,
 )
 def dedup_minhash_verified(
@@ -656,50 +599,17 @@ def dedup_minhash_verified(
     agg; band keys fold each band's 4 minhashes into one BIGINT (same
     exact mod-P arithmetic both engines), so the candidate join is a
     plain equi-join on (band, bk) with the mega-bucket broadcast-anti
-    cap; the verify re-joins only candidate docs' grams (candidates
-    << corpus by the b·j^r S-curve). Every stage is deterministic and
-    the WHOLE pipeline — hash, permutations, band fold, cap, join,
-    exact verify, integer-exact threshold — is DuckDB-value-oracled.
+    cap; the verify re-joins only candidate docs' grams. Every stage
+    is deterministic and the WHOLE pipeline — hash, permutations, band
+    fold, cap, join, exact verify, integer-exact threshold — is
+    DuckDB-value-oracled.
 
     Reference analogue: near-dup curation has no pymfe counterpart;
     the operating point follows the published LSH banding analysis
     (match prob 1-(1-j^r)^b)."""
     sh = gram_hash_table(spark, sf_dir)
-    pairs = banded_candidate_pairs(sh, max_band_bucket)
-    sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    # the gram and size tables are DATA-SIZED (grams ~ tokens x corpus),
-    # but Catalyst's static estimate after the agg/join chain can fall
-    # under the broadcast threshold and statically plan BuildRight
-    # broadcasts — fine at test scale, a driver OOM at 10^6 docs
-    # (measured: "Not enough memory to build and broadcast" at 1.1M
-    # docs). hint("merge") pins the safe sort-merge strategy at plan
-    # time; AQE may still downgrade to broadcast at RUNTIME from real
-    # sizes, which is exactly the right policy.
-    x, y = sh.hint("merge").alias("x"), sh.hint("merge").alias("y")
-    inter = (
-        pairs.join(x, F.col("doc_a") == F.col("x.doc_id"))
-        .join(
-            y,
-            (F.col("doc_b") == F.col("y.doc_id"))
-            & (F.col("x.h") == F.col("y.h")),
-        )
-        .groupBy("doc_a", "doc_b", "n_bands_matched")
-        .agg(F.count("*").alias("ninter"))
-    )
-    za, zb = sz.hint("merge").alias("za"), sz.hint("merge").alias("zb")
-    union = F.col("za.n") + F.col("zb.n") - F.col("ninter")
-    return (
-        inter.join(za, F.col("doc_a") == F.col("za.doc_id"))
-        .join(zb, F.col("doc_b") == F.col("zb.doc_id"))
-        .filter(
-            F.col("ninter") * F.lit(100) >= F.lit(MINHASH_VERIFY_PCT) * union
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_bands_matched",
-            r(F.col("ninter") / union).alias("jaccard"),
-        )
+    return _verify_jaccard(
+        banded_candidate_pairs(sh, max_band_bucket), sh, "doc_a", "doc_b"
     )
 
 
@@ -711,9 +621,7 @@ def dedup_minhash_verified(
 # is the "new" increment (20%), the rest is history.
 INCR_MOD = 5
 
-
-def _incremental_oracle() -> str:
-    return f"""
+_INCREMENTAL_ORACLE = f"""
 WITH {_gram_cte()}, {_sig_bands_cte()},
 newd AS (
   SELECT doc_id, lower(trim(text)) AS norm FROM documents
@@ -723,32 +631,14 @@ newd AS (
   FROM (SELECT doc_id, lower(trim(text)) AS norm FROM documents
         WHERE doc_id % {INCR_MOD} <> 0)
   GROUP BY norm
-), hbc AS (
-  SELECT doc_id, band, bk
-  FROM (SELECT doc_id, band, bk,
-               count(*) OVER (PARTITION BY band, bk) AS bsz
-        FROM bands WHERE doc_id % {INCR_MOD} <> 0)
-  WHERE bsz <= {MAX_BAND_BUCKET}
-), cand AS (
-  SELECT DISTINCT nb.doc_id AS new_id, hbc.doc_id AS hist_id
-  FROM (SELECT doc_id, band, bk FROM bands
-        WHERE doc_id % {INCR_MOD} = 0) nb
-  JOIN hbc ON nb.band = hbc.band AND nb.bk = hbc.bk
-), sz AS (
-  SELECT doc_id, count(*) AS n FROM hashed GROUP BY doc_id
-), inter AS (
-  SELECT c.new_id, c.hist_id, count(*) AS ninter
-  FROM cand c
-  JOIN hashed x ON x.doc_id = c.new_id
-  JOIN hashed y ON y.doc_id = c.hist_id AND y.h = x.h
-  GROUP BY c.new_id, c.hist_id
-), near AS (
-  SELECT i.new_id, min(i.hist_id) AS dup_of_near
-  FROM inter i
-  JOIN sz za ON za.doc_id = i.new_id
-  JOIN sz zb ON zb.doc_id = i.hist_id
-  WHERE i.ninter * 100 >= {MINHASH_VERIFY_PCT} * (za.n + zb.n - i.ninter)
-  GROUP BY i.new_id
+), nb AS (
+  SELECT doc_id, band, bk FROM bands WHERE doc_id % {INCR_MOD} = 0
+), {_capped_cte("hbc", f"bands WHERE doc_id % {INCR_MOD} <> 0", _BAND_KEYS,
+                 MAX_BAND_BUCKET)}, cand AS (
+  SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS hist_id
+  FROM {_join_sql("nb", "hbc", _BAND_KEYS)}
+), {_verify_cte("cand", ["new_id", "hist_id"])}, near AS (
+  SELECT new_id, min(hist_id) AS dup_of_near FROM verified GROUP BY new_id
 )
 SELECT nd.doc_id,
        CASE WHEN hn.dup_of_exact IS NOT NULL THEN 'drop_exact'
@@ -762,11 +652,21 @@ LEFT JOIN near ON near.new_id = nd.doc_id
 """
 
 
-@register(
-    "dedup_incremental",
-    oracle=_incremental_oracle(),
-    group=GROUP,
-)
+def _increment_candidates(bands: DataFrame, max_band_bucket: int) -> DataFrame:
+    """``(new_id, hist_id)``: the band keys of new docs probing the
+    history band table, with the cap on the history side only."""
+    is_new = F.pmod(F.col("doc_id"), F.lit(INCR_MOD)) == 0
+    return (
+        _capped_join(
+            bands.filter(~is_new), _BAND_KEYS, max_band_bucket,
+            probe=bands.filter(is_new),
+        )
+        .select(F.col("a.doc_id").alias("new_id"), F.col("b.doc_id").alias("hist_id"))
+        .distinct()
+    )
+
+
+@register("dedup_incremental", oracle=_INCREMENTAL_ORACLE, group=GROUP)
 def dedup_incremental(
     spark: SparkSession, sf_dir: str, max_band_bucket: int = MAX_BAND_BUCKET
 ) -> DataFrame:
@@ -802,56 +702,15 @@ def dedup_incremental(
     )
     # history-keyed tables are DATA-SIZED: pin the safe merge strategy
     # (AQE may downgrade to broadcast from real runtime sizes) — same
-    # static-broadcast OOM exposure as dedup_minhash_verified's verify
+    # static-broadcast OOM exposure as the verify's joins
     exact = new_docs.join(hist_norms.hint("merge"), "norm", "left").select(
         "doc_id", "dup_of_exact"
     )
 
-    bands = band_table(gram_hash_table(spark, sf_dir))
-    is_new_b = F.pmod(F.col("doc_id"), F.lit(INCR_MOD)) == 0
-    hb = bands.filter(~is_new_b)
-    hot = (
-        hb.groupBy("band", "bk")
-        .agg(F.count("*").alias("bsz"))
-        .filter(F.col("bsz") > max_band_bucket)
-        .select("band", "bk")
-    )
-    hbc = hb.join(F.broadcast(hot), ["band", "bk"], "left_anti")
-    nb = bands.filter(is_new_b)
-    cand = (
-        nb.alias("n")
-        .join(
-            hbc.alias("h"),
-            (F.col("n.band") == F.col("h.band"))
-            & (F.col("n.bk") == F.col("h.bk")),
-        )
-        .select(
-            F.col("n.doc_id").alias("new_id"),
-            F.col("h.doc_id").alias("hist_id"),
-        )
-        .distinct()
-    )
     sh = gram_hash_table(spark, sf_dir)
-    sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    x, y = sh.hint("merge").alias("x"), sh.hint("merge").alias("y")
-    inter = (
-        cand.join(x, F.col("new_id") == F.col("x.doc_id"))
-        .join(
-            y,
-            (F.col("hist_id") == F.col("y.doc_id"))
-            & (F.col("x.h") == F.col("y.h")),
-        )
-        .groupBy("new_id", "hist_id")
-        .agg(F.count("*").alias("ninter"))
-    )
-    za, zb = sz.hint("merge").alias("za"), sz.hint("merge").alias("zb")
-    union = F.col("za.n") + F.col("zb.n") - F.col("ninter")
+    cand = _increment_candidates(band_table(sh), max_band_bucket)
     near = (
-        inter.join(za, F.col("new_id") == F.col("za.doc_id"))
-        .join(zb, F.col("hist_id") == F.col("zb.doc_id"))
-        .filter(
-            F.col("ninter") * F.lit(100) >= F.lit(MINHASH_VERIFY_PCT) * union
-        )
+        _verify_jaccard(cand, sh, "new_id", "hist_id")
         .groupBy("new_id")
         .agg(F.min("hist_id").alias("dup_of_near"))
     )
@@ -876,10 +735,9 @@ SIMHASH_BITS = 31  # poly hash is mod 2^31-1 -> 31 usable bits
 _SIMHASH_BAND_BITS = ((0, 8), (8, 8), (16, 8), (24, 7))
 
 
-def _simhash_oracle() -> str:
-    from pymfe_spark.operators.textops import FP_WEIGHTS
-
-    w_sql = "[" + ", ".join(str(w) for w in FP_WEIGHTS) + "]"
+def _simhash_cte() -> str:
+    """Oracle twin of ``dedup_simhash``: CTE ``sig`` holds (doc_id,
+    simhash, band0..band3)."""
     bit_sums = ", ".join(
         f"sum(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS b{j}"
         for j in range(SIMHASH_BITS)
@@ -892,50 +750,35 @@ def _simhash_oracle() -> str:
         f"cast((simhash >> {off}) & {2**width - 1} AS int) AS band{k}"
         for k, (off, width) in enumerate(_SIMHASH_BAND_BITS)
     )
-    return f"""
-WITH tok AS (
-  SELECT DISTINCT doc_id, t
-  FROM (SELECT doc_id,
-               unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS t
-        FROM documents)
+    return f"""{_TOKS_CTE}, tok AS (
+  SELECT DISTINCT doc_id, t FROM (SELECT doc_id, unnest(w) AS t FROM toks)
 ), hashed AS (
-  SELECT doc_id,
-         cast(list_aggregate(
-           list_transform(range(1, length(t) + 1),
-                          i -> ascii(t[i])::BIGINT * ({w_sql})[((i - 1) % 8) + 1]),
-           'sum') % 2147483647 AS BIGINT) AS h
-  FROM tok
+  SELECT doc_id, {poly_hash_sql("t")} AS h FROM tok
 ), bits AS (
   SELECT doc_id, {bit_sums} FROM hashed GROUP BY doc_id
 ), sig AS (
-  SELECT doc_id, {sh_expr} AS simhash FROM bits
-)
-SELECT doc_id, simhash, {band_cols} FROM sig
-"""
+  SELECT doc_id, simhash, {band_cols}
+  FROM (SELECT doc_id, {sh_expr} AS simhash FROM bits)
+)"""
 
 
 @register(
     "dedup_simhash",
-    oracle=_simhash_oracle(), group=GROUP,
+    oracle=f"WITH {_simhash_cte()}\nSELECT * FROM sig",
+    group=GROUP,
     gate_oracle=False,  # rotated out of the gate in r4 (long-green r1-r3); pytest enforces
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """31-bit SimHash over distinct tokens (sign-aggregated bits of the
     cross-engine polynomial token hash) + 4 bands (8/8/8/7 bits) for
-    hamming-neighbor bucketing. The polynomial hash (same weights as
-    text_fingerprint) replaces round-1's crc32, which DuckDB lacks —
-    signature construction and banding are now oracle-checked
-    bit-for-bit."""
-    d = _docs(spark, sf_dir)
+    hamming-neighbor bucketing; signature construction and banding
+    are oracle-checked bit-for-bit."""
     # hash materialized pre-aggregation: 31 sum() expressions would
     # otherwise each re-evaluate the hash per row (no CSE across
     # aggregate expressions)
-    tok = d.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(F.filter(F.split("text", " "), lambda x: x != ""))
-        ).alias("t"),
-    ).select("doc_id", _poly_hash(F.col("t")).alias("h"))
+    tok = _docs(spark, sf_dir).select(
+        "doc_id", F.explode(F.array_distinct(_tokens(F.col("text")))).alias("t")
+    ).select("doc_id", poly_hash(F.col("t")).alias("h"))
     h = F.col("h")
     bit_sums = tok.groupBy("doc_id").agg(
         *[
@@ -965,39 +808,24 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SIMHASH_MAX_HAMMING = 3
 
-
-def _simhash_pairs_oracle() -> str:
-    base = _simhash_oracle().rstrip()
-    # reuse the signature pipeline, then band-join + hamming verify
-    body = base[: base.rindex("SELECT doc_id, simhash")]
-    band_rows = "\n  UNION ALL ".join(
-        f"SELECT doc_id, simhash, {k} AS k, "
-        f"cast((simhash >> {off}) & {2**width - 1} AS int) AS v FROM sig"
-        for k, (off, width) in enumerate(_SIMHASH_BAND_BITS)
-    )
-    return (
-        body
-        + f""", bands AS (
-  {band_rows}
-), cold AS (
-  SELECT doc_id, simhash, k, v
-  FROM (SELECT doc_id, simhash, k, v,
-               count(*) OVER (PARTITION BY k, v) AS bsz
-        FROM bands)
-  WHERE bsz <= {MAX_BAND_BUCKET}
+_SIMHASH_BANDS = "\n  UNION ALL ".join(
+    f"SELECT doc_id, simhash, {k} AS k, band{k} AS v FROM sig"
+    for k in range(len(_SIMHASH_BAND_BITS))
 )
+_SIMHASH_PAIRS_ORACLE = f"""
+WITH {_simhash_cte()}, bands AS (
+  {_SIMHASH_BANDS}
+), {_capped_cte("cold", "bands", ["k", "v"], MAX_BAND_BUCKET, ("simhash",))}
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        cast(bit_count(xor(a.simhash, b.simhash)) AS int) AS hamming
-FROM cold a JOIN cold b
-  ON a.k = b.k AND a.v = b.v AND a.doc_id < b.doc_id
+FROM {_join_sql("cold", "cold", ["k", "v"])}
 WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_MAX_HAMMING}
 """
-    )
 
 
 @register(
     "dedup_simhash_pairs",
-    oracle=_simhash_pairs_oracle(), group=GROUP,
+    oracle=_SIMHASH_PAIRS_ORACLE, group=GROUP,
     gate_oracle=False,  # rotated out of the gate in r4 (long-green r1-r3); pytest enforces
 )
 def dedup_simhash_pairs(
@@ -1019,39 +847,24 @@ def dedup_simhash_pairs(
     and verify bit-for-bit. Output: (doc_a, doc_b, hamming), one row
     per pair (multi-band collisions deduped); recovery of planted
     near-dups is unit-tested against token-level edits."""
-    sig = dedup_simhash(spark, sf_dir)
-    bands = sig.select(
+    n_bands = len(_SIMHASH_BAND_BITS)
+    bands = dedup_simhash(spark, sf_dir).select(
         "doc_id",
         "simhash",
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(k).alias("k"), F.col(f"band{k}").alias("v")
-                    )
-                    for k in range(4)
+                    F.struct(F.lit(k).alias("k"), F.col(f"band{k}").alias("v"))
+                    for k in range(n_bands)
                 ]
             )
-        ).alias("b"),
-    ).select("doc_id", "simhash", F.col("b.k").alias("k"), F.col("b.v").alias("v"))
-    hot = (
-        bands.groupBy("k", "v")
-        .agg(F.count("*").alias("bsz"))
-        .filter(F.col("bsz") > MAX_BAND_BUCKET)
-        .select("k", "v")
-    )
-    bands = bands.join(F.broadcast(hot), ["k", "v"], "left_anti")
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.k") == F.col("b.k"))
-        & (F.col("a.v") == F.col("b.v"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
+        ).alias("kv"),
+    ).select("doc_id", "simhash", F.col("kv.k").alias("k"), F.col("kv.v").alias("v"))
+    pairs = _capped_join(bands, ["k", "v"], MAX_BAND_BUCKET).select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
-        F.bit_count(
-            F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-        ).alias("hamming"),
+        F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias(
+            "hamming"
+        ),
     )
     return pairs.filter(F.col("hamming") <= max_hamming).distinct()

@@ -28,7 +28,7 @@ same fixpoint, which is exactly what a cross-engine oracle should be.
 Reference scope note: pymfe has no graph operators; this is part of
 the training-data-pipeline tier (brief: dedup as a first-class
 component), composing with dedup.py's candidate generation
-(dedup.py:119-207).
+(``dedup_ngram_jaccard``: the capped shingle join).
 """
 
 from __future__ import annotations

@@ -55,6 +55,18 @@ def poly_hash(col: Column) -> Column:
     )
 
 
+def poly_hash_sql(s: str) -> str:
+    """DuckDB twin of ``poly_hash`` over the SQL string expression
+    ``s``. The cast pins BIGINT: DuckDB's list sum widens to HUGEINT;
+    the value fits and equals Spark's BIGINT, but the driver's
+    value-hash is type-sensitive."""
+    return (
+        f"cast(list_aggregate(list_transform(range(1, length({s}) + 1), "
+        f"i -> ascii(({s})[i])::BIGINT * ({_FPW_SQL})[((i - 1) % 8) + 1]), "
+        f"'sum') % {_P} AS BIGINT)"
+    )
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -261,14 +273,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _FP_ORACLE = f"""
-SELECT doc_id,
-       -- cast: DuckDB's list sum widens to HUGEINT; the value fits and
-       -- equals Spark's BIGINT, but the driver's value-hash is
-       -- type-sensitive, so pin the output type to BIGINT explicitly
-       cast(list_aggregate(
-         list_transform(range(1, length(text) + 1),
-                        i -> ascii(text[i])::BIGINT * ({_FPW_SQL})[((i - 1) % 8) + 1]),
-         'sum') % {_P} AS BIGINT) AS fingerprint
+SELECT doc_id, {poly_hash_sql("text")} AS fingerprint
 FROM documents
 """
 

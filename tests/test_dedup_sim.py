@@ -84,16 +84,21 @@ _PROPERTY_RUNS = itertools.count()
 )
 def test_minhash_spark_matches_duckdb_on_random_documents(spark, tmp_path, docs):
     """The Spark MinHash inputs equal their DuckDB oracle twins on random
-    documents: ``gram_hash_table`` == ``_gram_cte``'s ``hashed`` rows, and
+    documents: ``gram_hash_table`` == ``_gram_cte``'s ``hashed`` rows,
     ``with_band_keys`` exploded to (doc_id, band, bk) == ``_sig_bands_cte``'s
-    ``bands`` rows. Each example writes its own ``documents.parquet``."""
+    ``bands`` rows, and the k=16 1-row ``band_table`` of dedup_minhash_lsh
+    == ``_sig_bands_cte(MH_A, MH_B, 1)``'s rows. Each example writes its
+    own ``documents.parquet``."""
     import duckdb
     import pandas as pd
 
     from pymfe_spark.operators.dedup import (
+        MH_A,
+        MH_B,
         _docs,
         _gram_cte,
         _sig_bands_cte,
+        band_table,
         gram_hash_table,
         with_band_keys,
     )
@@ -111,7 +116,8 @@ def test_minhash_spark_matches_duckdb_on_random_documents(spark, tmp_path, docs)
     def rows(df: pd.DataFrame) -> list[tuple]:
         return sorted(map(tuple, df.astype("int64").itertuples(index=False)))
 
-    grams = gram_hash_table(spark, str(sf)).toPandas()
+    gram_table = gram_hash_table(spark, str(sf))
+    grams = gram_table.toPandas()
     hashed = con.execute(f"WITH {_gram_cte()} SELECT doc_id, h FROM hashed").df()
     assert rows(grams) == rows(hashed)
 
@@ -125,6 +131,13 @@ def test_minhash_spark_matches_duckdb_on_random_documents(spark, tmp_path, docs)
         f"WITH {_gram_cte()}, {_sig_bands_cte()} SELECT doc_id, band, bk FROM bands"
     ).df()
     assert rows(bands) == rows(sig)
+
+    lsh = band_table(gram_table, MH_A, MH_B, 1).toPandas()
+    lsh_sig = con.execute(
+        f"WITH {_gram_cte()}, {_sig_bands_cte(MH_A, MH_B, 1)} "
+        "SELECT doc_id, band, bk FROM bands"
+    ).df()
+    assert rows(lsh) == rows(lsh_sig)
 
 
 def test_simhash_near_duplicates_have_small_hamming(spark):

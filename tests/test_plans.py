@@ -89,7 +89,13 @@ def test_dedup_caps_are_planned_as_broadcast_anti_joins(spark):
     """The hot-key caps must exist in the PLAN (round 1 shipped one as
     a docstring): a broadcast LeftAnti join against the tiny aggregated
     hot list, never a shuffle of the big side by the hot key."""
-    for name in ("dedup_ngram_jaccard", "dedup_minhash_lsh", "zz_dedup_simhash_pairs"):
+    for name in (
+        "dedup_ngram_jaccard",
+        "dedup_minhash_lsh",
+        "dedup_minhash_verified",
+        "dedup_incremental",
+        "zz_dedup_simhash_pairs",
+    ):
         plan = plan_of(spark, name)
         assert re.search(r"BroadcastHashJoin.*LeftAnti|LeftAnti.*Broadcast", plan), (
             f"{name}: hot-key cap not planned as a broadcast anti join"

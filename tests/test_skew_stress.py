@@ -7,6 +7,9 @@ caps must actually ROUTE pathological inputs, not just exist.
   cluster, and sub-cap near-dups must STILL be recalled;
 - a hot-shingle cluster larger than MAX_SHINGLE_DF: the
   broadcast-anti shingle cap must keep the candidate join linear;
+- the same cluster split into an increment and a history: the
+  history-side band cap of dedup_incremental must keep the cluster out
+  of the near tier while the exact tier still drops it;
 - the mega-conversation fixture is covered by tests/test_hybrid.py
   (routing + value parity) and bench.py --skew (straggler bound via
   task metrics at 10^6 turns).
@@ -20,12 +23,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from pymfe_spark.operators.dedup import (
+    INCR_MOD,
     MAX_BAND_BUCKET,
     MAX_SHINGLE_DF,
+    _increment_candidates,
+    band_table,
     dedup_exact,
+    dedup_incremental,
     dedup_minhash_lsh,
     dedup_minhash_verified,
     dedup_ngram_jaccard,
+    gram_hash_table,
 )
 
 CLUSTER = 300  # > MAX_BAND_BUCKET (64) and > MAX_SHINGLE_DF (128)
@@ -143,3 +151,28 @@ def test_hot_shingles_keep_candidate_join_linear(spark, skew_dir):
     near = pairs[(pairs.doc_a >= 910_000_000) & (pairs.doc_b >= 910_000_000)]
     assert len(near) == 10 and (near.jaccard > 0.5).all()
     assert wall < 60, f"hot-shingle fixture took {wall:.1f}s"
+
+
+def test_history_band_cap_in_incremental_dedup(spark, skew_dir):
+    """Ids % INCR_MOD == 0 are the increment, so the cluster splits into
+    60 new docs and 240 history docs (> MAX_BAND_BUCKET): every history
+    band bucket of the cluster is capped, the new cluster docs fall to
+    the exact tier, and the sub-cap near group is still matched."""
+    cluster = range(900_000_000, 900_000_000 + CLUSTER)
+    hist = [d for d in cluster if d % INCR_MOD]
+    assert len(hist) > MAX_BAND_BUCKET
+    out = dedup_incremental(spark, skew_dir).toPandas().set_index("doc_id")
+    new_cluster = out.loc[[d for d in cluster if d % INCR_MOD == 0]]
+    assert (new_cluster.decision == "drop_exact").all()
+    assert (new_cluster.dup_of == min(hist)).all()
+    assert out.loc[910_000_000, "decision"] == "drop_near"
+    assert 910_000_001 <= out.loc[910_000_000, "dup_of"] <= 910_000_004
+    cand = _increment_candidates(
+        band_table(gram_hash_table(spark, skew_dir)), MAX_BAND_BUCKET
+    ).toPandas()
+    assert (cand.new_id == 910_000_000).any(), "near group lost its candidates"
+    leaked = cand[cand.hist_id.isin(hist)]
+    assert len(leaked) == 0, (
+        f"{len(leaked)} candidate pairs probe capped history buckets "
+        f"({MAX_BAND_BUCKET})"
+    )

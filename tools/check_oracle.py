@@ -4,19 +4,21 @@ Runs every catalog query on Spark and its oracle SQL on DuckDB at the
 given sf dir, compares row count, column names, and order-insensitive
 rounded values. Usage:
 
-    python tools/check_oracle.py [--json PATH] [sf_dir] [query ...]
+    python tools/check_oracle.py [sf_dir] [query ...] [--json PATH]
 
-``--json PATH`` also writes the sweep as a JSON list with one record
-per query: ``name``, ``status`` (``ok``, ``rows-only`` or ``fail``),
-``rows`` (the Spark result's row count, null when Spark raised) and
-``gate_oracle`` (true for a query with an oracle registered as a gate
-oracle).
+A requested query name that is not in the catalog is an error: the tool
+names every such query and exits with status 2 before running anything.
+``--json PATH`` (in any position) also writes the sweep as a JSON list
+with one record per query: ``name``, ``status`` (``ok``, ``rows-only``
+or ``fail``), ``rows`` (the Spark result's row count, null when Spark
+raised) and ``gate_oracle`` (true for a query with an oracle registered
+as a gate oracle).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
-import sys
 
 import duckdb
 import numpy as np
@@ -72,13 +74,18 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[st
 
 
 def main() -> int:
-    json_path = None
-    if sys.argv[1:2] == ["--json"]:
-        json_path = sys.argv[2]
-        del sys.argv[1:3]
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(
+        description="Run catalog queries against their DuckDB oracles."
+    )
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.001")
+    ap.add_argument("queries", nargs="*", help="catalog names to check (default: all)")
+    ap.add_argument("--json", metavar="PATH", help="write one record per query here")
+    args = ap.parse_intermixed_args()
+    sf_dir, json_path, only = args.sf_dir, args.json, set(args.queries)
     catalog = load_catalog()
+    unknown = sorted(only - set(catalog))
+    if unknown:
+        ap.error("not in the catalog: " + ", ".join(unknown))
     spark = get_spark(cpus=16)
     con = duckdb.connect()
     for t in (
