@@ -1,0 +1,199 @@
+"""One moment algebra: every mean / sd / skewness / kurtosis site of the
+engine finishes its moments here, each piece written once.
+
+- **Central path** (two passes, ``**`` / ``pow``), the kernel's
+  pymfe-parity form: ``central_moments`` gives the population m2, m3,
+  m4 of each row; ``skewness`` / ``kurtosis`` finish e1071 type 3
+  (pymfe ``_summary.py:146-270``) in numpy, and ``central_shape`` is
+  the same float tree as a Spark Column or DuckDB SQL text.
+- **Raw power-sum path**: state ``(n, S1..S4)``. The sums stay exact
+  integers in double while below 2^53, so states merge by plain
+  addition in any order and Spark and DuckDB agree bit for bit. The
+  finishers use ``+ - * /`` and ``sqrt`` only (correctly rounded in
+  every engine, unlike ``pow``), so one code path runs on Python
+  floats, Spark Columns and SQL text.
+
+One degenerate-input rule: sd needs n >= 2; skewness, kurtosis and
+correlation need m2 > 0. Undefined values are NaN (numpy, Python) or
+NULL (Spark, DuckDB), never a division-by-zero error under ANSI mode.
+An ``Engine`` (``PY``, ``COL``, ``SQL``) supplies the non-arithmetic
+pieces; ``Sql`` is SQL text that composes with the operators like a
+Column, fully parenthesised, so an oracle evaluates Spark's float tree.
+"""
+
+from __future__ import annotations
+
+import math
+from collections.abc import Callable
+from typing import Any, NamedTuple
+
+import numpy as np
+from pyspark.sql import functions as F
+
+# -------------------------------------------------- central path, numpy
+
+
+def central_moments(
+    X: np.ndarray, orders: tuple[int, ...] = (2, 3, 4)
+) -> tuple[np.ndarray, ...]:
+    """mean((x - mean(x))**p) of each row of 2-D ``X`` for each p in
+    ``orders``. Reducing the last axis makes a 1-row ``X`` bit-identical
+    to the 1-D form; ``x ** p`` stays, as pow and unrolled
+    multiplication can differ in the last ulp."""
+    d0 = X - X.mean(axis=1)[:, None]
+    return tuple((d0**p).mean(axis=1) for p in orders)
+
+
+def _per_column(n: float, m2: np.ndarray, mk: np.ndarray, tail) -> np.ndarray:
+    # scalar tail per element: numpy's vector pow ufunc (SIMD) rounds
+    # m2**1.5 1 ulp away from the scalar np.float64 pow
+    if n < 2:
+        return np.full(np.shape(m2), np.nan)
+    return np.array(
+        [math.nan if a == 0 else float(tail(a, b)) for a, b in zip(m2, mk)]
+    )
+
+
+def skewness(n: float, m2: np.ndarray, m3: np.ndarray) -> np.ndarray:
+    """e1071 type-3 skewness per column; NaN where n < 2 or m2 == 0."""
+    return _per_column(n, m2, m3, lambda a, b: b / a**1.5 * ((n - 1) / n) ** 1.5)
+
+
+def kurtosis(n: float, m2: np.ndarray, m4: np.ndarray) -> np.ndarray:
+    """e1071 type-3 kurtosis per column; NaN where n < 2 or m2 == 0.
+    ``- 3.0 + 3.0`` is g2 = m4/m2^2 - 3, then g2 + 3, in float order."""
+    return _per_column(
+        n, m2, m4, lambda a, b: (b / a**2 - 3.0 + 3.0) * (1.0 - 1.0 / n) ** 2 - 3.0
+    )
+
+
+# -------------------------------------------------------------- engines
+
+
+def _infix(op: str) -> tuple[Callable, Callable]:
+    return (
+        lambda a, b: Sql(f"({a} {op} {b})"),
+        lambda a, b: Sql(f"({b} {op} {a})"),
+    )
+
+
+class Sql:
+    """DuckDB SQL text that composes with ``+ - * /``, ``>=``, ``>`` and
+    ``&`` like a Spark Column, keeping the Python expression's tree."""
+
+    __slots__ = ("text",)
+
+    def __init__(self, text: object) -> None:
+        self.text = str(text)
+
+    def __str__(self) -> str:
+        return self.text
+
+    __add__, __radd__ = _infix("+")
+    __sub__, __rsub__ = _infix("-")
+    __mul__, __rmul__ = _infix("*")
+    __truediv__, __rtruediv__ = _infix("/")
+    __and__, __rand__ = _infix("AND")
+    __ge__ = _infix(">=")[0]
+    __gt__ = _infix(">")[0]
+
+
+def _sql_fn(name: str) -> Callable[..., Sql]:
+    return lambda *args: Sql(f"{name}({', '.join(map(str, args))})")
+
+
+class Engine(NamedTuple):
+    sqrt: Callable
+    when: Callable  # when(cond, thunk): thunk() where cond, else NaN/NULL
+    nonzero: Callable | None = None  # x, or NULL where x == 0
+    pow: Callable | None = None
+    abs: Callable | None = None
+    col: Callable | None = None  # column reference by name
+
+
+PY = Engine(sqrt=math.sqrt, when=lambda ok, value: value() if ok else math.nan)
+COL = Engine(
+    sqrt=F.sqrt,
+    when=lambda ok, value: F.when(ok, value()),
+    nonzero=lambda x: F.nullif(x, F.lit(0.0)),
+    pow=F.pow,
+    abs=F.abs,
+    col=F.col,
+)
+SQL = Engine(
+    sqrt=_sql_fn("sqrt"),
+    when=lambda ok, value: Sql(f"CASE WHEN {ok} THEN {value()} END"),
+    nonzero=lambda x: Sql(f"nullif({x}, 0)"),
+    pow=_sql_fn("pow"),
+    abs=_sql_fn("abs"),
+    col=Sql,
+)
+
+# ------------------------------------ central path, Spark Column / SQL
+
+
+def central_shape(n: Any, m2: Any, m3: Any, m4: Any, e: Engine) -> tuple:
+    """(skewness, kurtosis), e1071 type 3, from the population central
+    moments: the float tree of ``skewness`` / ``kurtosis``; NULL where
+    m2 == 0 (which n < 2 implies)."""
+    m2 = e.nonzero(m2)
+    return (
+        m3 / e.pow(m2, 1.5) * e.pow((n - 1.0) / n, 1.5),
+        (m4 / e.pow(m2, 2.0) - 3.0 + 3.0) * e.pow(1.0 - 1.0 / n, 2.0) - 3.0,
+    )
+
+
+def bessel(n: Any, e: Engine) -> Any:
+    """n / (n - 1), the population -> ddof=1 scale; NULL where n < 2."""
+    return n / e.nonzero(n - 1.0)
+
+
+def correlation(cxy: Any, m2x: Any, m2y: Any, e: Engine) -> Any:
+    """Pearson r from the population cross and second moments; NULL
+    where either m2 is 0."""
+    return cxy / e.nonzero(e.sqrt(m2x * m2y))
+
+
+# ------------------------------------------ raw power-sum path, any engine
+
+
+def power_sum_state(x: np.ndarray) -> tuple:
+    """(n, S1, S2, S3, S4) of a 1-D array; states merge by addition.
+    Multiplies, as Spark does: numpy's vector ``x ** 3`` is inexact."""
+    x2 = x * x
+    x3 = x2 * x
+    return (int(x.size), *(float(p.sum()) for p in (x, x2, x3, x3 * x)))
+
+
+def power_sum_moments(n: Any, s1: Any, s2: Any, s3: Any, s4: Any) -> tuple:
+    """(mu, m2, m3, m4) population moments from the power-sum state."""
+    mu = s1 / n
+    m2 = s2 / n - mu * mu
+    m3 = s3 / n - 3 * mu * (s2 / n) + 2 * mu * mu * mu
+    m4 = (
+        s4 / n
+        - 4 * mu * (s3 / n)
+        + 6 * mu * mu * (s2 / n)
+        - 3 * mu * mu * mu * mu
+    )
+    return mu, m2, m3, m4
+
+
+def power_sum_sd(n: Any, s1: Any, s2: Any, e: Engine) -> Any:
+    """ddof=1 sd from n, S1, S2; NaN/NULL where n < 2."""
+    return e.when(n >= 2, lambda: e.sqrt((s2 - s1 * s1 / n) / (n - 1)))
+
+
+def power_sum_stats(n: Any, s1: Any, s2: Any, s3: Any, s4: Any, e: Engine) -> tuple:
+    """(mean, sd, skewness, kurtosis) from the power-sum state; the
+    e1071 type-3 shape uses sqrt in place of pow and is NaN/NULL unless
+    n >= 2 and m2 > 0."""
+    mu, m2, m3, m4 = power_sum_moments(n, s1, s2, s3, s4)
+    q = (n - 1) / n
+    ok = (n >= 2) & (m2 > 0)
+    return (
+        mu,
+        power_sum_sd(n, s1, s2, e),
+        e.when(ok, lambda: m3 / (m2 * e.sqrt(m2)) * (q * e.sqrt(q))),
+        e.when(ok, lambda: m4 / (m2 * m2) * (q * q) - 3),
+    )

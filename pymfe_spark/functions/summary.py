@@ -8,7 +8,7 @@ Re-creates the reference's summary layer
 - histogram: 10 equal-width bins, normalized counts (_summary.py:26-59).
 - quantiles: (0, .25, .5, .75, 1), linear interpolation
   (_summary.py:62-143).
-- kurtosis/skewness: e1071 method 3 (_summary.py:146-270).
+- kurtosis/skewness: e1071 method 3 (functions/moments.py).
 - powersum/pnorm: p=2 default (_summary.py:356-428).
 - nan* variants ignore NaNs (_summary.py:20-23).
 - any exception -> NaN, mirroring the summarize wrapper
@@ -23,6 +23,8 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import numpy as np
+
+from pymfe_spark.functions.moments import central_moments, kurtosis, skewness
 
 SummaryFn = Callable[[np.ndarray], "float | np.ndarray"]
 
@@ -58,32 +60,13 @@ def _quantiles(
     return np.quantile(v, q)
 
 
-def _skewness_m3(v: np.ndarray) -> float:
-    """e1071 method-3 sample skewness (population g1 rescaled)."""
-    n = v.size
-    if n < 2:
-        return float("nan")
-    m = v.mean()
-    m2 = ((v - m) ** 2).mean()
-    if m2 == 0:
-        return float("nan")
-    m3 = ((v - m) ** 3).mean()
-    g1 = m3 / m2**1.5
-    return float(g1 * ((n - 1) / n) ** 1.5)
-
-
-def _kurtosis_m3(v: np.ndarray) -> float:
-    """e1071 method-3 kurtosis: (g2+3)(1-1/n)^2 - 3."""
-    n = v.size
-    if n < 2:
-        return float("nan")
-    m = v.mean()
-    m2 = ((v - m) ** 2).mean()
-    if m2 == 0:
-        return float("nan")
-    m4 = ((v - m) ** 4).mean()
-    g2 = m4 / m2**2 - 3.0
-    return float((g2 + 3.0) * (1.0 - 1.0 / n) ** 2 - 3.0)
+def _shape(finish: Callable, order: int) -> SummaryFn:
+    """e1071 skewness (order 3) or kurtosis (order 4) of a 1-D array."""
+    return lambda v: (
+        float(finish(v.size, *central_moments(v[None], (2, order)))[0])
+        if v.size
+        else float("nan")
+    )
 
 
 def _iq_range(v: np.ndarray) -> float:
@@ -98,13 +81,13 @@ def _base_registry() -> dict[str, SummaryFn]:
         "count": lambda v: float(v.size),
         "histogram": _histogram,
         "iq_range": _iq_range,
-        "kurtosis": _kurtosis_m3,
+        "kurtosis": _shape(kurtosis, 4),
         "max": lambda v: float(v.max()) if v.size else float("nan"),
         "median": lambda v: float(np.median(v)) if v.size else float("nan"),
         "min": lambda v: float(v.min()) if v.size else float("nan"),
         "quantiles": _quantiles,
         "range": lambda v: float(v.ptp()) if v.size else float("nan"),
-        "skewness": _skewness_m3,
+        "skewness": _shape(skewness, 3),
         "sum": lambda v: float(v.sum()) if v.size else float("nan"),
         "powersum": lambda v, p=2: float(np.sum(v**p)) if v.size else float("nan"),
         "pnorm": lambda v, p=2: (

@@ -23,14 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from pymfe_spark.functions.sql_exprs import (
-    g_mean,
-    h_mean,
-    kurtosis_m3,
-    r,
-    skewness_m3,
-    sparsity,
-)
+from pymfe_spark.functions.moments import COL, SQL, Sql, central_shape
+from pymfe_spark.functions.sql_exprs import g_mean, h_mean, r, sparsity
 from pymfe_spark.operators.base import TURNS_SQL, turns
 from pymfe_spark.plans.catalog import register
 from pymfe_spark.sources import with_transcripts_cte
@@ -257,12 +251,10 @@ _SHAPE_ORACLE = with_transcripts_cte(
     """
 SELECT conv_id,
        cast(n AS bigint) AS n,
-       round(m3 / pow(nullif(m2, 0), 1.5) * pow((n - 1.0) / n, 1.5), 6)
-         AS skewness,
-       round((m4 / pow(nullif(m2, 0), 2.0)) * pow(1.0 - 1.0 / n, 2.0) - 3.0, 6)
-         AS kurtosis
+       round({0}, 6) AS skewness,
+       round({1}, 6) AS kurtosis
 FROM mom
-""",
+""".format(*central_shape(*map(Sql, ("n", "m2", "m3", "m4")), SQL)),
     extra_ctes=TURNS_SQL
     + """,
  mu AS (SELECT conv_id, count(*) AS n, avg(text_len) AS mean_x
@@ -282,9 +274,8 @@ def mf_stat_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """e1071 method-3 skewness/kurtosis of text_len per conversation.
 
     Central moments computed against the joined-back mean (no E[x^k]
-    cancellation); correction factors per _summary.py:146-270:
-    b1 = g1*((n-1)/n)^1.5, b2 = (g2+3)(1-1/n)^2 - 3.
-    """
+    cancellation), finished by functions/moments.py ``central_shape``;
+    null for a 1-turn or constant conversation."""
     t = turns(spark, sf_dir).select("conv_id", "text_len")
     mu = t.groupBy("conv_id").agg(
         F.count("*").alias("n"), F.avg("text_len").alias("mean_x")
@@ -300,12 +291,14 @@ def mf_stat_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.avg(F.pow(d, 4)).alias("m4"),
         )
     )
-    n = F.col("n").cast("double")
+    skew, kurt = central_shape(
+        F.col("n").cast("double"), *map(F.col, ("m2", "m3", "m4")), COL
+    )
     return mom.select(
         "conv_id",
         F.col("n"),
-        r(skewness_m3(F.col("m2"), F.col("m3"), n)).alias("skewness"),
-        r(kurtosis_m3(F.col("m2"), F.col("m4"), n)).alias("kurtosis"),
+        r(skew).alias("skewness"),
+        r(kurt).alias("kurtosis"),
     )
 
 

@@ -9,11 +9,14 @@ two-level aggregation:
     stage 1: groupBy(conv_id, salt = pmod(turn_idx, S))  -- partial
     stage 2: groupBy(conv_id)                            -- merge
 
-Variance merges via the sum-of-squares decomposition; the result is
-algebraically identical to the direct aggregation (oracle-checked
-against the unsalted SQL). Holistic measures (median, distance
-matrices) cannot be salted — they rely on the extractor's
-``max_kernel_turns`` prefix cap instead (extractor.py).
+The partials are the raw power-sum state (count, S1, S2), so the merge
+is plain addition — exact in any order while the sums are integers
+below 2^53 — and sd comes from the one power-sum finisher
+(functions/moments.py ``power_sum_sd``; NULL for a 1-turn
+conversation), rendered as a Column and as the oracle's SQL text.
+Holistic measures (median, distance matrices) cannot be salted — they
+rely on the extractor's ``max_kernel_turns`` prefix cap instead
+(extractor.py).
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pymfe_spark.functions.moments import COL, SQL, Sql, power_sum_sd
 from pymfe_spark.functions.sql_exprs import r
 from pymfe_spark.operators.base import TURNS_SQL, turns
 from pymfe_spark.plans.catalog import register
@@ -34,11 +38,11 @@ _SALTED_ORACLE = with_transcripts_cte(
     """
 SELECT conv_id,
        cast(n AS bigint)                       AS n,
-       round(mean_len, 6)                      AS mean_len,
-       round(sqrt((s2 - n * mean_len * mean_len) / (n - 1)), 6) AS sd_len,
+       round(s1 / n, 6)                        AS mean_len,
+       round({sd}, 6)                          AS sd_len,
        round(mn, 6)                            AS min_len,
        round(mx, 6)                            AS max_len
-FROM (SELECT conv_id, sum(c) AS n, sum(s) / sum(c) AS mean_len,
+FROM (SELECT conv_id, sum(c) AS n, sum(s) AS s1,
              sum(s2) AS s2, min(mn) AS mn, max(mx) AS mx
       FROM (SELECT conv_id, turn_idx % {salts} AS salt,
                    count(*) AS c, sum(text_len) AS s,
@@ -46,7 +50,7 @@ FROM (SELECT conv_id, sum(c) AS n, sum(s) / sum(c) AS mean_len,
                    min(text_len) AS mn, max(text_len) AS mx
             FROM turns GROUP BY conv_id, turn_idx % {salts})
       GROUP BY conv_id)
-""".format(salts=N_SALTS),
+""".format(salts=N_SALTS, sd=power_sum_sd(*map(Sql, ("n", "s1", "s2")), SQL)),
     extra_ctes=TURNS_SQL,
 )
 
@@ -68,21 +72,17 @@ def salted_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merged = partial.groupBy("conv_id").agg(
         F.sum("c").alias("n"),
-        (F.sum("s") / F.sum("c")).alias("mean_len"),
+        F.sum("s").alias("s1"),
         F.sum("s2").alias("s2"),
         F.min("mn").alias("mn"),
         F.max("mx").alias("mx"),
     )
-    n = F.col("n").cast("double")
-    sd = F.sqrt(
-        (F.col("s2") - n * F.col("mean_len") * F.col("mean_len"))
-        / (n - F.lit(1.0))
-    )
+    n, s1, s2 = F.col("n").cast("double"), F.col("s1"), F.col("s2")
     return merged.select(
         "conv_id",
         F.col("n"),
-        r("mean_len").alias("mean_len"),
-        r(sd).alias("sd_len"),
+        r(s1 / n).alias("mean_len"),
+        r(power_sum_sd(n, s1, s2, COL)).alias("sd_len"),
         r("mn").alias("min_len"),
         r("mx").alias("max_len"),
     )

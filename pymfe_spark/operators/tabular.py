@@ -6,65 +6,120 @@ One row out per meta-feature, long format ``(mtf_name, mtf_val)``,
 reference semantics throughout:
 
 - per-attribute mean / sd (ddof=1) / e1071 method-3 skewness &
-  kurtosis (_summary.py:146-270), summarized across attributes with
-  pymfe's default mean+sd summary pair;
+  kurtosis, summarized across attributes with pymfe's default mean+sd
+  summary pair;
 - cov / cor as the ABS lower triangle of the covariance / correlation
   matrix (statistical.py:410-498), summarized the same way;
 - general scalars nr_inst / nr_attr / attr_to_inst / inst_to_attr.
+
+Any number of columns from 2 up. A value undefined for the data (sd
+and cov of a 1-row group; skewness, kurtosis and cor of a constant
+column) is null, and so is its summary: functions/moments.py's
+degenerate-input rule.
 
 Plan shape (the whole-table analogue of the per-conversation SQL
 tier): ONE partial-aggregated pass for the 1-row means, a second pass
 for central/cross moments against the broadcast means, then every
 meta-feature is a scalar expression over the single moment row —
-nothing but two 1-row exchanges regardless of table size. Summaries
-across the 4 attributes are written as explicit fixed-order
-expressions so both engines evaluate the identical float tree;
-outputs round at 4 decimals (the kernel cross-check precedent: global
-float aggregation agrees across engines to ~1 ulp, and a 4-decimal
-boundary flip at 1-ulp input distance is negligible — BENCH.md
-"Correctness at scale").
+nothing but two 1-row exchanges regardless of table size. The moment
+aggregates and the meta-feature rows are built once (``_central_aggs``,
+``_meta_rows``) for both engines, Spark Columns and the oracle's SQL
+text, so both evaluate the identical float tree; outputs round at 4
+decimals (global float aggregation agrees across engines to ~1 ulp —
+BENCH.md "Correctness at scale").
 
 Known benign log line: the FINAL explode projection (16 struct fields,
-each inlining the fixed-order sd/cov/cor float trees) exceeds Janino's
-method-size limit, so Spark logs ``ERROR CodeGenerator: Failed to
-compile`` once and falls back to interpreted projection FOR THAT
-OPERATOR ONLY. It runs downstream of both aggregation passes, i.e. on
-one row per group (1-3 rows here), so the fallback costs microseconds
-at any input scale; the scan-side aggregations still whole-stage-
-codegen. Rewriting the summaries as higher-order-function let-bindings
-would shrink the tree but HOFs are themselves CodegenFallback, so the
-projection would be interpreted either way — the explicit tree keeps
-both engines' float semantics identical, which is the priority."""
+each inlining the fixed-order float trees) exceeds Janino's method-size
+limit, so Spark logs ``ERROR CodeGenerator: Failed to compile`` once
+and interprets THAT OPERATOR ONLY. It runs on one row per group, so the
+fallback costs microseconds at any input scale; the scan-side
+aggregations still whole-stage-codegen."""
 
 from __future__ import annotations
+
+from itertools import combinations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pymfe_spark.functions.moments import (
+    COL,
+    SQL,
+    Engine,
+    Sql,
+    bessel,
+    central_shape,
+    correlation,
+)
 from pymfe_spark.plans.catalog import register
 
 GROUP = "tabular"
 
 NUM_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-_PAIRS = [
-    (i, j) for i in range(len(NUM_COLS)) for j in range(len(NUM_COLS)) if i < j
-]
 
 
-def _summary_exprs(vals):
-    """mean and sd (ddof=1) over a fixed-order list of scalar Columns,
-    written as explicit sequential expressions (no aggregation node —
-    identical float tree on both engines)."""
+def _central_aggs(d: list, avg) -> list[tuple[str, object]]:
+    """(alias, aggregate) of the second pass: population m2/m3/m4 and
+    cross moments of the deviations ``d`` (squares by multiplication)."""
+    k = len(d)
+    return [
+        *[(f"m2_{i}", avg(d[i] * d[i])) for i in range(k)],
+        *[(f"m3_{i}", avg(d[i] * d[i] * d[i])) for i in range(k)],
+        *[(f"m4_{i}", avg(d[i] * d[i] * d[i] * d[i])) for i in range(k)],
+        *[
+            (f"cx_{i}_{j}", avg(d[i] * d[j]))
+            for i, j in combinations(range(k), 2)
+        ],
+    ]
+
+
+def _summary_exprs(vals, e: Engine):
+    """mean and sd (ddof=1) over a fixed-order list of scalar
+    expressions, written as explicit sequential expressions (no
+    aggregation node — identical float tree on both engines; squares by
+    multiplication, as pow's libm path is not guaranteed identical)."""
     n = len(vals)
-    mean = sum(vals[1:], vals[0]) / F.lit(float(n))
+    mean = sum(vals[1:], vals[0]) / float(n)
     var = (
         sum(
             ((v - mean) * (v - mean) for v in vals[1:]),
             (vals[0] - mean) * (vals[0] - mean),
         )
-        / F.lit(float(n - 1))
+        / float(n - 1)
     )
-    return mean, F.sqrt(var)
+    return mean, e.sqrt(var)
+
+
+def _meta_rows(k: int, e: Engine) -> list[tuple[str, object]]:
+    """(mtf_name, expression) rows over the one moment row of ``k``
+    attributes — columns n, mu{i}, m2_{i}, m3_{i}, m4_{i}, cx_{i}_{j} —
+    built once for both engines. nr_attr is a literal, left to the
+    caller."""
+    n = e.col("n")
+    bes = bessel(n, e)
+    m2 = [e.col(f"m2_{i}") for i in range(k)]
+    shapes = [
+        central_shape(n, m2[i], e.col(f"m3_{i}"), e.col(f"m4_{i}"), e)
+        for i in range(k)
+    ]
+    cx = {(i, j): e.col(f"cx_{i}_{j}") for i, j in combinations(range(k), 2)}
+    cors = [e.abs(correlation(c, m2[i], m2[j], e)) for (i, j), c in cx.items()]
+    rows = []
+    for name, vals in (
+        ("mean", [e.col(f"mu{i}") for i in range(k)]),
+        ("sd", [e.sqrt(m * bes) for m in m2]),
+        ("skewness", [s for s, _ in shapes]),
+        ("kurtosis", [kt for _, kt in shapes]),
+        ("cov", [e.abs(c * bes) for c in cx.values()]),
+        ("cor", cors),
+    ):
+        m, s = _summary_exprs(vals, e)
+        rows += [(f"{name}.mean", m), (f"{name}.sd", s)]
+    return rows + [
+        ("nr_inst", n),
+        ("attr_to_inst", float(k) / n),
+        ("inst_to_attr", n / float(k)),
+    ]
 
 
 def mfe_tabular(df: DataFrame, cols=NUM_COLS, by: str | None = None) -> DataFrame:
@@ -73,8 +128,17 @@ def mfe_tabular(df: DataFrame, cols=NUM_COLS, by: str | None = None) -> DataFram
     its own pymfe dataset — the engine's core semantic inversion
     (thousands of fits in one plan) applied to any table: the two
     aggregation passes gain the group key (same shuffle count, keyed),
-    and the means join becomes a broadcast equi-join on ``by``."""
+    and the means join becomes a broadcast equi-join on ``by``.
+
+    Needs at least 2 columns: cov/cor and the across-attribute sd are
+    undefined for fewer. A value undefined for a group's data (sd of a
+    1-row group, skewness of a constant column) comes back null."""
     k = len(cols)
+    if k < 2:
+        raise ValueError(
+            f"mfe_tabular needs at least 2 columns, got {k}: cov/cor and "
+            "the across-attribute sd are undefined for fewer"
+        )
     mu_aggs = [
         F.count("*").alias("n"),
         *[F.avg(c).alias(f"mu{i}") for i, c in enumerate(cols)],
@@ -85,58 +149,12 @@ def mfe_tabular(df: DataFrame, cols=NUM_COLS, by: str | None = None) -> DataFram
         df.join(F.broadcast(mu), by) if by else df.join(F.broadcast(mu))
     )
     mom_aggs = [
-        F.max("n").alias("n"),
+        F.max("n").cast("double").alias("n"),
         *[F.max(f"mu{i}").alias(f"mu{i}") for i in range(k)],
-        *[F.avg(d[i] * d[i]).alias(f"m2_{i}") for i in range(k)],
-        *[F.avg(d[i] * d[i] * d[i]).alias(f"m3_{i}") for i in range(k)],
-        *[
-            F.avg(d[i] * d[i] * d[i] * d[i]).alias(f"m4_{i}")
-            for i in range(k)
-        ],
-        *[F.avg(d[i] * d[j]).alias(f"cx_{i}_{j}") for i, j in _PAIRS],
+        *[a.alias(nm) for nm, a in _central_aggs(d, F.avg)],
     ]
     mom = joined.groupBy(by).agg(*mom_aggs) if by else joined.agg(*mom_aggs)
-    n = F.col("n").cast("double")
-    bessel = n / (n - F.lit(1.0))
-    means = [F.col(f"mu{i}") for i in range(k)]
-    sds = [F.sqrt(F.col(f"m2_{i}") * bessel) for i in range(k)]
-    skews = [
-        (F.col(f"m3_{i}") / F.pow(F.col(f"m2_{i}"), 1.5))
-        * F.pow((n - F.lit(1.0)) / n, 1.5)
-        for i in range(k)
-    ]
-    kurts = [
-        (F.col(f"m4_{i}") / F.pow(F.col(f"m2_{i}"), 2.0))
-        * F.pow(F.lit(1.0) - F.lit(1.0) / n, 2.0)
-        - F.lit(3.0)
-        for i in range(k)
-    ]
-    covs = [F.abs(F.col(f"cx_{i}_{j}") * bessel) for i, j in _PAIRS]
-    cors = [
-        F.abs(
-            F.col(f"cx_{i}_{j}")
-            / F.sqrt(F.col(f"m2_{i}") * F.col(f"m2_{j}"))
-        )
-        for i, j in _PAIRS
-    ]
-
-    rows = []
-    for name, vals in (
-        ("mean", means),
-        ("sd", sds),
-        ("skewness", skews),
-        ("kurtosis", kurts),
-        ("cov", covs),
-        ("cor", cors),
-    ):
-        m, s = _summary_exprs(vals)
-        rows.append((f"{name}.mean", m))
-        rows.append((f"{name}.sd", s))
-    rows.append(("nr_inst", n))
-    rows.append(("nr_attr", F.lit(float(k))))
-    rows.append(("attr_to_inst", F.lit(float(k)) / n))
-    rows.append(("inst_to_attr", n / F.lit(float(k))))
-
+    rows = _meta_rows(k, COL) + [("nr_attr", F.lit(float(k)))]
     exploded = F.explode(
         F.array(
             *[
@@ -162,66 +180,20 @@ def _tabular_oracle(by: str | None = None) -> str:
     mu_cols = ", ".join(
         f"avg({c}) AS mu{i}" for i, c in enumerate(NUM_COLS)
     )
-    d = [f"(t.{c} - m.mu{i})" for i, c in enumerate(NUM_COLS)]
-    mom_cols = (
-        ", ".join(f"max(m.mu{i}) AS mu{i}" for i in range(k))
-        + ", "
-        + ", ".join(f"avg({d[i]} * {d[i]}) AS m2_{i}" for i in range(k))
-        + ", "
-        + ", ".join(
-            f"avg({d[i]} * {d[i]} * {d[i]}) AS m3_{i}" for i in range(k)
-        )
-        + ", "
-        + ", ".join(
-            f"avg({d[i]} * {d[i]} * {d[i]} * {d[i]}) AS m4_{i}"
-            for i in range(k)
-        )
-        + ", "
-        + ", ".join(f"avg({d[i]} * {d[j]}) AS cx_{i}_{j}" for i, j in _PAIRS)
+    d = [Sql(f"(t.{c} - m.mu{i})") for i, c in enumerate(NUM_COLS)]
+    mom_cols = ", ".join(
+        [f"max(m.mu{i}) AS mu{i}" for i in range(k)]
+        + [
+            f"{a} AS {nm}"
+            for nm, a in _central_aggs(d, lambda x: Sql(f"avg({x})"))
+        ]
     )
-    bessel = "(n / (n - 1.0))"
-    means = [f"mu{i}" for i in range(k)]
-    sds = [f"sqrt(m2_{i} * {bessel})" for i in range(k)]
-    skews = [
-        f"((m3_{i} / pow(m2_{i}, 1.5)) * pow((n - 1.0) / n, 1.5))"
-        for i in range(k)
-    ]
-    kurts = [
-        f"((m4_{i} / pow(m2_{i}, 2.0)) * pow(1.0 - 1.0 / n, 2.0) - 3.0)"
-        for i in range(k)
-    ]
-    covs = [f"abs(cx_{i}_{j} * {bessel})" for i, j in _PAIRS]
-    cors = [
-        f"abs(cx_{i}_{j} / sqrt(m2_{i} * m2_{j}))" for i, j in _PAIRS
-    ]
-
-    def summ(vals):
-        n = len(vals)
-        mean = "(((" + ") + (".join(vals) + f")) / {float(n)})"
-        # multiplication, not pow(x, 2): the Spark side squares by
-        # multiplication and pow's libm path is not guaranteed identical
-        sq = " + ".join(f"((({v}) - {mean}) * (({v}) - {mean}))" for v in vals)
-        return mean, f"sqrt(({sq}) / {float(n - 1)})"
-
     g = f"{by}, " if by else ""
-    selects = []
-    for name, vals in (
-        ("mean", means),
-        ("sd", sds),
-        ("skewness", skews),
-        ("kurtosis", kurts),
-        ("cov", covs),
-        ("cor", cors),
-    ):
-        m, s = summ(vals)
-        selects.append(
-            f"SELECT {g}'{name}.mean' AS mtf_name, round({m}, 4) AS mtf_val FROM mom"
-        )
-        selects.append(f"SELECT {g}'{name}.sd', round({s}, 4) FROM mom")
-    selects.append(f"SELECT {g}'nr_inst', round(n, 4) FROM mom")
+    selects = [
+        f"SELECT {g}'{nm}' AS mtf_name, round({v}, 4) AS mtf_val FROM mom"
+        for nm, v in _meta_rows(k, SQL)
+    ]
     selects.append(f"SELECT {g}'nr_attr', {float(k)} FROM mom")
-    selects.append(f"SELECT {g}'attr_to_inst', round({float(k)} / n, 4) FROM mom")
-    selects.append(f"SELECT {g}'inst_to_attr', round(n / {float(k)}, 4) FROM mom")
     body = "\nUNION ALL ".join(selects)
     if by:
         return f"""

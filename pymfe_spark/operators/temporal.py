@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pymfe_spark.functions.moments import COL, SQL, Sql, power_sum_stats
 from pymfe_spark.functions.sql_exprs import r
 from pymfe_spark.operators.base import TURNS_SQL, turns
 from pymfe_spark.plans.catalog import register
@@ -325,44 +326,31 @@ def crosstab_role_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Exactness design: cumulative raw power sums S1..S4 of text_len are
 # exact integers in double (values <= 1e3, prefixes <= 1e4 turns ->
-# S4 < 2^53), so the central-moment formulas are deterministic; the
-# only rounding hazards are transcendental calls, pinned by using
-# sqrt (correctly rounded IEEE in both engines) instead of pow, and by
-# summing the entropy terms in sorted order (sort_array + sequential
-# fold == list_sort + list_aggregate) so float addition order matches
-# across engines. The e1071 method-3 corrections replicate
-# /root/reference/pymfe/_summary.py:146-270; running class entropy is
+# S4 < 2^53), finished by functions/moments.py ``power_sum_stats`` as
+# a Column and as the oracle's SQL text (one float tree, sqrt not
+# pow); the entropy terms are summed in sorted order (sort_array +
+# sequential fold == list_sort + list_aggregate) so float addition
+# order matches across engines. Running class entropy is pymfe
 # info_theory.py:344-389 per prefix.
 # ---------------------------------------------------------------------
 
+_LEN_STATS = power_sum_stats(
+    *(Sql(f"c.{k}") for k in ("rn", "s1", "s2", "s3", "s4")), SQL
+)
+
 _EXPANDING_MFE_ORACLE = with_transcripts_cte(
-    """
+    f"""
 SELECT c.conv_id,
        cast(c.turn_idx AS int)               AS turn_idx,
        cast(c.rn AS double)                  AS nr_inst,
        cast(e.nr_class AS double)            AS nr_class,
-       round(c.s1 / c.rn, 6)                 AS mean_len,
-       round(CASE WHEN c.rn > 1 THEN
-               sqrt((c.s2 - c.s1 * c.s1 / c.rn) / (c.rn - 1))
-             END, 6)                         AS sd_len,
+       round({_LEN_STATS[0]}, 6)             AS mean_len,
+       round({_LEN_STATS[1]}, 6)             AS sd_len,
        round(c.mn, 6)                        AS min_len,
        round(c.mx, 6)                        AS max_len,
        round(c.mx - c.mn, 6)                 AS range_len,
-       round(CASE WHEN c.rn >= 2 AND (c.s2 / c.rn - (c.s1 / c.rn) * (c.s1 / c.rn)) > 0 THEN
-               (c.s3 / c.rn - 3 * (c.s1 / c.rn) * (c.s2 / c.rn)
-                + 2 * (c.s1 / c.rn) * (c.s1 / c.rn) * (c.s1 / c.rn))
-               / ((c.s2 / c.rn - (c.s1 / c.rn) * (c.s1 / c.rn))
-                  * sqrt(c.s2 / c.rn - (c.s1 / c.rn) * (c.s1 / c.rn)))
-               * (((c.rn - 1) / c.rn) * sqrt((c.rn - 1) / c.rn))
-             END, 6)                         AS skewness_len,
-       round(CASE WHEN c.rn >= 2 AND (c.s2 / c.rn - (c.s1 / c.rn) * (c.s1 / c.rn)) > 0 THEN
-               (c.s4 / c.rn - 4 * (c.s1 / c.rn) * (c.s3 / c.rn)
-                + 6 * (c.s1 / c.rn) * (c.s1 / c.rn) * (c.s2 / c.rn)
-                - 3 * (c.s1 / c.rn) * (c.s1 / c.rn) * (c.s1 / c.rn) * (c.s1 / c.rn))
-               / ((c.s2 / c.rn - (c.s1 / c.rn) * (c.s1 / c.rn))
-                  * (c.s2 / c.rn - (c.s1 / c.rn) * (c.s1 / c.rn)))
-               * (((c.rn - 1) / c.rn) * ((c.rn - 1) / c.rn)) - 3
-             END, 6)                         AS kurtosis_len,
+       round({_LEN_STATS[2]}, 6)             AS skewness_len,
+       round({_LEN_STATS[3]}, 6)             AS kurtosis_len,
        round(log2(c.rn) - e.sclc / c.rn, 6)  AS class_ent
 FROM cums c JOIN ent e ON c.conv_id = e.conv_id AND c.turn_idx = e.turn_idx
 """,
@@ -467,18 +455,10 @@ def expanding_mfe_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sclc"),
         )
     )
-    rn, s1, s2, s3, s4 = (F.col(k) for k in ("rn", "s1", "s2", "s3", "s4"))
-    mu = s1 / rn
-    m2 = s2 / rn - mu * mu
-    m3 = s3 / rn - 3 * mu * (s2 / rn) + 2 * mu * mu * mu
-    m4 = (
-        s4 / rn
-        - 4 * mu * (s3 / rn)
-        + 6 * mu * mu * (s2 / rn)
-        - 3 * mu * mu * mu * mu
+    rn = F.col("rn")
+    mean, sd, skew, kurt = power_sum_stats(
+        *(F.col(k) for k in ("rn", "s1", "s2", "s3", "s4")), COL
     )
-    q = (rn - 1) / rn
-    shape_ok = (rn >= 2) & (m2 > 0)
     return (
         cums.join(ent, ["conv_id", "turn_idx"])
         .select(
@@ -486,24 +466,13 @@ def expanding_mfe_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("turn_idx").cast("int").alias("turn_idx"),
             rn.alias("nr_inst"),
             F.col("nr_class").cast("double").alias("nr_class"),
-            r(s1 / rn).alias("mean_len"),
-            r(
-                F.when(
-                    rn > 1, F.sqrt((s2 - s1 * s1 / rn) / (rn - 1))
-                )
-            ).alias("sd_len"),
+            r(mean).alias("mean_len"),
+            r(sd).alias("sd_len"),
             r(F.col("mn")).alias("min_len"),
             r(F.col("mx")).alias("max_len"),
             r(F.col("mx") - F.col("mn")).alias("range_len"),
-            r(
-                F.when(
-                    shape_ok,
-                    m3 / (m2 * F.sqrt(m2)) * (q * F.sqrt(q)),
-                )
-            ).alias("skewness_len"),
-            r(
-                F.when(shape_ok, m4 / (m2 * m2) * (q * q) - 3)
-            ).alias("kurtosis_len"),
+            r(skew).alias("skewness_len"),
+            r(kurt).alias("kurtosis_len"),
             r(F.log2(rn) - F.col("sclc") / rn).alias("class_ent"),
         )
     )

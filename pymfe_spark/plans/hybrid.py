@@ -58,6 +58,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pymfe_spark.functions.moments import kurtosis, skewness
 from pymfe_spark.functions.summary import summarize
 
 # a conversation above this many turns leaves the one-task kernel path
@@ -292,35 +293,9 @@ def _exact_rows(
                 if "sd" in measures_t:
                     vals["sd"] = np.sqrt(m2 * n / (n - 1.0))
                 if "skewness" in measures_t:
-                    vals["skewness"] = np.array(
-                        [
-                            (
-                                float("nan")
-                                if m2[j] == 0
-                                else float(
-                                    m3[j]
-                                    / m2[j] ** 1.5
-                                    * ((n - 1) / n) ** 1.5
-                                )
-                            )
-                            for j in range(_D_NUM)
-                        ]
-                    )
+                    vals["skewness"] = skewness(n, m2, m3)
                 if "kurtosis" in measures_t:
-                    vals["kurtosis"] = np.array(
-                        [
-                            (
-                                float("nan")
-                                if m2[j] == 0
-                                else float(
-                                    (m4[j] / m2[j] ** 2)
-                                    * (1.0 - 1.0 / n) ** 2
-                                    - 3.0
-                                )
-                            )
-                            for j in range(_D_NUM)
-                        ]
-                    )
+                    vals["kurtosis"] = kurtosis(n, m2, m4)
                 rows: dict[str, float] = {}
                 for name in measures_t:
                     rows.update(

@@ -36,6 +36,8 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
+from pymfe_spark.functions.moments import central_moments, kurtosis, skewness
+
 EPS = 1e-8  # info_theory.py:184-195 crosstab smoothing
 
 
@@ -454,83 +456,23 @@ def _t_mean(b: ConvBatch) -> np.ndarray:
     return s[:, k : n - k].mean(axis=1)
 
 
-def _skew_m3(v: np.ndarray) -> float:
-    n = v.size
-    m2 = ((v - v.mean()) ** 2).mean()
-    if m2 == 0 or n < 2:
-        return float("nan")
-    g1 = ((v - v.mean()) ** 3).mean() / m2**1.5
-    return float(g1 * ((n - 1) / n) ** 1.5)
-
-
-def _kurt_m3(v: np.ndarray) -> float:
-    n = v.size
-    m2 = ((v - v.mean()) ** 2).mean()
-    if m2 == 0 or n < 2:
-        return float("nan")
-    g2 = ((v - v.mean()) ** 4).mean() / m2**2 - 3.0
-    return float((g2 + 3.0) * (1.0 - 1.0 / n) ** 2 - 3.0)
-
-
 def _central_moments(b: ConvBatch) -> tuple[np.ndarray, ...]:
-    """(m2, m3, m4) per column from one shared centered array — the
-    skew/kurt pair recomputed these independently per column before.
-    Each ``.mean(axis=1)`` reduces the last axis, so every moment is
-    bit-identical to the per-column scalar form."""
+    """(m2, m3, m4) per column, shared by the skew/kurt pair."""
     if "cmoments" not in b._cache:
-        NT = b.NT()
-        d0 = NT - NT.mean(axis=1)[:, None]
-        # keep the original's `x ** p` ufuncs: pow() and unrolled
-        # multiplication can differ in the last ulp
-        b._cache["cmoments"] = (
-            (d0**2).mean(axis=1),
-            (d0**3).mean(axis=1),
-            (d0**4).mean(axis=1),
-        )
+        b._cache["cmoments"] = central_moments(b.NT())
     return b._cache["cmoments"]
 
 
 @measure("skewness", "statistical")
 def _skewness(b: ConvBatch) -> np.ndarray:  # 1310-1365
-    n = b.N.shape[0]
     m2, m3, _ = _central_moments(b)
-    if n < 2:
-        return np.full(m2.shape, np.nan)
-    # final scalar math per column: numpy's VECTOR pow ufunc (SIMD)
-    # rounds m2**1.5 differently from the scalar np.float64 pow by
-    # 1 ulp, so the tail stays in scalar form to match _skew_m3 bitwise
-    return np.array(
-        [
-            (
-                float("nan")
-                if m2[j] == 0
-                else float(m3[j] / m2[j] ** 1.5 * ((n - 1) / n) ** 1.5)
-            )
-            for j in range(m2.size)
-        ]
-    )
+    return skewness(b.N.shape[0], m2, m3)
 
 
 @measure("kurtosis", "statistical")
 def _kurtosis(b: ConvBatch) -> np.ndarray:  # 681-738
-    n = b.N.shape[0]
     m2, _, m4 = _central_moments(b)
-    if n < 2:
-        return np.full(m2.shape, np.nan)
-    return np.array(
-        [
-            (
-                float("nan")
-                if m2[j] == 0
-                else float(
-                    (m4[j] / m2[j] ** 2 - 3.0 + 3.0)
-                    * (1.0 - 1.0 / n) ** 2
-                    - 3.0
-                )
-            )
-            for j in range(m2.size)
-        ]
-    )
+    return kurtosis(b.N.shape[0], m2, m4)
 
 
 @measure("sparsity", "statistical")

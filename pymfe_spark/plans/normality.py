@@ -31,6 +31,8 @@ import math
 
 import numpy as np
 
+from pymfe_spark.functions.moments import central_moments
+
 _SQRT2 = math.sqrt(2.0)
 _SQRT2PI = math.sqrt(2.0 * math.pi)
 
@@ -212,8 +214,11 @@ def dagostino_pearson(v: np.ndarray) -> tuple[float, float]:
     n = v.size
     if n < 8:
         raise ValueError("dagostino-pearson needs n >= 8")
-    g1 = _moment_ratio(v, 3)
-    g2 = _moment_ratio(v, 4) - 3.0
+    m2, m3, m4 = (float(m[0]) for m in central_moments(v[None]))
+    if m2 == 0:
+        raise ValueError("constant sample")
+    g1 = m3 / m2**1.5
+    g2 = m4 / m2**2.0 - 3.0
 
     y = g1 * math.sqrt((n + 1) * (n + 3) / (6.0 * (n - 2)))
     beta2 = (
@@ -250,14 +255,6 @@ def dagostino_pearson(v: np.ndarray) -> tuple[float, float]:
     zk = ((1.0 - 2.0 / (9.0 * a)) - term2) / math.sqrt(2.0 / (9.0 * a))
     k2 = zs * zs + zk * zk
     return float(k2), float(math.exp(-k2 / 2.0))
-
-
-def _moment_ratio(v: np.ndarray, k: int) -> float:
-    m = v.mean()
-    m2 = float(((v - m) ** 2).mean())
-    if m2 == 0:
-        raise ValueError("constant sample")
-    return float(((v - m) ** k).mean() / m2 ** (k / 2.0))
 
 
 # ----------------------------------------------------------- Anderson

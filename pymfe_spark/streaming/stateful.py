@@ -4,20 +4,20 @@ feature state via ``applyInPandasWithState``.
 The batch engine recomputes a conversation's features from its full
 prefix; the streaming twin keeps O(1) state per conversation and folds
 each arriving micro-batch in, so a conversation's feature row is
-always current without re-reading history. The state is the algebraic
-sufficient statistic of the measure vector — exact raw power sums
-S1..S4 of text length (exact integers in double at these scales),
-running min/max, and role counts — i.e. exactly the quantities the
+always current without re-reading history. The state is the raw
+power-sum state (n, S1..S4) of text length (exact integers in double
+at these scales), running min/max and role counts — the quantities the
 batch stride-1 SQL vector (operators/temporal.py expanding_mfe_sql)
-derives per prefix, and the same decomposition the salted skew
-aggregation uses (operators/skew.py): state merge == partial-aggregate
-merge, so multi-micro-batch arrival order cannot change any output.
+derives per prefix. A micro-batch merges in by plain addition, the
+merge of the salted skew aggregation (operators/skew.py), exact in any
+order, so arrival order cannot change any output.
 
 Emitted per update: n_turns, mean/sd/min/max/range and e1071
-method-3 skewness/kurtosis of text length (_summary.py:146-270
-formulas, identical float op order to the batch SQL), role entropy,
-and the distinct-role count. Agreement with the batch aggregation is
-pytest-verified (streaming final state == batch query, multi-batch).
+method-3 skewness/kurtosis of text length (functions/moments.py
+``power_sum_stats``, the code expanding_mfe_sql runs as Spark
+Columns), role entropy, and the distinct-role count. Agreement with
+the batch aggregation is pytest-verified (streaming final state ==
+batch query, multi-batch).
 """
 
 from __future__ import annotations
@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pymfe_spark.functions.moments import PY, power_sum_state, power_sum_stats
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -75,27 +77,6 @@ OUT_SCHEMA = StructType(
 _NAN = float("nan")
 
 
-def _merge_welford(
-    n1: int, mean1: float, m2_1: float, n2: int, mean2: float, m2_2: float
-) -> tuple[int, float, float]:
-    """Chan parallel-variance merge — the canonical stateful-merge
-    identity (streaming state merge == batch partial-aggregate
-    combine), property-tested in tests/test_properties.py. The
-    operator itself now carries exact power sums instead (their merge
-    is plain addition and exactly order-independent), but the Welford
-    form remains the right tool when values are large enough that raw
-    power sums lose integer exactness."""
-    if n1 == 0:
-        return n2, mean2, m2_2
-    if n2 == 0:
-        return n1, mean1, m2_1
-    n = n1 + n2
-    delta = mean2 - mean1
-    mean = mean1 + delta * n2 / n
-    m2 = m2_1 + m2_2 + delta * delta * n1 * n2 / n
-    return n, mean, m2
-
-
 def _update_conv(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
@@ -118,14 +99,12 @@ def _update_conv(
         lens = pdf["text"].dropna().str.len().to_numpy(dtype=float)
         if lens.size == 0:
             continue
-        n += int(lens.size)
         # power sums are exact integers in double -> the merge is
         # exactly commutative/associative; arrival order cannot
         # perturb any emitted value
-        s1 += float(lens.sum())
-        s2 += float((lens**2).sum())
-        s3 += float((lens**3).sum())
-        s4 += float((lens**4).sum())
+        n, s1, s2, s3, s4 = (
+            a + b for a, b in zip((n, s1, s2, s3, s4), power_sum_state(lens))
+        )
         mn = min(mn, float(lens.min()))
         mx = max(mx, float(lens.max()))
 
@@ -136,26 +115,10 @@ def _update_conv(
         )
     )
 
-    # identical float op order to expanding_mfe_sql / the e1071
-    # method-3 formulas (_summary.py:146-270), sqrt not pow
+    # the finisher expanding_mfe_sql renders as a Column: identical
+    # float op order
     if n > 0:
-        mean = s1 / n
-        sd = math.sqrt((s2 - s1 * s1 / n) / (n - 1)) if n > 1 else _NAN
-        mu = s1 / n
-        m2 = s2 / n - mu * mu
-        if n >= 2 and m2 > 0:
-            m3 = s3 / n - 3 * mu * (s2 / n) + 2 * mu * mu * mu
-            m4 = (
-                s4 / n
-                - 4 * mu * (s3 / n)
-                + 6 * mu * mu * (s2 / n)
-                - 3 * mu * mu * mu * mu
-            )
-            q = (n - 1) / n
-            skew = m3 / (m2 * math.sqrt(m2)) * (q * math.sqrt(q))
-            kurt = m4 / (m2 * m2) * (q * q) - 3
-        else:
-            skew = kurt = _NAN
+        mean, sd, skew, kurt = power_sum_stats(n, s1, s2, s3, s4, PY)
         out_mn, out_mx, rng = mn, mx, mx - mn
     else:
         mean = sd = skew = kurt = out_mn = out_mx = rng = _NAN

@@ -1,6 +1,7 @@
 """Test-support utilities: DuckDB oracle comparison (the same check the
 driver's correctness gate performs: column names + row count +
-order-insensitive values)."""
+order-insensitive values). pytest, perfbench and tools/check_oracle.py
+all compare through ``frame_problems``."""
 
 from __future__ import annotations
 
@@ -33,29 +34,49 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), na_position="last").reset_index(drop=True)
 
 
-def assert_frames_match(spark_df: pd.DataFrame, duck_df: pd.DataFrame, name: str = "") -> None:
-    assert sorted(spark_df.columns) == sorted(duck_df.columns), (
-        f"{name}: columns differ: {sorted(spark_df.columns)} vs {sorted(duck_df.columns)}"
-    )
-    assert len(spark_df) == len(duck_df), (
-        f"{name}: row counts differ: {len(spark_df)} vs {len(duck_df)}"
-    )
+def _same(sv: pd.Series, dv: pd.Series) -> np.ndarray:
+    """Per-row equality of one normalized column: numbers within an
+    absolute 1e-9 (NaN == NaN), timestamps as tz-naive datetime64[us],
+    anything else as strings (null == null)."""
+    if pd.api.types.is_numeric_dtype(sv) and pd.api.types.is_numeric_dtype(dv):
+        return np.isclose(
+            sv.astype(float), dv.astype(float), rtol=0, atol=1e-9, equal_nan=True
+        )
+    if pd.api.types.is_datetime64_any_dtype(sv) or pd.api.types.is_datetime64_any_dtype(dv):
+        sv, dv = (
+            pd.to_datetime(v).dt.tz_localize(None).astype("datetime64[us]")
+            for v in (sv, dv)
+        )
+        return (sv == dv).to_numpy()
+    return (sv.fillna("·").astype(str) == dv.fillna("·").astype(str)).to_numpy()
+
+
+def frame_problems(spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[str]:
+    """The oracle comparison (column names, row count, order-insensitive
+    values); one message per problem, empty when the frames match."""
+    if sorted(spark_df.columns) != sorted(duck_df.columns):
+        return [
+            f"columns differ: spark={sorted(spark_df.columns)} "
+            f"duck={sorted(duck_df.columns)}"
+        ]
+    if len(spark_df) != len(duck_df):
+        return [f"row count differ: spark={len(spark_df)} duck={len(duck_df)}"]
     s, d = normalize(spark_df), normalize(duck_df)
+    problems = []
     for c in s.columns:
-        sv, dv = s[c], d[c]
-        if pd.api.types.is_numeric_dtype(sv) and pd.api.types.is_numeric_dtype(dv):
-            assert np.allclose(
-                sv.astype(float), dv.astype(float), rtol=0, atol=1e-9, equal_nan=True
-            ), f"{name}: column {c} numeric values differ"
-        elif pd.api.types.is_datetime64_any_dtype(sv) or pd.api.types.is_datetime64_any_dtype(dv):
-            assert (
-                pd.to_datetime(sv).dt.tz_localize(None).astype("datetime64[us]")
-                == pd.to_datetime(dv).dt.tz_localize(None).astype("datetime64[us]")
-            ).all(), f"{name}: column {c} timestamps differ"
-        else:
-            assert (
-                sv.fillna("·").astype(str) == dv.fillna("·").astype(str)
-            ).all(), f"{name}: column {c} values differ"
+        same = _same(s[c], d[c])
+        if not same.all():
+            i = int(np.argmax(~same))
+            problems.append(
+                f"column {c} values differ. first diff row {i}: "
+                f"spark={s[c].iloc[i]!r} duck={d[c].iloc[i]!r}"
+            )
+    return problems
+
+
+def assert_frames_match(spark_df: pd.DataFrame, duck_df: pd.DataFrame, name: str = "") -> None:
+    problems = frame_problems(spark_df, duck_df)
+    assert not problems, f"{name}: " + "; ".join(problems)
 
 
 # ---------------------------------------------------------------------

@@ -2,8 +2,8 @@
 
 The reference suite has no property tests (SURVEY.md §5); these pin
 the algebraic invariants the distributed engine depends on — summary
-sigma semantics, the Welford state merge used by both streaming state
-and skew partial aggregation, discretization and concentration
+sigma semantics, the power-sum state merge used by both streaming
+state and skew partial aggregation, discretization and concentration
 invariants — on adversarial inputs, not just goldens.
 """
 
@@ -16,10 +16,17 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
+from pymfe_spark.functions.moments import (
+    PY,
+    central_moments,
+    kurtosis,
+    power_sum_state,
+    power_sum_stats,
+    skewness,
+)
 from pymfe_spark.functions.summary import SUMMARY_REGISTRY, summarize
 from pymfe_spark.plans.extractor import _equal_freq_bins, rescale_numeric
 from pymfe_spark.plans.measures import _conc
-from pymfe_spark.streaming.stateful import _merge_welford
 
 # allow_subnormal=False: at denormal densities (~5e-324) quantile
 # midpoints round onto the subnormal grid and scale denominators
@@ -98,29 +105,42 @@ def test_nan_variants_ignore_nans(v, frac):
 
 
 @given(
-    arrays(np.float64, st.integers(1, 200), elements=finite),
-    st.integers(1, 6),
+    arrays(
+        np.float64,
+        st.integers(1, 200),
+        elements=st.integers(-1000, 1000).map(float),
+    ),
+    st.data(),
 )
 @settings(max_examples=60, deadline=None)
-def test_welford_merge_any_split(v, pieces):
-    """Merging per-chunk (n, mean, M2) in any contiguous split equals
-    the whole-vector moments — the invariant that makes streaming state
-    == batch partial aggregation (streaming/stateful.py,
-    operators/skew.py)."""
-    cuts = np.linspace(0, v.size, pieces + 1).astype(int)
-    n, mean, m2 = 0, 0.0, 0.0
-    for s, e in zip(cuts[:-1], cuts[1:]):
-        chunk = v[s:e]
-        if chunk.size == 0:
-            continue
-        bmean = float(chunk.mean())
-        bm2 = float(((chunk - bmean) ** 2).sum())
-        n, mean, m2 = _merge_welford(n, mean, m2, chunk.size, bmean, bm2)
-    assert n == v.size
-    assert math.isclose(mean, float(v.mean()), rel_tol=1e-9, abs_tol=1e-6)
-    assert math.isclose(
-        m2, float(((v - v.mean()) ** 2).sum()), rel_tol=1e-6, abs_tol=1e-4
-    )
+def test_power_sum_state_merges_exactly_any_split(v, data):
+    """Summing the power-sum state (n, S1..S4) of the pieces of any
+    split of integer-valued data — reordered, with empty pieces — gives
+    exactly the one-shot state, so the Python finisher gives exactly the
+    one-shot outputs: the invariant that makes streaming state == batch
+    partial aggregation (streaming/stateful.py, operators/skew.py).
+    The finisher also agrees with the kernel's central-moment path."""
+    order = data.draw(st.permutations(range(v.size)))
+    cuts = sorted(data.draw(st.lists(st.integers(0, v.size), max_size=6)))
+    merged = (0, 0.0, 0.0, 0.0, 0.0)
+    for piece in np.split(v[order], cuts):
+        merged = tuple(a + b for a, b in zip(merged, power_sum_state(piece)))
+    whole = power_sum_state(v)
+    assert merged == whole
+    got = power_sum_stats(*merged, PY)
+    assert np.array_equal(got, power_sum_stats(*whole, PY), equal_nan=True)
+
+    mean, sd, skew, kurt = got
+    assert math.isclose(mean, float(v.mean()), rel_tol=1e-12, abs_tol=1e-12)
+    m2, m3, m4 = central_moments(v[None])
+    n = v.size
+    if n < 2:
+        assert math.isnan(sd)
+    else:
+        # S2 - S1*S1/n cancels on near-constant data (~1e-8 relative)
+        assert math.isclose(sd, float(v.std(ddof=1)), rel_tol=1e-6, abs_tol=1e-9)
+    assert math.isnan(skew) == math.isnan(skewness(n, m2, m3)[0])
+    assert math.isnan(kurt) == math.isnan(kurtosis(n, m2, m4)[0])
 
 
 @given(arrays(np.float64, st.integers(2, 300), elements=finite))

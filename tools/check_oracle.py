@@ -2,7 +2,8 @@
 
 Runs every catalog query on Spark and its oracle SQL on DuckDB at the
 given sf dir, compares row count, column names, and order-insensitive
-rounded values. Usage:
+rounded values — the same comparison pytest uses
+(``pymfe_spark.testing.frame_problems``). Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...] [--json PATH]
 
@@ -20,57 +21,9 @@ from __future__ import annotations
 import argparse
 import json
 
-import duckdb
-import numpy as np
-import pandas as pd
-
 from pymfe_spark import get_spark
 from pymfe_spark.plans import load_catalog
-
-
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == object:
-            try:
-                df[c] = pd.to_numeric(df[c])
-            except (ValueError, TypeError):
-                pass
-    sort_cols = list(df.columns)
-    return df.sort_values(sort_cols, na_position="last").reset_index(drop=True)
-
-
-def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[str]:
-    problems = []
-    if sorted(spark_df.columns) != sorted(duck_df.columns):
-        problems.append(
-            f"columns differ: spark={sorted(spark_df.columns)} duck={sorted(duck_df.columns)}"
-        )
-        return problems
-    if len(spark_df) != len(duck_df):
-        problems.append(f"row count differ: spark={len(spark_df)} duck={len(duck_df)}")
-        return problems
-    s, d = normalize(spark_df), normalize(duck_df)
-    for c in s.columns:
-        sv, dv = s[c], d[c]
-        if pd.api.types.is_numeric_dtype(sv) and pd.api.types.is_numeric_dtype(dv):
-            a = sv.astype(float).to_numpy()
-            b = dv.astype(float).to_numpy()
-            ok = np.allclose(a, b, rtol=0, atol=1e-9, equal_nan=True)
-        else:
-            ok = (sv.fillna("·").astype(str) == dv.fillna("·").astype(str)).all()
-        if not ok:
-            mism = None
-            try:
-                bad = ~np.isclose(
-                    sv.astype(float), dv.astype(float), rtol=0, atol=1e-9, equal_nan=True
-                )
-                i = int(np.argmax(bad))
-                mism = f" first diff row {i}: spark={sv.iloc[i]!r} duck={dv.iloc[i]!r}"
-            except Exception:
-                pass
-            problems.append(f"column {c} values differ.{mism or ''}")
-    return problems
+from pymfe_spark.testing import duckdb_connect, frame_problems
 
 
 def main() -> int:
@@ -87,12 +40,7 @@ def main() -> int:
     if unknown:
         ap.error("not in the catalog: " + ", ".join(unknown))
     spark = get_spark(cpus=16)
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duckdb_connect(sf_dir)
 
     records = []
     for name, entry in sorted(catalog.items()):
@@ -122,7 +70,7 @@ def main() -> int:
         except Exception as exc:
             print(f"FAIL {name}: duckdb error: {exc}")
             continue
-        problems = compare(name, sdf, ddf)
+        problems = frame_problems(sdf, ddf)
         if problems:
             print(f"FAIL {name}: " + "; ".join(problems))
         else:
