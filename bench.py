@@ -294,67 +294,6 @@ def _completed_stages(spark) -> dict[int, dict]:
     return {s["stageId"]: s for s in stages}
 
 
-def run_decompose(sf_dir: str, cpus: int, replicate: int) -> dict:
-    """Stage-decomposed backfill measurement: separates parallel task
-    time (sum of executorRunTime over the timed pass's stages) from
-    serial driver overhead (wall - task_time/cores). Evidence for the
-    north rule's scaling bar by decomposition: the parallel task total
-    is invariant across core counts (the kernel scales), and the wall
-    gap between N and 4N is the measured serial overhead, which is
-    fixed-size and amortizes to zero as per-shard input grows toward
-    the 10^12-turn design point."""
-    os.environ["SPARK_GRAFT_UI"] = "true"
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from pymfe_spark import get_spark
-    from pymfe_spark.plans.extractor import MFESpark
-
-    spark = get_spark(app_name="pymfe_spark_decompose", cpus=cpus)
-    t = _replicated_turns(spark, sf_dir, replicate).persist()
-    n_turns = t.count()
-    w = (
-        Window.partitionBy("conv_id")
-        .orderBy("turn_idx")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pit = t.select(
-        "conv_id",
-        "turn_idx",
-        F.count("*").over(w).alias("cum_n"),
-        F.avg("text_len").over(w).alias("cum_mean_len"),
-        F.stddev_samp("text_len").over(w).alias("cum_sd_len"),
-    )
-    ex = MFESpark(groups=("general", "statistical", "info-theory"))
-
-    # warm-up (codegen, Python workers), then one instrumented pass
-    _materialize(pit)
-    _materialize(ex.extract(t))
-    before = _completed_stages(spark)
-    t0 = time.perf_counter()
-    _materialize(pit)
-    _materialize(ex.extract(t))
-    wall = time.perf_counter() - t0
-    time.sleep(0.5)  # let the last stage land in the status store
-    after = _completed_stages(spark)
-    new = [s for sid, s in after.items() if sid not in before]
-    task_sec = sum(s["executorRunTime"] for s in new) / 1000.0
-    cpu_sec = sum(s.get("executorCpuTime", 0) for s in new) / 1e9
-    ideal = task_sec / cpus
-    spark.stop()
-    return {
-        "cpus": cpus,
-        "n_turns": n_turns,
-        "stages": len(new),
-        "wall_sec": round(wall, 3),
-        "task_sec_total": round(task_sec, 3),
-        "task_cpu_sec_total": round(cpu_sec, 3),
-        "ideal_wall_sec": round(ideal, 3),
-        "serial_overhead_sec": round(wall - ideal, 3),
-        "parallel_fraction": round(ideal / wall, 3),
-    }
-
-
 def _task_summary(spark, stage_id: int, attempt: int = 0) -> dict | None:
     """min/median/max executorRunTime (ms) for one stage's tasks."""
     import urllib.request
@@ -598,13 +537,6 @@ def run_backfill_only(sf_dir: str, cpus: int, replicate: int) -> dict:
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--scaling":
         run_scaling(sys.argv[2] if len(sys.argv) > 2 else SF_DIR)
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--decompose":
-        print(
-            json.dumps(
-                run_decompose(sys.argv[2], int(sys.argv[3]), int(sys.argv[4]))
-            )
-        )
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--stream":
         # bench.py --stream [sf_dir] [cpus] [replicate]

@@ -109,9 +109,16 @@ class Engine(NamedTuple):
     pow: Callable | None = None
     abs: Callable | None = None
     col: Callable | None = None  # column reference by name
+    ln: Callable | None = None
+    exact_int: Callable | None = None  # to decimal(38,0) / HUGEINT: exact products
+    to_double: Callable | None = None
 
 
-PY = Engine(sqrt=math.sqrt, when=lambda ok, value: value() if ok else math.nan)
+PY = Engine(
+    sqrt=math.sqrt,
+    when=lambda ok, value: value() if ok else math.nan,
+    ln=math.log,
+)
 COL = Engine(
     sqrt=F.sqrt,
     when=lambda ok, value: F.when(ok, value()),
@@ -119,6 +126,9 @@ COL = Engine(
     pow=F.pow,
     abs=F.abs,
     col=F.col,
+    ln=F.log,
+    exact_int=lambda x: x.cast("decimal(38,0)"),
+    to_double=lambda x: x.cast("double"),
 )
 SQL = Engine(
     sqrt=_sql_fn("sqrt"),
@@ -127,6 +137,9 @@ SQL = Engine(
     pow=_sql_fn("pow"),
     abs=_sql_fn("abs"),
     col=Sql,
+    ln=_sql_fn("ln"),
+    exact_int=lambda x: Sql(f"CAST({x} AS HUGEINT)"),
+    to_double=lambda x: Sql(f"CAST({x} AS DOUBLE)"),
 )
 
 # ------------------------------------ central path, Spark Column / SQL

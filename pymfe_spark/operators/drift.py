@@ -1,202 +1,293 @@
-"""Feature-distribution drift monitoring (PSI) — the standard health
-check a 10^12-turn feature backfill runs between refreshes: has the
-distribution of a feature moved between the reference window and the
-current window?
+"""Drift monitors: has a feature's distribution moved between the
+reference window (the first half of the observed time range) and the
+current window (the second half)? Every monitor, batch and streaming,
+is a configuration of four shared stages, each written once in Spark
+and once as DuckDB oracle SQL:
 
-Population Stability Index over equal-width bins:
+==================  ===================  =============================
+stage               Spark                oracle SQL
+==================  ===================  =============================
+midpoint split      ``_split``           ``_split_cte``
+binning rule        ``bin_of``           ``_BINNED_CTE``
+two-window counts   ``_counts``          ``_counts_cte``
+smoothed PSI        ``smoothed_frac``,   the same code over ``SQL``
+                    ``psi_term`` over    (and over ``PY`` for the
+                    ``COL``              streaming profile and PSI)
+==================  ===================  =============================
+
+=====================  ========  ===========  ============  =======================
+query / entry point    key       bins over    count spine   finisher
+=====================  ========  ===========  ============  =======================
+feature_drift_psi      text_len  ref. range   N_BINS bins   smoothed PSI
+role_drift_psi         role      —            observed      smoothed PSI
+feature_drift_ks       text_len  —            observed      cumulative window,
+                                                            exact argmax
+role_drift_chi2        role      —            observed      exact cell terms,
+                                                            sorted fold
+reference_bin_profile  text_len  ref. range   n_bins bins   smoothed ref. fractions
+*_drift_bin_counts     text_len  profile      —             ``psi_from_counts``
+                                 literals
+=====================  ========  ===========  ============  =======================
+
+(The last two rows live in ``streaming/drift.py``.) Population
+Stability Index:
 
     PSI = sum_b (p_cur[b] - p_ref[b]) * ln(p_cur[b] / p_ref[b])
 
 with the usual reading (< 0.1 stable, 0.1-0.25 moderate shift, > 0.25
-action). Everything upstream of the two ln/division steps is EXACT
-integer arithmetic replicated in the DuckDB oracle:
+action). Everything upstream of the division and ln is EXACT integer
+arithmetic that both engines share:
 
-- window split at the midpoint of the observed time range
-  (``(min+max) // 2`` on epoch microseconds — both engines integer);
-- bin edges are equal-width over the REFERENCE window's [min, max]
-  (integer), and values are clamped into that range BEFORE binning so
-  the integer division never sees a negative numerator (Spark ``div``
-  truncates toward zero, DuckDB ``//`` floors — they agree only on
-  non-negatives);
-- Laplace-smoothed fractions ``(cnt + 0.5) / (n + 5.0)`` keep every
-  bin nonzero (empty-bin PSI is otherwise infinite) as an exact
-  rational -> one IEEE division.
+- the window split is at the midpoint of the observed time range
+  (``(min+max) // 2`` on epoch microseconds, integer in both engines);
+- bin edges are equal-width over the REFERENCE window's [min, max], and
+  values are clamped into that range BEFORE binning so the integer
+  division never sees a negative numerator (Spark ``div`` truncates
+  toward zero, DuckDB ``//`` floors; they agree only on non-negatives);
+- Laplace-smoothed fractions (count plus one half, over n plus k
+  halves, for k spine keys) keep every bin nonzero (empty-bin PSI is otherwise
+  infinite), one IEEE division of an exact rational.
 
-The output is one row per bin (no pre-summed total: a cross-engine
-float sum would depend on accumulation order; consumers sum the 10
-rounded terms). Scale shape: two scans' worth of global aggregates
-(time range, reference bin range — tiny rows), then ONE exchange of
-(window, bin) partial counts; the bin spine is a generated 10-row
-broadcast. Reference analogue: pymfe has no drift surface; PSI is the
-published credit-scoring/monitoring standard re-expressed over the
-transcript feature columns.
+A degenerate window (e.g. every row at one timestamp, so the reference
+half is empty) raises through the one guard on the count totals
+instead of emitting NULL/NaN rows a monitor would read as "no drift".
+PSI output is one row per bin or category (no pre-summed total: a
+cross-engine float sum would depend on accumulation order; consumers
+sum the rounded terms). Scale shape: the time span and the reference
+range are 1-row broadcasts onto the scan, and only per-key counts
+cross the wire. Reference analogue: pymfe has no drift surface; PSI,
+KS and chi² are the published monitoring standards re-expressed over
+the transcript feature columns.
 """
 
 from __future__ import annotations
 
+from typing import Any
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from pymfe_spark.functions.moments import COL, SQL, Engine
 from pymfe_spark.functions.sql_exprs import epoch_us, r
 from pymfe_spark.operators.base import TURNS_SQL, turns
 from pymfe_spark.plans.catalog import register
-from pymfe_spark.sources import with_transcripts_cte
+from pymfe_spark.sources import transcripts, with_transcripts_cte
 
 GROUP = "drift"
 
 N_BINS = 10
 
+# ------------------------------------------------ stage 1: midpoint split
 
-def _guard_split(df: DataFrame, pred: Column, what: str) -> DataFrame:
-    """Fail LOUDLY instead of emitting NULL/NaN rows when the midpoint
-    split degenerates — e.g. every row shares one timestamp, so no row
-    satisfies ``us < midpoint`` and the reference half is empty. A
-    monitoring consumer must never read NaN as "no drift".
 
-    ``assert_true`` evaluates to NULL when the predicate holds, so the
-    ``where(... isNull())`` keeps every row and costs nothing on
-    healthy data; on a degenerate window the job raises at run time
-    with the message below."""
-    return df.where(
+def _split(df: DataFrame, key: Column, ts: Column) -> DataFrame:
+    """``(key, is_ref)``: ``is_ref`` marks the rows strictly before the
+    integer midpoint of ``ts``'s observed range in epoch µs. The 1-row
+    span is a broadcast onto the scan."""
+    # parquet ts loads as TIMESTAMP_NTZ; session tz is pinned UTC so
+    # the cast is exact (same convention as operators/base.py)
+    base = df.select(key.alias("key"), epoch_us(ts.cast("timestamp")).alias("us"))
+    span = base.agg(F.min("us").alias("t_min"), F.max("us").alias("t_max"))
+    return base.join(F.broadcast(span)).select(
+        "key", (F.col("us") < F.expr("(t_min + t_max) div 2")).alias("is_ref")
+    )
+
+
+def _split_cte(key_sql: str, source: str) -> str:
+    """``win(key, is_ref)``: SQL twin of :func:`_split`."""
+    return f"""vals AS (
+    SELECT {key_sql} AS key, epoch_us(ts) AS us FROM {source}
+  ), span AS (
+    SELECT min(us) AS t_min, max(us) AS t_max FROM vals
+  ), win AS (
+    SELECT key, us < (t_min + t_max) // 2 AS is_ref FROM vals, span
+  )"""
+
+
+# -------------------------------------------------- stage 2: binning rule
+
+
+def bin_of(v: Column, lo: Any, hi: Any, n_bins: int = N_BINS) -> Column:
+    """Equal-width bin ``0..n_bins-1`` of ``v`` over ``[lo, hi]``, with
+    ``lo``/``hi`` Columns or ints: clamp, then exact int64 ``div``
+    (never a rounded double quotient, so bins are bit-stable against
+    the batch edges for any value magnitude)."""
+    clamped = F.least(F.greatest(v, F.lit(lo)), F.lit(hi))
+    return F.call_function("div", (clamped - lo) * n_bins, F.lit(hi - lo + 1))
+
+
+def _binned(
+    df: DataFrame, value: Column, ts: Column, n_bins: int = N_BINS
+) -> tuple[DataFrame, DataFrame]:
+    """``(key = bin, is_ref)`` binned over the reference half's range,
+    and that 1-row range ``(l_min, l_max)``."""
+    w = _split(df, value.cast("long"), ts)
+    rng = w.filter("is_ref").agg(
+        F.min("key").alias("l_min"), F.max("key").alias("l_max")
+    )
+    binned = w.join(F.broadcast(rng)).select(
+        bin_of(F.col("key"), F.col("l_min"), F.col("l_max"), n_bins).alias("key"),
+        "is_ref",
+    )
+    return binned, rng
+
+
+# ``binned(key, is_ref)`` from ``win``: SQL twin of :func:`_binned`
+_BINNED_CTE = f"""ref_range AS (
+    SELECT min(key) AS l_min, max(key) AS l_max FROM win WHERE is_ref
+  ), binned AS (
+    SELECT (least(greatest(key, l_min), l_max) - l_min) * {N_BINS}
+             // (l_max - l_min + 1) AS key, is_ref
+    FROM win, ref_range
+  )"""
+
+
+# -------------------------------------------- stage 3: two-window counts
+
+
+def _guard_split(tot: DataFrame) -> DataFrame:
+    """Fail LOUDLY when the midpoint split leaves a half empty (e.g.
+    every row shares one timestamp): a monitor must never read NULL or
+    NaN as "no drift". ``assert_true`` is NULL when the predicate
+    holds, so the filter keeps the 1-row totals on healthy data and
+    raises at run time otherwise."""
+    return tot.where(
         F.assert_true(
-            pred,
+            (F.col("n_ref") > 0) & (F.col("n_cur") > 0),
             F.lit(
-                f"degenerate drift window ({what}): the midpoint split"
-                " left a half empty — check the input time range"
+                "degenerate drift window: the midpoint split left a half"
+                " empty — check the input time range"
             ),
         ).isNull()
     )
 
 
+def _counts(w: DataFrame, n_bins: int | None = None) -> DataFrame:
+    """``(key, n_ref_key, n_cur_key, n_ref, n_cur, k)``: per-key counts
+    of each half, zero-filled over the spine (bins ``0..n_bins-1``, or
+    the observed keys when ``n_bins`` is None; a null key is one more
+    observed key), with the guarded totals and the spine size k
+    broadcast onto every row."""
+    per = w.groupBy("key").agg(
+        F.count(F.when(F.col("is_ref"), 1)).alias("n_ref_key"),
+        F.count(F.when(~F.col("is_ref"), 1)).alias("n_cur_key"),
+    )
+    tot = _guard_split(
+        per.agg(
+            F.sum("n_ref_key").alias("n_ref"),
+            F.sum("n_cur_key").alias("n_cur"),
+            (F.lit(n_bins) if n_bins else F.count("*")).alias("k"),
+        )
+    )
+    if n_bins:
+        # at most n_bins count rows by construction: broadcast them
+        per = (
+            w.sparkSession.range(n_bins)
+            .withColumnRenamed("id", "key")
+            .join(F.broadcast(per), "key", "left")
+            .select(
+                "key",
+                *(F.coalesce(c, F.lit(0)).alias(c) for c in ("n_ref_key", "n_cur_key")),
+            )
+        )
+    return per.join(F.broadcast(tot))
+
+
+def _counts_cte(src: str, n_bins: int | None = None) -> str:
+    """``cells`` over ``src(key, is_ref)``: SQL twin of :func:`_counts`
+    (no guard: the oracle only runs on healthy windows)."""
+    spine = (
+        f"(SELECT unnest(range({n_bins})) AS key) s LEFT JOIN per USING (key)"
+        if n_bins
+        else "per"
+    )
+    return f"""per AS (
+    SELECT key, count(*) FILTER (WHERE is_ref) AS n_ref_key,
+           count(*) FILTER (WHERE NOT is_ref) AS n_cur_key
+    FROM {src} GROUP BY key
+  ), tot AS (
+    SELECT sum(n_ref_key) AS n_ref, sum(n_cur_key) AS n_cur,
+           {n_bins or "count(*)"} AS k
+    FROM per
+  ), cells AS (
+    SELECT key, coalesce(n_ref_key, 0) AS n_ref_key,
+           coalesce(n_cur_key, 0) AS n_cur_key, n_ref, n_cur, k
+    FROM {spine}, tot
+  )"""
+
+
+# ------------------------------------------ stage 4: smoothed-PSI finisher
+
+
+def smoothed_frac(c: Any, n: Any, k: Any) -> Any:
+    """Laplace-smoothed share of ``c`` in ``n`` over ``k`` spine keys,
+    never zero, on any engine."""
+    return (c + 0.5) / (n + k / 2.0)
+
+
+def psi_term(p_ref: Any, p_cur: Any, e: Engine) -> Any:
+    """One PSI term; nonnegative, as both factors share a sign."""
+    return (p_cur - p_ref) * e.ln(p_cur / p_ref)
+
+
+def _psi_exprs(e: Engine) -> dict[str, Any]:
+    """The smoothed-PSI output columns over a ``_counts`` table."""
+    p_ref, p_cur = (
+        smoothed_frac(e.col(f"n_{h}_key"), e.col(f"n_{h}"), e.col("k"))
+        for h in ("ref", "cur")
+    )
+    return {"ref_frac": p_ref, "cur_frac": p_cur, "psi_term": psi_term(p_ref, p_cur, e)}
+
+
+def _psi(cells: DataFrame, key: Column) -> DataFrame:
+    return cells.select(
+        key,
+        F.col("n_ref_key").cast("long").alias("n_ref"),
+        F.col("n_cur_key").cast("long").alias("n_cur"),
+        *(r(x).alias(name) for name, x in _psi_exprs(COL).items()),
+    )
+
+
+def _psi_oracle(key_alias: str, ctes: str) -> str:
+    fracs = ",\n       ".join(
+        f"round({x}, 6) AS {name}" for name, x in _psi_exprs(SQL).items()
+    )
+    return with_transcripts_cte(
+        f"""
+SELECT key AS {key_alias},
+       cast(n_ref_key AS BIGINT) AS n_ref,
+       cast(n_cur_key AS BIGINT) AS n_cur,
+       {fracs}
+FROM cells
+""",
+        extra_ctes=ctes,
+    )
+
+
+# ---------------------------------------------------------------- queries
+
+
 def psi_bins(df: DataFrame, value: Column, ts: Column) -> DataFrame:
     """Per-bin PSI terms for ``value`` (must be integral-valued),
     splitting ``df`` into reference/current halves at the midpoint of
-    ``ts``'s observed range. Works on any DataFrame — the registered
+    ``ts``'s observed range. Works on any DataFrame; the registered
     query binds it to the turn table's text_len."""
-    # parquet ts loads as TIMESTAMP_NTZ; session tz is pinned UTC so
-    # the cast is exact (same convention as operators/base.py)
-    base = df.select(
-        value.cast("long").alias("v"),
-        epoch_us(ts.cast("timestamp")).alias("us"),
-    )
-    span = base.agg(
-        F.min("us").alias("t_min"), F.max("us").alias("t_max")
-    )
-    w = base.join(F.broadcast(span)).select(
-        "v",
-        (F.col("us") < F.expr("(t_min + t_max) div 2")).alias("is_ref"),
-    )
-    ref_range = (
-        w.filter("is_ref")
-        .agg(F.min("v").alias("l_min"), F.max("v").alias("l_max"))
-    )
-    binned = _guard_split(
-        w.join(F.broadcast(ref_range)),
-        F.col("l_min").isNotNull(),
-        "psi_bins: empty reference half",
-    ).select(
-        "is_ref",
-        F.expr(
-            f"(least(greatest(v, l_min), l_max) - l_min) * {N_BINS} "
-            "div (l_max - l_min + 1)"
-        ).alias("bin"),
-    )
-    counts = binned.groupBy("is_ref", "bin").agg(
-        F.count("*").alias("cnt")
-    )
-    spine = (
-        counts.groupBy()
-        .agg(
-            F.sum(F.when(F.col("is_ref"), F.col("cnt"))).alias("n_ref"),
-            F.sum(F.when(~F.col("is_ref"), F.col("cnt"))).alias("n_cur"),
-        )
-        .select(
-            "n_ref",
-            "n_cur",
-            F.explode(F.sequence(F.lit(0), F.lit(N_BINS - 1))).alias("bin"),
-        )
-    )
-    pivot = (
-        spine.join(
-            counts.filter("is_ref").select("bin", F.col("cnt").alias("c_ref")),
-            "bin",
-            "left",
-        )
-        .join(
-            counts.filter("NOT is_ref").select(
-                "bin", F.col("cnt").alias("c_cur")
-            ),
-            "bin",
-            "left",
-        )
-        .select(
-            "bin",
-            F.coalesce("c_ref", F.lit(0)).alias("n_ref_bin"),
-            F.coalesce("c_cur", F.lit(0)).alias("n_cur_bin"),
-            "n_ref",
-            "n_cur",
-        )
-    )
-    p_ref = (F.col("n_ref_bin") + F.lit(0.5)) / (
-        F.col("n_ref") + F.lit(float(N_BINS) / 2)
-    )
-    p_cur = (F.col("n_cur_bin") + F.lit(0.5)) / (
-        F.col("n_cur") + F.lit(float(N_BINS) / 2)
-    )
-    return pivot.select(
-        F.col("bin").cast("int").alias("bin"),
-        F.col("n_ref_bin").cast("long").alias("n_ref"),
-        F.col("n_cur_bin").cast("long").alias("n_cur"),
-        r(p_ref).alias("ref_frac"),
-        r(p_cur).alias("cur_frac"),
-        r((p_cur - p_ref) * F.log(p_cur / p_ref)).alias("psi_term"),
-    )
+    binned, _ = _binned(df, value, ts)
+    return _psi(_counts(binned, N_BINS), F.col("key").cast("int").alias("bin"))
 
 
-_PSI_ORACLE = with_transcripts_cte(
-    f"""
-SELECT b.bin,
-       cast(coalesce(cr.cnt, 0) AS BIGINT) AS n_ref,
-       cast(coalesce(cc.cnt, 0) AS BIGINT) AS n_cur,
-       round((coalesce(cr.cnt, 0) + 0.5) / (t.n_ref + {N_BINS / 2}), 6)
-         AS ref_frac,
-       round((coalesce(cc.cnt, 0) + 0.5) / (t.n_cur + {N_BINS / 2}), 6)
-         AS cur_frac,
-       round(((coalesce(cc.cnt, 0) + 0.5) / (t.n_cur + {N_BINS / 2})
-              - (coalesce(cr.cnt, 0) + 0.5) / (t.n_ref + {N_BINS / 2}))
-             * ln(((coalesce(cc.cnt, 0) + 0.5) / (t.n_cur + {N_BINS / 2}))
-                  / ((coalesce(cr.cnt, 0) + 0.5) / (t.n_ref + {N_BINS / 2}))),
-             6) AS psi_term
-FROM (SELECT unnest(range({N_BINS})) AS bin) b
-CROSS JOIN (SELECT sum(CASE WHEN is_ref THEN 1 ELSE 0 END) AS n_ref,
-                   sum(CASE WHEN is_ref THEN 0 ELSE 1 END) AS n_cur
-            FROM binned) t
-LEFT JOIN (SELECT bin, count(*) AS cnt FROM binned WHERE is_ref
-           GROUP BY bin) cr ON cr.bin = b.bin
-LEFT JOIN (SELECT bin, count(*) AS cnt FROM binned WHERE NOT is_ref
-           GROUP BY bin) cc ON cc.bin = b.bin
-""",
-    extra_ctes=f"""{TURNS_SQL},
-  vals AS (
-    SELECT cast(text_len AS BIGINT) AS v, epoch_us(ts) AS us FROM turns
-  ), span AS (
-    SELECT min(us) AS t_min, max(us) AS t_max FROM vals
-  ), win AS (
-    SELECT v, us < (t_min + t_max) // 2 AS is_ref FROM vals, span
-  ), ref_range AS (
-    SELECT min(v) AS l_min, max(v) AS l_max FROM win WHERE is_ref
-  ), binned AS (
-    SELECT is_ref,
-           (least(greatest(v, l_min), l_max) - l_min) * {N_BINS}
-             // (l_max - l_min + 1) AS bin
-    FROM win, ref_range
-  )""",
-)
+_TEXT_LEN_WIN = f"""{TURNS_SQL},
+  {_split_cte("cast(text_len AS BIGINT)", "turns")}"""
+_ROLE_WIN = _split_cte("role", "transcripts")
 
 
 @register(
     "feature_drift_psi",
-    oracle=_PSI_ORACLE,
+    oracle=_psi_oracle(
+        "bin",
+        f"{_TEXT_LEN_WIN}, {_BINNED_CTE}, {_counts_cte('binned', N_BINS)}",
+    ),
     group=GROUP,
 )
 def feature_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -209,208 +300,81 @@ def feature_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def psi_categories(df: DataFrame, cat: Column, ts: Column) -> DataFrame:
     """Categorical twin of :func:`psi_bins`: PSI over the observed
-    category set (globally distinct values — the spine — so a category
-    present in only one window still gets a smoothed row). Smoothing
-    denominator uses the category count k: p = (cnt+0.5)/(n+k/2)."""
-    base = df.select(
-        cat.alias("cat"), epoch_us(ts.cast("timestamp")).alias("us")
-    )
-    span = base.agg(F.min("us").alias("t_min"), F.max("us").alias("t_max"))
-    w = base.join(F.broadcast(span)).select(
-        "cat",
-        (F.col("us") < F.expr("(t_min + t_max) div 2")).alias("is_ref"),
-    )
-    counts = w.groupBy("is_ref", "cat").agg(F.count("*").alias("cnt"))
-    totals = _guard_split(
-        counts.groupBy().agg(
-            F.sum(F.when(F.col("is_ref"), F.col("cnt"))).alias("n_ref"),
-            F.sum(F.when(~F.col("is_ref"), F.col("cnt"))).alias("n_cur"),
-            F.count_distinct("cat").alias("k"),
-        ),
-        F.col("n_ref").isNotNull() & F.col("n_cur").isNotNull(),
-        "psi_categories: empty half",
-    )
-    spine = counts.select("cat").distinct().join(F.broadcast(totals))
-    pivot = (
-        spine.join(
-            counts.filter("is_ref").select("cat", F.col("cnt").alias("c_ref")),
-            "cat",
-            "left",
-        )
-        .join(
-            counts.filter("NOT is_ref").select(
-                "cat", F.col("cnt").alias("c_cur")
-            ),
-            "cat",
-            "left",
-        )
-        .select(
-            "cat",
-            F.coalesce("c_ref", F.lit(0)).alias("n_ref_cat"),
-            F.coalesce("c_cur", F.lit(0)).alias("n_cur_cat"),
-            "n_ref",
-            "n_cur",
-            "k",
-        )
-    )
-    p_ref = (F.col("n_ref_cat") + F.lit(0.5)) / (
-        F.col("n_ref") + F.col("k") / F.lit(2.0)
-    )
-    p_cur = (F.col("n_cur_cat") + F.lit(0.5)) / (
-        F.col("n_cur") + F.col("k") / F.lit(2.0)
-    )
-    return pivot.select(
-        "cat",
-        F.col("n_ref_cat").cast("long").alias("n_ref"),
-        F.col("n_cur_cat").cast("long").alias("n_cur"),
-        r(p_ref).alias("ref_frac"),
-        r(p_cur).alias("cur_frac"),
-        r((p_cur - p_ref) * F.log(p_cur / p_ref)).alias("psi_term"),
-    )
+    category set (the spine), so a category present in only one window
+    still gets a smoothed row; k is the category count."""
+    return _psi(_counts(_split(df, cat, ts)), F.col("key").alias("cat"))
 
 
-_ROLE_PSI_ORACLE = with_transcripts_cte(
-    """
-SELECT s.cat,
-       cast(coalesce(cr.cnt, 0) AS BIGINT) AS n_ref,
-       cast(coalesce(cc.cnt, 0) AS BIGINT) AS n_cur,
-       round((coalesce(cr.cnt, 0) + 0.5) / (t.n_ref + t.k / 2.0), 6)
-         AS ref_frac,
-       round((coalesce(cc.cnt, 0) + 0.5) / (t.n_cur + t.k / 2.0), 6)
-         AS cur_frac,
-       round(((coalesce(cc.cnt, 0) + 0.5) / (t.n_cur + t.k / 2.0)
-              - (coalesce(cr.cnt, 0) + 0.5) / (t.n_ref + t.k / 2.0))
-             * ln(((coalesce(cc.cnt, 0) + 0.5) / (t.n_cur + t.k / 2.0))
-                  / ((coalesce(cr.cnt, 0) + 0.5) / (t.n_ref + t.k / 2.0))),
-             6) AS psi_term
-FROM (SELECT DISTINCT cat FROM win) s
-CROSS JOIN (SELECT sum(CASE WHEN is_ref THEN 1 ELSE 0 END) AS n_ref,
-                   sum(CASE WHEN is_ref THEN 0 ELSE 1 END) AS n_cur,
-                   count(DISTINCT cat) AS k
-            FROM win) t
-LEFT JOIN (SELECT cat, count(*) AS cnt FROM win WHERE is_ref
-           GROUP BY cat) cr ON cr.cat = s.cat
-LEFT JOIN (SELECT cat, count(*) AS cnt FROM win WHERE NOT is_ref
-           GROUP BY cat) cc ON cc.cat = s.cat
-""",
-    extra_ctes="""vals AS (
-    SELECT role AS cat, epoch_us(ts) AS us FROM transcripts
-  ), span AS (
-    SELECT min(us) AS t_min, max(us) AS t_max FROM vals
-  ), win AS (
-    SELECT cat, us < (t_min + t_max) // 2 AS is_ref FROM vals, span
-  )""",
+@register(
+    "role_drift_psi",
+    oracle=_psi_oracle("cat", f"{_ROLE_WIN}, {_counts_cte('win')}"),
+    group=GROUP,
 )
+def role_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Categorical PSI of the role distribution (reference vs current
+    half of the time range), the C-view twin of feature_drift_psi."""
+    return psi_categories(transcripts(spark, sf_dir), F.col("role"), F.col("ts"))
+
+
+def _ks_numer(e: Engine) -> Any:
+    """|cr·n_cur - cc·n_ref| over the cumulative counts, exact."""
+    x, c = e.exact_int, e.col
+    return e.abs(x(c("cr")) * x(c("n_cur")) - x(c("cc")) * x(c("n_ref")))
+
+
+def _ks(e: Engine) -> Any:
+    f, c = e.to_double, e.col
+    return f(c("numer")) / (f(c("n_ref")) * f(c("n_cur")))
 
 
 def ks_statistic(df: DataFrame, value: Column, ts: Column) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov statistic between the reference
     and current halves of the time range, EXACT until the final
     division: D = max_v |F_ref(v) - F_cur(v)| is maximized over the
-    integer numerator |cr·n_cur - cc·n_ref| (decimal(38,0) / HUGEINT —
+    integer numerator |cr·n_cur - cc·n_ref| (decimal(38,0) / HUGEINT,
     no float ever enters the argmax), so both engines agree on the
     maximizing value bit-for-bit; ties break to the smallest v.
 
     Scale shape: one exchange for per-value counts (cardinality =
-    DISTINCT feature values, not rows — pre-bin a continuous feature
+    DISTINCT feature values, not rows; pre-bin a continuous feature
     first), a single-partition cumulative window over those distinct
     values (bounded by value cardinality, not data volume), and a
     TakeOrderedAndProject for the argmax. Output: one row
     (ks_at, n_ref, n_cur, ks)."""
-    base = df.select(
-        value.cast("long").alias("v"),
-        epoch_us(ts.cast("timestamp")).alias("us"),
-    )
-    span = base.agg(F.min("us").alias("t_min"), F.max("us").alias("t_max"))
-    w = base.join(F.broadcast(span)).select(
-        "v",
-        (F.col("us") < F.expr("(t_min + t_max) div 2")).alias("is_ref"),
-    )
-    per_v = w.groupBy("v").agg(
-        F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("cr_i"),
-        F.sum(F.when(~F.col("is_ref"), 1).otherwise(0)).alias("cc_i"),
-    )
-    tot = _guard_split(
-        per_v.agg(
-            F.sum("cr_i").alias("n_ref"), F.sum("cc_i").alias("n_cur")
-        ),
-        (F.coalesce(F.col("n_ref"), F.lit(0)) > 0)
-        & (F.coalesce(F.col("n_cur"), F.lit(0)) > 0),
-        "ks_statistic: empty half",
-    )
-    from pyspark.sql.window import Window
-
-    cw = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    cum = per_v.select(
-        "v",
-        F.sum("cr_i").over(cw).alias("cr"),
-        F.sum("cc_i").over(cw).alias("cc"),
-    )
-    dec = "decimal(38,0)"
-    num = F.abs(
-        F.col("cr").cast(dec) * F.col("n_cur").cast(dec)
-        - F.col("cc").cast(dec) * F.col("n_ref").cast(dec)
-    )
+    cw = Window.orderBy("key").rowsBetween(Window.unboundedPreceding, 0)
     return (
-        cum.join(F.broadcast(tot))
+        _counts(_split(df, value.cast("long"), ts))
         .select(
-            F.col("v").alias("ks_at"),
+            F.col("key").alias("ks_at"),
             F.col("n_ref").cast("long").alias("n_ref"),
             F.col("n_cur").cast("long").alias("n_cur"),
-            num.alias("numer"),
+            F.sum("n_ref_key").over(cw).alias("cr"),
+            F.sum("n_cur_key").over(cw).alias("cc"),
         )
+        .select("ks_at", "n_ref", "n_cur", _ks_numer(COL).alias("numer"))
         .orderBy(F.col("numer").desc(), F.col("ks_at").asc())
         .limit(1)
-        .select(
-            "ks_at",
-            "n_ref",
-            "n_cur",
-            r(
-                F.col("numer").cast("double")
-                / (
-                    F.col("n_ref").cast("double")
-                    * F.col("n_cur").cast("double")
-                )
-            ).alias("ks"),
-        )
+        .select("ks_at", "n_ref", "n_cur", r(_ks(COL)).alias("ks"))
     )
 
 
 _KS_ORACLE = with_transcripts_cte(
-    """
-SELECT v AS ks_at,
+    f"""
+SELECT key AS ks_at,
        cast(n_ref AS BIGINT) AS n_ref,
        cast(n_cur AS BIGINT) AS n_cur,
-       round(numer::DOUBLE / (n_ref::DOUBLE * n_cur::DOUBLE), 6) AS ks
-FROM (
-  SELECT c.v, t.n_ref, t.n_cur,
-         abs(c.cr::HUGEINT * t.n_cur - c.cc::HUGEINT * t.n_ref) AS numer
-  FROM cum c CROSS JOIN tot t
-)
+       round({_ks(SQL)}, 6) AS ks
+FROM (SELECT key, n_ref, n_cur, {_ks_numer(SQL)} AS numer FROM cum)
 ORDER BY numer DESC, ks_at ASC
 LIMIT 1
 """,
-    extra_ctes=f"""{TURNS_SQL},
-  vals AS (
-    SELECT cast(text_len AS BIGINT) AS v, epoch_us(ts) AS us FROM turns
-  ), span AS (
-    SELECT min(us) AS t_min, max(us) AS t_max FROM vals
-  ), win AS (
-    SELECT v, us < (t_min + t_max) // 2 AS is_ref FROM vals, span
-  ), per_v AS (
-    SELECT v,
-           sum(CASE WHEN is_ref THEN 1 ELSE 0 END) AS cr_i,
-           sum(CASE WHEN is_ref THEN 0 ELSE 1 END) AS cc_i
-    FROM win GROUP BY v
-  ), tot AS (
-    SELECT sum(cr_i) AS n_ref, sum(cc_i) AS n_cur FROM per_v
-  ), cum AS (
-    SELECT v,
-           sum(cr_i) OVER (ORDER BY v
+    extra_ctes=f"""{_TEXT_LEN_WIN}, {_counts_cte("win")}, cum AS (
+    SELECT key, n_ref, n_cur,
+           sum(n_ref_key) OVER (ORDER BY key
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cr,
-           sum(cc_i) OVER (ORDER BY v
+           sum(n_cur_key) OVER (ORDER BY key
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cc
-    FROM per_v
+    FROM cells
   )""",
 )
 
@@ -427,103 +391,42 @@ def feature_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ks_statistic(t, F.col("text_len"), F.col("ts"))
 
 
-@register(
-    "role_drift_psi",
-    oracle=_ROLE_PSI_ORACLE,
-    group=GROUP,
-)
-def role_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Categorical PSI of the role distribution (reference vs current
-    half of the time range) — the C-view twin of feature_drift_psi."""
-    from pymfe_spark.sources import transcripts
-
-    t = transcripts(spark, sf_dir)
-    return psi_categories(t, F.col("role"), F.col("ts"))
+def _chi2_term(h: str, e: Engine) -> Any:
+    """(O - E)^2 / E of the ``h`` (ref or cur) cell of a category, as
+    d^2 / (N·R·C) with the exact deviation d = O·N - R·C."""
+    x, f, c = e.exact_int, e.to_double, e.col
+    n, o, r_tot = c("n_ref") + c("n_cur"), c(f"n_{h}_key"), c(f"n_{h}")
+    c_tot = c("n_ref_key") + c("n_cur_key")
+    d = f(x(o) * x(n) - x(r_tot) * x(c_tot))
+    return d * d / (f(n) * f(r_tot) * f(c_tot))
 
 
 def chi2_homogeneity(df: DataFrame, cat: Column, ts: Column) -> DataFrame:
     """Two-sample chi-squared homogeneity statistic between the
     reference/current halves: chi2 = sum over the 2k cells of
-    (O - E)^2 / E with E = row_total * col_total / N.
+    (O - E)^2 / E with E = row_total * col_total / N. A category absent
+    from one window still owes its zero cell's term.
 
     Exactness: each cell's deviation d = O*N - R*C is exact
     decimal(38,0)/HUGEINT; only then does one double conversion feed
-    the term d^2 / (N*R*C), and the k-cell sum folds sequentially over
-    the category-sorted list so both engines accumulate in the same
-    order. Output: one row (k, n_ref, n_cur, chi2, dof)."""
-    base = df.select(
-        cat.alias("cat"), epoch_us(ts.cast("timestamp")).alias("us")
-    )
-    span = base.agg(F.min("us").alias("t_min"), F.max("us").alias("t_max"))
-    w = base.join(F.broadcast(span)).select(
-        "cat",
-        (F.col("us") < F.expr("(t_min + t_max) div 2")).alias("is_ref"),
-    )
-    obs = w.groupBy("cat", "is_ref").agg(F.count("*").alias("o"))
-    tot = _guard_split(
-        obs.groupBy().agg(
-            F.sum(F.when(F.col("is_ref"), F.col("o"))).alias("n_ref"),
-            F.sum(F.when(~F.col("is_ref"), F.col("o"))).alias("n_cur"),
-            F.count_distinct("cat").alias("k"),
-        ),
-        F.col("n_ref").isNotNull() & F.col("n_cur").isNotNull(),
-        "chi2_homogeneity: empty half",
-    )
-    cols = obs.groupBy("cat").agg(F.sum("o").alias("c_tot"))
-    # full 2k cell spine: a category absent from one window still owes
-    # its (0 - E)^2 / E term — without the zero cell the statistic
-    # understates exactly the strongest drift signal
-    spine = cols.select("cat").crossJoin(
-        F.broadcast(
-            obs.sparkSession.range(2).select(
-                (F.col("id") == 0).alias("is_ref")
-            )
-        )
-    )
-    cells = spine.join(obs, ["cat", "is_ref"], "left").select(
-        "cat", "is_ref", F.coalesce("o", F.lit(0)).alias("o")
-    )
-    dec = "decimal(38,0)"
-    joined = (
-        cells.join(cols, "cat")
-        .join(F.broadcast(tot))
-        .select(
-            "cat",
-            "is_ref",
-            "n_ref",
-            "n_cur",
-            "k",
-            (
-                F.col("o").cast(dec)
-                * (F.col("n_ref") + F.col("n_cur")).cast(dec)
-                - F.when(F.col("is_ref"), F.col("n_ref"))
-                .otherwise(F.col("n_cur"))
-                .cast(dec)
-                * F.col("c_tot").cast(dec)
-            ).alias("d"),
-            F.when(F.col("is_ref"), F.col("n_ref"))
-            .otherwise(F.col("n_cur"))
-            .cast("double")
-            .alias("r_tot"),
-            F.col("c_tot").cast("double").alias("c_tot_d"),
-        )
-    )
-    n_d = (F.col("n_ref") + F.col("n_cur")).cast("double")
-    term = (
-        F.col("d").cast("double")
-        * F.col("d").cast("double")
-        / (n_d * F.col("r_tot") * F.col("c_tot_d"))
+    the term d^2 / (N*R*C), and the 2k-cell sum folds sequentially over
+    the (category, is_ref)-sorted list so both engines accumulate in
+    the same order. Output: one row (k, n_ref, n_cur, chi2, dof)."""
+    # per category, the is_ref = false cell sorts before the true one;
+    # a null category sorts first, as in the oracle
+    cells = F.struct(
+        "key",
+        _chi2_term("cur", COL).alias("t_cur"),
+        _chi2_term("ref", COL).alias("t_ref"),
     )
     return (
-        joined.select("n_ref", "n_cur", "k", "cat", "is_ref", term.alias("t"))
+        _counts(_split(df, cat, ts))
         .groupBy("n_ref", "n_cur", "k")
         .agg(
             F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct("cat", "is_ref", F.col("t")))
-                ),
+                F.array_sort(F.collect_list(cells)),
                 F.lit(0.0),
-                lambda acc, x: acc + x["t"],
+                lambda acc, x: acc + x["t_cur"] + x["t_ref"],
             ).alias("chi2_raw")
         )
         .select(
@@ -537,50 +440,19 @@ def chi2_homogeneity(df: DataFrame, cat: Column, ts: Column) -> DataFrame:
 
 
 _CHI2_ORACLE = with_transcripts_cte(
-    """
-SELECT cast(t.k AS BIGINT) AS k,
-       cast(t.n_ref AS BIGINT) AS n_ref,
-       cast(t.n_cur AS BIGINT) AS n_cur,
-       round(list_aggregate(
-         list(
-           (c.d::DOUBLE * c.d::DOUBLE)
-             / ((t.n_ref + t.n_cur)::DOUBLE * c.r_tot::DOUBLE
-                * c.c_tot::DOUBLE)
-           ORDER BY c.cat, c.is_ref
-         ), 'sum'), 6) AS chi2,
-       cast(t.k - 1 AS BIGINT) AS dof
-FROM celld c CROSS JOIN tot t
-GROUP BY t.k, t.n_ref, t.n_cur
+    f"""
+SELECT cast(k AS BIGINT) AS k,
+       cast(n_ref AS BIGINT) AS n_ref,
+       cast(n_cur AS BIGINT) AS n_cur,
+       round(list_aggregate(flatten(list(
+         [{_chi2_term("cur", SQL)},
+          {_chi2_term("ref", SQL)}] ORDER BY key NULLS FIRST
+       )), 'sum'), 6) AS chi2,
+       cast(k - 1 AS BIGINT) AS dof
+FROM cells
+GROUP BY k, n_ref, n_cur
 """,
-    extra_ctes="""vals AS (
-    SELECT role AS cat, epoch_us(ts) AS us FROM transcripts
-  ), span AS (
-    SELECT min(us) AS t_min, max(us) AS t_max FROM vals
-  ), win AS (
-    SELECT cat, us < (t_min + t_max) // 2 AS is_ref FROM vals, span
-  ), cells AS (
-    SELECT cat, is_ref, count(*) AS o FROM win GROUP BY cat, is_ref
-  ), tot AS (
-    SELECT sum(CASE WHEN is_ref THEN o ELSE 0 END) AS n_ref,
-           sum(CASE WHEN is_ref THEN 0 ELSE o END) AS n_cur,
-           count(DISTINCT cat) AS k
-    FROM cells
-  ), cols AS (
-    SELECT cat, sum(o) AS c_tot FROM cells GROUP BY cat
-  ), spine AS (
-    -- full 2k cell grid: zero cells still owe their (0-E)^2/E term
-    SELECT l.cat, l.c_tot, s.is_ref, coalesce(c.o, 0) AS o
-    FROM cols l
-    CROSS JOIN (VALUES (true), (false)) s(is_ref)
-    LEFT JOIN cells c ON c.cat = l.cat AND c.is_ref = s.is_ref
-  ), celld AS (
-    SELECT c.cat, c.is_ref, c.c_tot,
-           CASE WHEN c.is_ref THEN t.n_ref ELSE t.n_cur END AS r_tot,
-           c.o::HUGEINT * (t.n_ref + t.n_cur)::HUGEINT
-             - (CASE WHEN c.is_ref THEN t.n_ref ELSE t.n_cur
-                END)::HUGEINT * c.c_tot::HUGEINT AS d
-    FROM spine c CROSS JOIN tot t
-  )""",
+    extra_ctes=f"{_ROLE_WIN}, {_counts_cte('win')}",
 )
 
 
@@ -592,7 +464,4 @@ GROUP BY t.k, t.n_ref, t.n_cur
 def role_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample chi-squared homogeneity of the role distribution
     between the reference and current halves (see chi2_homogeneity)."""
-    from pymfe_spark.sources import transcripts
-
-    t = transcripts(spark, sf_dir)
-    return chi2_homogeneity(t, F.col("role"), F.col("ts"))
+    return chi2_homogeneity(transcripts(spark, sf_dir), F.col("role"), F.col("ts"))

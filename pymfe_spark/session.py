@@ -62,8 +62,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # UI off by default (driver contract); bench.py --decompose sets
-        # SPARK_GRAFT_UI=true to read per-stage task metrics over REST.
+        # UI off by default (driver contract); bench.py --skew and
+        # perfbench/run.py --trace 1 set SPARK_GRAFT_UI=true to read
+        # per-stage task metrics over REST.
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")

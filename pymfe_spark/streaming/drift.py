@@ -1,20 +1,26 @@
 """Streaming drift monitoring — the live front end of
-``operators/drift.py``.
+``operators/drift.py``, built from its stages.
 
 Production shape: the REFERENCE profile (bin edges + smoothed
-fractions) is computed batch-side from the curated reference corpus
-and shipped as literals (config-sized, like IVF centroids); the
-stream only bins arriving events and maintains per-(event-time
+fractions) is computed batch-side from the curated reference corpus by
+the batch stages (midpoint split -> binning rule -> two-window counts
+-> collect, so a degenerate window raises here as it does in the batch
+operators) and shipped as literals (config-sized, like IVF
+centroids). The stream only bins arriving events by the same binning
+rule with the profile's literal edges and maintains per-(event-time
 window, bin) counts — one watermarked windowed aggregation, the only
-stateful stage. PSI per time window is then assembled from the
-emitted counts and the static profile (``psi_from_counts``) by the
-consumer / a trivial batch job — a second aggregation layer inside
-the same streaming query would be a multi-stateful-agg plan, which
-Structured Streaming rejects and which the monitor does not need.
+stateful stage. PSI per time window is then assembled from the emitted
+counts and the static profile by the same smoothed-PSI finisher on
+Python floats (``psi_from_counts``), in the consumer or a trivial batch
+job: a second aggregation layer inside the same streaming query would
+be a multi-stateful-agg plan, which Structured Streaming rejects and
+which the monitor does not need.
 
-The streamed counts are integers, so the stream == batch-twin
-equality (pytest) is exact, and PSI computed from equal counts is
-bit-identical.
+``streaming_drift_bin_counts`` and its batch twin
+``batch_drift_bin_counts`` share one binned window-count body and
+differ only in their source frame. The counts are integers, so the
+stream == batch equality (pytest) is exact, and PSI computed from
+equal counts is bit-identical.
 """
 
 from __future__ import annotations
@@ -22,9 +28,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pymfe_spark.functions.sql_exprs import epoch_us
+from pymfe_spark.functions.moments import PY
 from pymfe_spark.operators.base import turns
-from pymfe_spark.operators.drift import N_BINS
+from pymfe_spark.operators.drift import (
+    N_BINS,
+    _binned,
+    _counts,
+    bin_of,
+    psi_term,
+    smoothed_frac,
+)
 
 TURN_STREAM_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -38,36 +51,38 @@ def reference_bin_profile(
     """Batch-side reference profile of text_len over the FIRST half of
     the corpus time range: bin edges + Laplace-smoothed fractions.
     Returns a plain dict (config-sized) for shipping into the stream
-    as literals."""
-    t = turns(spark, sf_dir).select(
-        F.col("text_len").cast("long").alias("v"),
-        epoch_us(F.col("ts").cast("timestamp")).alias("us"),
+    as literals. One Spark job."""
+    binned, rng = _binned(turns(spark, sf_dir), F.col("text_len"), F.col("ts"), n_bins)
+    rows = sorted(
+        _counts(binned, n_bins).join(F.broadcast(rng)).collect(),
+        key=lambda row: row["key"],
     )
-    span = t.agg(F.min("us").alias("t_min"), F.max("us").alias("t_max"))
-    ref = (
-        t.join(F.broadcast(span))
-        .filter(F.col("us") < F.expr("(t_min + t_max) div 2"))
-        .select("v")
-    )
-    rng = ref.agg(F.min("v").alias("l_min"), F.max("v").alias("l_max"))
-    binned = ref.join(F.broadcast(rng)).select(
-        F.expr(
-            f"(least(greatest(v, l_min), l_max) - l_min) * {n_bins} "
-            "div (l_max - l_min + 1)"
-        ).alias("bin")
-    )
-    counts = {
-        r["bin"]: r["cnt"]
-        for r in binned.groupBy("bin").agg(F.count("*").alias("cnt")).collect()
+    return {
+        "l_min": rows[0]["l_min"],
+        "l_max": rows[0]["l_max"],
+        "n_bins": n_bins,
+        "ref_fracs": [
+            smoothed_frac(row["n_ref_key"], row["n_ref"], row["k"]) for row in rows
+        ],
     }
-    n_ref = sum(counts.values())
-    rng_row = rng.first()  # one job, not one per bound
-    lo, hi = rng_row["l_min"], rng_row["l_max"]
-    fracs = [
-        (counts.get(b, 0) + 0.5) / (n_ref + n_bins / 2.0)
-        for b in range(n_bins)
-    ]
-    return {"l_min": lo, "l_max": hi, "n_bins": n_bins, "ref_fracs": fracs}
+
+
+def _window_bin_counts(src: DataFrame, profile: dict, window: str) -> DataFrame:
+    """``(win_start, win_end, bin, n_cur)``: ``src(ts, v)`` binned by
+    the profile's literal edges, counted per (event-time window, bin)."""
+    lo, hi = int(profile["l_min"]), int(profile["l_max"])
+    binned = src.select(
+        "ts", bin_of(F.col("v"), lo, hi, profile["n_bins"]).alias("bin")
+    )
+    agg = binned.groupBy(F.window("ts", window), "bin").agg(
+        F.count("*").alias("n_cur")
+    )
+    return agg.select(
+        F.col("window.start").alias("win_start"),
+        F.col("window.end").alias("win_end"),
+        "bin",
+        "n_cur",
+    )
 
 
 def streaming_drift_bin_counts(
@@ -85,25 +100,12 @@ def streaming_drift_bin_counts(
     reader = spark.readStream.schema(TURN_STREAM_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    binned = stream.select(
-        F.col("ts"),
-        _bin_expr(
-            F.length("text").cast("long"),
-            profile["l_min"],
-            profile["l_max"],
-            profile["n_bins"],
-        ).alias("bin"),
-    ).withWatermark("ts", watermark)
-    agg = binned.groupBy(F.window("ts", window), "bin").agg(
-        F.count("*").alias("n_cur")
+    src = (
+        reader.parquet(input_dir)
+        .select("ts", F.length("text").cast("long").alias("v"))
+        .withWatermark("ts", watermark)
     )
-    return agg.select(
-        F.col("window.start").alias("win_start"),
-        F.col("window.end").alias("win_end"),
-        "bin",
-        "n_cur",
-    )
+    return _window_bin_counts(src, profile, window)
 
 
 def batch_drift_bin_counts(
@@ -111,46 +113,21 @@ def batch_drift_bin_counts(
 ) -> DataFrame:
     """Batch twin of the streaming aggregation (same binning, same
     event-time windows) for the stream == batch equality test."""
-    t = turns(spark, sf_dir).select(
+    src = turns(spark, sf_dir).select(
         F.col("ts").cast("timestamp").alias("ts"),
-        _bin_expr(
-            F.col("text_len").cast("long"),
-            profile["l_min"],
-            profile["l_max"],
-            profile["n_bins"],
-        ).alias("bin"),
+        F.col("text_len").cast("long").alias("v"),
     )
-    agg = t.groupBy(F.window("ts", window), "bin").agg(
-        F.count("*").alias("n_cur")
-    )
-    return agg.select(
-        F.col("window.start").alias("win_start"),
-        F.col("window.end").alias("win_end"),
-        "bin",
-        "n_cur",
-    )
-
-
-def _bin_expr(v, l_min: int, l_max: int, n_bins: int):
-    """Clamp-then-bin with the SAME integer `div` the batch operator
-    and the reference profile use (operators/drift.py) — true int64
-    division, never a rounded double quotient, so streamed bins are
-    bit-stable against the batch edges for any value magnitude."""
-    lo, hi = F.lit(int(l_min)), F.lit(int(l_max))
-    span = F.lit(int(l_max) - int(l_min) + 1)
-    clamped = F.least(F.greatest(v, lo), hi)
-    return F.call_function("div", (clamped - lo) * F.lit(n_bins), span)
+    return _window_bin_counts(src, profile, window)
 
 
 def psi_from_counts(counts, ref_fracs, n_bins: int = N_BINS) -> float:
     """Assemble the PSI of one time window from its emitted bin counts
     (dict bin -> n_cur) and the static reference fractions."""
-    import math
-
     n_cur = sum(counts.values())
-    psi = 0.0
-    for b in range(n_bins):
-        p_cur = (counts.get(b, 0) + 0.5) / (n_cur + n_bins / 2.0)
-        p_ref = ref_fracs[b]
-        psi += (p_cur - p_ref) * math.log(p_cur / p_ref)
-    return psi
+    return sum(
+        (
+            psi_term(ref_fracs[b], smoothed_frac(counts.get(b, 0), n_cur, n_bins), PY)
+            for b in range(n_bins)
+        ),
+        0.0,
+    )

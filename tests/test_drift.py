@@ -88,6 +88,29 @@ def test_categorical_psi_detects_planted_mix_shift(spark):
     assert drifted["psi_term"].sum() > 0.25
 
 
+def test_null_category_is_one_more_key(spark):
+    """A null category is counted like any other: its rows keep their
+    counts and it is one of the k spine keys, so the smoothed
+    fractions of each half still sum to 1 and chi2's dof counts it."""
+    from pymfe_spark.operators.drift import chi2_homogeneity, psi_categories
+
+    df = spark.range(100).select(
+        (
+            F.to_timestamp(F.lit("2025-01-01 00:00:00"))
+            + F.make_interval(secs=F.col("id"))
+        ).alias("ts"),
+        F.when(F.col("id") % 5 != 0, F.concat(F.lit("c"), F.col("id") % 3))
+        .alias("cat"),
+    )
+    psi = psi_categories(df, F.col("cat"), F.col("ts")).toPandas()
+    null = psi[psi["cat"].isna()].iloc[0]
+    assert (null["n_ref"], null["n_cur"]) == (10, 10)
+    assert abs(psi["ref_frac"].sum() - 1.0) < 1e-5
+    assert abs(psi["cur_frac"].sum() - 1.0) < 1e-5
+    chi2 = chi2_homogeneity(df, F.col("cat"), F.col("ts")).toPandas()
+    assert (chi2["k"].iloc[0], chi2["dof"].iloc[0]) == (4, 3)
+
+
 def test_psi_terms_are_nonnegative(spark):
     """Each PSI term (p_cur - p_ref)·ln(p_cur/p_ref) is nonnegative by
     construction (the factors share sign) — a planted invariant that
@@ -183,17 +206,19 @@ def test_chi2_matches_numpy_and_detects_shift(spark):
             assert got["chi2"].iloc[0] > 1000  # mix flip alarms
 
 
-def test_degenerate_window_raises_not_nan(spark):
+def test_degenerate_window_raises_not_nan(spark, monkeypatch):
     """ADVICE r2: when every row shares one timestamp the midpoint
-    split leaves the reference half empty — the operators must FAIL
-    loudly (assert_true), never emit NULL/NaN a monitor would read as
-    'no drift'."""
+    split leaves the reference half empty — the operators and the
+    streaming reference profile must FAIL loudly (assert_true), never
+    emit NULL/NaN (or None edges) a monitor would read as 'no drift'."""
     import pytest
+
     from pymfe_spark.operators.drift import (
         chi2_homogeneity,
         ks_statistic,
         psi_categories,
     )
+    from pymfe_spark.streaming import drift as streaming_drift
 
     same_ts = spark.range(100).select(
         F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("ts"),
@@ -208,3 +233,30 @@ def test_degenerate_window_raises_not_nan(spark):
     ]:
         with pytest.raises(Exception, match="degenerate drift window"):
             op(same_ts, F.col(col), F.col("ts")).collect()
+    monkeypatch.setattr(
+        streaming_drift,
+        "turns",
+        lambda spark, sf_dir: same_ts.withColumnRenamed("v", "text_len"),
+    )
+    with pytest.raises(Exception, match="degenerate drift window"):
+        streaming_drift.reference_bin_profile(spark, SF_SMOKE)
+
+
+def test_streaming_profile_matches_batch_psi(spark):
+    """The streaming reference profile and feature_drift_psi are the
+    same pipeline: the profile's fractions are the batch ref_frac per
+    bin (before rounding), and its edges are the range of text_len over
+    the reference half of the time range."""
+    from pymfe_spark.operators.base import turns
+    from pymfe_spark.streaming.drift import reference_bin_profile
+
+    profile = reference_bin_profile(spark, SF_SMOKE)
+    psi = feature_drift_psi(spark, SF_SMOKE).toPandas().sort_values("bin")
+    assert list(psi["bin"]) == list(range(10))
+    assert [round(f, 6) for f in profile["ref_fracs"]] == list(psi["ref_frac"])
+
+    t = turns(spark, SF_SMOKE).select("text_len", "ts").toPandas()
+    us = t["ts"].astype("datetime64[us]").astype("int64")
+    ref = t.loc[us < (us.min() + us.max()) // 2, "text_len"]
+    assert (profile["l_min"], profile["l_max"]) == (ref.min(), ref.max())
+    assert profile["l_min"] < profile["l_max"]

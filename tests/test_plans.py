@@ -63,7 +63,8 @@ BNLJ_ALLOWED = {
     # single-row broadcasts of time-range span and count totals onto
     # the distinct-value CDF table (cardinality-bounded, not data-sized)
     "feature_drift_ks",
-    # span/total 1-row broadcasts + the 2-row window-flag spine
+    # single-row broadcasts of the time-range span and count totals
+    # onto the per-category count table
     "role_drift_chi2",
 }
 
