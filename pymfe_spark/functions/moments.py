@@ -78,8 +78,9 @@ def _infix(op: str) -> tuple[Callable, Callable]:
 
 
 class Sql:
-    """DuckDB SQL text that composes with ``+ - * /``, ``>=``, ``>`` and
-    ``&`` like a Spark Column, keeping the Python expression's tree."""
+    """DuckDB SQL text that composes with ``+ - * /``, unary ``-``,
+    ``>=``, ``>``, ``<`` and ``&`` like a Spark Column, keeping the
+    Python expression's tree."""
 
     __slots__ = ("text",)
 
@@ -96,6 +97,10 @@ class Sql:
     __and__, __rand__ = _infix("AND")
     __ge__ = _infix(">=")[0]
     __gt__ = _infix(">")[0]
+    __lt__ = _infix("<")[0]
+
+    def __neg__(self) -> Sql:
+        return Sql(f"(-{self})")
 
 
 def _sql_fn(name: str) -> Callable[..., Sql]:
@@ -109,7 +114,12 @@ class Engine(NamedTuple):
     pow: Callable | None = None
     abs: Callable | None = None
     col: Callable | None = None  # column reference by name
+    lit: Callable | None = None  # a literal as the left operand of + or *
     ln: Callable | None = None
+    log2: Callable | None = None
+    sum: Callable | None = None  # aggregates over a group's rows
+    count: Callable | None = None
+    max: Callable | None = None
     exact_int: Callable | None = None  # to decimal(38,0) / HUGEINT: exact products
     to_double: Callable | None = None
 
@@ -118,6 +128,7 @@ PY = Engine(
     sqrt=math.sqrt,
     when=lambda ok, value: value() if ok else math.nan,
     ln=math.log,
+    log2=math.log2,
 )
 COL = Engine(
     sqrt=F.sqrt,
@@ -126,7 +137,12 @@ COL = Engine(
     pow=F.pow,
     abs=F.abs,
     col=F.col,
+    lit=F.lit,
     ln=F.log,
+    log2=F.log2,
+    sum=F.sum,
+    count=F.count,
+    max=F.max,
     exact_int=lambda x: x.cast("decimal(38,0)"),
     to_double=lambda x: x.cast("double"),
 )
@@ -137,7 +153,12 @@ SQL = Engine(
     pow=_sql_fn("pow"),
     abs=_sql_fn("abs"),
     col=Sql,
+    lit=Sql,
     ln=_sql_fn("ln"),
+    log2=_sql_fn("log2"),
+    sum=_sql_fn("sum"),
+    count=_sql_fn("count"),
+    max=_sql_fn("max"),
     exact_int=lambda x: Sql(f"CAST({x} AS HUGEINT)"),
     to_double=lambda x: Sql(f"CAST({x} AS DOUBLE)"),
 )

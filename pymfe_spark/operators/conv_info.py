@@ -1,6 +1,32 @@
 """Per-conversation info-theory / class-balance / clustering-index /
 itemset / summary-layer measures — SQL tier (continued from conv_stats).
 
+Every categorical query here, ``mf_general`` (conv_stats) and the
+kernel cross-check oracles (plans/extractor_queries.py) are
+configurations of four class-count stages, each written once in Spark
+and once as DuckDB SQL, as pymfe computes ``class_freqs`` once for
+every measure:
+
+==================  =======================  ==========================
+stage               Spark                    oracle SQL
+==================  =======================  ==========================
+tool0 key           ``tool0``                ``TOOL0_SQL``
+class-count table   ``class_counts``,        ``class_counts_sql``,
+                    ``marginal``             ``marginal_sql``
+relative frequency  ``freq``                 ``freq_sql``
+finishers           ``entropy``,             the same code over ``SQL``
+                    ``class_balance``,       (``PY`` for the streaming
+                    ``joint_entropy``,       state)
+                    ``running_entropy``
+                    over ``COL``
+==================  =======================  ==========================
+
+Role counts feed mf_general, mf_class_balance, mf_itemset_one and the
+cross / dist / summary / one-hot oracles; bin counts mf_info_attr_ent;
+(role, tool0) counts mf_info_joint, mf_itemset_two and the itemset
+oracle (marginals folded from them, one scan); running counts
+expanding_mfe_sql and the streaming state.
+
 Parity targets:
 - entropies: /root/reference/pymfe/info_theory.py (attr_ent 277-313,
   class_ent 344-389, joint_ent 457-508 with eps=1e-8 dense-crosstab
@@ -15,10 +41,14 @@ Parity targets:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+from typing import Any
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pymfe_spark.functions.moments import COL, SQL, Engine
 from pymfe_spark.functions.sql_exprs import r
 from pymfe_spark.operators.base import TURNS_SQL, turns
 from pymfe_spark.plans.catalog import register
@@ -30,35 +60,110 @@ def _conv_w():
     return Window.partitionBy("conv_id")
 
 
-def _entropy_from_counts(counts: DataFrame, key: str = "conv_id") -> DataFrame:
-    """-sum(p*log2 p) over a (key, c) count table -> (key, ent)."""
-    p = F.col("c") / F.sum("c").over(Window.partitionBy(key))
-    return (
-        counts.withColumn("p", p)
-        .groupBy(key)
-        .agg((-F.sum(F.col("p") * F.log2("p"))).alias("ent"))
-    )
+# ------------------------------------------------------ stage 1: tool0 key
+
+# a null tool is the 'NONE' class, as in the kernel's C view
+TOOL0_SQL = "coalesce(tool, 'NONE')"
+
+
+def tool0() -> Column:
+    return F.coalesce("tool", F.lit("NONE")).alias("tool0")
+
+
+# ---------------------------------------------- stage 2: class-count table
+
+
+def class_counts(df: DataFrame, *keys: str | Column) -> DataFrame:
+    """``(conv_id, *keys, c)``: rows per conversation and class."""
+    return df.groupBy("conv_id", *keys).agg(F.count("*").alias("c"))
+
+
+def marginal(joint: DataFrame, *keys: str) -> DataFrame:
+    """``(conv_id, *keys, c)`` folded from a finer count table."""
+    return joint.groupBy("conv_id", *keys).agg(F.sum("c").alias("c"))
+
+
+def class_counts_sql(source: str, *keys: str, c: str = "count(*)") -> str:
+    """SQL twin of :func:`class_counts`; keys may be aliased expressions."""
+    cols = ", ".join(("conv_id", *keys, f"{c} AS c"))
+    return f"SELECT {cols} FROM {source} GROUP BY ALL"
+
+
+def marginal_sql(joint: str, *keys: str) -> str:
+    return class_counts_sql(joint, *keys, c="sum(c)")
+
+
+# ---------------------------------------------- stage 3: relative frequency
+
+
+def freq(counts: DataFrame) -> DataFrame:
+    """Adds ``n = sum(c) OVER (conv_id)`` and ``p = c / n`` (a caller
+    reading only ``p`` leaves one window once ``n`` is pruned)."""
+    n = F.sum("c").over(_conv_w())
+    return counts.withColumn("n", n).withColumn("p", F.col("c") / n)
+
+
+def freq_sql(counts: str) -> str:
+    n = "sum(c) OVER (PARTITION BY conv_id)"
+    return f"SELECT *, {n} AS n, c / {n} AS p FROM ({counts})"
+
+
+# --------------------------------------------------------- stage 4: finishers
+
+
+def entropy(e: Engine, log: Callable | None = None) -> Any:
+    """``-sum(p * log(p))`` over a conversation's frequency rows, log2
+    by default; the unary minus keeps a one-class entropy at -0.0."""
+    p = e.col("p")
+    return -e.sum(p * (log or e.log2)(p))
+
+
+def class_balance(e: Engine) -> dict[str, Any]:
+    """class_ent, nre (ln), c1, c2 (NULL for one class) and sc, the
+    number of classes with fewer than 15 rows."""
+    c, n, k = e.col("c"), e.col("n"), e.count("*")
+    ent = entropy(e)
+    return {
+        "class_ent": ent,
+        "nre": entropy(e, e.ln),
+        "c1": e.when(k > 1, lambda: ent / e.log2(e.to_double(k))),
+        "c2": 1.0 - 1.0 / (((k - 1.0) / k) * e.sum(c / e.nonzero(n - c))),
+        "sc": e.count(e.when(c < 15, lambda: 1)),
+    }
+
+
+_EPS = 1e-8
+
+
+def joint_entropy(e: Engine) -> Any:
+    """Joint entropy over joint counts ``c`` with the conversation's
+    ``n`` and dense crosstab size ``cells``, every cell (zero cells
+    included, never materialized) eps-smoothed as in pymfe:
+    -[sum_nonzero q log2 q + (cells - nonzero) q0 log2 q0] with
+    q = (c/n + eps)/Z, q0 = eps/Z, Z = 1 + cells*eps."""
+    c, n, cells = e.col("c"), e.col("n"), e.col("cells")
+    q = (c / n + _EPS) / (e.lit(1.0) + cells * _EPS)
+    q0 = _EPS / (e.lit(1.0) + e.max(cells) * _EPS)
+    return -(e.sum(q * e.log2(q)) + (e.max(cells) - e.count("*")) * q0 * e.log2(q0))
+
+
+def running_entropy(n: Any, sclc: Any, e: Engine) -> Any:
+    """Class entropy of a prefix of ``n`` rows from ``sclc``, the
+    sorted-order sum of ``c * log2(c)`` over its class counts."""
+    return e.log2(n) - sclc / n
 
 
 # ---------------------------------------------------------------------
 # class entropy + class balance + size-based clustering indexes
 # ---------------------------------------------------------------------
 
+_CB = class_balance(SQL)
 _CLASSBAL_ORACLE = with_transcripts_cte(
-    """
+    f"""
 SELECT conv_id,
-       round(-sum(p * log2(p)), 6)                           AS class_ent,
-       round(-sum(p * ln(p)), 6)                             AS nre,
-       round(CASE WHEN count(*) > 1
-             THEN -sum(p * log2(p)) / log2(count(*)) END, 6) AS c1,
-       round(1.0 - 1.0 / (((count(*) - 1.0) / count(*))
-             * sum(c / nullif(n - c, 0))), 6)                AS c2,
-       cast(sum(CASE WHEN c < 15 THEN 1 ELSE 0 END) AS bigint) AS sc
-FROM (SELECT conv_id, c,
-             sum(c) OVER (PARTITION BY conv_id) AS n,
-             c / sum(c) OVER (PARTITION BY conv_id) AS p
-      FROM (SELECT conv_id, role, count(*) AS c
-            FROM transcripts GROUP BY conv_id, role))
+       {"".join(f"round({_CB[k]}, 6) AS {k}, " for k in ("class_ent", "nre", "c1", "c2"))}
+       cast({_CB["sc"]} AS bigint) AS sc
+FROM ({freq_sql(class_counts_sql("transcripts", "role"))})
 GROUP BY conv_id
 """
 )
@@ -71,31 +176,17 @@ GROUP BY conv_id
     gate_oracle=False,  # r5 rotation out: recorded 4/4 rounds; pytest enforces
 )
 def mf_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """class_ent (info_theory.py:344-389), nre (clustering.py:878-912,
-    natural log), c1/c2 (complexity.py:1966-2045), sc — #classes with
-    <15 instances (clustering.py:915-962), all from one role-count
-    aggregate (single shuffle, reused four ways — the engine analogue of
-    the reference's precompute cache sharing `class_freqs`,
-    /root/reference/pymfe/general.py:52-85)."""
-    counts = (
-        transcripts(spark, sf_dir)
-        .groupBy("conv_id", "role")
-        .agg(F.count("*").alias("c"))
-    )
-    n = F.sum("c").over(_conv_w())
-    enriched = counts.withColumn("n", n).withColumn("p", F.col("c") / n)
-    k = F.count("*")
-    ir = ((k - F.lit(1.0)) / k) * F.sum(
-        F.col("c") / F.nullif(F.col("n") - F.col("c"), F.lit(0))
-    )
-    return enriched.groupBy("conv_id").agg(
-        r(-F.sum(F.col("p") * F.log2("p"))).alias("class_ent"),
-        r(-F.sum(F.col("p") * F.log("p"))).alias("nre"),
-        r(F.when(k > 1, -F.sum(F.col("p") * F.log2("p")) / F.log2(k.cast("double")))).alias(
-            "c1"
-        ),
-        r(F.lit(1.0) - F.lit(1.0) / ir).alias("c2"),
-        F.sum(F.when(F.col("c") < 15, 1).otherwise(0)).cast("long").alias("sc"),
+    """class_ent (info_theory.py:344-389), nre (clustering.py:878-912),
+    c1/c2 (complexity.py:1966-2045) and sc (clustering.py:915-962),
+    all finished from one role-count table (one shuffle)."""
+    cb = class_balance(COL)
+    return (
+        freq(class_counts(transcripts(spark, sf_dir), "role"))
+        .groupBy("conv_id")
+        .agg(
+            *(r(cb[k]).alias(k) for k in ("class_ent", "nre", "c1", "c2")),
+            cb["sc"].alias("sc"),
+        )
     )
 
 
@@ -106,22 +197,21 @@ def mf_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 #  percent_rank is the distributed equivalent of quantile+digitize)
 # ---------------------------------------------------------------------
 
+_ATTRENT_BINS = """(SELECT conv_id,
+        least(cast(floor(percent_rank() OVER
+              (PARTITION BY conv_id ORDER BY text_len)
+              * greatest(cast(floor(cbrt(n) + 1e-9) AS int), 1)) AS int),
+              greatest(cast(floor(cbrt(n) + 1e-9) AS int), 1) - 1) AS bin
+ FROM (SELECT conv_id, text_len,
+              count(*) OVER (PARTITION BY conv_id) AS n
+       FROM turns))"""
+
 _ATTRENT_ORACLE = with_transcripts_cte(
-    """
+    f"""
 SELECT conv_id,
-       round(-sum(p * log2(p)), 6)      AS attr_ent,
+       round({entropy(SQL)}, 6)      AS attr_ent,
        cast(count(*) AS bigint)         AS nr_bins_used
-FROM (SELECT conv_id, bin,
-             count(*) / sum(count(*)) OVER (PARTITION BY conv_id) AS p
-      FROM (SELECT conv_id,
-                   least(cast(floor(percent_rank() OVER
-                         (PARTITION BY conv_id ORDER BY text_len)
-                         * greatest(cast(floor(cbrt(n) + 1e-9) AS int), 1)) AS int),
-                         greatest(cast(floor(cbrt(n) + 1e-9) AS int), 1) - 1) AS bin
-            FROM (SELECT conv_id, text_len,
-                         count(*) OVER (PARTITION BY conv_id) AS n
-                  FROM turns))
-      GROUP BY conv_id, bin)
+FROM ({freq_sql(class_counts_sql(_ATTRENT_BINS, "bin"))})
 GROUP BY conv_id
 """,
     extra_ctes=TURNS_SQL,
@@ -145,11 +235,10 @@ def mf_info_attr_ent(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin",
         F.least(F.floor(pr * kbins).cast("int"), (kbins - 1).cast("int")),
     )
-    counts = binned.groupBy("conv_id", "bin").agg(F.count("*").alias("c"))
-    ent = _entropy_from_counts(counts)
-    nbins = counts.groupBy("conv_id").agg(F.count("*").alias("nr_bins_used"))
-    return ent.join(nbins, "conv_id").select(
-        "conv_id", r("ent").alias("attr_ent"), "nr_bins_used"
+    return (
+        freq(class_counts(binned, "bin"))
+        .groupBy("conv_id")
+        .agg(r(entropy(COL)).alias("attr_ent"), F.count("*").alias("nr_bins_used"))
     )
 
 
@@ -157,8 +246,6 @@ def mf_info_attr_ent(spark: SparkSession, sf_dir: str) -> DataFrame:
 # joint entropy with the reference's eps-smoothed dense crosstab +
 # derived mut_inf / eq_num_attr / ns_ratio
 # ---------------------------------------------------------------------
-
-_EPS = 1e-8
 
 _JOINT_ORACLE = with_transcripts_cte(
     f"""
@@ -173,74 +260,41 @@ FROM e JOIN hr ON e.conv_id = hr.conv_id
        JOIN ht ON e.conv_id = ht.conv_id
 """,
     extra_ctes=f"""
- t2 AS (SELECT conv_id, role, coalesce(tool, 'NONE') AS tool0 FROM transcripts),
- jc AS (SELECT conv_id, role, tool0, count(*) AS c FROM t2 GROUP BY conv_id, role, tool0),
+ jc AS ({class_counts_sql("transcripts", "role", f"{TOOL0_SQL} AS tool0")}),
  dims AS (SELECT conv_id,
                  count(DISTINCT role)  * count(DISTINCT tool0) AS cells,
-                 count(*) AS n
-          FROM t2 GROUP BY conv_id),
- e AS (SELECT j.conv_id,
-              -(sum((j.c / d.n + {_EPS}) / (1.0 + d.cells * {_EPS})
-                    * log2((j.c / d.n + {_EPS}) / (1.0 + d.cells * {_EPS})))
-                + (max(d.cells) - count(*))
-                  * ({_EPS} / (1.0 + max(d.cells) * {_EPS}))
-                  * log2({_EPS} / (1.0 + max(d.cells) * {_EPS}))) AS joint_ent
-       FROM jc j JOIN dims d ON j.conv_id = d.conv_id
-       GROUP BY j.conv_id),
- hr AS (SELECT conv_id, -sum(p * log2(p)) AS ent
-        FROM (SELECT conv_id, count(*) / sum(count(*)) OVER (PARTITION BY conv_id) AS p
-              FROM t2 GROUP BY conv_id, role)
-        GROUP BY conv_id),
- ht AS (SELECT conv_id, -sum(p * log2(p)) AS ent
-        FROM (SELECT conv_id, count(*) / sum(count(*)) OVER (PARTITION BY conv_id) AS p
-              FROM t2 GROUP BY conv_id, tool0)
-        GROUP BY conv_id)""",
+                 sum(c) AS n
+          FROM jc GROUP BY conv_id),
+ e AS (SELECT conv_id, {joint_entropy(SQL)} AS joint_ent
+       FROM jc JOIN dims USING (conv_id) GROUP BY conv_id),
+ hr AS (SELECT conv_id, {entropy(SQL)} AS ent
+        FROM ({freq_sql(marginal_sql("jc", "role"))}) GROUP BY conv_id),
+ ht AS (SELECT conv_id, {entropy(SQL)} AS ent
+        FROM ({freq_sql(marginal_sql("jc", "tool0"))}) GROUP BY conv_id)""",
 )
 
 
 @register("mf_info_joint", oracle=_JOINT_ORACLE, group=GROUP)
 def mf_info_joint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """joint_ent(role, tool) with the reference's eps=1e-8 smoothing
-    applied to EVERY cell of the dense crosstab (zero cells included,
-    info_theory.py:183-195) — realized without materializing zero cells:
-    H = -[ sum_nonzero q*log2 q + (cells - nonzero) * q0*log2 q0 ],
-    q = (p+eps)/Z, Z = 1 + cells*eps. Plus mut_inf (511-588),
-    eq_num_attr (392-454, d=1 attr), ns_ratio (591-650)."""
-    t2 = transcripts(spark, sf_dir).select(
-        "conv_id", "role", F.coalesce("tool", F.lit("NONE")).alias("tool0")
-    )
-    # ONE scan/shuffle of the transcript derivation: every marginal
-    # (role counts, tool counts, dims) folds from the joint counts, so
-    # all four downstream aggregations sit on the identical jc exchange
-    # and the physical plan reuses it (ReusedExchange) instead of
-    # re-running the transcript window per branch.
-    jc = t2.groupBy("conv_id", "role", "tool0").agg(F.count("*").alias("c"))
+    of every dense-crosstab cell (info_theory.py:183-195; see
+    joint_entropy), plus mut_inf (511-588), eq_num_attr (392-454,
+    d=1 attr), ns_ratio (591-650)."""
+    t2 = transcripts(spark, sf_dir).select("conv_id", "role", tool0())
+    # every marginal (role, tool0, dims) folds from the joint counts:
+    # one scan, its exchange reused by each branch
+    jc = class_counts(t2, "role", "tool0")
     dims = jc.groupBy("conv_id").agg(
         (F.count_distinct("role") * F.count_distinct("tool0")).alias("cells"),
         F.sum("c").alias("n"),
     )
-    eps = F.lit(_EPS)
-    z = F.lit(1.0) + F.col("cells") * eps
-    q = (F.col("c") / F.col("n") + eps) / z
-    q0 = eps / (F.lit(1.0) + F.max("cells") * eps)
-    e = (
-        jc.join(dims, "conv_id")
-        .groupBy("conv_id")
-        .agg(
-            (
-                -(
-                    F.sum(q * F.log2(q))
-                    + (F.max("cells") - F.count("*")) * q0 * F.log2(q0)
-                )
-            ).alias("joint_ent")
-        )
+    e = jc.join(dims, "conv_id").groupBy("conv_id").agg(
+        joint_entropy(COL).alias("joint_ent")
     )
-    hr = _entropy_from_counts(
-        jc.groupBy("conv_id", "role").agg(F.sum("c").alias("c"))
-    ).withColumnRenamed("ent", "hr")
-    ht = _entropy_from_counts(
-        jc.groupBy("conv_id", "tool0").agg(F.sum("c").alias("c"))
-    ).withColumnRenamed("ent", "ht")
+    hr, ht = (
+        freq(marginal(jc, key)).groupBy("conv_id").agg(entropy(COL).alias(name))
+        for key, name in (("role", "hr"), ("tool0", "ht"))
+    )
     mi = F.col("hr") + F.col("ht") - F.col("joint_ent")
     return (
         e.join(hr, "conv_id")
@@ -353,11 +407,9 @@ def mf_clustering_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------
 
 _ONEITEM_ORACLE = with_transcripts_cte(
-    """
-SELECT conv_id, item, round(support, 6) AS support
-FROM (SELECT conv_id, role AS item,
-             count(*) * 1.0 / sum(count(*)) OVER (PARTITION BY conv_id) AS support
-      FROM transcripts GROUP BY conv_id, role)
+    f"""
+SELECT conv_id, item, round(p, 6) AS support
+FROM ({freq_sql(class_counts_sql("transcripts", "role AS item"))})
 """
 )
 
@@ -370,37 +422,29 @@ FROM (SELECT conv_id, role AS item,
 def mf_itemset_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     """one_itemset: per-value relative frequency of the binarized class
     column (itemset.py:151-190; binarization 84-96) — long format."""
-    counts = (
-        transcripts(spark, sf_dir)
-        .groupBy("conv_id", F.col("role").alias("item"))
-        .agg(F.count("*").alias("c"))
-    )
-    return counts.select(
-        "conv_id",
-        "item",
-        r(F.col("c") / F.sum("c").over(_conv_w())).alias("support"),
-    )
+    counts = class_counts(transcripts(spark, sf_dir), F.col("role").alias("item"))
+    return freq(counts).select("conv_id", "item", r("p").alias("support"))
 
+
+# XOR support (|A| + |B| - 2|A and B|) / n of every (role, tool0) pair
+# from the joint counts; mf_itemset_two's and the itemset check's oracle
+XOR_SUPPORT_CTES = f"""
+ jc AS ({class_counts_sql("transcripts", "role", f"{TOOL0_SQL} AS tool0")}),
+ ca AS ({marginal_sql("jc", "role")}),
+ cb AS ({marginal_sql("jc", "tool0")}),
+ nn AS ({marginal_sql("jc")}),
+ xor AS (SELECT ca.conv_id, ca.role AS item_a, cb.tool0 AS item_b,
+                (ca.c + cb.c - 2 * coalesce(jc.c, 0)) * 1.0 / nn.c AS s
+         FROM ca JOIN cb ON ca.conv_id = cb.conv_id
+              JOIN nn ON ca.conv_id = nn.conv_id
+         LEFT JOIN jc ON ca.conv_id = jc.conv_id AND ca.role = jc.role
+                     AND cb.tool0 = jc.tool0)"""
 
 _TWOITEM_ORACLE = with_transcripts_cte(
     """
-SELECT p.conv_id, p.item_a, p.item_b,
-       round((ca.c + cb.c - 2 * coalesce(cab.c, 0)) * 1.0 / p.n, 6) AS support_xor
-FROM pairs p
-JOIN ca  ON p.conv_id = ca.conv_id AND p.item_a = ca.role
-JOIN cb  ON p.conv_id = cb.conv_id AND p.item_b = cb.tool0
-LEFT JOIN cab ON p.conv_id = cab.conv_id AND p.item_a = cab.role
-             AND p.item_b = cab.tool0
+SELECT conv_id, item_a, item_b, round(s, 6) AS support_xor FROM xor
 """,
-    extra_ctes="""
- t2 AS (SELECT conv_id, role, coalesce(tool, 'NONE') AS tool0 FROM transcripts),
- ca AS (SELECT conv_id, role, count(*) AS c FROM t2 GROUP BY conv_id, role),
- cb AS (SELECT conv_id, tool0, count(*) AS c FROM t2 GROUP BY conv_id, tool0),
- cab AS (SELECT conv_id, role, tool0, count(*) AS c FROM t2 GROUP BY conv_id, role, tool0),
- nn AS (SELECT conv_id, count(*) AS n FROM t2 GROUP BY conv_id),
- pairs AS (SELECT ca.conv_id, ca.role AS item_a, cb.tool0 AS item_b, nn.n
-           FROM ca JOIN cb ON ca.conv_id = cb.conv_id
-                JOIN nn ON ca.conv_id = nn.conv_id)""",
+    extra_ctes=XOR_SUPPORT_CTES,
 )
 
 
@@ -413,25 +457,25 @@ def mf_itemset_two(spark: SparkSession, sf_dir: str) -> DataFrame:
     """two_itemset: XOR support |A xor B| / n for every (role value,
     tool value) pair (itemset.py:99-148) — computed from marginal and
     joint counts, support_xor = (|A| + |B| - 2|A and B|)/n, avoiding any
-    row-level pair materialization."""
-    t2 = transcripts(spark, sf_dir).select(
-        "conv_id", "role", F.coalesce("tool", F.lit("NONE")).alias("tool0")
+    row-level pair materialization. One scan: the marginals fold from
+    the joint counts."""
+    t2 = transcripts(spark, sf_dir).select("conv_id", "role", tool0())
+    # marginals fold from the joint counts as windows and pairs come from
+    # a self-join of its rows (<= 16 x 16 a conversation), on one conv_id
+    # shuffle; a pair's joint count is role a's row for tool b, if any
+    w = (
+        freq(class_counts(t2, "role", "tool0"))
+        .withColumn("ca", F.sum("c").over(Window.partitionBy("conv_id", "role")))
+        .withColumn("cb", F.sum("c").over(Window.partitionBy("conv_id", "tool0")))
     )
-    ca = t2.groupBy("conv_id", "role").agg(F.count("*").alias("ca"))
-    cb = t2.groupBy("conv_id", "tool0").agg(F.count("*").alias("cb"))
-    cab = t2.groupBy("conv_id", "role", "tool0").agg(F.count("*").alias("cab"))
-    nn = t2.groupBy("conv_id").agg(F.count("*").alias("n"))
-    pairs = ca.join(cb, "conv_id").join(nn, "conv_id")
-    out = pairs.join(cab, ["conv_id", "role", "tool0"], "left").select(
-        "conv_id",
-        F.col("role").alias("item_a"),
-        F.col("tool0").alias("item_b"),
-        r(
-            (F.col("ca") + F.col("cb") - 2 * F.coalesce(F.col("cab"), F.lit(0)))
-            / F.col("n")
-        ).alias("support_xor"),
+    a, b = w.alias("a"), w.alias("b")
+    cab = F.max(F.when(F.col("a.tool0") == F.col("b.tool0"), F.col("a.c")))
+    xor = F.max("a.ca") + F.max("b.cb") - 2 * F.coalesce(cab, F.lit(0))
+    return (
+        a.join(b, "conv_id")
+        .groupBy("conv_id", F.col("a.role").alias("item_a"), F.col("b.tool0").alias("item_b"))
+        .agg(r(xor / F.max("a.n")).alias("support_xor"))
     )
-    return out
 
 
 # ---------------------------------------------------------------------

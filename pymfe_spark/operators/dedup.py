@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pymfe_spark.functions.sql_exprs import r
+from pymfe_spark.operators.textops import TOKS_CTE
 from pymfe_spark.operators.textops import _P, _docs, _tokens, poly_hash, poly_hash_sql
 from pymfe_spark.plans.catalog import register
 
@@ -61,11 +62,6 @@ MH_B = [int(b) for b in _RNG.randint(0, _P, MINHASH_K)]
 # minhashes into one band key.
 GRAM_W = 4  # shingle width (tokens per word-gram); independent of BND_R
 GRAM_C = [pow(31, 8 * j, _P) for j in range(GRAM_W)]
-
-_TOKS_CTE = """toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents
-)"""
 
 
 # --- stage: word shingles ------------------------------------------
@@ -93,7 +89,7 @@ def shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return toks.select("doc_id", F.explode(shingles).alias("s"))
 
 
-_SHINGLE_CTE = f"""{_TOKS_CTE}, sh AS (
+_SHINGLE_CTE = f"""{TOKS_CTE}, sh AS (
   SELECT DISTINCT doc_id,
          w[i.i] || '_' || w[i.i+1] || '_' || w[i.i+2] || '_' || w[i.i+3] AS s
   FROM toks, unnest(range(1, greatest(len(w) - 2, 1))) AS i(i)
@@ -160,7 +156,7 @@ def _gram_cte() -> str:
     (``hashed(doc_id, h)``). Used verbatim by every MinHash oracle so
     the gram semantics cannot drift between variants."""
     gram = _fold_sql([f"hw[i.i + {j}]" for j in range(GRAM_W)])
-    return f"""{_TOKS_CTE}, th AS (
+    return f"""{TOKS_CTE}, th AS (
   SELECT doc_id, list_transform(w, t -> {poly_hash_sql("t")}) AS hw
   FROM toks
 ), hashed AS (
@@ -750,7 +746,7 @@ def _simhash_cte() -> str:
         f"cast((simhash >> {off}) & {2**width - 1} AS int) AS band{k}"
         for k, (off, width) in enumerate(_SIMHASH_BAND_BITS)
     )
-    return f"""{_TOKS_CTE}, tok AS (
+    return f"""{TOKS_CTE}, tok AS (
   SELECT DISTINCT doc_id, t FROM (SELECT doc_id, unnest(w) AS t FROM toks)
 ), hashed AS (
   SELECT doc_id, {poly_hash_sql("t")} AS h FROM tok

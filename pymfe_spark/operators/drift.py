@@ -7,7 +7,8 @@ and once as DuckDB oracle SQL:
 ==================  ===================  =============================
 stage               Spark                oracle SQL
 ==================  ===================  =============================
-midpoint split      ``_split``           ``_split_cte``
+midpoint split      ``_split``,          ``_split_cte``,
+                    ``_values``          ``vals_win``
 binning rule        ``bin_of``           ``_BINNED_CTE``
 two-window counts   ``_counts``          ``_counts_cte``
 smoothed PSI        ``smoothed_frac``,   the same code over ``SQL``
@@ -44,6 +45,9 @@ arithmetic that both engines share:
   values are clamped into that range BEFORE binning so the integer
   division never sees a negative numerator (Spark ``div`` truncates
   toward zero, DuckDB ``//`` floors; they agree only on non-negatives);
+- a null numeric value is dropped after the split (its ``ts`` still
+  places the midpoint): it is neither a bin nor a point of the CDF,
+  while a null category is one more key of the count table;
 - Laplace-smoothed fractions (count plus one half, over n plus k
   halves, for k spine keys) keep every bin nonzero (empty-bin PSI is otherwise
   infinite), one IEEE division of an exact rational.
@@ -94,6 +98,13 @@ def _split(df: DataFrame, key: Column, ts: Column) -> DataFrame:
     )
 
 
+def _values(df: DataFrame, value: Column, ts: Column) -> DataFrame:
+    """:func:`_split` of a numeric ``value`` as a long, without the rows
+    whose value is null: every row's ``ts`` still places the midpoint,
+    but a missing value is neither a bin nor a point of the CDF."""
+    return _split(df, value.cast("long"), ts).where(F.col("key").isNotNull())
+
+
 def _split_cte(key_sql: str, source: str) -> str:
     """``win(key, is_ref)``: SQL twin of :func:`_split`."""
     return f"""vals AS (
@@ -121,8 +132,8 @@ def _binned(
     df: DataFrame, value: Column, ts: Column, n_bins: int = N_BINS
 ) -> tuple[DataFrame, DataFrame]:
     """``(key = bin, is_ref)`` binned over the reference half's range,
-    and that 1-row range ``(l_min, l_max)``."""
-    w = _split(df, value.cast("long"), ts)
+    and that 1-row range ``(l_min, l_max)``; null values are dropped."""
+    w = _values(df, value, ts)
     rng = w.filter("is_ref").agg(
         F.min("key").alias("l_min"), F.max("key").alias("l_max")
     )
@@ -133,13 +144,13 @@ def _binned(
     return binned, rng
 
 
-# ``binned(key, is_ref)`` from ``win``: SQL twin of :func:`_binned`
+# ``binned(key, is_ref)`` from ``vals_win``: SQL twin of :func:`_binned`
 _BINNED_CTE = f"""ref_range AS (
-    SELECT min(key) AS l_min, max(key) AS l_max FROM win WHERE is_ref
+    SELECT min(key) AS l_min, max(key) AS l_max FROM vals_win WHERE is_ref
   ), binned AS (
     SELECT (least(greatest(key, l_min), l_max) - l_min) * {N_BINS}
              // (l_max - l_min + 1) AS key, is_ref
-    FROM win, ref_range
+    FROM vals_win, ref_range
   )"""
 
 
@@ -277,8 +288,10 @@ def psi_bins(df: DataFrame, value: Column, ts: Column) -> DataFrame:
     return _psi(_counts(binned, N_BINS), F.col("key").cast("int").alias("bin"))
 
 
+# ``vals_win``: SQL twin of :func:`_values` over the turns' text_len
 _TEXT_LEN_WIN = f"""{TURNS_SQL},
-  {_split_cte("cast(text_len AS BIGINT)", "turns")}"""
+  {_split_cte("cast(text_len AS BIGINT)", "turns")},
+  vals_win AS (SELECT key, is_ref FROM win WHERE key IS NOT NULL)"""
 _ROLE_WIN = _split_cte("role", "transcripts")
 
 
@@ -343,7 +356,7 @@ def ks_statistic(df: DataFrame, value: Column, ts: Column) -> DataFrame:
     (ks_at, n_ref, n_cur, ks)."""
     cw = Window.orderBy("key").rowsBetween(Window.unboundedPreceding, 0)
     return (
-        _counts(_split(df, value.cast("long"), ts))
+        _counts(_values(df, value, ts))
         .select(
             F.col("key").alias("ks_at"),
             F.col("n_ref").cast("long").alias("n_ref"),
@@ -368,7 +381,7 @@ FROM (SELECT key, n_ref, n_cur, {_ks_numer(SQL)} AS numer FROM cum)
 ORDER BY numer DESC, ks_at ASC
 LIMIT 1
 """,
-    extra_ctes=f"""{_TEXT_LEN_WIN}, {_counts_cte("win")}, cum AS (
+    extra_ctes=f"""{_TEXT_LEN_WIN}, {_counts_cte("vals_win")}, cum AS (
     SELECT key, n_ref, n_cur,
            sum(n_ref_key) OVER (ORDER BY key
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cr,

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pymfe_spark.operators.textops import _tokens, tokens_sql
 from pymfe_spark.plans.catalog import register
 
 GROUP = "packing"
@@ -39,7 +40,7 @@ def pack_sequences_df(
     docs: DataFrame, budget: int = PACK_BUDGET, n_shards: int = PACK_SHARDS
 ) -> DataFrame:
     """Per-document packing assignment over any (doc_id, text) frame."""
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    toks = _tokens(F.col("text"))
     base = docs.select(
         "doc_id",
         (F.col("doc_id") % n_shards).alias("shard"),
@@ -70,7 +71,7 @@ def pack_sequences_df(
 _PACK_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, doc_id % {PACK_SHARDS} AS shard,
-         cast(len(list_filter(string_split(text, ' '), x -> x <> ''))
+         cast(len({tokens_sql("text")})
               AS bigint) AS n_tokens
   FROM documents
 ), pos AS (
@@ -101,7 +102,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_YIELD_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, doc_id % {PACK_SHARDS} AS shard,
-         cast(len(list_filter(string_split(text, ' '), x -> x <> ''))
+         cast(len({tokens_sql("text")})
               AS bigint) AS n_tokens
   FROM documents
 )
@@ -123,7 +124,7 @@ def pack_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
     padding-waste signal a packing job is tuned on). Pure partial
     aggregation — map-side combine, one tiny exchange."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    toks = _tokens(F.col("text"))
     base = docs.select(
         (F.col("doc_id") % PACK_SHARDS).alias("shard"),
         F.size(toks).cast("long").alias("n_tokens"),

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pymfe_spark.operators.textops import _tokens, tokens_sql
 from pymfe_spark.plans.catalog import register
 
 GROUP = "sampling"
@@ -218,7 +219,7 @@ _MIX_W_SQL = (
 _MIXTURE_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, source,
-         CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+         CAST(len({tokens_sql("text")})
               AS BIGINT) AS n_tokens,
          {_MIX_W_SQL} AS w
   FROM documents
@@ -248,7 +249,7 @@ def sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources src0-src9 weighted 2x the rest, rows chosen by the
     deterministic hash gate, thresholds in exact integer ppm."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    toks = _tokens(F.col("text"))
     base = d.select(
         "doc_id", "source", F.size(toks).cast("long").alias("n_tokens")
     )

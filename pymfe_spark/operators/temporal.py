@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 from pymfe_spark.functions.moments import COL, SQL, Sql, power_sum_stats
 from pymfe_spark.functions.sql_exprs import r
 from pymfe_spark.operators.base import TURNS_SQL, turns
+from pymfe_spark.operators.conv_info import TOOL0_SQL, running_entropy, tool0
 from pymfe_spark.plans.catalog import register
 from pymfe_spark.sources import with_transcripts_cte
 
@@ -294,9 +295,9 @@ def topk_longest_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------
 
 _CROSSTAB_ORACLE = with_transcripts_cte(
-    """
-SELECT role, coalesce(tool, 'NONE') AS tool0, count(*) AS n
-FROM transcripts GROUP BY role, coalesce(tool, 'NONE')
+    f"""
+SELECT role, {TOOL0_SQL} AS tool0, count(*) AS n
+FROM transcripts GROUP BY ALL
 """
 )
 
@@ -312,7 +313,7 @@ def crosstab_role_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return (
         transcripts(spark, sf_dir)
-        .groupBy("role", F.coalesce("tool", F.lit("NONE")).alias("tool0"))
+        .groupBy("role", tool0())
         .agg(F.count("*").alias("n"))
     )
 
@@ -351,7 +352,7 @@ SELECT c.conv_id,
        round(c.mx - c.mn, 6)                 AS range_len,
        round({_LEN_STATS[2]}, 6)             AS skewness_len,
        round({_LEN_STATS[3]}, 6)             AS kurtosis_len,
-       round(log2(c.rn) - e.sclc / c.rn, 6)  AS class_ent
+       round({running_entropy(Sql("c.rn"), Sql("e.sclc"), SQL)}, 6) AS class_ent
 FROM cums c JOIN ent e ON c.conv_id = e.conv_id AND c.turn_idx = e.turn_idx
 """,
     extra_ctes=TURNS_SQL
@@ -473,6 +474,6 @@ def expanding_mfe_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
             r(F.col("mx") - F.col("mn")).alias("range_len"),
             r(skew).alias("skewness_len"),
             r(kurt).alias("kurtosis_len"),
-            r(F.log2(rn) - F.col("sclc") / rn).alias("class_ent"),
+            r(running_entropy(rn, F.col("sclc"), COL)).alias("class_ent"),
         )
     )

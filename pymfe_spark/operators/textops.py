@@ -32,6 +32,18 @@ def _tokens(text: Column) -> Column:
     return F.filter(F.split(text, " "), lambda x: x != "")
 
 
+def tokens_sql(text: str) -> str:
+    """SQL twin of :func:`_tokens`: split on spaces, drop empties."""
+    return f"list_filter(string_split({text}, ' '), x -> x <> '')"
+
+
+# ``toks(doc_id, w)``: every document's tokens
+TOKS_CTE = f"""toks AS (
+  SELECT doc_id, {tokens_sql("text")} AS w
+  FROM documents
+)"""
+
+
 def poly_hash(col: Column) -> Column:
     """Cross-engine polynomial string hash:
     sum(ascii(c_i) * 31^(i mod 8)) mod 2^31-1.
@@ -71,7 +83,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-_TOKEN_ORACLE = """
+_TOKEN_ORACLE = f"""
 SELECT doc_id,
        length(text)                                   AS n_chars,
        cast(len(toks) AS bigint)                      AS n_words,
@@ -80,7 +92,7 @@ SELECT doc_id,
                                                       AS avg_word_len,
        round(len(list_distinct(toks)) * 1.0 / len(toks), 6) AS ttr
 FROM (SELECT doc_id, text,
-             list_filter(string_split(text, ' '), x -> x <> '') AS toks
+             {tokens_sql("text")} AS toks
       FROM documents)
 """
 
@@ -108,11 +120,8 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REPETITION_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents
-), g2 AS (
+_REPETITION_ORACLE = f"""
+WITH {TOKS_CTE}, g2 AS (
   SELECT doc_id, 2 AS n, w[i.i] || '_' || w[i.i+1] AS g
   FROM toks, unnest(range(1, len(w))) AS i(i) WHERE len(w) >= 2
 ), g3 AS (
@@ -203,7 +212,7 @@ FROM (SELECT doc_id,
                / length(text) AS digit_ratio,
              len(list_distinct(toks)) * 1.0 / len(toks) AS ttr
       FROM (SELECT doc_id, text,
-                   list_filter(string_split(text, ' '), x -> x <> '') AS toks
+                   {tokens_sql("text")} AS toks
             FROM documents))
 """
 
@@ -246,7 +255,7 @@ SELECT doc_id, lang,
                          / len(toks) >= 0.02
                     THEN 'en' ELSE 'unk' END) AS agree
 FROM (SELECT doc_id, lang,
-             list_filter(string_split(text, ' '), x -> x <> '') AS toks
+             {tokens_sql("text")} AS toks
       FROM documents)
 """
 
@@ -337,14 +346,14 @@ _PIPELINE_ORACLE = f"""
 WITH scored AS (
   SELECT doc_id, source, lang, text,
          min(doc_id) OVER (PARTITION BY lower(trim(text))) AS canonical_id,
-         len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_words,
-         len(list_filter(string_split(text, ' '), x -> x IN ({_STOP_SQL})))
-           * 1.0 / len(list_filter(string_split(text, ' '), x -> x <> ''))
+         len({tokens_sql("text")}) AS n_words,
+         len(list_filter({tokens_sql("text")}, x -> x IN ({_STOP_SQL})))
+           * 1.0 / len({tokens_sql("text")})
            AS stop_ratio,
          length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) * 1.0
            / length(text) AS punct_ratio,
-         len(list_distinct(list_filter(string_split(text, ' '), x -> x <> '')))
-           * 1.0 / len(list_filter(string_split(text, ' '), x -> x <> ''))
+         len(list_distinct({tokens_sql("text")}))
+           * 1.0 / len({tokens_sql("text")})
            AS ttr
   FROM documents
 ), kept AS (
@@ -539,10 +548,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 TOP_NGRAMS_K = 20
 
 _TOP_NGRAMS_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents
-), g AS (
+WITH {TOKS_CTE}, g AS (
   SELECT doc_id, w[i.i] || '_' || w[i.i+1] || '_' || w[i.i+2] AS gram
   FROM toks, unnest(range(1, len(w) - 1)) AS i(i) WHERE len(w) >= 3
 ), counts AS (
@@ -626,13 +632,10 @@ def text_token_stats_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- corpus-LM quality proxy: unigram log-probability ---------------
 
-_UNIGRAM_ORACLE = """
-WITH tok AS (
+_UNIGRAM_ORACLE = f"""
+WITH {TOKS_CTE}, tok AS (
   SELECT doc_id, i.i AS pos, w[i.i] AS t
-  FROM (SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents),
-       unnest(range(1, len(w) + 1)) AS i(i)
+  FROM toks, unnest(range(1, len(w) + 1)) AS i(i)
 ), uni AS (
   SELECT t, count(*) AS cnt FROM tok GROUP BY t
 ), tot AS (

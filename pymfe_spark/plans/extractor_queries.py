@@ -14,12 +14,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pymfe_spark.functions.moments import SQL
 from pymfe_spark.operators.base import TURNS_SQL, turns
+from pymfe_spark.operators.conv_info import TOOL0_SQL, XOR_SUPPORT_CTES
+from pymfe_spark.operators.conv_info import class_balance, class_counts_sql
+from pymfe_spark.operators.conv_info import entropy, freq_sql
 from pymfe_spark.plans.catalog import register
 from pymfe_spark.plans.extractor import MFESpark
 from pymfe_spark.sources import with_transcripts_cte
 
 GROUP = "metafeature-arrow"
+
+# the role frequency table (conv_id, role, c, n, p) several oracles read
+_ROLE_FREQ = freq_sql(class_counts_sql("transcripts", "role"))
 
 
 @register("mfe_extract_core", oracle=None, group=GROUP)
@@ -128,32 +135,45 @@ def mfe_extract_full_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ex.extract(turns(spark, sf_dir))
 
 
+def _pick(name: str):
+    return F.max(F.when(F.col("mtf_name") == name, F.col("mtf_val")))
+
+
+def _no_nan(col: Column) -> Column:
+    """NaN -> NULL so kernel NaNs hash like oracle NULLs."""
+    return F.when(~F.isnan(col), col)
+
+
+# per conversation: n, nr_class and the mean / sample sd of each numeric column
+_BASE_CTES = TURNS_SQL + """,
+ base AS (SELECT conv_id, count(*) AS n, count(DISTINCT role) AS nr_class,
+                 avg(text_len)                       AS m1,
+                 avg(coalesce(ts_delta_s, 0))        AS m2,
+                 avg(turn_idx)                       AS m3,
+                 stddev_samp(text_len)               AS s1,
+                 stddev_samp(coalesce(ts_delta_s, 0)) AS s2,
+                 stddev_samp(turn_idx)               AS s3
+          FROM turns GROUP BY conv_id)"""
+
 _CROSS_ORACLE = with_transcripts_cte(
     """
 SELECT conv_id,
-       round(cast(count(*) AS double), 6)                 AS nr_inst,
-       round(cast(count(DISTINCT role) AS double), 6)     AS nr_class,
-       round(ent.class_ent, 6)                            AS class_ent,
+       round(cast(n AS double), 6)                        AS nr_inst,
+       round(cast(nr_class AS double), 6)                 AS nr_class,
+       round(class_ent, 6)                                AS class_ent,
        -- mean/sd columns round to 4 decimals (still ~9 significant
        -- digits at these magnitudes): the kernel's np.mean uses
        -- pairwise summation, DuckDB's avg is sequential, and
        -- microsecond-quantized gaps make the 1-ulp difference land on
        -- a 6th-decimal rounding boundary about once per 10k convs
-       round((avg(text_len) + avg(coalesce(ts_delta_s, 0))
-              + avg(turn_idx)) / 3.0, 4)                  AS mean_mean,
-       round((stddev_samp(text_len)
-              + stddev_samp(coalesce(ts_delta_s, 0))
-              + stddev_samp(turn_idx)) / 3.0, 4)          AS sd_mean
-FROM turns JOIN ent USING (conv_id)
-GROUP BY conv_id, ent.class_ent
+       round((m1 + m2 + m3) / 3.0, 4)                     AS mean_mean,
+       round((s1 + s2 + s3) / 3.0, 4)                     AS sd_mean
+FROM base JOIN ent USING (conv_id)
 """,
-    extra_ctes=TURNS_SQL
-    + """,
- ent AS (SELECT conv_id, -sum(p * log2(p)) AS class_ent
-         FROM (SELECT conv_id, count(*) / sum(count(*))
-                        OVER (PARTITION BY conv_id) AS p
-               FROM transcripts GROUP BY conv_id, role)
-         GROUP BY conv_id)""",
+    extra_ctes=_BASE_CTES
+    + f""",
+ ent AS (SELECT conv_id, {entropy(SQL)} AS class_ent
+         FROM ({_ROLE_FREQ}) GROUP BY conv_id)""",
 )
 
 
@@ -169,16 +189,12 @@ def mfe_kernel_cross_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mean/sd summaries of the per-column statistical means/sds."""
     ex = MFESpark(groups=("general", "statistical", "info-theory"))
     long_df = ex.extract(turns(spark, sf_dir))
-
-    def pick(name: str):
-        return F.max(F.when(F.col("mtf_name") == name, F.col("mtf_val")))
-
     return long_df.groupBy("conv_id").agg(
-        F.round(pick("nr_inst"), 6).alias("nr_inst"),
-        F.round(pick("nr_class"), 6).alias("nr_class"),
-        F.round(pick("class_ent"), 6).alias("class_ent"),
-        F.round(pick("mean.mean"), 4).alias("mean_mean"),
-        F.round(pick("sd.mean"), 4).alias("sd_mean"),
+        F.round(_pick("nr_inst"), 6).alias("nr_inst"),
+        F.round(_pick("nr_class"), 6).alias("nr_class"),
+        F.round(_pick("class_ent"), 6).alias("class_ent"),
+        F.round(_pick("mean.mean"), 4).alias("mean_mean"),
+        F.round(_pick("sd.mean"), 4).alias("sd_mean"),
     )
 
 
@@ -194,15 +210,6 @@ def mfe_extract_expanding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ex.extract_expanding(turns(spark, sf_dir), stride=8)
 
 
-def _pick(name: str):
-    return F.max(F.when(F.col("mtf_name") == name, F.col("mtf_val")))
-
-
-def _no_nan(col: Column) -> Column:
-    """NaN -> NULL so kernel NaNs hash like oracle NULLs."""
-    return F.when(~F.isnan(col), col)
-
-
 # ---------------------------------------------------------------------
 # kernel cross-checks: pivot Arrow-kernel outputs that ARE
 # SQL-expressible and oracle them — one per extract family, so every
@@ -210,35 +217,18 @@ def _no_nan(col: Column) -> Column:
 # (Arrow transfer, view assembly, summary layer, config threading).
 # ---------------------------------------------------------------------
 
+_CB = class_balance(SQL)
 _DIST_ORACLE = with_transcripts_cte(
-    """
+    f"""
 SELECT conv_id,
-       round(nre, 6)      AS nre,
-       cast(sc AS double) AS sc,
-       round(c1, 6)       AS c1,
-       round(c2, 6)       AS c2,
-       round(t2, 6)       AS t2
-FROM agg
-""",
-    extra_ctes=TURNS_SQL
-    + """,
- cls AS (SELECT conv_id, role, count(*) AS c
-         FROM turns GROUP BY conv_id, role),
- agg AS (SELECT conv_id,
-                -sum((c * 1.0 / n) * ln(c * 1.0 / n))   AS nre,
-                sum(CASE WHEN c < 15 THEN 1 ELSE 0 END) AS sc,
-                CASE WHEN count(*) < 2 THEN NULL
-                     ELSE -sum((c * 1.0 / n) * log2(c * 1.0 / n))
-                          / log2(count(*)) END          AS c1,
-                CASE WHEN count(*) < 2 THEN NULL
-                     ELSE 1.0 - 1.0 /
-                          (((count(*) - 1.0) / count(*))
-                           * sum(c * 1.0 / (n - c))) END AS c2,
-                3.0 / n                                  AS t2
-         FROM (SELECT conv_id, role, c,
-                      sum(c) OVER (PARTITION BY conv_id) AS n
-               FROM cls)
-         GROUP BY conv_id, n)""",
+       round({_CB["nre"]}, 6)      AS nre,
+       cast({_CB["sc"]} AS double) AS sc,
+       round({_CB["c1"]}, 6)       AS c1,
+       round({_CB["c2"]}, 6)       AS c2,
+       round(3.0 / n, 6)           AS t2
+FROM ({_ROLE_FREQ})
+GROUP BY conv_id, n
+"""
 )
 
 
@@ -261,7 +251,7 @@ def mfe_kernel_dist_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SUMMARY_CHECK_ORACLE = with_transcripts_cte(
-    """
+    f"""
 SELECT conv_id,
        round(quantile_cont(p, 0.00), 6) AS fc_q0,
        round(quantile_cont(p, 0.25), 6) AS fc_q1,
@@ -275,13 +265,9 @@ SELECT conv_id,
        round(list_aggregate(
          list_transform(list(p ORDER BY role), x -> x * x), 'sum'), 6)
                                         AS fc_powersum
-FROM (SELECT conv_id, role,
-             c * 1.0 / sum(c) OVER (PARTITION BY conv_id) AS p
-      FROM (SELECT conv_id, role, count(*) AS c
-            FROM turns GROUP BY conv_id, role))
+FROM ({_ROLE_FREQ})
 GROUP BY conv_id
-""",
-    extra_ctes=TURNS_SQL,
+"""
 )
 
 
@@ -381,28 +367,17 @@ SELECT b.conv_id,
        3.0 AS nr_num
 FROM base b JOIN enc e ON b.conv_id = e.conv_id
 """,
-    extra_ctes=TURNS_SQL
-    + """,
- base AS (SELECT conv_id, count(*) AS n,
-                 avg(text_len)                       AS m1,
-                 avg(coalesce(ts_delta_s, 0))        AS m2,
-                 avg(turn_idx)                       AS m3,
-                 stddev_samp(text_len)               AS s1,
-                 stddev_samp(coalesce(ts_delta_s, 0)) AS s2,
-                 stddev_samp(turn_idx)               AS s3
-          FROM turns GROUP BY conv_id),
- lv AS (SELECT conv_id, count(*) AS c
-        FROM turns GROUP BY conv_id, role
+    extra_ctes=_BASE_CTES
+    + f""",
+ lv AS (SELECT conv_id, p, n FROM ({_ROLE_FREQ})
         UNION ALL
-        SELECT conv_id, count(*) AS c
-        FROM turns GROUP BY conv_id, coalesce(tool, 'NONE')),
- enc AS (SELECT lv.conv_id,
-                count(*)                         AS d_enc,
-                sum(lv.c * 1.0 / b.n)            AS mean_sum,
-                sum(sqrt((lv.c * 1.0 / b.n) * (1 - lv.c * 1.0 / b.n)
-                         * b.n / (b.n - 1)))     AS sd_sum
-         FROM lv JOIN base b ON lv.conv_id = b.conv_id
-         GROUP BY lv.conv_id)""",
+        SELECT conv_id, p, n
+        FROM ({freq_sql(class_counts_sql("transcripts", TOOL0_SQL))})),
+ enc AS (SELECT conv_id,
+                count(*)                                AS d_enc,
+                sum(p)                                  AS mean_sum,
+                sum(sqrt(p * (1 - p) * n / (n - 1)))    AS sd_sum
+         FROM lv GROUP BY conv_id)""",
 )
 
 
@@ -436,32 +411,15 @@ SELECT onea.conv_id,
        round(twoa.sd, 6) AS two_sd
 FROM onea JOIN twoa USING (conv_id)
 """,
-    extra_ctes="""
- t2 AS (SELECT conv_id, role, coalesce(tool, 'NONE') AS tool0
-        FROM transcripts),
- nn AS (SELECT conv_id, count(*) AS n FROM t2 GROUP BY conv_id),
- ca AS (SELECT conv_id, role AS val, count(*) AS c
-        FROM t2 GROUP BY conv_id, role),
- cb AS (SELECT conv_id, tool0 AS val, count(*) AS c
-        FROM t2 GROUP BY conv_id, tool0),
- one AS (SELECT x.conv_id, x.c * 1.0 / nn.n AS s
-         FROM (SELECT * FROM ca UNION ALL SELECT * FROM cb) x
-         JOIN nn USING (conv_id)),
- cab AS (SELECT conv_id, role, tool0, count(*) AS c
-         FROM t2 GROUP BY conv_id, role, tool0),
- xorp AS (SELECT p.conv_id,
-                 (pca.c + pcb.c - 2 * coalesce(cab.c, 0)) * 1.0 / p.n AS s
-          FROM (SELECT ca.conv_id, ca.val AS item_a, cb.val AS item_b, nn.n
-                FROM ca JOIN cb ON ca.conv_id = cb.conv_id
-                     JOIN nn ON ca.conv_id = nn.conv_id) p
-          JOIN ca pca ON p.conv_id = pca.conv_id AND p.item_a = pca.val
-          JOIN cb pcb ON p.conv_id = pcb.conv_id AND p.item_b = pcb.val
-          LEFT JOIN cab ON p.conv_id = cab.conv_id
-                       AND p.item_a = cab.role AND p.item_b = cab.tool0),
+    extra_ctes=XOR_SUPPORT_CTES
+    + f""",
+ one AS (SELECT conv_id, p AS s FROM ({freq_sql("SELECT * FROM ca")})
+         UNION ALL
+         SELECT conv_id, p AS s FROM ({freq_sql("SELECT * FROM cb")})),
  onea AS (SELECT conv_id, avg(s) AS m, stddev_samp(s) AS sd
           FROM one GROUP BY conv_id),
  twoa AS (SELECT conv_id, avg(s) AS m, stddev_samp(s) AS sd
-          FROM xorp GROUP BY conv_id)""",
+          FROM xor GROUP BY conv_id)""",
 )
 
 

@@ -69,9 +69,10 @@ def reference_bin_profile(
 
 def _window_bin_counts(src: DataFrame, profile: dict, window: str) -> DataFrame:
     """``(win_start, win_end, bin, n_cur)``: ``src(ts, v)`` binned by
-    the profile's literal edges, counted per (event-time window, bin)."""
+    the profile's literal edges, counted per (event-time window, bin);
+    a null ``v`` is no bin."""
     lo, hi = int(profile["l_min"]), int(profile["l_max"])
-    binned = src.select(
+    binned = src.where(F.col("v").isNotNull()).select(
         "ts", bin_of(F.col("v"), lo, hi, profile["n_bins"]).alias("bin")
     )
     agg = binned.groupBy(F.window("ts", window), "bin").agg(

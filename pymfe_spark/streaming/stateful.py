@@ -15,7 +15,8 @@ order, so arrival order cannot change any output.
 Emitted per update: n_turns, mean/sd/min/max/range and e1071
 method-3 skewness/kurtosis of text length (functions/moments.py
 ``power_sum_stats``, the code expanding_mfe_sql runs as Spark
-Columns), role entropy, and the distinct-role count. Agreement with
+Columns), role entropy (operators/conv_info.py ``running_entropy``,
+as expanding_mfe_sql finishes it), and the distinct-role count. Agreement with
 the batch aggregation is pytest-verified (streaming final state ==
 batch query, multi-batch).
 """
@@ -38,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from pymfe_spark.functions.moments import PY, power_sum_state, power_sum_stats
+from pymfe_spark.operators.conv_info import running_entropy
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -125,7 +127,7 @@ def _update_conv(
 
     total = sum(roles.values())
     ent = (
-        math.log2(total) - sum(sorted(c * math.log2(c) for c in roles.values())) / total
+        running_entropy(total, sum(sorted(c * math.log2(c) for c in roles.values())), PY)
         if total
         else _NAN
     )

@@ -111,6 +111,31 @@ def test_null_category_is_one_more_key(spark):
     assert (chi2["k"].iloc[0], chi2["dof"].iloc[0]) == (4, 3)
 
 
+def test_null_value_is_dropped_after_the_split(spark):
+    """A null numeric value is neither a bin nor a point of the CDF,
+    while its timestamp still places the midpoint: of 100 rows with 20
+    null values (10 a half), the bin counts sum to the 40 non-null rows
+    of each half, in batch and in the streaming window counts, and KS
+    counts 80 rows."""
+    from pymfe_spark.operators.drift import ks_statistic
+    from pymfe_spark.streaming.drift import _window_bin_counts
+
+    df = spark.range(100).select(
+        (
+            F.to_timestamp(F.lit("2025-01-01 00:00:00"))
+            + F.make_interval(secs=F.col("id"))
+        ).alias("ts"),
+        F.when(F.col("id") % 5 != 0, F.col("id") % 37).alias("v"),
+    )
+    psi = psi_bins(df, F.col("v"), F.col("ts")).toPandas()
+    assert (psi["n_ref"].sum(), psi["n_cur"].sum()) == (40, 40)
+    ks = ks_statistic(df, F.col("v"), F.col("ts")).toPandas()
+    assert ks["n_ref"].iloc[0] + ks["n_cur"].iloc[0] == 80
+    profile = {"l_min": 0, "l_max": 36, "n_bins": 10}
+    counts = _window_bin_counts(df, profile, "1 hour").toPandas()
+    assert counts["n_cur"].sum() == 80
+
+
 def test_psi_terms_are_nonnegative(spark):
     """Each PSI term (p_cur - p_ref)·ln(p_cur/p_ref) is nonnegative by
     construction (the factors share sign) — a planted invariant that

@@ -81,6 +81,19 @@ def test_no_cartesian_products_anywhere(spark):
             )
 
 
+def test_joint_marginals_fold_from_one_scan(spark):
+    """mf_info_joint and mf_itemset_two fold every role/tool marginal
+    from one (role, tool0) count table, so the executed plan reads the
+    transcript derivation once (a re-aggregation per marginal scans it
+    once more each)."""
+    for name in ("mf_info_joint", "zz_mf_itemset_two"):
+        df = CATALOG[name].fn(spark, SF_SMOKE)
+        df.collect()
+        final = df._jdf.queryExecution().executedPlan().toString()
+        final = final.split("== Initial Plan ==")[0]
+        assert final.count("FileScan") == 1, f"{name} scans more than once"
+
+
 def test_similarity_broadcasts_query_side(spark):
     plan = plan_of(spark, "sim_topk_bruteforce")
     assert "Broadcast" in plan, "query side not broadcast"
