@@ -7,25 +7,17 @@ configurations of four class-count stages, each written once in Spark
 and once as DuckDB SQL, as pymfe computes ``class_freqs`` once for
 every measure:
 
-==================  =======================  ==========================
-stage               Spark                    oracle SQL
-==================  =======================  ==========================
-tool0 key           ``tool0``                ``TOOL0_SQL``
-class-count table   ``class_counts``,        ``class_counts_sql``,
-                    ``marginal``             ``marginal_sql``
-relative frequency  ``freq``                 ``freq_sql``
-finishers           ``entropy``,             the same code over ``SQL``
-                    ``class_balance``,       (``PY`` for the streaming
-                    ``joint_entropy``,       state)
-                    ``running_entropy``
-                    over ``COL``
-==================  =======================  ==========================
-
-Role counts feed mf_general, mf_class_balance, mf_itemset_one and the
-cross / dist / summary / one-hot oracles; bin counts mf_info_attr_ent;
-(role, tool0) counts mf_info_joint, mf_itemset_two and the itemset
-oracle (marginals folded from them, one scan); running counts
-expanding_mfe_sql and the streaming state.
+==================  ================================  ====================
+stage               Spark                             oracle SQL
+==================  ================================  ====================
+tool0 key           ``tool0``                         ``TOOL0_SQL``
+class-count table   ``class_counts``                  ``class_counts_sql``,
+                                                      ``marginal_sql``
+relative frequency  ``freq``                          ``freq_sql``
+finishers           ``entropy``, ``class_balance``,   the same code over
+                    ``joint_entropy``,                ``SQL`` (``PY`` for
+                    ``running_entropy`` over ``COL``  the streaming state)
+==================  ================================  ====================
 
 Parity targets:
 - entropies: /root/reference/pymfe/info_theory.py (attr_ent 277-313,
@@ -61,7 +53,6 @@ def _conv_w():
 
 
 # ------------------------------------------------------ stage 1: tool0 key
-
 # a null tool is the 'NONE' class, as in the kernel's C view
 TOOL0_SQL = "coalesce(tool, 'NONE')"
 
@@ -71,16 +62,9 @@ def tool0() -> Column:
 
 
 # ---------------------------------------------- stage 2: class-count table
-
-
 def class_counts(df: DataFrame, *keys: str | Column) -> DataFrame:
     """``(conv_id, *keys, c)``: rows per conversation and class."""
     return df.groupBy("conv_id", *keys).agg(F.count("*").alias("c"))
-
-
-def marginal(joint: DataFrame, *keys: str) -> DataFrame:
-    """``(conv_id, *keys, c)`` folded from a finer count table."""
-    return joint.groupBy("conv_id", *keys).agg(F.sum("c").alias("c"))
 
 
 def class_counts_sql(source: str, *keys: str, c: str = "count(*)") -> str:
@@ -90,15 +74,13 @@ def class_counts_sql(source: str, *keys: str, c: str = "count(*)") -> str:
 
 
 def marginal_sql(joint: str, *keys: str) -> str:
+    """``(conv_id, *keys, c)`` folded from a finer count table."""
     return class_counts_sql(joint, *keys, c="sum(c)")
 
 
 # ---------------------------------------------- stage 3: relative frequency
-
-
 def freq(counts: DataFrame) -> DataFrame:
-    """Adds ``n = sum(c) OVER (conv_id)`` and ``p = c / n`` (a caller
-    reading only ``p`` leaves one window once ``n`` is pruned)."""
+    """Adds ``n = sum(c) OVER (conv_id)`` and ``p = c / n``."""
     n = F.sum("c").over(_conv_w())
     return counts.withColumn("n", n).withColumn("p", F.col("c") / n)
 
@@ -108,9 +90,17 @@ def freq_sql(counts: str) -> str:
     return f"SELECT *, {n} AS n, c / {n} AS p FROM ({counts})"
 
 
+# ``(conv_id, role, c, n, p)``: the role frequency table
+ROLE_FREQ_SQL = freq_sql(class_counts_sql("transcripts", "role"))
+# joint (role, tool0) counts ``jc`` and the role and tool0 frequency
+# tables ``ca`` and ``cb`` folded from them (one scan)
+JOINT_CTES = f"""
+ jc AS ({class_counts_sql("transcripts", "role", f"{TOOL0_SQL} AS tool0")}),
+ ca AS ({freq_sql(marginal_sql("jc", "role"))}),
+ cb AS ({freq_sql(marginal_sql("jc", "tool0"))})"""
+
+
 # --------------------------------------------------------- stage 4: finishers
-
-
 def entropy(e: Engine, log: Callable | None = None) -> Any:
     """``-sum(p * log(p))`` over a conversation's frequency rows, log2
     by default; the unary minus keeps a one-class entropy at -0.0."""
@@ -136,11 +126,9 @@ _EPS = 1e-8
 
 
 def joint_entropy(e: Engine) -> Any:
-    """Joint entropy over joint counts ``c`` with the conversation's
-    ``n`` and dense crosstab size ``cells``, every cell (zero cells
-    included, never materialized) eps-smoothed as in pymfe:
-    -[sum_nonzero q log2 q + (cells - nonzero) q0 log2 q0] with
-    q = (c/n + eps)/Z, q0 = eps/Z, Z = 1 + cells*eps."""
+    """pymfe's eps-smoothed joint entropy of counts ``c`` over ``n`` rows
+    and ``cells`` dense crosstab cells, its zero cells never materialized:
+    -[sum q log2 q + (cells - nonzero) q0 log2 q0], Z = 1 + cells*eps."""
     c, n, cells = e.col("c"), e.col("n"), e.col("cells")
     q = (c / n + _EPS) / (e.lit(1.0) + cells * _EPS)
     q0 = _EPS / (e.lit(1.0) + e.max(cells) * _EPS)
@@ -157,13 +145,13 @@ def running_entropy(n: Any, sclc: Any, e: Engine) -> Any:
 # class entropy + class balance + size-based clustering indexes
 # ---------------------------------------------------------------------
 
-_CB = class_balance(SQL)
+CLASS_BALANCE_SQL = class_balance(SQL)
 _CLASSBAL_ORACLE = with_transcripts_cte(
     f"""
 SELECT conv_id,
-       {"".join(f"round({_CB[k]}, 6) AS {k}, " for k in ("class_ent", "nre", "c1", "c2"))}
-       cast({_CB["sc"]} AS bigint) AS sc
-FROM ({freq_sql(class_counts_sql("transcripts", "role"))})
+       {"".join(f"round({v}, 6) AS {k}, " for k, v in CLASS_BALANCE_SQL.items() if k != "sc")}
+       cast({CLASS_BALANCE_SQL["sc"]} AS bigint) AS sc
+FROM ({ROLE_FREQ_SQL})
 GROUP BY conv_id
 """
 )
@@ -180,13 +168,10 @@ def mf_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1/c2 (complexity.py:1966-2045) and sc (clustering.py:915-962),
     all finished from one role-count table (one shuffle)."""
     cb = class_balance(COL)
-    return (
-        freq(class_counts(transcripts(spark, sf_dir), "role"))
-        .groupBy("conv_id")
-        .agg(
-            *(r(cb[k]).alias(k) for k in ("class_ent", "nre", "c1", "c2")),
-            cb["sc"].alias("sc"),
-        )
+    counts = freq(class_counts(transcripts(spark, sf_dir), "role"))
+    return counts.groupBy("conv_id").agg(
+        *(r(cb[k]).alias(k) for k in ("class_ent", "nre", "c1", "c2")),
+        cb["sc"].alias("sc"),
     )
 
 
@@ -235,10 +220,8 @@ def mf_info_attr_ent(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin",
         F.least(F.floor(pr * kbins).cast("int"), (kbins - 1).cast("int")),
     )
-    return (
-        freq(class_counts(binned, "bin"))
-        .groupBy("conv_id")
-        .agg(r(entropy(COL)).alias("attr_ent"), F.count("*").alias("nr_bins_used"))
+    return freq(class_counts(binned, "bin")).groupBy("conv_id").agg(
+        r(entropy(COL)).alias("attr_ent"), F.count("*").alias("nr_bins_used")
     )
 
 
@@ -259,18 +242,15 @@ SELECT e.conv_id,
 FROM e JOIN hr ON e.conv_id = hr.conv_id
        JOIN ht ON e.conv_id = ht.conv_id
 """,
-    extra_ctes=f"""
- jc AS ({class_counts_sql("transcripts", "role", f"{TOOL0_SQL} AS tool0")}),
+    extra_ctes=f"""{JOINT_CTES},
  dims AS (SELECT conv_id,
                  count(DISTINCT role)  * count(DISTINCT tool0) AS cells,
                  sum(c) AS n
           FROM jc GROUP BY conv_id),
  e AS (SELECT conv_id, {joint_entropy(SQL)} AS joint_ent
        FROM jc JOIN dims USING (conv_id) GROUP BY conv_id),
- hr AS (SELECT conv_id, {entropy(SQL)} AS ent
-        FROM ({freq_sql(marginal_sql("jc", "role"))}) GROUP BY conv_id),
- ht AS (SELECT conv_id, {entropy(SQL)} AS ent
-        FROM ({freq_sql(marginal_sql("jc", "tool0"))}) GROUP BY conv_id)""",
+ hr AS (SELECT conv_id, {entropy(SQL)} AS ent FROM ca GROUP BY conv_id),
+ ht AS (SELECT conv_id, {entropy(SQL)} AS ent FROM cb GROUP BY conv_id)""",
 )
 
 
@@ -292,7 +272,8 @@ def mf_info_joint(spark: SparkSession, sf_dir: str) -> DataFrame:
         joint_entropy(COL).alias("joint_ent")
     )
     hr, ht = (
-        freq(marginal(jc, key)).groupBy("conv_id").agg(entropy(COL).alias(name))
+        freq(jc.groupBy("conv_id", key).agg(F.sum("c").alias("c")))
+        .groupBy("conv_id").agg(entropy(COL).alias(name))
         for key, name in (("role", "hr"), ("tool0", "ht"))
     )
     mi = F.col("hr") + F.col("ht") - F.col("joint_ent")
@@ -428,17 +409,12 @@ def mf_itemset_one(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # XOR support (|A| + |B| - 2|A and B|) / n of every (role, tool0) pair
 # from the joint counts; mf_itemset_two's and the itemset check's oracle
-XOR_SUPPORT_CTES = f"""
- jc AS ({class_counts_sql("transcripts", "role", f"{TOOL0_SQL} AS tool0")}),
- ca AS ({marginal_sql("jc", "role")}),
- cb AS ({marginal_sql("jc", "tool0")}),
- nn AS ({marginal_sql("jc")}),
+XOR_SUPPORT_CTES = f"""{JOINT_CTES},
  xor AS (SELECT ca.conv_id, ca.role AS item_a, cb.tool0 AS item_b,
-                (ca.c + cb.c - 2 * coalesce(jc.c, 0)) * 1.0 / nn.c AS s
+                (ca.c + cb.c - 2 * coalesce(jc.c, 0)) * 1.0 / ca.n AS s
          FROM ca JOIN cb ON ca.conv_id = cb.conv_id
-              JOIN nn ON ca.conv_id = nn.conv_id
-         LEFT JOIN jc ON ca.conv_id = jc.conv_id AND ca.role = jc.role
-                     AND cb.tool0 = jc.tool0)"""
+         LEFT JOIN jc ON ca.conv_id = jc.conv_id AND cb.tool0 = jc.tool0
+                     AND ca.role IS NOT DISTINCT FROM jc.role)"""
 
 _TWOITEM_ORACLE = with_transcripts_cte(
     """
@@ -456,25 +432,30 @@ SELECT conv_id, item_a, item_b, round(s, 6) AS support_xor FROM xor
 def mf_itemset_two(spark: SparkSession, sf_dir: str) -> DataFrame:
     """two_itemset: XOR support |A xor B| / n for every (role value,
     tool value) pair (itemset.py:99-148) — computed from marginal and
-    joint counts, support_xor = (|A| + |B| - 2|A and B|)/n, avoiding any
-    row-level pair materialization. One scan: the marginals fold from
-    the joint counts."""
+    joint counts, support_xor = (|A| + |B| - 2|A and B|)/n. One scan and
+    one conv_id shuffle: the marginals fold from the joint counts as
+    windows, and each role (a null one too) crosses its conversation's tools."""
     t2 = transcripts(spark, sf_dir).select("conv_id", "role", tool0())
-    # marginals fold from the joint counts as windows and pairs come from
-    # a self-join of its rows (<= 16 x 16 a conversation), on one conv_id
-    # shuffle; a pair's joint count is role a's row for tool b, if any
     w = (
         freq(class_counts(t2, "role", "tool0"))
         .withColumn("ca", F.sum("c").over(Window.partitionBy("conv_id", "role")))
         .withColumn("cb", F.sum("c").over(Window.partitionBy("conv_id", "tool0")))
+        .withColumn("tools", F.collect_set(F.struct("tool0", "cb")).over(_conv_w()))
     )
-    a, b = w.alias("a"), w.alias("b")
-    cab = F.max(F.when(F.col("a.tool0") == F.col("b.tool0"), F.col("a.c")))
-    xor = F.max("a.ca") + F.max("b.cb") - 2 * F.coalesce(cab, F.lit(0))
-    return (
-        a.join(b, "conv_id")
-        .groupBy("conv_id", F.col("a.role").alias("item_a"), F.col("b.tool0").alias("item_b"))
-        .agg(r(xor / F.max("a.n")).alias("support_xor"))
+    # one row per role: its joint count by tool0 and the conversation's tools
+    roles = w.groupBy("conv_id", "role").agg(
+        F.max("ca").alias("ca"),
+        F.max("n").alias("n"),
+        F.map_from_entries(F.collect_list(F.struct("tool0", "c"))).alias("cab"),
+        F.first("tools").alias("tools"),
+    )
+    cab = F.coalesce(F.col("cab")[F.col("b.tool0")], F.lit(0))
+    xor = F.col("ca") + F.col("b.cb") - 2 * cab
+    return roles.select("*", F.explode("tools").alias("b")).select(
+        "conv_id",
+        F.col("role").alias("item_a"),
+        F.col("b.tool0").alias("item_b"),
+        r(xor / F.col("n")).alias("support_xor"),
     )
 
 

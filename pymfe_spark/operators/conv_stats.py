@@ -26,8 +26,7 @@ from pyspark.sql.window import Window
 from pymfe_spark.functions.moments import COL, SQL, Sql, central_shape
 from pymfe_spark.functions.sql_exprs import g_mean, h_mean, r, sparsity
 from pymfe_spark.operators.base import TURNS_SQL, turns
-from pymfe_spark.operators.conv_info import class_counts, class_counts_sql
-from pymfe_spark.operators.conv_info import freq, freq_sql
+from pymfe_spark.operators.conv_info import ROLE_FREQ_SQL, class_counts, freq
 from pymfe_spark.plans.catalog import register
 from pymfe_spark.sources import with_transcripts_cte
 
@@ -52,8 +51,7 @@ FROM g JOIN tl ON g.conv_id = tl.conv_id
     extra_ctes=f"""
  g AS (SELECT conv_id, sum(c) AS nr_inst, count(*) AS nr_class,
               avg(p) AS freq_class_mean, stddev_samp(p) AS freq_class_sd
-       FROM ({freq_sql(class_counts_sql("transcripts", "role"))})
-       GROUP BY conv_id),
+       FROM ({ROLE_FREQ_SQL}) GROUP BY conv_id),
  tl AS (SELECT conv_id, count(DISTINCT tool) AS nr_tool
         FROM transcripts GROUP BY conv_id)""",
 )
@@ -66,8 +64,8 @@ def mf_general(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: nr_inst general.py:318-337, nr_class general.py:287-315,
     freq_class general.py:153-184, attr_to_inst general.py:88-110
     (d=4 derived attributes: text_len, ts_delta_s, turn_idx, role).
-    nr_tool stays count(DISTINCT tool) on its own scan (a null tool is
-    none, 'NONE' is one): folding it from a (role, tool) table adds a shuffle.
+    nr_tool is count(DISTINCT tool) on its own scan (a null tool is no
+    tool): folding it from a joint table would add a shuffle.
     """
     t = turns(spark, sf_dir)
     g = freq(class_counts(t, "role")).groupBy("conv_id").agg(

@@ -45,9 +45,8 @@ arithmetic that both engines share:
   values are clamped into that range BEFORE binning so the integer
   division never sees a negative numerator (Spark ``div`` truncates
   toward zero, DuckDB ``//`` floors; they agree only on non-negatives);
-- a null numeric value is dropped after the split (its ``ts`` still
-  places the midpoint): it is neither a bin nor a point of the CDF,
-  while a null category is one more key of the count table;
+- a null numeric value is dropped after the split (its ``ts`` still places
+  the midpoint), while a null category is one more key of the count table;
 - Laplace-smoothed fractions (count plus one half, over n plus k
   halves, for k spine keys) keep every bin nonzero (empty-bin PSI is otherwise
   infinite), one IEEE division of an exact rational.
@@ -99,9 +98,7 @@ def _split(df: DataFrame, key: Column, ts: Column) -> DataFrame:
 
 
 def _values(df: DataFrame, value: Column, ts: Column) -> DataFrame:
-    """:func:`_split` of a numeric ``value`` as a long, without the rows
-    whose value is null: every row's ``ts`` still places the midpoint,
-    but a missing value is neither a bin nor a point of the CDF."""
+    """:func:`_split` of a numeric ``value`` as a long, null values dropped."""
     return _split(df, value.cast("long"), ts).where(F.col("key").isNotNull())
 
 

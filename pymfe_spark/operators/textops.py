@@ -38,10 +38,7 @@ def tokens_sql(text: str) -> str:
 
 
 # ``toks(doc_id, w)``: every document's tokens
-TOKS_CTE = f"""toks AS (
-  SELECT doc_id, {tokens_sql("text")} AS w
-  FROM documents
-)"""
+TOKS_CTE = f"toks AS (SELECT doc_id, {tokens_sql('text')} AS w FROM documents)"
 
 
 def poly_hash(col: Column) -> Column:

@@ -14,19 +14,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pymfe_spark.functions.moments import SQL
 from pymfe_spark.operators.base import TURNS_SQL, turns
-from pymfe_spark.operators.conv_info import TOOL0_SQL, XOR_SUPPORT_CTES
-from pymfe_spark.operators.conv_info import class_balance, class_counts_sql
-from pymfe_spark.operators.conv_info import entropy, freq_sql
+from pymfe_spark.operators.conv_info import CLASS_BALANCE_SQL, JOINT_CTES
+from pymfe_spark.operators.conv_info import ROLE_FREQ_SQL, XOR_SUPPORT_CTES
 from pymfe_spark.plans.catalog import register
 from pymfe_spark.plans.extractor import MFESpark
 from pymfe_spark.sources import with_transcripts_cte
 
 GROUP = "metafeature-arrow"
-
-# the role frequency table (conv_id, role, c, n, p) several oracles read
-_ROLE_FREQ = freq_sql(class_counts_sql("transcripts", "role"))
 
 
 @register("mfe_extract_core", oracle=None, group=GROUP)
@@ -172,8 +167,8 @@ FROM base JOIN ent USING (conv_id)
 """,
     extra_ctes=_BASE_CTES
     + f""",
- ent AS (SELECT conv_id, {entropy(SQL)} AS class_ent
-         FROM ({_ROLE_FREQ}) GROUP BY conv_id)""",
+ ent AS (SELECT conv_id, {CLASS_BALANCE_SQL["class_ent"]} AS class_ent
+         FROM ({ROLE_FREQ_SQL}) GROUP BY conv_id)""",
 )
 
 
@@ -217,16 +212,15 @@ def mfe_extract_expanding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (Arrow transfer, view assembly, summary layer, config threading).
 # ---------------------------------------------------------------------
 
-_CB = class_balance(SQL)
 _DIST_ORACLE = with_transcripts_cte(
     f"""
 SELECT conv_id,
-       round({_CB["nre"]}, 6)      AS nre,
-       cast({_CB["sc"]} AS double) AS sc,
-       round({_CB["c1"]}, 6)       AS c1,
-       round({_CB["c2"]}, 6)       AS c2,
-       round(3.0 / n, 6)           AS t2
-FROM ({_ROLE_FREQ})
+       round({CLASS_BALANCE_SQL["nre"]}, 6)      AS nre,
+       cast({CLASS_BALANCE_SQL["sc"]} AS double) AS sc,
+       round({CLASS_BALANCE_SQL["c1"]}, 6)       AS c1,
+       round({CLASS_BALANCE_SQL["c2"]}, 6)       AS c2,
+       round(3.0 / n, 6)                         AS t2
+FROM ({ROLE_FREQ_SQL})
 GROUP BY conv_id, n
 """
 )
@@ -265,7 +259,7 @@ SELECT conv_id,
        round(list_aggregate(
          list_transform(list(p ORDER BY role), x -> x * x), 'sum'), 6)
                                         AS fc_powersum
-FROM ({_ROLE_FREQ})
+FROM ({ROLE_FREQ_SQL})
 GROUP BY conv_id
 """
 )
@@ -367,12 +361,8 @@ SELECT b.conv_id,
        3.0 AS nr_num
 FROM base b JOIN enc e ON b.conv_id = e.conv_id
 """,
-    extra_ctes=_BASE_CTES
-    + f""",
- lv AS (SELECT conv_id, p, n FROM ({_ROLE_FREQ})
-        UNION ALL
-        SELECT conv_id, p, n
-        FROM ({freq_sql(class_counts_sql("transcripts", TOOL0_SQL))})),
+    extra_ctes=f"""{_BASE_CTES},{JOINT_CTES},
+ lv AS (SELECT conv_id, p, n FROM ca UNION ALL SELECT conv_id, p, n FROM cb),
  enc AS (SELECT conv_id,
                 count(*)                                AS d_enc,
                 sum(p)                                  AS mean_sum,
@@ -412,10 +402,8 @@ SELECT onea.conv_id,
 FROM onea JOIN twoa USING (conv_id)
 """,
     extra_ctes=XOR_SUPPORT_CTES
-    + f""",
- one AS (SELECT conv_id, p AS s FROM ({freq_sql("SELECT * FROM ca")})
-         UNION ALL
-         SELECT conv_id, p AS s FROM ({freq_sql("SELECT * FROM cb")})),
+    + """,
+ one AS (SELECT conv_id, p AS s FROM ca UNION ALL SELECT conv_id, p AS s FROM cb),
  onea AS (SELECT conv_id, avg(s) AS m, stddev_samp(s) AS sd
           FROM one GROUP BY conv_id),
  twoa AS (SELECT conv_id, avg(s) AS m, stddev_samp(s) AS sd

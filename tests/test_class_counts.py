@@ -3,7 +3,10 @@ input: every categorical SQL-tier query and every kernel cross-check
 built on them must match its DuckDB oracle on a planted transcript
 table holding a one-role conversation, a one-turn conversation, a null
 tool and a literal 'NONE' tool — cases the generated testdata never
-produces (its tool is never the string 'NONE')."""
+produces (its tool is never the string 'NONE'). The SQL-tier queries
+also see a null role, one more class in both engines; the numpy
+kernel behind the cross-checks reads a null role as missing, so their
+table has none."""
 
 from __future__ import annotations
 
@@ -19,7 +22,7 @@ from pymfe_spark.sources import TRANSCRIPTS_SQL
 from pymfe_spark.testing import assert_frames_match
 
 CATALOG = load_catalog()
-QUERIES = (
+SQL_TIER = (
     "mf_general",
     "zz_mf_class_balance",
     "mf_info_attr_ent",
@@ -28,6 +31,8 @@ QUERIES = (
     "zz_mf_itemset_two",
     "expanding_mfe_sql",
     "zz_crosstab_role_tool",
+)
+QUERIES = SQL_TIER + (
     "zz_mfe_kernel_cross_check",
     "mfe_kernel_dist_check",
     "mfe_kernel_summary_check",
@@ -40,7 +45,7 @@ SCHEMA = (
 )
 
 
-def _planted() -> pd.DataFrame:
+def _planted(null_role: bool = False) -> pd.DataFrame:
     t0 = pd.Timestamp("2025-01-01 00:00:00")
     rows = [
         # one role; tools exec, null and the literal 'NONE'
@@ -58,23 +63,25 @@ def _planted() -> pd.DataFrame:
         ("c3", "user", "thanks a lot", None),
         ("c3", "assistant", "ok", "write"),
     ]
+    if null_role:
+        rows += [("c3", None, "note", "write"), ("c3", None, "more notes", None)]
     pdf = pd.DataFrame(rows, columns=["conv_id", "role", "text", "tool"])
     pdf.insert(1, "turn_idx", pdf.groupby("conv_id").cumcount().astype("int32"))
     pdf["ts"] = t0 + pd.to_timedelta(pdf.index * 37, unit="s")
     return pdf
 
 
-@pytest.fixture(scope="module")
-def planted():
-    return _planted()
-
-
 @pytest.fixture
-def spark_planted(spark, planted, monkeypatch):
-    df = spark.createDataFrame(planted, SCHEMA)
-    for mod in (base, conv_info, sources):
-        monkeypatch.setattr(mod, "transcripts", lambda spark, sf_dir: df)
-    return spark
+def plant(spark, monkeypatch):
+    """Serve a planted frame as every module's transcript table."""
+
+    def serve(planted: pd.DataFrame) -> pd.DataFrame:
+        df = spark.createDataFrame(planted, SCHEMA)
+        for mod in (base, conv_info, sources):
+            monkeypatch.setattr(mod, "transcripts", lambda spark, sf_dir: df)
+        return planted
+
+    return serve
 
 
 def _oracle(planted: pd.DataFrame, sql: str) -> pd.DataFrame:
@@ -89,21 +96,32 @@ def _oracle(planted: pd.DataFrame, sql: str) -> pd.DataFrame:
 
 
 @pytest.mark.parametrize("name", QUERIES)
-def test_degenerate_class_tables_match_oracle(spark_planted, planted, name):
-    got = CATALOG[name].fn(spark_planted, "planted").toPandas()
+def test_degenerate_class_tables_match_oracle(spark, plant, name):
+    planted = plant(_planted(null_role=name in SQL_TIER))
+    got = CATALOG[name].fn(spark, "planted").toPandas()
     assert_frames_match(got, _oracle(planted, CATALOG[name].oracle), name)
 
 
-def test_degenerate_class_values(spark_planted, planted):
+def test_degenerate_class_values(spark, plant):
     """c1/c2 are NULL for a one-class conversation (one role, or one
     turn), and nr_tool counts the literal 'NONE' tool but not a null."""
-    cb = CATALOG["zz_mf_class_balance"].fn(spark_planted, "p").toPandas()
+    plant(_planted())
+    cb = CATALOG["zz_mf_class_balance"].fn(spark, "p").toPandas()
     cb = cb.set_index("conv_id")
     assert cb.loc[["c1", "c2"], ["c1", "c2"]].isna().all().all()
     assert cb.loc["c3", ["c1", "c2"]].notna().all()
-    general = CATALOG["mf_general"].fn(spark_planted, "p").toPandas()
+    general = CATALOG["mf_general"].fn(spark, "p").toPandas()
     assert general.set_index("conv_id")["nr_tool"].to_dict() == {
         "c1": 2,
         "c2": 0,
         "c3": 2,
     }
+
+
+def test_null_role_pairs_use_their_joint_count(spark, plant):
+    """A null role is one item of the XOR supports: c3's (null, write)
+    pair has |A| = 2, |B| = 3 and |A and B| = 1 of 8 rows."""
+    plant(_planted(null_role=True))
+    two = CATALOG["zz_mf_itemset_two"].fn(spark, "p").toPandas()
+    pair = two[(two.conv_id == "c3") & two.item_a.isna() & (two.item_b == "write")]
+    assert pair.support_xor.tolist() == [round((2 + 3 - 2 * 1) / 8, 6)]
