@@ -16,8 +16,9 @@ engine finishes its moments here, each piece written once.
 One degenerate-input rule: sd needs n >= 2; skewness, kurtosis and
 correlation need m2 > 0. Undefined values are NaN (numpy, Python) or
 NULL (Spark, DuckDB), never a division-by-zero error under ANSI mode.
-An ``Engine`` (``PY``, ``COL``, ``SQL``) supplies the non-arithmetic
-pieces; ``Sql`` is SQL text that composes with the operators like a
+An ``Engine`` (``PY``, ``COL``, ``SQL``, and ``NP(starts)`` for numpy
+arrays holding many conversations as row segments) supplies the
+non-arithmetic pieces; ``Sql`` is SQL text that composes with the operators like a
 Column, fully parenthesised, so an oracle evaluates Spark's float tree.
 """
 
@@ -44,26 +45,30 @@ def central_moments(
     return tuple((d0**p).mean(axis=1) for p in orders)
 
 
-def _per_column(n: float, m2: np.ndarray, mk: np.ndarray, tail) -> np.ndarray:
+def _per_column(n, m2: np.ndarray, mk: np.ndarray, tail) -> np.ndarray:
     # scalar tail per element: numpy's vector pow ufunc (SIMD) rounds
-    # m2**1.5 1 ulp away from the scalar np.float64 pow
-    if n < 2:
-        return np.full(np.shape(m2), np.nan)
+    # m2**1.5 1 ulp away from the scalar np.float64 pow. ``n`` is one
+    # sample size or one per element (a segment's length).
+    shape = np.shape(m2)
+    ns = np.broadcast_to(n, shape).ravel().tolist()
     return np.array(
-        [math.nan if a == 0 else float(tail(a, b)) for a, b in zip(m2, mk)]
-    )
+        [
+            math.nan if k < 2 or a == 0 else float(tail(k, a, b))
+            for k, a, b in zip(ns, np.ravel(m2), np.ravel(mk))
+        ]
+    ).reshape(shape)
 
 
-def skewness(n: float, m2: np.ndarray, m3: np.ndarray) -> np.ndarray:
+def skewness(n, m2: np.ndarray, m3: np.ndarray) -> np.ndarray:
     """e1071 type-3 skewness per column; NaN where n < 2 or m2 == 0."""
-    return _per_column(n, m2, m3, lambda a, b: b / a**1.5 * ((n - 1) / n) ** 1.5)
+    return _per_column(n, m2, m3, lambda n, a, b: b / a**1.5 * ((n - 1) / n) ** 1.5)
 
 
-def kurtosis(n: float, m2: np.ndarray, m4: np.ndarray) -> np.ndarray:
+def kurtosis(n, m2: np.ndarray, m4: np.ndarray) -> np.ndarray:
     """e1071 type-3 kurtosis per column; NaN where n < 2 or m2 == 0.
     ``- 3.0 + 3.0`` is g2 = m4/m2^2 - 3, then g2 + 3, in float order."""
     return _per_column(
-        n, m2, m4, lambda a, b: (b / a**2 - 3.0 + 3.0) * (1.0 - 1.0 / n) ** 2 - 3.0
+        n, m2, m4, lambda n, a, b: (b / a**2 - 3.0 + 3.0) * (1.0 - 1.0 / n) ** 2 - 3.0
     )
 
 
@@ -162,6 +167,126 @@ SQL = Engine(
     exact_int=lambda x: Sql(f"CAST({x} AS HUGEINT)"),
     to_double=lambda x: Sql(f"CAST({x} AS DOUBLE)"),
 )
+
+
+
+_PW_BLOCK = 128  # numpy's pairwise-summation block (PW_BLOCKSIZE)
+
+
+def _pw_leaf(x: np.ndarray, lo: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """numpy's summation of x[..., lo:lo + n] for n <= 128: in order
+    below 8 elements, else 8 strided accumulators combined as a tree,
+    then the last n % 8 elements in order. Padding adds exact zeros."""
+    out = np.zeros(x.shape[:-1] + lo.shape)
+    short = n < 8
+    if short.any():
+        ls, ns = lo[short], n[short]
+        acc = np.zeros(x.shape[:-1] + ls.shape)
+        for j in range(int(ns.max())):
+            acc = acc + np.where(j < ns, x[..., np.minimum(ls + j, x.shape[-1] - 1)], 0.0)
+        out[..., short] = acc
+    if (~short).any():
+        ll, nl = lo[~short], n[~short]
+        n8 = nl - nl % 8
+        idx = ll[:, None] + np.arange(8)
+        acc = x[..., idx]
+        for i in range(8, int(n8.max()), 8):
+            ok = (i < n8)[:, None]
+            acc = acc + np.where(ok, x[..., np.minimum(idx + i, x.shape[-1] - 1)], 0.0)
+        r = acc[..., 0] + acc[..., 1]
+        r = (r + (acc[..., 2] + acc[..., 3])) + (
+            (acc[..., 4] + acc[..., 5]) + (acc[..., 6] + acc[..., 7])
+        )
+        for t in range(7):
+            ok = t < nl % 8
+            r = r + np.where(ok, x[..., np.minimum(ll + n8 + t, x.shape[-1] - 1)], 0.0)
+        out[..., ~short] = r
+    return out
+
+
+def _pw(x: np.ndarray, lo: np.ndarray, n: np.ndarray) -> np.ndarray:
+    big = n > _PW_BLOCK
+    if not big.any():
+        return _pw_leaf(x, lo, n)
+    out = np.empty(x.shape[:-1] + lo.shape)
+    out[..., ~big] = _pw_leaf(x, lo[~big], n[~big])
+    nb = n[big]
+    half = nb // 2
+    half -= half % 8
+    out[..., big] = _pw(x, lo[big], half) + _pw(x, lo[big] + half, nb - half)
+    return out
+
+
+def range_sum(x: np.ndarray, lo: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """:func:`seg_sum` of the ranges ``x[..., lo:lo + n]`` (n >= 1)."""
+    return _pw(np.asarray(x, dtype=float), np.asarray(lo), np.asarray(n))
+
+
+def seg_sum(x: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Sum of each segment ``x[..., starts[i]:starts[i + 1]]`` in
+    numpy's own pairwise order, so every value is bit-identical to
+    ``ndarray.sum`` of that segment alone (``np.add.reduceat`` is not)
+    and independent of where the segment sits in the batch."""
+    return _pw(np.asarray(x, dtype=float), starts[:-1], np.diff(starts))
+
+
+def NP(starts: np.ndarray) -> Engine:
+    """The segmented numpy engine: arrays whose last axis holds many
+    conversations as row segments ``starts[i]:starts[i + 1]`` (every
+    segment non-empty). ``sum`` / ``count`` / ``max`` reduce each
+    segment; ``sum`` in numpy's pairwise order (:func:`seg_sum`)."""
+    lo = starts[:-1]
+    lens = np.diff(starts)
+
+    def when(ok, value):
+        return np.where(ok, value(), np.nan)
+
+    return Engine(
+        sqrt=np.sqrt,
+        when=when,
+        nonzero=lambda x: np.where(x == 0, np.nan, x),
+        pow=np.power,
+        abs=np.abs,
+        lit=lambda x: x,
+        ln=np.log,
+        log2=np.log2,
+        sum=lambda x: seg_sum(x, starts),
+        count=lambda x: lens if isinstance(x, str) else seg_sum(~np.isnan(x), starts),
+        max=lambda x: np.maximum.reduceat(x, lo, axis=-1),
+        to_double=lambda x: np.asarray(x, dtype=float),
+    )
+
+
+def seg_sort(x: np.ndarray, seg: np.ndarray) -> np.ndarray:
+    """``x`` sorted within each segment (``seg``: the non-decreasing
+    segment id of every element); NaN sorts last, as in ``np.sort``."""
+    return x[np.lexsort((x, seg))]
+
+
+def seg_quantile(s: np.ndarray, lo, lens, q) -> np.ndarray:
+    """numpy's ``linear`` quantile ``q`` of the pre-sorted segments
+    ``s[lo:lo + lens]`` (broadcast over ``lo``, ``lens`` and ``q``):
+    np.quantile's index arithmetic and its two-sided ``_lerp``, so each
+    value is bit-identical to ``np.quantile`` of the segment alone."""
+    virtual = (lens - 1) * np.asarray(q, dtype=float)
+    prev = np.floor(virtual)
+    above = virtual >= lens - 1
+    prev = np.where(above, -1.0, prev)
+    last = lo + lens - 1
+    a = s[np.where(above, last, lo + prev.astype(np.intp))]
+    b = s[np.where(above, last, lo + prev.astype(np.intp) + 1)]
+    t = virtual - prev
+    diff = b - a
+    return np.where(t >= 0.5, b - diff * (1 - t), a + diff * t)
+
+
+def seg_median(s: np.ndarray, lo, lens) -> np.ndarray:
+    """``np.median`` of the pre-sorted segments: the middle value, or
+    the two middle values' sum halved."""
+    mid = lo + lens // 2
+    even = lens % 2 == 0
+    return np.where(even, (s[np.where(even, mid - 1, mid)] + s[mid]) / 2, s[mid])
+
 
 # ------------------------------------ central path, Spark Column / SQL
 

@@ -119,6 +119,65 @@ SUMMARY_REGISTRY = build_summary_registry()
 DEFAULT_SUMMARIES = ("mean", "sd")
 
 
+# Row-wise forms: on a C-contiguous (m, L) stack each equals the 1-D
+# summary of every row bit for bit (numpy reduces the last axis of each
+# row with the 1-D summation order), so one call summarizes m outputs.
+_ROWWISE: dict[str, Callable[[np.ndarray], np.ndarray]] = {
+    "mean": lambda X: X.mean(axis=1),
+    "sd": lambda X: X.std(axis=1, ddof=1) if X.shape[1] > 1 else np.full(len(X), np.nan),
+    "var": lambda X: X.var(axis=1, ddof=1) if X.shape[1] > 1 else np.full(len(X), np.nan),
+    "count": lambda X: np.full(len(X), float(X.shape[1])),
+    "max": lambda X: X.max(axis=1),
+    "min": lambda X: X.min(axis=1),
+    "sum": lambda X: X.sum(axis=1),
+    "range": lambda X: X.max(axis=1) - X.min(axis=1),
+}
+
+
+def summary_plan(
+    summaries: tuple[str, ...] = DEFAULT_SUMMARIES,
+    summary_kwargs: "dict[str, dict] | None" = None,
+) -> tuple:
+    """Resolve the summaries once per configuration: (name, function,
+    kwargs, row-wise form or None) each. A nan-variant inherits its
+    base summary's kwargs; a summary given kwargs, or a nan-variant,
+    runs once per output."""
+    skw = summary_kwargs or {}
+    plan = []
+    for s in summaries:
+        kw = skw.get(s, skw.get(s.removeprefix("nan"), {}))
+        plan.append((s, SUMMARY_REGISTRY[s], kw, None if kw else _ROWWISE.get(s)))
+    return tuple(plan)
+
+
+def summarize_rows(X: np.ndarray, plan: tuple) -> list[tuple[str, np.ndarray, "np.ndarray | None"]]:
+    """Every summary of every row of the (m, L) stack ``X`` of m
+    equal-size measure outputs: (suffix, (m,) values, rows that have
+    this suffix or None for all). A multi-valued summary gives the
+    suffixes ``s.i``."""
+    X = np.ascontiguousarray(X, dtype=float)
+    m = len(X)
+    out = []
+    for s, fn, kw, rowwise in plan:
+        if rowwise is not None and X.shape[1]:
+            out.append((s, rowwise(X), None))
+            continue
+        cols: dict[str, np.ndarray] = {}
+        has: dict[str, np.ndarray] = {}
+        for r in range(m):
+            res = fn(X[r], **kw)
+            if np.ndim(res) == 0:
+                keys, vals = [s], [float(res)]
+            else:
+                vals = np.asarray(res, dtype=float)
+                keys = [f"{s}.{i}" for i in range(len(vals))]
+            for k, v in zip(keys, vals):
+                cols.setdefault(k, np.full(m, np.nan))[r] = v
+                has.setdefault(k, np.zeros(m, dtype=bool))[r] = True
+        out.extend((k, v, None if has[k].all() else has[k]) for k, v in cols.items())
+    return out
+
+
 def summarize(
     name: str,
     values: "float | np.ndarray",
@@ -139,14 +198,5 @@ def summarize(
     arr = np.atleast_1d(np.asarray(values, dtype=float))
     if arr.size == 1 and np.ndim(values) == 0:
         return {name: float(arr[0])}
-    skw = summary_kwargs or {}
-    out: dict[str, float] = {}
-    for s in summaries:
-        kw = skw.get(s, skw.get(s.removeprefix("nan"), {}))
-        res = SUMMARY_REGISTRY[s](arr, **kw)
-        if np.ndim(res) == 0:
-            out[f"{name}.{s}"] = float(res)
-        else:
-            for i, x in enumerate(np.asarray(res, dtype=float)):
-                out[f"{name}.{s}.{i}"] = float(x)
-    return out
+    rows = summarize_rows(arr.ravel()[None], summary_plan(summaries, summary_kwargs))
+    return {f"{name}.{k}": float(v[0]) for k, v, _ in rows}

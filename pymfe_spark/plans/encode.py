@@ -26,25 +26,48 @@ from __future__ import annotations
 
 import numpy as np
 
+from pymfe_spark.functions.moments import seg_quantile, seg_sort
+
 VALID_TRANSFORM_CAT = ("gray", "one-hot", "one-hot-full")
 
 
 def equal_freq_bins(
-    v: np.ndarray, num_bins: int | None = None, tol: float = 1e-8
+    v: np.ndarray,
+    num_bins: int | None = None,
+    tol: float = 1e-8,
+    starts: np.ndarray | None = None,
 ) -> np.ndarray:
     """Equal-frequency discretization of one column, reference-exact
     (_equal_freq_discretization, _internal.py:1550-1624): default bin
     count floor(n^(1/3)); divider set = quantiles at
     linspace(0,1,k+1)[1:], near-duplicate dividers dropped (tol), then
-    digitize(right=True)."""
-    n = v.size
-    k = num_bins or max(int(np.floor(n ** (1.0 / 3.0) + 1e-9)), 1)
-    if k <= 1:
-        return np.zeros(n, dtype=np.int64)
-    divs = np.quantile(v, np.linspace(0, 1, k + 1)[1:])
-    divs = divs[np.append(True, np.diff(divs) > tol)]
-    divs = np.unique(divs)
-    return np.digitize(v, divs, right=True)
+    digitize(right=True). With segment offsets ``starts`` every
+    segment ``v[starts[i]:starts[i + 1]]`` is binned on its own, in
+    one pass (one sort) for all of them."""
+    v = np.asarray(v, dtype=float)
+    if starts is None:
+        starts = np.array([0, v.size])
+    lens = np.diff(starts)
+    out = np.zeros(v.size, dtype=np.int64)
+    ks = {
+        n: num_bins or max(int(np.floor(n ** (1.0 / 3.0) + 1e-9)), 1)
+        for n in np.unique(lens).tolist()
+    }
+    k = np.array([ks[n] for n in lens.tolist()], dtype=np.int64)
+    if not len(k) or k.max() <= 1:
+        return out
+    seg = np.repeat(np.arange(len(lens)), lens)
+    s = seg_sort(v, seg)
+    divs = np.full((len(lens), int(k.max())), np.inf)
+    for kk in np.unique(k[k > 1]).tolist():
+        segs = np.flatnonzero(k == kk)
+        q = np.linspace(0, 1, kk + 1)[1:]
+        d = seg_quantile(s, starts[segs][:, None], lens[segs][:, None], q[None, :])
+        keep = np.ones(d.shape, dtype=bool)
+        keep[:, 1:] = np.diff(d, axis=1) > tol
+        divs[segs, :kk] = np.where(keep, d, np.inf)
+    # digitize(right=True) on increasing dividers = #dividers below v
+    return (divs[seg] < v[:, None]).sum(axis=1)
 
 
 def transform_num(

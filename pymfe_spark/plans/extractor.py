@@ -12,8 +12,14 @@ Physical plan:
     scan -> derive turn features (single conv window)
          -> RANGE exchange on conv_id
          -> sort within partitions (turn_idx)
-         -> Arrow kernel (numpy measure registry + summary sigma)
+         -> Arrow kernel, ONE call per Arrow batch over the
+            conversations it completes, as row segments (the 47
+            segment-form measures and their summaries run once per
+            batch; nr_norm and the other groups once per conversation)
          -> long rows (conv_id, mtf_name, mtf_val)
+
+extract_expanding and extract_with_confidence pass their prefixes and
+resamples to the same call as more segments.
 
 Why a range exchange: the upstream lag-window already hash-clusters by
 conv_id, so an explicit hash repartition is pruned as redundant and the
@@ -64,16 +70,24 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pymfe_spark.functions.summary import DEFAULT_SUMMARIES, summarize
+from pymfe_spark.functions.summary import DEFAULT_SUMMARIES, summarize_rows, summary_plan
 from pymfe_spark.plans.encode import VALID_TRANSFORM_CAT, transform_cat
-from pymfe_spark.plans.measures import GROUPS, MEASURES, ConvBatch, all_groups
+from pymfe_spark.plans.measures import (
+    GROUPS,
+    MEASURES,
+    NULL_ROLE,
+    ConvBatch,
+    Ragged,
+    all_groups,
+)
 
 # module-level so deserialized kernels on executors see the full
 # registry (workers import this module, not the driver's memory)
 import pymfe_spark.plans.measures_ml  # noqa: E402,F401
 from pymfe_spark.plans.postprocess import (  # noqa: E402
     add_relative_landmarking,
-    bootstrap_rows,
+    bootstrap_indices,
+    bootstrap_intervals,
 )
 
 HEAVY_GROUPS = {"clustering", "concept", "complexity"}  # O(n^2) kernels
@@ -212,32 +226,35 @@ class KernelConfig:
         return cfg
 
 
-def _batch_from_arrays(
-    text_len: np.ndarray,
-    ts_delta: np.ndarray,
-    turn_idx: np.ndarray,
-    role: np.ndarray,
-    tool: np.ndarray,
-    cfg: KernelConfig,
-) -> ConvBatch:
-    """Assemble the N / C / y views from one conversation's column
-    arrays — the _set_data_numeric/_set_data_categoric analogue
-    (mfe.py:740-902): N = [text_len, ts_delta, turn_idx] + optional
-    transform_cat encodings of (role, tool), then rescale (encode
-    BEFORE rescale, as the reference hstacks then rescales,
-    mfe.py:877-900); C = [role, tool, equal-freq len_bin]."""
+def _views(arrays: tuple, starts: np.ndarray | None, cfg: KernelConfig) -> ConvBatch:
+    """Assemble the N / C / y views of conversations given as column
+    arrays with segment offsets ``starts`` (None = one conversation) —
+    the _set_data_numeric/_set_data_categoric analogue (mfe.py:740-902):
+    N = [text_len, ts_delta, turn_idx] + optional transform_cat
+    encodings of (role, tool), then rescale (encode BEFORE rescale, as
+    the reference hstacks then rescales, mfe.py:877-900); C = [role,
+    tool, equal-freq len_bin], the bins computed per conversation.
+    transform_cat and rescale are per-conversation transforms: they
+    take one conversation at a time."""
+    text_len, ts_delta, turn_idx, role, tool = arrays
     N = np.column_stack([text_len, ts_delta, turn_idx])
     enc = transform_cat(np.column_stack([role, tool]), cfg.transform_cat)
     if enc is not None:
         N = np.hstack([N, enc])
     N = rescale_numeric(N, cfg.rescale)
     if cfg.transform_num:
-        len_bin = _equal_freq_bins(text_len, cfg.num_bins).astype(object)
+        len_bin = _equal_freq_bins(text_len, cfg.num_bins, starts=starts).astype(object)
         C = np.column_stack([role, tool, len_bin])
     else:
         C = np.column_stack([role, tool])
     return ConvBatch(
-        N=N, C=C, y=role, orig_cat=2, orig_num=3, config=cfg.batch_config()
+        N=N,
+        C=C,
+        y=role,
+        orig_cat=2,
+        orig_num=3,
+        config=cfg.batch_config(),
+        starts=starts,
     )
 
 
@@ -254,13 +271,15 @@ def _conv_arrays(pdf: pd.DataFrame) -> tuple:
     """The kernel's five column arrays (text_len, ts_delta, turn_idx,
     role, tool) from a turns frame — the one pandas -> numpy
     conversion: a missing ``ts_delta_s`` (a conversation's first turn
-    has no lag) becomes 0 and a null ``tool`` becomes ``"NONE"``."""
+    has no lag) becomes 0, a null ``tool`` becomes ``"NONE"`` and a
+    null ``role`` becomes :data:`NULL_ROLE`, one more class."""
     tool = pdf["tool"].to_numpy(dtype=object)
+    role = pdf["role"].to_numpy(dtype=object)
     return (
         pdf["text_len"].to_numpy(dtype=float),
         np.nan_to_num(pdf["ts_delta_s"].to_numpy(dtype=float), nan=0.0),
         pdf["turn_idx"].to_numpy(dtype=float),
-        pdf["role"].to_numpy(dtype=object),
+        np.where(pd.isna(role), NULL_ROLE, role),
         np.where(pd.isna(tool), "NONE", tool),
     )
 
@@ -273,193 +292,351 @@ def build_batch(
     """Assemble N / C / y views from one conversation's turns frame."""
     if not assume_sorted:
         pdf = pdf.sort_values("turn_idx")
-    return _batch_from_arrays(*_conv_arrays(pdf), cfg=cfg or KernelConfig())
+    return _views(_conv_arrays(pdf), None, cfg or KernelConfig())
 
 
-def _measure_rows(
-    batch: ConvBatch,
-    pdf_slice: tuple,
+@dataclass
+class Table:
+    """Long measure rows of a batch's segments: ``counts[s]`` rows for
+    segment s, in segment order, names sorted within a segment."""
+
+    counts: np.ndarray
+    names: np.ndarray
+    vals: np.ndarray
+    times: np.ndarray | None = None
+
+    def rows(self) -> list[dict[str, float]]:
+        """One {name: value} dict per segment."""
+        ends = np.cumsum(self.counts)
+        return [
+            dict(zip(self.names[e - c : e].tolist(), self.vals[e - c : e].tolist()))
+            for c, e in zip(self.counts, ends)
+        ]
+
+
+def _try(fn, b):
+    try:
+        return fn(b)
+    except Exception:
+        return float("nan")
+
+
+def _as_out(vals: list):
+    """One per-conversation result per segment -> a segment output."""
+    if all(np.ndim(v) == 0 for v in vals):
+        return np.array(vals, dtype=float)
+    return Ragged.of(vals)
+
+
+def _summarized(name: str, out, plan: tuple) -> list[tuple[str, np.ndarray, np.ndarray | None]]:
+    """(row name, (S,) values, segments having it or None) of one
+    measure's segment output: a scalar passes through, a vector is
+    summarized — one row-wise call per output size."""
+    if not isinstance(out, Ragged):
+        return [(name, np.asarray(out, dtype=float), None)]
+    S = len(out.offsets) - 1
+    lens = np.diff(out.offsets)
+    vec = np.ones(S, dtype=bool) if out.scalar is None else ~out.scalar
+    res: dict[str, list] = {}
+    if out.scalar is not None:
+        res[name] = [out.flat[out.offsets[:-1]], out.scalar.copy()]
+    for L in np.unique(lens[vec]):
+        segs = np.flatnonzero(vec & (lens == L))
+        X = out.flat[out.offsets[segs][:, None] + np.arange(L)]
+        for key, v, has in summarize_rows(X, plan):
+            full = res.setdefault(f"{name}.{key}", [np.full(S, np.nan), np.zeros(S, dtype=bool)])
+            full[0][segs] = v
+            full[1][segs] = True if has is None else has
+    return [(k, v, None if has.all() else has) for k, (v, has) in res.items()]
+
+
+def _measure_table(
+    B: ConvBatch,
     measure_names: tuple[str, ...],
     cfg: KernelConfig,
-) -> "tuple[dict[str, float], dict[str, float] | None]":
-    """All (name -> value) rows for one conversation batch, plus the
-    per-row time map when cfg.measure_time is set (mfe.py:145-181:
-    ``total`` = the measure call's wall time on every one of its output
-    rows; ``avg`` divides by the measure's raw cardinality — the size
-    of its un-summarized return; ``*_summ`` adds the summarization time
-    to the measure's FIRST output row only, others 0-padded, exactly
-    the reference's list-consistency rule)."""
-    capped: ConvBatch | None = None
-    cap = cfg.max_kernel_turns
-    rows: dict[str, float] = {}
-    times: dict[str, float] | None = (
-        {} if cfg.measure_time is not None else None
-    )
-    # degenerate batches (single turn, constant columns) yield NaN,
-    # not warnings/task failures (_internal.py:568-621). One errstate /
-    # warnings context around the whole loop — entering them per
-    # measure cost ~120 seterr calls per conversation.
+    arrays: tuple | None = None,
+) -> Table:
+    """All measure rows of the conversations in ``B``: each segment
+    form once over the whole batch (re-run one segment at a time if it
+    raises, so only the failing conversation gets NaN); every other
+    measure once per conversation on a row view, heavy groups on the
+    first ``max_kernel_turns`` turns (rebuilt from ``arrays``).
+
+    Under cfg.measure_time (one conversation per batch) the time map
+    follows mfe.py:145-181: ``total`` = the measure call's wall time on
+    every one of its output rows; ``avg`` divides by the measure's raw
+    cardinality — the size of its un-summarized return; ``*_summ`` adds
+    the summarization time to the measure's FIRST output row only,
+    others 0-padded, exactly the reference's list-consistency rule."""
+    S, cap, plan = B.S, cfg.max_kernel_turns, summary_plan(cfg.summaries, cfg.summary_kwargs)
+    lens = B.lens()
+    singles: list[ConvBatch] = []
+    capped: dict[int, ConvBatch] = {}
+
+    def one(s: int, heavy: bool) -> ConvBatch:
+        if not singles:
+            singles.extend(B.segment(i) for i in range(S))
+        if heavy and lens[s] > cap:
+            if s not in capped:
+                a = B.bounds[s]
+                capped[s] = _views(tuple(x[a : a + cap] for x in arrays), None, cfg)
+            return capped[s]
+        return singles[s]
+
+    cols: list[tuple[str, np.ndarray, np.ndarray | None]] = []
+    times: dict[str, float] = {}
+    clock = _time.perf_counter
+    # degenerate conversations (single turn, constant columns) yield
+    # NaN, not warnings/task failures (_internal.py:568-621)
     with np.errstate(all="ignore"), warnings.catch_warnings():
         warnings.simplefilter("ignore", RuntimeWarning)
         for name in measure_names:
             mdef = MEASURES[name]
-            b = batch
-            if mdef.group in HEAVY_GROUPS and batch.N.shape[0] > cap:
-                if capped is None:
-                    capped = _batch_from_arrays(
-                        *(a[:cap] for a in pdf_slice), cfg=cfg
-                    )
-                b = capped
-            t0 = _time.perf_counter()
-            try:
-                val = mdef.fn(b)
-            except Exception:
-                val = float("nan")
-            t_measure = _time.perf_counter() - t0
-            t0 = _time.perf_counter()
-            new = summarize(name, val, cfg.summaries, cfg.summary_kwargs)
-            t_summ = _time.perf_counter() - t0
-            rows.update(new)
-            if times is not None:
-                card = max(int(np.asarray(val).size), 1)
-                base = (
-                    t_measure
-                    if cfg.measure_time.startswith("total")
-                    else t_measure / card
-                )
-                extra = (
-                    t_summ if cfg.measure_time.endswith("_summ") else 0.0
-                )
-                for i, key in enumerate(sorted(new)):
+            t0 = clock()
+            out = None
+            if mdef.seg is not None:
+                try:
+                    out = mdef.seg(B)
+                except Exception:
+                    out = None
+            if out is None:
+                heavy = mdef.group in HEAVY_GROUPS
+                out = _as_out([_try(mdef.fn, one(s, heavy)) for s in range(S)])
+            t_measure = clock() - t0
+            t0 = clock()
+            new = _summarized(name, out, plan)
+            t_summ = clock() - t0
+            cols.extend(new)
+            if cfg.measure_time is not None:
+                card = max(int(out.flat.size if isinstance(out, Ragged) else 1), 1)
+                base = t_measure if cfg.measure_time.startswith("total") else t_measure / card
+                extra = t_summ if cfg.measure_time.endswith("_summ") else 0.0
+                for i, key in enumerate(sorted(k for k, _, _ in new)):
                     times[key] = base + (extra if i == 0 else 0.0)
-    return rows, times
+    cols.sort(key=lambda c: c[0])  # deterministic output order (mfe.py:1340-1346)
+    names = np.array([c[0] for c in cols], dtype=object)
+    V = np.column_stack([c[1] for c in cols]) if cols else np.zeros((S, 0))
+    P = np.ones(V.shape, dtype=bool)
+    for j, (_, _, has) in enumerate(cols):
+        if has is not None:
+            P[:, j] = has
+    T = None
+    if cfg.measure_time is not None:
+        T = np.broadcast_to([times.get(n, 0.0) for n in names], V.shape)[P]
+    return Table(P.sum(axis=1), np.broadcast_to(names, V.shape)[P], V[P], T)
 
 
-def _conv_rows(arrays: tuple, measure_names: tuple[str, ...], cfg: KernelConfig):
-    """_measure_rows over one conversation's column arrays."""
-    return _measure_rows(
-        _batch_from_arrays(*arrays, cfg=cfg), arrays, measure_names, cfg
-    )
+# rows per kernel call: bounds the views of the expanding prefixes and
+# bootstrap resamples, which multiply a conversation's rows
+ROW_BUDGET = 1 << 16
 
 
-def _extract_per_conv(
+def _table(
+    arrays: tuple, starts: np.ndarray, measure_names: tuple[str, ...], cfg: KernelConfig
+) -> Table:
+    """:func:`_measure_table` over conversations given as column arrays
+    and segment offsets: one call per at most ROW_BUDGET rows, or one
+    call per conversation for configurations whose views or timings are
+    per conversation (transform_cat, rescale, measure_time)."""
+    per_conv = cfg.measure_time is not None or cfg.rescale is not None or cfg.transform_cat is not None
+    cuts = [0]
+    for s in range(1, len(starts) - 1):
+        if per_conv or starts[s] - starts[cuts[-1]] >= ROW_BUDGET:
+            cuts.append(s)
+    cuts.append(len(starts) - 1)
+    parts = []
+    for c0, c1 in zip(cuts[:-1], cuts[1:]):
+        a, e = starts[c0], starts[c1]
+        sub = tuple(x[a:e] for x in arrays)
+        st = starts[c0 : c1 + 1] - a
+        parts.append(_measure_table(_views(sub, st, cfg), measure_names, cfg, sub))
+    if len(parts) == 1:
+        return parts[0]
+    cat = lambda f: np.concatenate([getattr(p, f) for p in parts])  # noqa: E731
+    return Table(cat("counts"), cat("names"), cat("vals"), None if parts[0].times is None else cat("times"))
+
+
+def _frame(conv_ids, table: Table, **extra) -> dict:
+    """The output columns of a table whose segments are ``conv_ids``."""
+    cols = {"conv_id": np.repeat(np.asarray(conv_ids, dtype=object), table.counts)}
+    for k, v in extra.items():
+        cols[k] = np.repeat(v, table.counts)
+    cols["mtf_name"] = table.names
+    cols["mtf_val"] = table.vals
+    if table.times is not None:
+        cols["mtf_time"] = table.times
+    return cols
+
+
+def _extract_per_batch(
     measure_names: tuple[str, ...], cfg: KernelConfig, relative: bool = False
 ):
-    """extract(): the sorted measure rows, plus ``mtf_time`` under
-    measure_time and the ``.relative`` ranks for the pseudo-group."""
+    """extract(): the sorted measure rows of every conversation, plus
+    ``mtf_time`` under measure_time and the ``.relative`` ranks for the
+    pseudo-group."""
 
-    def per_conv(conv_id, arrays):
-        rows, times = _conv_rows(arrays, measure_names, cfg)
+    def per_batch(conv_ids, arrays, edges):
+        t = _table(arrays, edges, measure_names, cfg)
         if relative:
-            rows = add_relative_landmarking(rows)
-        names = sorted(rows)  # deterministic output order (mfe.py:1340-1346)
-        cols = {"mtf_name": names, "mtf_val": [rows[n] for n in names]}
-        if times is not None:
-            # postprocess rows carry no measure time: 0-pad
-            cols["mtf_time"] = [times.get(n, 0.0) for n in names]
-        return cols
+            rows = [add_relative_landmarking(r) for r in t.rows()]
+            times = None
+            if t.times is not None:
+                # postprocess rows carry no measure time: 0-pad
+                spent = Table(t.counts, t.names, t.times).rows()
+                times = [[m.get(n, 0.0) for n in sorted(r)] for m, r in zip(spent, rows)]
+            t = Table(
+                np.array([len(r) for r in rows]),
+                np.array([n for r in rows for n in sorted(r)], dtype=object),
+                np.array([r[n] for r in rows for n in sorted(r)], dtype=float),
+                None if times is None else np.array([x for ts in times for x in ts]),
+            )
+        return _frame(conv_ids, t)
 
-    return per_conv
+    return per_batch
 
 
-def _expanding_per_conv(
+def _prefixes(arrays: tuple, edges: np.ndarray, stride: int, min_turns: int):
+    """The expanding-window segments of every conversation: each
+    ``stride``-th prefix end from ``min_turns`` plus the final turn.
+    Returns (row index of every segment row, segment offsets,
+    conversation of each segment, last turn_idx of each segment)."""
+    idx, conv, turn = [], [], []
+    for c, (a, e) in enumerate(zip(edges[:-1], edges[1:])):
+        n = e - a
+        ends = list(range(min_turns, n, stride))
+        if not ends or ends[-1] != n:
+            ends.append(n)
+        for end in ends:
+            idx.append(np.arange(a, a + end))
+            conv.append(c)
+            turn.append(int(arrays[2][a + end - 1]))
+    starts = np.concatenate(([0], np.cumsum([len(i) for i in idx])))
+    return np.concatenate(idx), starts, np.array(conv), np.array(turn, dtype=np.int64)
+
+
+def _expanding_per_batch(
     measure_names: tuple[str, ...], cfg: KernelConfig, stride: int, min_turns: int
 ):
     """extract_expanding(): the full vector recomputed at every
     ``stride``-th prefix end from ``min_turns``, plus the final turn,
-    tagged with the prefix's last turn_idx."""
+    tagged with the prefix's last turn_idx — every prefix of every
+    conversation a segment of the same call."""
 
-    def per_conv(conv_id, arrays):
-        n = len(arrays[0])
-        ends = list(range(min_turns, n, stride))
-        if not ends or ends[-1] != n:
-            ends.append(n)
-        out_turn, out_name, out_val = [], [], []
-        for end in ends:
-            rows, _ = _conv_rows(
-                tuple(a[:end] for a in arrays), measure_names, cfg
-            )
-            names = sorted(rows)
-            out_turn.extend([int(arrays[2][end - 1])] * len(names))
-            out_name.extend(names)
-            out_val.extend(rows[nm] for nm in names)
-        return {"turn_idx": out_turn, "mtf_name": out_name, "mtf_val": out_val}
+    def per_batch(conv_ids, arrays, edges):
+        idx, starts, conv, turn = _prefixes(arrays, edges, stride, min_turns)
+        t = _table(tuple(a[idx] for a in arrays), starts, measure_names, cfg)
+        return _frame(np.asarray(conv_ids, dtype=object)[conv], t, turn_idx=turn)
 
-    return per_conv
+    return per_batch
 
 
-def _stream_batches(batches: "Iterable[pd.DataFrame]", per_conv):
+def _confidence_per_batch(
+    measure_names: tuple[str, ...],
+    cfg: KernelConfig,
+    sample_num: int,
+    confidence: float,
+    global_seed: int,
+):
+    """extract_with_confidence(): per conversation, the full-data rows
+    and ``sample_num`` seeded joint row-resamples (seeded per
+    conversation by conv_seed: independent of partitioning and Arrow
+    batching), all segments of one call, then empirical-bootstrap
+    intervals around the full-data estimate."""
+
+    def per_batch(conv_ids, arrays, edges):
+        idx, sizes = [], []
+        for cid, a, e in zip(conv_ids, edges[:-1], edges[1:]):
+            draws = [np.arange(e - a)] + bootstrap_indices(e - a, str(cid), sample_num, global_seed)
+            idx.extend(a + d for d in draws)
+            sizes.append(len(draws))
+        starts = np.concatenate(([0], np.cumsum([len(i) for i in idx])))
+        rows = _table(tuple(x[np.concatenate(idx)] for x in arrays), starts, measure_names, cfg).rows()
+        out: dict[str, list] = {k: [] for k in ("conv_id", "mtf_name", "mtf_val", "ci_low", "ci_high")}
+        pos = 0
+        for cid, k in zip(conv_ids, sizes):
+            res = bootstrap_intervals(rows[pos], rows[pos + 1 : pos + k], confidence)
+            pos += k
+            names = sorted(res)
+            out["conv_id"].extend([cid] * len(names))
+            out["mtf_name"].extend(names)
+            for col, i in (("mtf_val", 0), ("ci_low", 1), ("ci_high", 2)):
+                out[col].extend(res[n][i] for n in names)
+        return out
+
+    return per_batch
+
+
+def _stream_batches(batches: "Iterable[pd.DataFrame]", per_batch):
     """The stream's batch loop over turns frames sorted by (conv_id,
     turn_idx), where a conversation may span any number of batches:
-    ``per_conv`` runs once per complete conversation, in order, and each
-    batch yields one frame of the conversations it completed (the last
-    frame includes the final one, so one batch yields one frame).
+    ``per_batch(conv_ids, arrays, edges)`` runs once per batch on every
+    conversation that batch completes — conversation s is rows
+    ``edges[s]:edges[s + 1]`` of the five column arrays — and returns
+    their output columns (conv_id first) as {name: sequence}.
 
-    Carry-over is linear: a batch's last conversation is held back as
-    views, one per batch it spans, and concatenated ONCE when a later
-    batch starts another conversation or the stream ends."""
-    out: dict[str, list] = {}
-    held: list[tuple] = []  # one array-tuple chunk per batch spanned
-    held_id = None
+    A batch's conversations are processed when the next batch shows
+    where its last one ends (or the stream ends), so the final batch
+    yields one frame with the final conversation in it. Carry-over is
+    linear: the pending rows are held as one view per batch and
+    concatenated ONCE, when they are processed."""
+    chunks: list[tuple] = []  # array views of the pending rows
+    ids: list = []  # their conversations, in order (the last may be open)
+    sizes: list[int] = []
 
-    def finish(conv_id, chunks):
+    def flush() -> pd.DataFrame:
         arrays = (
             chunks[0]
             if len(chunks) == 1
             else tuple(np.concatenate(cols) for cols in zip(*chunks))
         )
-        cols = per_conv(conv_id, arrays)
-        n = len(next(iter(cols.values()), ()))
-        out.setdefault("conv_id", []).extend([conv_id] * n)
-        for k, v in cols.items():
-            out.setdefault(k, []).extend(v)
+        edges = np.zeros(len(sizes) + 1, dtype=np.int64)
+        np.cumsum(sizes, out=edges[1:])
+        frame = pd.DataFrame(per_batch(np.array(ids, dtype=object), arrays, edges))
+        chunks.clear()
+        ids.clear()
+        sizes.clear()
+        return frame
 
     for pdf in batches:
         if not len(pdf):
             continue
-        if out:
-            yield pd.DataFrame(out)
-            out.clear()
         conv = pdf["conv_id"].to_numpy()
         arrays = _conv_arrays(pdf)
         edges = np.concatenate(
             ([0], np.flatnonzero(conv[1:] != conv[:-1]) + 1, [len(conv)])
         )
         first = 0  # index into edges of the first conversation begun here
-        if held:
-            if conv[0] == held_id:
-                held.append(tuple(a[: edges[1]] for a in arrays))
-                if len(edges) == 2:
-                    continue  # spans this whole batch: still open
-                first = 1
-            # otherwise it ended exactly on the previous batch boundary
-            finish(held_id, held)
-        for s, e in zip(edges[first:-2], edges[first + 1 : -1]):
-            finish(conv[s], [tuple(a[s:e] for a in arrays)])
-        last = edges[-2]
-        held_id, held = conv[last], [tuple(a[last:] for a in arrays)]
-    if held:
-        finish(held_id, held)
-    if out:
-        yield pd.DataFrame(out)
+        if ids and conv[0] == ids[-1]:
+            chunks.append(tuple(a[: edges[1]] for a in arrays))
+            sizes[-1] += int(edges[1])
+            if len(edges) == 2:
+                continue  # spans this whole batch: still open
+            first = 1
+        if ids:
+            yield flush()
+        chunks.append(tuple(a[edges[first] :] for a in arrays))
+        ids.extend(conv[edges[first:-1]])
+        sizes.extend(np.diff(edges[first:]).tolist())
+    if ids:
+        yield flush()
 
 
-def conversation_stream(turns_df: DataFrame, per_conv, schema: str) -> DataFrame:
+def conversation_stream(turns_df: DataFrame, per_batch, schema: str) -> DataFrame:
     """The Arrow tier's one physical plan: RANGE-repartition the kernel
     columns by conv_id into :func:`kernel_partitions` partitions
     (explicit count — the kernel cost is Python CPU per conversation,
     which AQE's byte-based coalescing would serialize at small sizes),
     sort on (conv_id, turn_idx), then ONE ``mapInPandas`` stream per
-    partition (~3x less overhead than a grouped pandas UDF call per
-    ~70-turn conversation). ``per_conv(conv_id, arrays)`` returns one
-    conversation's output columns after conv_id as {name: list}."""
+    partition whose batch loop (:func:`_stream_batches`) calls
+    ``per_batch`` once per Arrow batch on the conversations it
+    completes."""
     kernel_df = turns_df.select(*KERNEL_COLS)
     n_part = kernel_partitions(kernel_df, turns_df.sparkSession)
     return (
         kernel_df.repartitionByRange(n_part, "conv_id")
         .sortWithinPartitions("conv_id", "turn_idx")
         .mapInPandas(
-            lambda batches: _stream_batches(batches, per_conv), schema=schema
+            lambda batches: _stream_batches(batches, per_batch), schema=schema
         )
     )
 
@@ -478,8 +655,8 @@ def extract_batch(
     )
     if not assume_sorted:
         pdf = pdf.sort_values("turn_idx")
-    per_conv = _extract_per_conv(tuple(measure_names), cfg)
-    return next(_stream_batches([pdf], per_conv))
+    per_batch = _extract_per_batch(tuple(measure_names), cfg)
+    return next(_stream_batches([pdf], per_batch))
 
 
 def _extract_contiguous(
@@ -490,7 +667,7 @@ def _extract_contiguous(
 ):
     """Yield ONE extract() result frame for a chunk of whole
     conversations, contiguous and sorted by (conv_id, turn_idx)."""
-    return _stream_batches([pdf], _extract_per_conv(measure_names, cfg, relative))
+    return _stream_batches([pdf], _extract_per_batch(measure_names, cfg, relative))
 
 
 def _expanding_rows(
@@ -502,8 +679,22 @@ def _expanding_rows(
 ):
     """Yield ONE long frame of per-turn PIT vectors for a chunk of
     whole conversations (sorted by conv_id, turn_idx)."""
-    per_conv = _expanding_per_conv(measure_names, cfg, stride, min_turns)
-    return _stream_batches([pdf], per_conv)
+    per_batch = _expanding_per_batch(measure_names, cfg, stride, min_turns)
+    return _stream_batches([pdf], per_batch)
+
+
+def _confidence_rows(
+    pdf: pd.DataFrame,
+    measure_names: tuple,
+    cfg: KernelConfig,
+    sample_num: int,
+    confidence: float = 0.95,
+    global_seed: int = 42,
+):
+    """Yield ONE long frame of bootstrap intervals for a chunk of whole
+    conversations (sorted by conv_id, turn_idx)."""
+    per_batch = _confidence_per_batch(measure_names, cfg, sample_num, confidence, global_seed)
+    return _stream_batches([pdf], per_batch)
 
 
 class MFESpark:
@@ -611,7 +802,7 @@ class MFESpark:
         :func:`conversation_stream`."""
         return conversation_stream(
             turns_df,
-            _extract_per_conv(self.measure_names, self.cfg, self.relative),
+            _extract_per_batch(self.measure_names, self.cfg, self.relative),
             OUT_SCHEMA_TIMED if self.cfg.measure_time else OUT_SCHEMA,
         )
 
@@ -628,15 +819,15 @@ class MFESpark:
         exactly the turns with turn_idx <= t — zero temporal leakage by
         slice construction, verified by the prefix-equality test.
 
-        Physical plan is extract()'s; the per-conversation function
-        loops prefixes inside the conversation, so cost scales with
-        n/stride recomputations per conv — ``stride`` is the
+        Physical plan is extract()'s; every prefix of a batch's
+        conversations is a segment of one kernel call, so cost scales
+        with n/stride recomputations per conv — ``stride`` is the
         reference-style sampling knob for the O(n²) total (heavy groups
         additionally honor max_kernel_turns per prefix)."""
         cfg = replace(self.cfg, measure_time=None)
         return conversation_stream(
             turns_df,
-            _expanding_per_conv(self.measure_names, cfg, stride, min_turns),
+            _expanding_per_batch(self.measure_names, cfg, stride, min_turns),
             PIT_SCHEMA,
         )
 
@@ -652,33 +843,15 @@ class MFESpark:
         (reference pymfe/mfe.py:1523-1679): ``sample_num`` seeded
         joint row-resamples per conversation, empirical-bootstrap
         intervals around the full-data estimate. Embarrassingly
-        parallel: the resample loop lives inside the per-conversation
-        function, so the physical plan is extract()'s — including its
-        size-derived partition count, which matters most here, on the
-        most expensive path."""
-        measure_names = self.measure_names
+        parallel: a conversation's resamples are segments of its
+        batch's kernel call, so the physical plan is extract()'s —
+        including its size-derived partition count, which matters most
+        here, on the most expensive path."""
         cfg = replace(self.cfg, measure_time=None)
-
-        def per_conv(conv_id, arrays):
-            # seeded per conversation (conv_seed): independent of
-            # partitioning and Arrow batching
-            res = bootstrap_rows(
-                lambda a: _conv_rows(a, measure_names, cfg)[0],
-                arrays,
-                str(conv_id),
-                sample_num=sample_num,
-                confidence=confidence,
-                global_seed=global_seed,
-            )
-            names = sorted(res)
-            return {
-                "mtf_name": names,
-                "mtf_val": [res[n][0] for n in names],
-                "ci_low": [res[n][1] for n in names],
-                "ci_high": [res[n][2] for n in names],
-            }
-
-        return conversation_stream(turns_df, per_conv, BOOT_SCHEMA)
+        per_batch = _confidence_per_batch(
+            self.measure_names, cfg, sample_num, confidence, global_seed
+        )
+        return conversation_stream(turns_df, per_batch, BOOT_SCHEMA)
 
     def extract_hybrid(
         self,
@@ -726,10 +899,10 @@ class MFESpark:
             np.array(["user", "assistant"] * (n // 2), dtype=object),
             np.array(["NONE", "exec"] * (n // 2), dtype=object),
         )
-        per_conv = _extract_per_conv(
+        per_batch = _extract_per_batch(
             self.measure_names, replace(self.cfg, measure_time=None), self.relative
         )
-        return per_conv("_dry", arrays)["mtf_name"]
+        return list(per_batch(["_dry"], arrays, np.array([0, n]))["mtf_name"])
 
     def parse_by_group(self, long_df: DataFrame, group: str) -> DataFrame:
         """Slice a long extraction result down to one group's features
@@ -922,7 +1095,8 @@ def extract_from_model(
     dummy._cache["dt_model"] = dt_model
     names = tuple(sorted(GROUPS["model-based"]))
     cfg = KernelConfig(summaries=tuple(summaries))
-    return _measure_rows(dummy, (), names, cfg)[0]
+    t = _measure_table(dummy, names, cfg)
+    return dict(zip(t.names.tolist(), t.vals.tolist()))
 
 
 MFESpark.valid_groups = staticmethod(valid_groups)

@@ -139,9 +139,15 @@ def _no_nan(col: Column) -> Column:
     return F.when(~F.isnan(col), col)
 
 
+# distinct roles of a conversation, a null role counted as one more
+# class (the kernel's NULL_ROLE; count(DISTINCT ...) skips NULL)
+_NR_CLASS_SQL = (
+    "count(DISTINCT role) + max(CASE WHEN role IS NULL THEN 1 ELSE 0 END)"
+)
+
 # per conversation: n, nr_class and the mean / sample sd of each numeric column
-_BASE_CTES = TURNS_SQL + """,
- base AS (SELECT conv_id, count(*) AS n, count(DISTINCT role) AS nr_class,
+_BASE_CTES = TURNS_SQL + f""",
+ base AS (SELECT conv_id, count(*) AS n, {_NR_CLASS_SQL} AS nr_class,
                  avg(text_len)                       AS m1,
                  avg(coalesce(ts_delta_s, 0))        AS m2,
                  avg(turn_idx)                       AS m3,
@@ -326,10 +332,10 @@ def mfe_kernel_expanding_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CONF_CHECK_ORACLE = with_transcripts_cte(
-    """
+    f"""
 SELECT conv_id,
        cast(count(*) AS double)             AS nr_inst,
-       cast(count(DISTINCT role) AS double) AS nr_class
+       cast({_NR_CLASS_SQL} AS double) AS nr_class
 FROM turns GROUP BY conv_id
 """,
     extra_ctes=TURNS_SQL,

@@ -1,7 +1,29 @@
 """Arrow-tier measure kernels — pure-numpy re-implementations of the
-reference's ft_* measures, executed once per conversation by the
-``mapInPandas`` conversation stream, which carries a conversation split
-across Arrow batches over to the next batch (zero per-row Python).
+reference's ft_* measures.
+
+Execution model: a :class:`ConvBatch` holds one Arrow batch's
+conversations as row *segments*. The 47 measures of ``general``,
+``statistical`` (all but ``nr_norm``) and ``info-theory`` are written
+once, as segment forms: each reads the whole batch and returns one
+result per segment, so a batch is one array program instead of ~96
+numpy calls per conversation. ``MEASURES[name].fn(b)`` is that segment
+form called on a one-segment batch. ``nr_norm`` and the other groups
+run once per conversation (``fn`` on a one-segment view).
+
+Batch views are built once per batch and shared by every measure — the
+engine analogue of the reference's precompute cache
+(/root/reference/pymfe/_internal.py:1169-1335): N transposed to a
+C-contiguous ``(d, rows)`` array, per-segment sorts of each N column,
+the C columns and y factorized to integer codes, per-segment count
+tables over (segment, code) keys, and (segment, class) sub-segments
+from one stable sort. Segment sums run through ``functions/moments.py``'s
+``NP`` engine, in numpy's own pairwise order: a segment's value is the
+one-conversation value bit for bit, whatever else shares its batch.
+Only the covariance family (np.cov's BLAS product) and gravity's norm
+(a BLAS dot) may differ from the one-conversation arithmetic, in the
+last ulps. Crosstabs span only each conversation's own distinct values,
+as the per-conversation crosstab did: codes are re-ranked per segment
+and the eps smoothing counts exactly that segment's zero cells.
 
 The sandbox has no scipy/sklearn, so every kernel is written from the
 published formulas; reference citations mark the parity target.
@@ -20,25 +42,76 @@ Deviations (documented):
   which is why the reference's own mixed/categorical sd_ratio goldens
   are NaN; the engine matches that contract.
 
-Shared intermediates (class masks, distance matrices, crosstabs) are
-computed once per batch and threaded through the kernels — the engine
-analogue of the reference's precompute cache
-(/root/reference/pymfe/_internal.py:1169-1335).
+A null role is one more class (:data:`NULL_ROLE`, sorted after every
+string label), as in the SQL tier.
 
 Every kernel is exception-contained: failure -> NaN, never task failure
-(mirrors _internal.py:568-621).
+(mirrors _internal.py:568-621). A segment form that raises on a batch is
+re-run one segment at a time, so only the failing conversation gets NaN.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import numpy as np
+import pandas as pd
 
-from pymfe_spark.functions.moments import central_moments, kurtosis, skewness
+from pymfe_spark.functions.moments import (
+    NP,
+    kurtosis,
+    range_sum,
+    seg_median,
+    seg_quantile,
+    seg_sort,
+    skewness,
+)
 
 EPS = 1e-8  # info_theory.py:184-195 crosstab smoothing
+
+
+class _NullRole:
+    """The class label of a turn whose role is null. It equals only
+    itself and sorts after every string label (np.unique, and so the
+    class order gravity and sd_ratio read); its str form sorts after
+    any real label too (transform_cat levels)."""
+
+    __slots__ = ()
+
+    def __repr__(self) -> str:
+        return "NULL_ROLE"
+
+    def __str__(self) -> str:
+        return "\U0010ffff<null role>"
+
+    def __reduce__(self) -> str:
+        return "NULL_ROLE"
+
+    def __eq__(self, other) -> bool:
+        return other is self
+
+    def __ne__(self, other) -> bool:
+        return other is not self
+
+    def __hash__(self) -> int:
+        return hash("pymfe_spark.NULL_ROLE")
+
+    def __lt__(self, other) -> bool:
+        return False
+
+    def __le__(self, other) -> bool:
+        return other is self
+
+    def __gt__(self, other) -> bool:
+        return other is not self
+
+    def __ge__(self, other) -> bool:
+        return True
+
+
+NULL_ROLE = _NullRole()
 
 
 # ---------------------------------------------------------------------
@@ -48,7 +121,9 @@ EPS = 1e-8  # info_theory.py:184-195 crosstab smoothing
 
 @dataclass
 class ConvBatch:
-    """One conversation's views: N (numeric), C (categorical), y.
+    """Conversations' views: N (numeric), C (categorical), y, with the
+    conversations as row segments ``starts[s]:starts[s + 1]`` (None =
+    one conversation).
 
     Mirrors the reference's X -> N/C/y split (mfe.py:740-902):
     N columns: text_len, ts_delta_s (first-turn 0), turn_idx.
@@ -77,8 +152,54 @@ class ConvBatch:
     # (/root/reference/pymfe/mfe.py:1208-1218, build_mtd_kwargs
     # _internal.py:624-708)
     config: dict = field(default_factory=dict)
+    starts: np.ndarray | None = None
 
-    # --- shared precomputations (computed once, reused) ---
+    def _cached(self, key, make):
+        if key not in self._cache:
+            self._cache[key] = make()
+        return self._cache[key]
+
+    # --- segments ---
+
+    @property
+    def bounds(self) -> np.ndarray:
+        """Segment offsets, length S + 1."""
+        if self.starts is None:
+            self.starts = np.array([0, self.N.shape[0]], dtype=np.int64)
+        return self.starts
+
+    @property
+    def S(self) -> int:
+        return len(self.bounds) - 1
+
+    def lens(self) -> np.ndarray:
+        return self._cached("seg:lens", lambda: np.diff(self.bounds))
+
+    def seg(self) -> np.ndarray:
+        """Segment id of every row."""
+        return self._cached(
+            "seg:id", lambda: np.repeat(np.arange(self.S), self.lens())
+        )
+
+    def np(self):
+        """The segmented numpy engine over this batch's segments."""
+        return self._cached("seg:np", lambda: NP(self.bounds))
+
+    def segment(self, s: int) -> ConvBatch:
+        """Segment ``s`` as a one-conversation batch (row views)."""
+        if self.S == 1:
+            return self
+        a, e = self.bounds[s], self.bounds[s + 1]
+        return ConvBatch(
+            N=self.N[a:e],
+            C=self.C[a:e],
+            y=self.y[a:e],
+            orig_cat=self.orig_cat,
+            orig_num=self.orig_num,
+            config=self.config,
+        )
+
+    # --- per-conversation precomputations (other groups) ---
 
     def classes(self) -> tuple[np.ndarray, np.ndarray]:
         if "classes" not in self._cache:
@@ -112,65 +233,154 @@ class ConvBatch:
         return self._cache["concept_dist"]
 
     def cov_mat(self) -> np.ndarray:
-        if "cov" not in self._cache:
-            self._cache["cov"] = np.cov(self.N, rowvar=False, ddof=1)
-        return self._cache["cov"]
+        """Segment 0's covariance matrix (ddof=1)."""
+        return _scatter(self)[1][0]
 
-    def corr_mat(self) -> np.ndarray:
-        if "corr" not in self._cache:
-            with np.errstate(all="ignore"):
-                self._cache["corr"] = np.corrcoef(self.N, rowvar=False)
-        return self._cache["corr"]
-
-    def can_cors(self) -> np.ndarray:
-        if "can_cors" not in self._cache:
-            self._cache["can_cors"] = _can_cors(self.N, self.y)
-        return self._cache["can_cors"]
-
-    def can_cor_eigvals(self) -> np.ndarray:
-        """lambda = rho^2 / (1 - rho^2) (statistical.py:192-209)."""
-        rho = self.can_cors()
-        rho2 = np.clip(rho**2, 0.0, 1.0 - 1e-12)
-        return rho2 / (1.0 - rho2)
-
-    def c_codes(self, j: int) -> tuple[np.ndarray, np.ndarray]:
-        """Cached np.unique factorization (values, inverse codes) of
-        C[:, j]. Every info-theory entropy/crosstab reuses it instead
-        of re-sorting the column per measure call — the kernel-local
-        analogue of the reference's precompute_attr cache
-        (info_theory.py:56-155). With ~130 attr_conc pairs plus the
-        per-column entropy family, the repeated np.unique sort was the
-        single hottest line of the whole Arrow kernel."""
-        key = ("ccodes", j)
-        if key not in self._cache:
-            self._cache[key] = np.unique(self.C[:, j], return_inverse=True)
-        return self._cache[key]
-
-    def y_codes(self) -> tuple[np.ndarray, np.ndarray]:
-        if "ycodes" not in self._cache:
-            self._cache["ycodes"] = np.unique(self.y, return_inverse=True)
-        return self._cache["ycodes"]
+    # --- batch views (segment forms) ---
 
     def NT(self) -> np.ndarray:
-        """Contiguous transpose of N, cached. The whole per-column
-        statistical tier reduces along the LAST axis of this array:
-        for a C-contiguous (d, n) array numpy applies its pairwise
-        reduction per output element, so ``NT.mean(axis=1)[j]`` is
-        bit-identical to ``np.mean(N[:, j])`` — one vectorized call
-        replaces d small-array calls without changing a single bit.
-        (Reducing axis=0 of N instead would accumulate sequentially
-        across rows — different rounding — which is why the transpose,
-        not an axis flip, is the cacheable form.)"""
-        if "NT" not in self._cache:
-            self._cache["NT"] = np.ascontiguousarray(self.N.T)
-        return self._cache["NT"]
+        """N transposed to a C-contiguous (d, rows) array: every column
+        reduction runs along its last axis."""
+        return self._cached("NT", lambda: np.ascontiguousarray(self.N.T))
 
     def n_sorted(self) -> np.ndarray:
-        """Per-column sort of N as sorted rows of NT, cached — shared
-        by t_mean and the distinct-count measures (sparsity, nr_bin)."""
-        if "nsort" not in self._cache:
-            self._cache["nsort"] = np.sort(self.NT(), axis=1)
-        return self._cache["nsort"]
+        """Each row of NT sorted within segments."""
+        return self._cached(
+            "nsort", lambda: np.stack([seg_sort(x, self.seg()) for x in self.NT()])
+            if self.NT().shape[0] else self.NT().copy(),
+        )
+
+    def quantile(self, q: float) -> np.ndarray:
+        """(d, S) linear quantile q of every column and segment."""
+        lo, lens = self.bounds[:-1], self.lens()
+        return self._cached(
+            ("quantile", q),
+            lambda: np.array([seg_quantile(s, lo, lens, q) for s in self.n_sorted()]).reshape(-1, self.S),
+        )
+
+    def median(self) -> np.ndarray:
+        lo, lens = self.bounds[:-1], self.lens()
+        return self._cached(
+            "median",
+            lambda: np.array([seg_median(s, lo, lens) for s in self.n_sorted()]).reshape(-1, self.S),
+        )
+
+    def col_min(self) -> np.ndarray:
+        """(d, S) column minima."""
+        return self._cached("min", lambda: np.minimum.reduceat(self.NT(), self.bounds[:-1], axis=1))
+
+    def col_max(self) -> np.ndarray:
+        return self._cached("max", lambda: self.np().max(self.NT()))
+
+    def seg_mean(self) -> np.ndarray:
+        """(d, S) column means."""
+        return self._cached("mean", lambda: self.np().sum(self.NT()) / self.lens())
+
+    def centered(self) -> np.ndarray:
+        """NT minus its segment means."""
+        return self._cached("centered", lambda: self.NT() - self.seg_mean()[:, self.seg()])
+
+    def codes(self, col) -> tuple[np.ndarray, int]:
+        """(batch-wide integer codes, code count) of C column ``col`` or
+        of y (``col="y"``), ranked in label order; a missing label gets
+        its own code, after every other."""
+
+        def make():
+            arr = self.y if col == "y" else self.C[:, col]
+            raw, uniq = pd.factorize(arr)
+            uniq = np.asarray(uniq, dtype=object)
+            rank = np.empty(len(uniq) + 1, dtype=np.int64)
+            rank[np.argsort(uniq, kind="stable")] = np.arange(len(uniq))
+            rank[-1] = len(uniq)  # pandas' -1 for a missing label
+            return rank[raw], len(uniq) + int((raw < 0).any())
+
+        return self._cached(("codes", col), make)
+
+    def table(self, col) -> np.ndarray:
+        """(S, K) per-segment counts of every code of ``col``."""
+
+        def make():
+            c, k = self.codes(col)
+            t = np.bincount(self.seg() * k + c, minlength=self.S * k)
+            return t.reshape(self.S, k)
+
+        return self._cached(("table", col), make)
+
+    def nuniq(self, col) -> np.ndarray:
+        """Distinct values of ``col`` per segment."""
+        return self._cached(("nuniq", col), lambda: (self.table(col) > 0).sum(axis=1))
+
+    def local(self, col) -> np.ndarray:
+        """Each row's code re-ranked within its segment (0 = the
+        segment's smallest label)."""
+
+        def make():
+            t = self.table(col) > 0
+            rank = np.cumsum(t, axis=1) - 1
+            return rank[self.seg(), self.codes(col)[0]]
+
+        return self._cached(("local", col), make)
+
+    def entropy(self, col) -> np.ndarray:
+        """(S,) base-2 Shannon entropy of ``col`` per segment."""
+
+        def make():
+            t = self.table(col)
+            cnt = t[t > 0]  # row-major: by segment, then label
+            off = np.concatenate(([0], np.cumsum(self.nuniq(col))))
+            p = cnt / np.repeat(self.lens(), self.nuniq(col))
+            h = -NP(off).sum(p * np.log(p))
+            return h / np.log(2)
+
+        return self._cached(("entropy", col), make)
+
+    def crosstab(self, a, b) -> tuple:
+        """Dense per-segment crosstab of ``a`` (rows) by ``b`` (cols),
+        each segment's table spanning only its own distinct values:
+        (counts, flat by segment then row-major; cell offsets per
+        segment; segment of each cell; column key of each cell; cell
+        offset of each row; row offsets per segment; column count of
+        the column keys)."""
+
+        def make():
+            na, nb = self.nuniq(a), self.nuniq(b)
+            cells = na * nb
+            off = np.concatenate(([0], np.cumsum(cells)))
+            seg = self.seg()
+            tab = np.bincount(
+                off[:-1][seg] + self.local(a) * nb[seg] + self.local(b),
+                minlength=off[-1],
+            ).astype(float)
+            cseg = np.repeat(np.arange(self.S), cells)
+            pos = np.arange(off[-1]) - off[:-1][cseg]
+            coff = np.concatenate(([0], np.cumsum(nb)))
+            ckey = coff[:-1][cseg] + pos % nb[cseg]
+            roff = np.concatenate(([0], np.cumsum(na)))
+            rseg = np.repeat(np.arange(self.S), na)
+            rstart = off[:-1][rseg] + (np.arange(roff[-1]) - roff[:-1][rseg]) * nb[rseg]
+            return tab, off, cseg, ckey, rstart, roff, coff[-1]
+
+        return self._cached(("crosstab", a, b), make)
+
+    def by_class(self) -> tuple:
+        """(segment, class) sub-segments from one stable sort by
+        (segment, y code): (row order, sub-segment starts, segment and
+        class code of each, row counts, sub-segment offsets per
+        segment)."""
+
+        def make():
+            yc, k = self.codes("y")
+            key = self.seg() * k + yc
+            order = np.argsort(key, kind="stable")
+            ks = key[order]
+            st = np.concatenate(([0], np.flatnonzero(ks[1:] != ks[:-1]) + 1, [len(ks)]))
+            sub = ks[st[:-1]]
+            seg_of = sub // k
+            nclass = np.bincount(seg_of, minlength=self.S)
+            soff = np.concatenate(([0], np.cumsum(nclass)))
+            return order, st, seg_of, sub % k, np.diff(st), soff
+
+        return self._cached("by_class", make)
 
 
 def _cdist(A: np.ndarray, B: np.ndarray) -> np.ndarray:
@@ -191,106 +401,63 @@ def _entropy(counts: np.ndarray, base: float | None = None) -> float:
     return h / np.log(base) if base else h
 
 
-def _tab_from_codes(
-    ai: np.ndarray, na: int, bi: np.ndarray, nb: int
-) -> np.ndarray:
-    """Dense normalized contingency table from precomputed inverse
-    codes. bincount of the flattened pair index builds the same
-    integer-valued table as an element-wise scatter-add; every count
-    and the total are integers represented exactly in float64, so the
-    normalized table is bit-identical to the unique()-per-call form."""
-    tab = np.bincount(ai * nb + bi, minlength=na * nb).astype(float)
-    tab = tab.reshape(na, nb)
-    return tab / tab.sum()
-
-
-def _crosstab_probs(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Dense normalized contingency table (zero cells included)."""
-    av, ai = np.unique(a, return_inverse=True)
-    bv, bi = np.unique(b, return_inverse=True)
-    return _tab_from_codes(ai, av.size, bi, bv.size)
-
-
-def _joint_ent_tab(ptab: np.ndarray) -> float:
-    """eps-smoothed joint entropy over the DENSE crosstab
-    (info_theory.py:183-195,457-508): scipy.stats.entropy(p + eps,
-    base=2) — normalizes internally."""
-    p = ptab.ravel() + EPS
-    p = p / p.sum()
-    return float(-(p * np.log2(p)).sum())
-
-
-def _joint_ent(a: np.ndarray, b: np.ndarray) -> float:
-    return _joint_ent_tab(_crosstab_probs(a, b))
-
-
-def _counts_from_codes(vals: np.ndarray, inv: np.ndarray) -> np.ndarray:
-    return np.bincount(inv, minlength=vals.size)
-
-
-def _col_ent(col: np.ndarray) -> float:
-    _, cnt = np.unique(col, return_counts=True)
-    return _entropy(cnt, base=2)
-
-
-def _conc_tab(pij: np.ndarray, eps: float = 1.0e-8) -> float:
-    """Goodman-Kruskal tau from a normalized crosstab (rows = a,
-    cols = b), reference-exact (info_theory.py:198-213): eps added to
-    every cell, numerator divides by the b-marginals and subtracts the
-    squared a-marginals."""
-    pij = pij + eps
-    isum = pij.sum(axis=0)
-    jsum2 = float((pij.sum(axis=1) ** 2).sum())
-    denom = 1.0 - jsum2
-    if denom == 0:
-        return float("nan")
-    with np.errstate(invalid="ignore", divide="ignore"):
-        num = float((pij**2 / isum).sum()) - jsum2
-    return float(num / denom)
-
-
-def _conc(a: np.ndarray, b: np.ndarray, eps: float = 1.0e-8) -> float:
-    """Goodman-Kruskal tau of a -> b (crosstab built per call; the
-    measure kernels use the code-cached path instead)."""
-    return _conc_tab(_crosstab_probs(a, b), eps)
-
-
-def _can_cors(N: np.ndarray, y: np.ndarray, reg: float = 1e-10) -> np.ndarray:
-    """Classical CCA between N and one-hot(y) (k-1 components dropped by
-    rank): canonical correlations are the singular values of
-    Sxx^-1/2 Sxy Syy^-1/2."""
-    classes = np.unique(y)
-    if classes.size < 2 or N.shape[0] < 3:
-        return np.array([])
-    Y = (y[:, None] == classes[None, :]).astype(float)
-    Xc = N - N.mean(axis=0)
-    Yc = Y - Y.mean(axis=0)
-    n = N.shape[0]
-    Sxx = Xc.T @ Xc / (n - 1) + reg * np.eye(Xc.shape[1])
-    Syy = Yc.T @ Yc / (n - 1) + reg * np.eye(Yc.shape[1])
-    Sxy = Xc.T @ Yc / (n - 1)
-
-    def inv_sqrt(S):
-        w, V = np.linalg.eigh(S)
-        w = np.clip(w, reg, None)
-        return V @ np.diag(w**-0.5) @ V.T
-
-    M = inv_sqrt(Sxx) @ Sxy @ inv_sqrt(Syy)
-    s = np.linalg.svd(M, compute_uv=False)
-    k = min(classes.size, N.shape[1])
-    s = s[:k]
-    # trim rank-deficient components (one-hot Y has rank k-1): the
-    # reference's CCA while-loop stops at the first zero-variance
-    # transformed column (statistical.py:246-257); the eigen route
-    # surfaces those as ~reg-level singular values
-    s = s[s > 1.0e-8]
-    return np.clip(s, 0.0, 1.0)
+def _conc(a: np.ndarray, b: np.ndarray) -> float:
+    """Goodman-Kruskal tau of a -> b for one pair of label arrays."""
+    y = np.asarray(b, dtype=object)
+    one = ConvBatch(N=np.zeros((len(y), 0)), C=np.column_stack([a, b]).astype(object), y=y)
+    return float(_conc_seg(one, 0, 1)[0])
 
 
 # ---------------------------------------------------------------------
-# measure registry
+# segment outputs and the measure registry
 # ---------------------------------------------------------------------
 
+
+@dataclass
+class Ragged:
+    """Per-segment vectors: segment s holds ``flat[offsets[s]:offsets[s
+    + 1]]``. Where ``scalar[s]`` is set, its one value is a scalar
+    result (the measure failed for that conversation alone: NaN)."""
+
+    flat: np.ndarray
+    offsets: np.ndarray
+    scalar: np.ndarray | None = None
+
+    @classmethod
+    def fixed(cls, X: np.ndarray, failed: np.ndarray | None = None) -> Ragged:
+        """(S, k) rows; ``failed`` segments become one scalar NaN."""
+        X = np.asarray(X, dtype=float)
+        S, k = X.shape
+        if failed is None or not failed.any():
+            return cls(X.ravel(), np.arange(S + 1) * k)
+        lens = np.where(failed, 1, k)
+        off = np.concatenate(([0], np.cumsum(lens)))
+        flat = np.full(off[-1], np.nan)
+        ok = ~failed
+        flat[(off[:-1][ok][:, None] + np.arange(k)).ravel()] = X[ok].ravel()
+        return cls(flat, off, failed)
+
+    @classmethod
+    def of(cls, values: list) -> Ragged:
+        """From one result per segment (scalar or 1-D)."""
+        arrs = [np.asarray(v, dtype=float) for v in values]
+        scalar = np.array([a.ndim == 0 for a in arrs])
+        flat = [a.ravel() for a in arrs]
+        off = np.concatenate(([0], np.cumsum([f.size for f in flat])))
+        return cls(
+            np.concatenate(flat) if flat else np.zeros(0),
+            off,
+            scalar if scalar.any() else None,
+        )
+
+    def row(self, s: int):
+        v = self.flat[self.offsets[s] : self.offsets[s + 1]]
+        if self.scalar is not None and self.scalar[s]:
+            return float(v[0])
+        return v
+
+
+SegOut = "np.ndarray | Ragged"  # (S,) scalars, or per-segment vectors
 MeasureFn = Callable[[ConvBatch], "float | np.ndarray"]
 
 
@@ -300,6 +467,9 @@ class MeasureDef:
     group: str
     fn: MeasureFn
     needs_y: bool = False
+    # the segment form (whole batch -> one result per segment), or None
+    # for a measure that runs once per conversation
+    seg: Callable[[ConvBatch], SegOut] | None = None
 
 
 MEASURES: dict[str, MeasureDef] = {}
@@ -308,13 +478,39 @@ MEASURES: dict[str, MeasureDef] = {}
 GROUPS: dict[str, list[str]] = {}
 
 
-def measure(name: str, group: str, needs_y: bool = False):
-    def deco(fn: MeasureFn) -> MeasureFn:
-        MEASURES[name] = MeasureDef(name, group, fn, needs_y)
+def _first(seg_fn):
+    """The segment form called on a one-segment batch."""
+
+    @functools.wraps(seg_fn)
+    def fn(b: ConvBatch):
+        out = seg_fn(b)
+        if isinstance(out, Ragged):
+            v = out.row(0)
+            if isinstance(v, float):
+                raise ValueError("measure undefined for this conversation")
+            return v
+        return float(out[0])
+
+    return fn
+
+
+def measure(name: str, group: str, needs_y: bool = False, segmented: bool = False):
+    def deco(fn):
+        MEASURES[name] = MeasureDef(
+            name,
+            group,
+            _first(fn) if segmented else fn,
+            needs_y,
+            fn if segmented else None,
+        )
         GROUPS.setdefault(group, []).append(name)
         return fn
 
     return deco
+
+
+def batched(name: str, group: str, needs_y: bool = False):
+    return measure(name, group, needs_y, segmented=True)
 
 
 # ---- general (/root/reference/pymfe/general.py) ----------------------
@@ -334,196 +530,214 @@ def _d_num(b: ConvBatch) -> int:
     return b.N.shape[1] if b.orig_num is None else b.orig_num
 
 
-measure("nr_inst", "general")(lambda b: float(b.N.shape[0]))  # 318-337
-measure("nr_attr", "general")(lambda b: float(_d_num(b) + _d_cat(b)))  # 212-231
-measure("nr_num", "general")(lambda b: float(_d_num(b)))  # 340-364
-measure("nr_cat", "general")(lambda b: float(_d_cat(b)))  # 263-284
-measure("attr_to_inst", "general")(
-    lambda b: (_d_num(b) + _d_cat(b)) / b.N.shape[0]
+def _full(b: ConvBatch, value: float) -> np.ndarray:
+    return np.full(b.S, float(value))
+
+
+batched("nr_inst", "general")(lambda b: b.lens().astype(float))  # 318-337
+batched("nr_attr", "general")(lambda b: _full(b, _d_num(b) + _d_cat(b)))  # 212-231
+batched("nr_num", "general")(lambda b: _full(b, _d_num(b)))  # 340-364
+batched("nr_cat", "general")(lambda b: _full(b, _d_cat(b)))  # 263-284
+batched("attr_to_inst", "general")(
+    lambda b: (_d_num(b) + _d_cat(b)) / b.lens()
 )  # 88-110
-measure("inst_to_attr", "general")(
-    lambda b: b.N.shape[0] / (_d_num(b) + _d_cat(b))
+batched("inst_to_attr", "general")(
+    lambda b: b.lens() / (_d_num(b) + _d_cat(b))
 )  # 187-209
-measure("cat_to_num", "general")(lambda b: _d_cat(b) / _d_num(b))  # 113-150
-measure("num_to_cat", "general")(lambda b: _d_num(b) / _d_cat(b))  # 367-405
-measure("nr_class", "general", needs_y=True)(
-    lambda b: float(np.unique(b.y).size)
+batched("cat_to_num", "general")(lambda b: _full(b, _d_cat(b) / _d_num(b)))  # 113-150
+batched("num_to_cat", "general")(lambda b: _full(b, _d_num(b) / _d_cat(b)))  # 367-405
+batched("nr_class", "general", needs_y=True)(
+    lambda b: b.nuniq("y").astype(float)
 )  # 287-315
 
 
-@measure("freq_class", "general", needs_y=True)
-def _freq_class(b: ConvBatch) -> np.ndarray:
+@batched("freq_class", "general", needs_y=True)
+def _freq_class(b: ConvBatch) -> Ragged:
     """Relative class frequencies (general.py:153-184) — vector,
     summarized downstream."""
-    _, cnt = b.classes()
-    return cnt / cnt.sum()
+    t = b.table("y")
+    k = b.nuniq("y")
+    return Ragged(t[t > 0] / np.repeat(b.lens(), k), np.concatenate(([0], np.cumsum(k))))
 
 
-def _sorted_distinct(s: np.ndarray) -> int:
-    """Distinct count of a SORTED float vector, matching
-    np.unique's NaN handling (all NaNs collapse to one; sort places
-    them at the end)."""
-    if s.size == 0:
-        return 0
-    nn = s[~np.isnan(s)]
-    d = (int((nn[1:] != nn[:-1]).sum()) + 1) if nn.size else 0
-    return d + int(nn.size < s.size)
+def _distinct(b: ConvBatch) -> np.ndarray:
+    """(S, d) distinct values of each N column per segment, from the
+    per-segment sorts (all NaNs count as one, as in np.unique)."""
+
+    def make():
+        s = b.n_sorted()
+        new = np.ones_like(s, dtype=bool)
+        if s.shape[1]:
+            prev, cur = s[:, :-1], s[:, 1:]
+            new[:, 1:] = (cur != prev) & ~(np.isnan(cur) & np.isnan(prev))
+        new[:, b.bounds[:-1]] = True
+        return b.np().sum(new.astype(np.int64)).T if s.shape[1] else np.zeros((b.S, 0))
+
+    return b._cached("distinct", make)
 
 
-@measure("nr_bin", "general")
-def _nr_bin(b: ConvBatch) -> float:
+@batched("nr_bin", "general")
+def _nr_bin(b: ConvBatch) -> np.ndarray:
     """#columns with exactly 2 distinct values (general.py:234-260) —
-    defined over X, so only original attributes count (see _d_cat).
-    Distinct counts come from the shared per-column sort / cached
-    factorization instead of a fresh np.unique per column."""
-    s = b.n_sorted()
-    n = 0
-    for j in range(_d_num(b)):
-        n += int(_sorted_distinct(s[j]) == 2)
+    defined over X, so only original attributes count (see _d_cat)."""
+    n = (_distinct(b)[:, : _d_num(b)] == 2).sum(axis=1)
     for j in range(_d_cat(b)):
-        n += int(b.c_codes(j)[0].size == 2)
-    return float(n)
+        n = n + (b.nuniq(j) == 2)
+    return n.astype(float)
 
 
 # ---- statistical (/root/reference/pymfe/statistical.py) --------------
 
 
-def _per_col(fn):
-    """Per-column scalar form — kept as the readable truth source for
-    tests; the registered measures below are last-axis vectorizations
-    over ConvBatch.NT() that produce bit-identical vectors (numpy's
-    pairwise/partition reductions act per output element when the
-    reduction axis is the last one of a contiguous array)."""
-    return lambda b: np.array([fn(b.N[:, j]) for j in range(b.N.shape[1])])
+def _cols(X: np.ndarray) -> Ragged:
+    """(d, S) per-column values -> one d-vector per segment."""
+    return Ragged.fixed(X.T)
 
 
-# One vectorized call per measure instead of d small-array calls: at
-# ~5 numeric columns x 11 per-column measures the numpy call overhead
-# was ~1.6 ms of the ~5 ms fixed per-conversation kernel cost.
-measure("mean", "statistical")(lambda b: b.NT().mean(axis=1))  # 794-814
-measure("median", "statistical")(
-    lambda b: np.median(b.NT(), axis=1)
-)  # 817-837
-measure("min", "statistical")(lambda b: b.NT().min(axis=1))  # 840-860
-measure("max", "statistical")(lambda b: b.NT().max(axis=1))  # 771-791
-measure("range", "statistical")(
-    lambda b: np.ptp(b.NT(), axis=1)
+batched("mean", "statistical")(lambda b: _cols(b.seg_mean()))  # 794-814
+batched("median", "statistical")(lambda b: _cols(b.median()))  # 817-837
+batched("min", "statistical")(lambda b: _cols(b.col_min()))  # 840-860
+batched("max", "statistical")(lambda b: _cols(b.col_max()))  # 771-791
+batched("range", "statistical")(
+    lambda b: _cols(b.col_max() - b.col_min())
 )  # 1114-1133
-measure("sd", "statistical")(
-    lambda b: np.std(b.NT(), axis=1, ddof=1)
-)  # 1136-1159
-measure("var", "statistical")(
-    lambda b: np.var(b.NT(), axis=1, ddof=1)
-)  # 1439-1462
-measure("iq_range", "statistical")(
-    lambda b: np.quantile(b.NT(), 0.75, axis=1)
-    - np.quantile(b.NT(), 0.25, axis=1)
+
+
+def _var(b: ConvBatch) -> np.ndarray:
+    """(d, S) sample variance (ddof=1): NaN for a one-row segment."""
+    return b._cached("var", lambda: b.np().sum(b.centered() ** 2) / (b.lens() - 1))
+
+
+batched("sd", "statistical")(lambda b: _cols(np.sqrt(_var(b))))  # 1136-1159
+batched("var", "statistical")(lambda b: _cols(_var(b)))  # 1439-1462
+batched("iq_range", "statistical")(
+    lambda b: _cols(b.quantile(0.75) - b.quantile(0.25))
 )  # 659-678
-measure("mad", "statistical")(
-    lambda b: 1.4826
-    * np.median(
-        np.abs(b.NT() - np.median(b.NT(), axis=1)[:, None]), axis=1
-    )
-)  # 741-768
 
 
-@measure("g_mean", "statistical")
-def _g_mean(b: ConvBatch) -> np.ndarray:
+@batched("mad", "statistical")
+def _mad(b: ConvBatch) -> Ragged:  # 741-768
+    dev = np.abs(b.NT() - b.median()[:, b.seg()])
+    lo, lens, seg = b.bounds[:-1], b.lens(), b.seg()
+    med = [seg_median(seg_sort(x, seg), lo, lens) for x in dev]
+    return _cols(1.4826 * np.array(med).reshape(-1, b.S))
+
+
+@batched("g_mean", "statistical")
+def _g_mean(b: ConvBatch) -> Ragged:
     """statistical.py:584-634: negative -> nan, zero -> 0."""
-    NT = b.NT()
-    mn = NT.min(axis=1)
-    with np.errstate(all="ignore"):
-        gm = np.exp(np.mean(np.log(NT), axis=1))
-    return np.where(mn < 0, np.nan, np.where(mn == 0, 0.0, gm))
+    mn = b.col_min()
+    gm = np.exp(b.np().sum(np.log(b.NT())) / b.lens())
+    return _cols(np.where(mn < 0, np.nan, np.where(mn == 0, 0.0, gm)))
 
 
-@measure("h_mean", "statistical")
-def _h_mean(b: ConvBatch) -> np.ndarray:
+@batched("h_mean", "statistical")
+def _h_mean(b: ConvBatch) -> Ragged:
     """statistical.py:637-656."""
-    NT = b.NT()
-    with np.errstate(all="ignore"):
-        return NT.shape[1] / (1.0 / NT).sum(axis=1)
+    return _cols(b.lens() / b.np().sum(1.0 / b.NT()))
 
 
-@measure("t_mean", "statistical")
-def _t_mean(b: ConvBatch) -> np.ndarray:
+@batched("t_mean", "statistical")
+def _t_mean(b: ConvBatch) -> Ragged:
     """20%-trimmed mean (statistical.py:1411-1436)."""
-    s = b.n_sorted()
-    n = s.shape[1]
-    k = int(np.floor(n * 0.2))
-    if n - 2 * k <= 0:
-        return np.full(s.shape[0], np.nan)
-    return s[:, k : n - k].mean(axis=1)
+    s, lens = b.n_sorted(), b.lens()
+    k = np.floor(lens * 0.2).astype(np.int64)
+    return _cols(range_sum(s, b.bounds[:-1] + k, lens - 2 * k) / (lens - 2 * k))
 
 
-def _central_moments(b: ConvBatch) -> tuple[np.ndarray, ...]:
-    """(m2, m3, m4) per column, shared by the skew/kurt pair."""
-    if "cmoments" not in b._cache:
-        b._cache["cmoments"] = central_moments(b.NT())
-    return b._cache["cmoments"]
+def _moments(b: ConvBatch) -> tuple[np.ndarray, ...]:
+    """(m2, m3, m4) per column and segment, shared by skew/kurt."""
+
+    def make():
+        d0 = b.centered()
+        return tuple(b.np().sum(d0**p) / b.lens() for p in (2, 3, 4))
+
+    return b._cached("cmoments", make)
 
 
-@measure("skewness", "statistical")
-def _skewness(b: ConvBatch) -> np.ndarray:  # 1310-1365
-    m2, m3, _ = _central_moments(b)
-    return skewness(b.N.shape[0], m2, m3)
+@batched("skewness", "statistical")
+def _skewness(b: ConvBatch) -> Ragged:  # 1310-1365
+    m2, m3, _ = _moments(b)
+    return _cols(skewness(b.lens(), m2, m3))
 
 
-@measure("kurtosis", "statistical")
-def _kurtosis(b: ConvBatch) -> np.ndarray:  # 681-738
-    m2, _, m4 = _central_moments(b)
-    return kurtosis(b.N.shape[0], m2, m4)
+@batched("kurtosis", "statistical")
+def _kurtosis(b: ConvBatch) -> Ragged:  # 681-738
+    m2, _, m4 = _moments(b)
+    return _cols(kurtosis(b.lens(), m2, m4))
 
 
-@measure("sparsity", "statistical")
-def _sparsity(b: ConvBatch) -> np.ndarray:
+@batched("sparsity", "statistical")
+def _sparsity(b: ConvBatch) -> Ragged:
     """(n/d - 1)/(n - 1) per ORIGINAL attribute — statistical.py:
     1368-1408 operates on X, so derived columns (reference:
     transform_num/transform_cat output; engine: len_bin and encoded
-    role/tool) are excluded."""
-    n = b.N.shape[0]
-    if n <= 1:
-        return np.full(_d_num(b) + _d_cat(b), np.nan)
-    s = b.n_sorted()
-    vals = []
-    for j in range(_d_num(b)):
-        d = _sorted_distinct(s[j])
-        vals.append((n / d - 1.0) / (n - 1.0))
-    for j in range(_d_cat(b)):
-        d = b.c_codes(j)[0].size
-        vals.append((n / d - 1.0) / (n - 1.0))
-    return np.array(vals)
+    role/tool) are excluded. NaN for a one-row conversation."""
+    d = np.column_stack(
+        [_distinct(b)[:, : _d_num(b)]] + [b.nuniq(j) for j in range(_d_cat(b))]
+    )
+    n = b.lens()[:, None].astype(float)
+    return Ragged.fixed(np.where(n <= 1, np.nan, (n / d - 1.0) / (n - 1.0)))
 
 
-@measure("nr_outliers", "statistical")
-def _nr_outliers(b: ConvBatch) -> float:
+@batched("nr_outliers", "statistical")
+def _nr_outliers(b: ConvBatch) -> np.ndarray:
     """#columns with a boxplot (whis=1.5) outlier (statistical.py:
     1068-1111)."""
-    NT = b.NT()
-    q1, q3 = np.quantile(NT, (0.25, 0.75), axis=1)
+    q1, q3 = b.quantile(0.25), b.quantile(0.75)
     iqr = q3 - q1
-    out = (NT.min(axis=1) < q1 - 1.5 * iqr) | (
-        NT.max(axis=1) > q3 + 1.5 * iqr
-    )
-    return float(out.sum())
+    out = (b.col_min() < q1 - 1.5 * iqr) | (b.col_max() > q3 + 1.5 * iqr)
+    return out.sum(axis=0).astype(float)
 
 
-@measure("cor", "statistical")
-def _cor(b: ConvBatch) -> np.ndarray:
+def _scatter(b: ConvBatch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per segment: centered cross-product sums P (S, d, d), the
+    covariance P / (n - 1) as np.cov scales it, and the segments np.cov
+    cannot give a matrix for — one row (np.cov then reads the row as a
+    single variable and returns a scalar) or one column."""
+
+    def make():
+        d0 = b.centered().T
+        P = np.add.reduceat(np.einsum("ni,nj->nij", d0, d0), b.bounds[:-1], axis=0)
+        lens = b.lens()
+        cov = P * (1.0 / (lens - 1.0))[:, None, None]
+        return P, cov, (lens == 1) | (b.N.shape[1] == 1)
+
+    return b._cached("scatter", make)
+
+
+def _corr(b: ConvBatch) -> np.ndarray:
+    """np.corrcoef per segment: cov / sd_i / sd_j, clipped to [-1, 1]."""
+
+    def make():
+        cov = _scatter(b)[1]
+        sd = np.sqrt(np.diagonal(cov, axis1=1, axis2=2))
+        c = cov / sd[:, :, None]
+        c = c / sd[:, None, :]
+        return np.clip(c, -1, 1)
+
+    return b._cached("corr", make)
+
+
+def _lower(M: np.ndarray) -> np.ndarray:
+    i, j = np.tril_indices(M.shape[-1], k=-1)
+    return M[:, i, j]
+
+
+@batched("cor", "statistical")
+def _cor(b: ConvBatch) -> Ragged:
     """abs lower triangle of corr matrix (statistical.py:410-450)."""
-    C = np.abs(b.corr_mat())
-    return C[np.tril_indices_from(C, k=-1)]
+    return Ragged.fixed(np.abs(_lower(_corr(b))), _scatter(b)[2])
 
 
-@measure("cov", "statistical")
-def _cov(b: ConvBatch) -> np.ndarray:
+@batched("cov", "statistical")
+def _cov(b: ConvBatch) -> Ragged:
     """abs lower triangle of covariance (statistical.py:453-498)."""
-    C = np.abs(b.cov_mat())
-    return C[np.tril_indices_from(C, k=-1)]
+    return Ragged.fixed(np.abs(_lower(_scatter(b)[1])), _scatter(b)[2])
 
 
-@measure("nr_cor_attr", "statistical")
-def _nr_cor_attr(b: ConvBatch) -> float:
+@batched("nr_cor_attr", "statistical")
+def _nr_cor_attr(b: ConvBatch) -> np.ndarray:
     """fraction of pairs with |rho| >= threshold (statistical.py:
     863-915; default 0.5, overridable via measure_kwargs routing —
     the reference's ``extract(nr_cor_attr={"threshold": ...})``)."""
@@ -532,29 +746,60 @@ def _nr_cor_attr(b: ConvBatch) -> float:
         .get("nr_cor_attr", {})
         .get("threshold", 0.5)
     )
-    v = np.abs(b.corr_mat())[np.tril_indices(b.N.shape[1], k=-1)]
-    return float(np.mean(v >= thr)) if v.size else float("nan")
+    v = np.abs(_lower(_corr(b)))
+    if not v.shape[1]:
+        return np.full(b.S, np.nan)
+    return np.where(_scatter(b)[2], np.nan, (v >= thr).sum(axis=1) / v.shape[1])
 
 
-@measure("eigenvalues", "statistical")
-def _eigenvalues(b: ConvBatch) -> np.ndarray:
-    """eigvals of the covariance matrix (statistical.py:547-581)."""
-    return np.linalg.eigvalsh(b.cov_mat())[::-1]
+@batched("eigenvalues", "statistical")
+def _eigenvalues(b: ConvBatch) -> Ragged:
+    """eigvals of the covariance matrix (statistical.py:547-581); a
+    segment whose matrix is not finite fails alone (eigvalsh raises)."""
+    P, cov, bad = _scatter(b)
+    bad = bad | ~np.isfinite(cov).all(axis=(1, 2))
+    ev = np.full(cov.shape[:2], np.nan)
+    if (~bad).any():
+        ev[~bad] = np.linalg.eigvalsh(cov[~bad])[:, ::-1]
+    return Ragged.fixed(ev, bad)
 
 
-@measure("gravity", "statistical", needs_y=True)
-def _gravity(b: ConvBatch) -> float:
+def _class_stats(b: ConvBatch) -> tuple:
+    """Per (segment, class) sub-segment: N column sums and means, summed
+    in row order (as ``N[y == c].mean(axis=0)`` sums), and each
+    sub-segment's centered cross-product sums (the class scatter)."""
+
+    def make():
+        order, st, seg_of, _, cnt, _ = b.by_class()
+        sub = np.empty(len(order), dtype=np.int64)
+        sub[order] = np.repeat(np.arange(len(cnt)), cnt)
+        sums = np.column_stack(
+            [np.bincount(sub, weights=col, minlength=len(cnt)) for col in b.NT()]
+        ).reshape(len(cnt), -1)
+        means = sums / cnt[:, None]
+        X = b.N[order]
+        dc = X - np.repeat(means, cnt, axis=0)
+        P = np.add.reduceat(np.einsum("ni,nj->nij", dc, dc), st[:-1], axis=0)
+        return sums, means, P
+
+    return b._cached("class_stats", make)
+
+
+@batched("gravity", "statistical", needs_y=True)
+def _gravity(b: ConvBatch) -> np.ndarray:
     """Distance between majority and minority class centroids
     (statistical.py:305-407); deterministic tie-break by class label."""
-    classes, cnt = b.classes()
-    if classes.size < 2:
-        return float("nan")
-    maj = classes[np.lexsort((classes, -cnt))][0]
-    rest = classes != maj
-    mino = classes[rest][np.lexsort((classes[rest], cnt[rest]))][0]
-    ca = b.N[b.y == maj].mean(axis=0)
-    cb = b.N[b.y == mino].mean(axis=0)
-    return float(np.linalg.norm(ca - cb))
+    _, _, seg_of, code, cnt, soff = b.by_class()
+    means = _class_stats(b)[1]
+    maj = np.lexsort((code, -cnt, seg_of))[soff[:-1][b.nuniq("y") > 0]]
+    is_maj = np.zeros(len(cnt), dtype=bool)
+    is_maj[maj] = True
+    mino = np.lexsort((code, cnt, is_maj, seg_of))[soff[:-1]]
+    out = np.full(b.S, np.nan)
+    two = b.nuniq("y") >= 2
+    diff = means[maj[two]] - means[mino[two]]
+    out[two] = np.sqrt((diff * diff).sum(axis=1))
+    return out
 
 
 @measure("nr_norm", "statistical")
@@ -570,7 +815,7 @@ def _nr_norm(b: ConvBatch) -> float:
     column) propagate, matching apply_along_axis semantics -> the
     measure becomes NaN via exception containment. method / threshold /
     failure / max_samples route through measure_kwargs like the
-    reference's extract(nr_norm={...})."""
+    reference's extract(nr_norm={...}). Runs once per conversation."""
     from pymfe_spark.plans.normality import nr_norm as _nn
 
     kw = b.config.get("measure_kwargs", {}).get("nr_norm", {})
@@ -583,184 +828,267 @@ def _nr_norm(b: ConvBatch) -> float:
     )
 
 
-@measure("can_cor", "statistical", needs_y=True)
-def _can_cor(b: ConvBatch) -> np.ndarray:
-    return b.can_cors()  # statistical.py:265-302
+def _inv_sqrt(S: np.ndarray, reg: float) -> np.ndarray:
+    w, V = np.linalg.eigh(S)
+    w = np.clip(w, reg, None)
+    return (V * w[:, None, :] ** -0.5) @ np.swapaxes(V, 1, 2)
 
 
-@measure("nr_disc", "statistical", needs_y=True)
-def _nr_disc(b: ConvBatch) -> float:
-    return float(b.can_cors().size)  # statistical.py:501-544
+def _can_cor_seg(b: ConvBatch, reg: float = 1e-10) -> Ragged:
+    """Classical CCA between N and one-hot(y) per segment (k-1
+    components dropped by rank): canonical correlations are the
+    singular values of Sxx^-1/2 Sxy Syy^-1/2. The three cross-product
+    matrices are built per conversation with the one-conversation
+    arithmetic (near-perfect fits make the largest canonical
+    correlation's eigenvalue rho^2 / (1 - rho^2) amplify any rounding
+    change); the eigh / svd work is stacked, one call per class
+    count."""
+
+    def make():
+        k = b.nuniq("y")
+        lens = b.lens()
+        d = b.N.shape[1]
+        yc = b.local("y")
+        vals: list[np.ndarray] = [np.zeros(0)] * b.S
+        ok = (k >= 2) & (lens >= 3)
+        for kk in np.unique(k[ok]):
+            segs = np.flatnonzero(ok & (k == kk))
+            mats = []
+            for sg in segs:
+                a, e = b.bounds[sg], b.bounds[sg + 1]
+                N = b.N[a:e]
+                Y = (yc[a:e, None] == np.arange(kk)[None, :]).astype(float)
+                Xc = N - N.mean(axis=0)
+                Yc = Y - Y.mean(axis=0)
+                n = N.shape[0]
+                mats.append((Xc.T @ Xc / (n - 1), Yc.T @ Yc / (n - 1), Xc.T @ Yc / (n - 1)))
+            Sxx, Syy, Sxy = (np.stack(m) for m in zip(*mats))
+            M = _inv_sqrt(Sxx + reg * np.eye(d), reg) @ Sxy @ _inv_sqrt(Syy + reg * np.eye(kk), reg)
+            s = np.linalg.svd(M, compute_uv=False)[:, : min(kk, d)]
+            for i, sg in enumerate(segs):
+                r = s[i]
+                # trim rank-deficient components (one-hot Y has rank
+                # k-1): the reference's CCA while-loop stops at the
+                # first zero-variance transformed column
+                # (statistical.py:246-257); the eigen route surfaces
+                # those as ~reg-level singular values
+                vals[sg] = np.clip(r[r > 1.0e-8], 0.0, 1.0)
+        return Ragged.of(vals)
+
+    return b._cached("can_cor", make)
 
 
-@measure("w_lambda", "statistical", needs_y=True)
-def _w_lambda(b: ConvBatch) -> float:
+def _can_cors(N: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """Canonical correlations of one conversation."""
+    y = np.asarray(y, dtype=object)
+    return _can_cor_seg(ConvBatch(N=N, C=y[:, None], y=y)).row(0)
+
+
+def _can_cor_reduce(b: ConvBatch, fn) -> np.ndarray:
+    """fn(values, segment of each value) over the canonical
+    correlations; NaN for a segment with none."""
+    r = _can_cor_seg(b)
+    seg = np.repeat(np.arange(b.S), np.diff(r.offsets))
+    out = np.full(b.S, np.nan)
+    has = np.diff(r.offsets) > 0
+    out[has] = fn(r.flat, seg, b.S)[has]
+    return out
+
+
+def _eig(rho: np.ndarray) -> np.ndarray:
+    """lambda = rho^2 / (1 - rho^2) (statistical.py:192-209)."""
+    rho2 = np.clip(rho**2, 0.0, 1.0 - 1e-12)
+    return rho2 / (1.0 - rho2)
+
+
+def _segsum(v, seg, S):
+    return np.bincount(seg, weights=v, minlength=S)
+
+
+batched("can_cor", "statistical", needs_y=True)(_can_cor_seg)  # 265-302
+batched("nr_disc", "statistical", needs_y=True)(
+    lambda b: np.diff(_can_cor_seg(b).offsets).astype(float)
+)  # 501-544
+
+
+@batched("w_lambda", "statistical", needs_y=True)
+def _w_lambda(b: ConvBatch) -> np.ndarray:
     """Wilks' Lambda via exp(-sum(log1p(eig))) — the reference's
     numerically-stable rewrite (statistical.py:1537-1538)."""
-    ev = b.can_cor_eigvals()
-    return float(np.exp(-np.sum(np.log1p(ev)))) if ev.size else float("nan")
+    return _can_cor_reduce(b, lambda r, s, S: np.exp(-_segsum(np.log1p(_eig(r)), s, S)))
 
 
-@measure("p_trace", "statistical", needs_y=True)
-def _p_trace(b: ConvBatch) -> float:
-    rho = b.can_cors()
-    return float(np.sum(rho**2)) if rho.size else float("nan")  # 1541-1582
+batched("p_trace", "statistical", needs_y=True)(
+    lambda b: _can_cor_reduce(b, lambda r, s, S: _segsum(r**2, s, S))
+)  # 1541-1582
+batched("lh_trace", "statistical", needs_y=True)(
+    lambda b: _can_cor_reduce(b, lambda r, s, S: _segsum(_eig(r), s, S))
+)  # 1585-1658
 
 
-@measure("lh_trace", "statistical", needs_y=True)
-def _lh_trace(b: ConvBatch) -> float:
-    ev = b.can_cor_eigvals()
-    return float(np.sum(ev)) if ev.size else float("nan")  # 1585-1658
+@batched("roy_root", "statistical", needs_y=True)
+def _roy_root(b: ConvBatch) -> np.ndarray:  # 1661-1774
+    def seg_max(r, s, S):
+        out = np.full(S, -np.inf)
+        np.maximum.at(out, s, _eig(r))
+        return out
+
+    return _can_cor_reduce(b, seg_max)
 
 
-@measure("roy_root", "statistical", needs_y=True)
-def _roy_root(b: ConvBatch) -> float:
-    ev = b.can_cor_eigvals()
-    return float(np.max(ev)) if ev.size else float("nan")  # 1661-1774
-
-
-@measure("sd_ratio", "statistical", needs_y=True)
-def _sd_ratio(b: ConvBatch) -> float:
+@batched("sd_ratio", "statistical", needs_y=True)
+def _sd_ratio(b: ConvBatch) -> np.ndarray:
     """Box's M homogeneity-of-covariances statistic
-    (statistical.py:1162-1307): exp(M / (p * (n - k)))."""
-    classes, cnt = b.classes()
-    k = classes.size
-    n, p = b.N.shape
-    if k < 2 or np.any(cnt < 2):
-        return float("nan")
-    covs = np.array(
-        [np.cov(b.N[b.y == c], rowvar=False, ddof=1) for c in classes]
-    )
-    # replicated verbatim from the reference (statistical.py:1222-1230):
-    # np.flip(axis=(0, 1)) reverses the class order AND each matrix's
-    # ROWS (not columns), so every det picks up a (-1)^floor(p/2)
-    # factor and the weights pair with the reversed class stack. For
-    # p % 4 in {2, 3} the dets go negative -> log -> NaN — the
-    # reference's own mixed/categorical goldens pin that NaN, so the
-    # quirk is part of the contract.
-    covs = np.flip(covs, axis=(0, 1))
-    w = cnt - 1.0
-    pooled = (w[:, None, None] * covs).sum(axis=0) / (n - k)
-    gamma = 1.0 - (
-        (2.0 * p**2 + 3.0 * p - 1.0) / (6.0 * (p + 1.0) * (k - 1.0))
-    ) * (np.sum(1.0 / w) - 1.0 / (n - k))
-    with np.errstate(all="ignore"):
-        logdets = [np.log(np.linalg.det(np.atleast_2d(Si))) for Si in covs]
-        logdet_p = np.log(np.linalg.det(np.atleast_2d(pooled)))
-        m_factor = gamma * ((n - k) * logdet_p - np.dot(w, logdets))
-    if not np.isfinite(m_factor):
-        return float("nan")
-    return float(np.exp(m_factor / (p * (n - k))))
+    (statistical.py:1162-1307): exp(M / (p * (n - k))). Stacked det,
+    one call per class count."""
+    _, _, seg_of, _, cnt, soff = b.by_class()
+    P = _class_stats(b)[2]
+    k = b.nuniq("y")
+    p = b.N.shape[1]
+    small = np.bincount(seg_of, weights=cnt < 2, minlength=b.S) > 0
+    out = np.full(b.S, np.nan)
+    for kk in np.unique(k[(k >= 2) & ~small]):
+        segs = np.flatnonzero((k == kk) & ~small)
+        n = b.lens()[segs].astype(float)
+        sub = soff[:-1][segs][:, None] + np.arange(kk)
+        w = cnt[sub] - 1.0  # (m, kk)
+        covs = P[sub] * (1.0 / w)[:, :, None, None]
+        # replicated verbatim from the reference (statistical.py:
+        # 1222-1230): np.flip(axis=(0, 1)) of each conversation's stack
+        # reverses the class order AND each matrix's ROWS (not
+        # columns), so every det picks up a (-1)^floor(p/2) factor and
+        # the weights pair with the reversed class stack. For p % 4 in
+        # {2, 3} the dets go negative -> log -> NaN — the reference's
+        # own mixed/categorical goldens pin that NaN, so the quirk is
+        # part of the contract.
+        covs = np.flip(covs, axis=(1, 2))
+        nk = (n - kk)[:, None, None]
+        pooled = (w[:, :, None, None] * covs).sum(axis=1) / nk
+        gamma = 1.0 - (
+            (2.0 * p**2 + 3.0 * p - 1.0) / (6.0 * (p + 1.0) * (kk - 1.0))
+        ) * ((1.0 / w).sum(axis=1) - 1.0 / (n - kk))
+        logdets = np.log(np.linalg.det(covs))
+        logdet_p = np.log(np.linalg.det(pooled))
+        m_factor = gamma * ((n - kk) * logdet_p - (w * logdets).sum(axis=1))
+        out[segs] = np.where(
+            np.isfinite(m_factor), np.exp(m_factor / (p * (n - kk))), np.nan
+        )
+    return out
 
 
 # ---- info-theory (/root/reference/pymfe/info_theory.py) --------------
 
-measure("class_ent", "info-theory", needs_y=True)(
-    lambda b: _col_ent(b.y)
+batched("class_ent", "info-theory", needs_y=True)(
+    lambda b: b.entropy("y")
 )  # 344-389
 
 
-@measure("attr_ent", "info-theory")
-def _attr_ent(b: ConvBatch) -> np.ndarray:
-    """Shannon entropy per categorical column (info_theory.py:277-313).
-    Cached: reused by mut_inf and ns_ratio (precompute-cache
-    analogue); counts come from the cached column factorization."""
-    if "attr_ent" not in b._cache:
-        b._cache["attr_ent"] = np.array(
-            [
-                _entropy(_counts_from_codes(*b.c_codes(j)), base=2)
-                for j in range(b.C.shape[1])
-            ]
-        )
-    return b._cache["attr_ent"]
+def _cat_cols(b: ConvBatch) -> range:
+    return range(b.C.shape[1])
 
 
-def _joint_ent_y_vec(b: ConvBatch) -> np.ndarray:
-    """H(col, y) per column — computed once from cached codes, shared
-    by joint_ent and mut_inf (the reference computes these twice)."""
-    if "joint_ent_y" not in b._cache:
-        yv, yi = b.y_codes()
-        out = []
-        for j in range(b.C.shape[1]):
-            cv, ci = b.c_codes(j)
-            out.append(_joint_ent_tab(_tab_from_codes(ci, cv.size, yi, yv.size)))
-        b._cache["joint_ent_y"] = np.array(out)
-    return b._cache["joint_ent_y"]
+@batched("attr_ent", "info-theory")
+def _attr_ent(b: ConvBatch) -> Ragged:
+    """Shannon entropy per categorical column (info_theory.py:277-313)."""
+    return Ragged.fixed(_attr_ent_mat(b))
 
 
-@measure("joint_ent", "info-theory", needs_y=True)
-def _joint_ent_m(b: ConvBatch) -> np.ndarray:
+def _attr_ent_mat(b: ConvBatch) -> np.ndarray:
+    return np.column_stack([b.entropy(j) for j in _cat_cols(b)]).reshape(b.S, -1)
+
+
+def _joint_ent_seg(b: ConvBatch, a, c) -> np.ndarray:
+    """eps-smoothed joint entropy over each segment's DENSE crosstab
+    (info_theory.py:183-195,457-508): scipy.stats.entropy(p + eps,
+    base=2) — normalizes internally."""
+
+    def make():
+        tab, off, cseg = b.crosstab(a, c)[:3]
+        e = NP(off)
+        p = tab / b.lens()[cseg] + EPS
+        p = p / e.sum(p)[cseg]
+        return -e.sum(p * np.log2(p))
+
+    return b._cached(("joint_ent", a, c), make)
+
+
+def _conc_seg(b: ConvBatch, a, c, eps: float = 1.0e-8) -> np.ndarray:
+    """Goodman-Kruskal tau of a -> c per segment (rows = a, cols = c),
+    reference-exact (info_theory.py:198-213): eps added to every cell,
+    numerator divides by the c-marginals and subtracts the squared
+    a-marginals."""
+    tab, off, cseg, ckey, rstart, roff, ncol = b.crosstab(a, c)
+    pij = tab / b.lens()[cseg] + eps
+    isum = np.bincount(ckey, weights=pij, minlength=ncol)
+    nb = b.nuniq(c)[np.repeat(np.arange(b.S), b.nuniq(a))]
+    jsum2 = NP(roff).sum(range_sum(pij, rstart, nb) ** 2)
+    denom = 1.0 - jsum2
+    num = NP(off).sum(pij**2 / isum[ckey]) - jsum2
+    return np.where(denom == 0, np.nan, num / np.where(denom == 0, 1.0, denom))
+
+
+def _joint_mat(b: ConvBatch) -> np.ndarray:
+    return np.column_stack([_joint_ent_seg(b, j, "y") for j in _cat_cols(b)]).reshape(b.S, -1)
+
+
+@batched("joint_ent", "info-theory", needs_y=True)
+def _joint_ent_m(b: ConvBatch) -> Ragged:
     """Joint entropy of each column with y (info_theory.py:457-508)."""
-    return _joint_ent_y_vec(b)
+    return Ragged.fixed(_joint_mat(b))
 
 
-@measure("mut_inf", "info-theory", needs_y=True)
-def _mut_inf(b: ConvBatch) -> np.ndarray:
-    """H(x) + H(y) - H(x,y) (info_theory.py:511-588). Cached: reused by
-    eq_num_attr and ns_ratio. Element order of the float ops matches
-    the per-column scalar form: (H(x_j) + H(y)) - H(x_j, y)."""
-    if "mut_inf" not in b._cache:
-        hy = _col_ent(b.y)
-        b._cache["mut_inf"] = (_attr_ent(b) + hy) - _joint_ent_y_vec(b)
-    return b._cache["mut_inf"]
+def _mut_inf_mat(b: ConvBatch) -> np.ndarray:
+    """H(x) + H(y) - H(x,y) per column, in that float order."""
+    return b._cached(
+        "mut_inf", lambda: (_attr_ent_mat(b) + b.entropy("y")[:, None]) - _joint_mat(b)
+    )
 
 
-@measure("attr_conc", "info-theory")
-def _attr_conc(b: ConvBatch) -> np.ndarray:
+@batched("mut_inf", "info-theory", needs_y=True)
+def _mut_inf(b: ConvBatch) -> Ragged:
+    """H(x) + H(y) - H(x,y) (info_theory.py:511-588)."""
+    return Ragged.fixed(_mut_inf_mat(b))
+
+
+@batched("attr_conc", "info-theory")
+def _attr_conc(b: ConvBatch) -> Ragged:
     """Goodman-Kruskal tau for every ORDERED column pair, max 12 columns
     sampled (info_theory.py:198-274; cap at 219-263). The sample
     replays the reference's seeded np.random.choice stream
     (random_state from the batch config). Emission order is the
-    reference's nested-loop order; each unordered pair's crosstab is
-    built once and transposed for the reverse direction (the transpose
-    is exact — integer scatter counts)."""
+    reference's nested-loop order."""
     d = b.C.shape[1]
     cols = np.arange(d)
     if d > 12:
         rng = np.random.RandomState(b.config.get("seed", 1234))
         cols = np.sort(rng.choice(d, 12, replace=False))
-    tabs: dict[tuple[int, int], np.ndarray] = {}
-    out = []
-    for i in cols:
-        for j in cols:
-            if i == j:
-                continue
-            if (j, i) in tabs:
-                tab = tabs.pop((j, i)).T
-            else:
-                iv, ii = b.c_codes(i)
-                jv, ji = b.c_codes(j)
-                tab = _tab_from_codes(ii, iv.size, ji, jv.size)
-                tabs[(i, j)] = tab
-            out.append(_conc_tab(tab))
-    return np.array(out) if out else np.array([np.nan])
+    out = [_conc_seg(b, int(i), int(j)) for i in cols for j in cols if i != j]
+    if not out:
+        return Ragged.fixed(np.full((b.S, 1), np.nan))
+    return Ragged.fixed(np.column_stack(out))
 
 
-@measure("class_conc", "info-theory", needs_y=True)
-def _class_conc(b: ConvBatch) -> np.ndarray:
+@batched("class_conc", "info-theory", needs_y=True)
+def _class_conc(b: ConvBatch) -> Ragged:
     """tau(col -> y) per column (info_theory.py:316-341)."""
-    yv, yi = b.y_codes()
-    out = []
-    for j in range(b.C.shape[1]):
-        cv, ci = b.c_codes(j)
-        out.append(_conc_tab(_tab_from_codes(ci, cv.size, yi, yv.size)))
-    return np.array(out)
+    return Ragged.fixed(
+        np.column_stack([_conc_seg(b, j, "y") for j in _cat_cols(b)]).reshape(b.S, -1)
+    )
 
 
-@measure("eq_num_attr", "info-theory", needs_y=True)
-def _eq_num_attr(b: ConvBatch) -> float:
+@batched("eq_num_attr", "info-theory", needs_y=True)
+def _eq_num_attr(b: ConvBatch) -> np.ndarray:
     """d * H(y) / sum(MI) (info_theory.py:392-454)."""
-    mi = _mut_inf(b)
-    s = mi.sum()
-    return float(b.C.shape[1] * _col_ent(b.y) / s) if s else float("nan")
+    s = _mut_inf_mat(b).sum(axis=1)
+    return np.where(s != 0, b.C.shape[1] * b.entropy("y") / np.where(s != 0, s, 1.0), np.nan)
 
 
-@measure("ns_ratio", "info-theory", needs_y=True)
-def _ns_ratio(b: ConvBatch) -> float:
+@batched("ns_ratio", "info-theory", needs_y=True)
+def _ns_ratio(b: ConvBatch) -> np.ndarray:
     """(sum H(x) - sum MI) / sum MI (info_theory.py:591-650)."""
-    mi = _mut_inf(b).sum()
-    hx = _attr_ent(b).sum()
-    return float((hx - mi) / mi) if mi else float("nan")
+    mi = _mut_inf_mat(b).sum(axis=1)
+    hx = _attr_ent_mat(b).sum(axis=1)
+    return np.where(mi != 0, (hx - mi) / np.where(mi != 0, mi, 1.0), np.nan)
 
 
 # ---- clustering (/root/reference/pymfe/clustering.py) ----------------

@@ -72,6 +72,34 @@ def conv_seed(conv_id: str, global_seed: int = 42) -> int:
     return (zlib.crc32(conv_id.encode()) ^ global_seed) & 0x7FFFFFFF
 
 
+def bootstrap_indices(
+    n: int, conv_id: str, sample_num: int = 128, global_seed: int = 42
+) -> list[np.ndarray]:
+    """The ``sample_num`` sorted row-resample indices of one
+    conversation of ``n`` rows, seeded per conversation."""
+    rng = np.random.RandomState(conv_seed(conv_id, global_seed))
+    return [np.sort(rng.randint(0, n, size=n)) for _ in range(sample_num)]
+
+
+def bootstrap_intervals(
+    est: dict[str, float], boots: list[dict[str, float]], confidence: float = 0.95
+) -> dict[str, tuple[float, float, float]]:
+    """(estimate, ci_low, ci_high) per measure: empirical-bootstrap
+    interval of the resample rows ``boots`` around ``est``."""
+    alpha = (1.0 - confidence) / 2.0
+    out = {}
+    for k, e in est.items():
+        bs = np.asarray([b.get(k, float("nan")) for b in boots], dtype=float)
+        bs = bs[~np.isnan(bs)]
+        if bs.size == 0 or np.isnan(e):
+            out[k] = (e, float("nan"), float("nan"))
+            continue
+        lo = 2.0 * e - float(np.quantile(bs, 1.0 - alpha))
+        hi = 2.0 * e - float(np.quantile(bs, alpha))
+        out[k] = (e, lo, hi)
+    return out
+
+
 def bootstrap_rows(
     compute_rows,
     arrays: tuple,
@@ -85,24 +113,9 @@ def bootstrap_rows(
     ``compute_rows(arrays) -> dict[name, value]``; ``arrays`` are the
     per-conversation column arrays (resampled jointly by row index).
     """
-    est = compute_rows(arrays)
-    n = arrays[0].shape[0]
-    rng = np.random.RandomState(conv_seed(conv_id, global_seed))
-    boot: dict[str, list[float]] = {k: [] for k in est}
-    for _ in range(sample_num):
-        idx = np.sort(rng.randint(0, n, size=n))
-        res = compute_rows(tuple(a[idx] for a in arrays))
-        for k in boot:
-            boot[k].append(res.get(k, float("nan")))
-    alpha = (1.0 - confidence) / 2.0
-    out = {}
-    for k, e in est.items():
-        bs = np.asarray(boot[k], dtype=float)
-        bs = bs[~np.isnan(bs)]
-        if bs.size == 0 or np.isnan(e):
-            out[k] = (e, float("nan"), float("nan"))
-            continue
-        lo = 2.0 * e - float(np.quantile(bs, 1.0 - alpha))
-        hi = 2.0 * e - float(np.quantile(bs, alpha))
-        out[k] = (e, lo, hi)
-    return out
+    idx = bootstrap_indices(arrays[0].shape[0], conv_id, sample_num, global_seed)
+    return bootstrap_intervals(
+        compute_rows(arrays),
+        [compute_rows(tuple(a[i] for a in arrays)) for i in idx],
+        confidence,
+    )

@@ -3,10 +3,8 @@ input: every categorical SQL-tier query and every kernel cross-check
 built on them must match its DuckDB oracle on a planted transcript
 table holding a one-role conversation, a one-turn conversation, a null
 tool and a literal 'NONE' tool — cases the generated testdata never
-produces (its tool is never the string 'NONE'). The SQL-tier queries
-also see a null role, one more class in both engines; the numpy
-kernel behind the cross-checks reads a null role as missing, so their
-table has none."""
+produces (its tool is never the string 'NONE'), and a null role, one
+more class in every engine (the numpy kernel's NULL_ROLE)."""
 
 from __future__ import annotations
 
@@ -97,7 +95,7 @@ def _oracle(planted: pd.DataFrame, sql: str) -> pd.DataFrame:
 
 @pytest.mark.parametrize("name", QUERIES)
 def test_degenerate_class_tables_match_oracle(spark, plant, name):
-    planted = plant(_planted(null_role=name in SQL_TIER))
+    planted = plant(_planted(null_role=True))
     got = CATALOG[name].fn(spark, "planted").toPandas()
     assert_frames_match(got, _oracle(planted, CATALOG[name].oracle), name)
 

@@ -45,11 +45,16 @@ def _split(pdf: pd.DataFrame, cuts: list[int]) -> list[pd.DataFrame]:
 def _run(batches):
     seen: list[tuple[str, tuple]] = []
 
-    def per_conv(conv_id, arrays):
-        seen.append((conv_id, tuple(a.copy() for a in arrays)))
-        return {"n": [len(arrays[0])], "first_tool": [arrays[4][0]]}
+    def per_batch(conv_ids, arrays, edges):
+        for cid, a, e in zip(conv_ids, edges[:-1], edges[1:]):
+            seen.append((cid, tuple(x[a:e].copy() for x in arrays)))
+        return {
+            "conv_id": list(conv_ids),
+            "n": np.diff(edges).tolist(),
+            "first_tool": [arrays[4][a] for a in edges[:-1]],
+        }
 
-    frames = list(_stream_batches(iter(batches), per_conv))
+    frames = list(_stream_batches(iter(batches), per_batch))
     return seen, frames
 
 
@@ -157,3 +162,143 @@ def test_entry_points_independent_of_arrow_batch_size(spark):
     for name in runs:
         assert len(default[name]) > 0, name
         pd.testing.assert_frame_equal(small[name], default[name], check_exact=True)
+
+
+# ---------------------------------------------------------------------
+# the batched kernel: one call per Arrow batch must give every
+# conversation exactly the rows it gets alone
+# ---------------------------------------------------------------------
+
+CORE = ("general", "statistical", "info-theory")
+
+
+def _mixed_turns() -> pd.DataFrame:
+    """Normal conversations with degenerate ones between them: one
+    turn, two turns, a constant column, a single class, a null role."""
+    rng = np.random.RandomState(7)
+    frames = []
+
+    def conv(cid, n, role=None, text_len=None):
+        i = np.arange(n)
+        frames.append(
+            pd.DataFrame(
+                {
+                    "conv_id": cid,
+                    "turn_idx": i.astype(np.int32),
+                    "role": rng.choice(["user", "assistant", "tool"], n)
+                    if role is None
+                    else role,
+                    "tool": rng.choice(["exec", "write", None], n),
+                    "text_len": rng.randint(1, 400, n).astype(float)
+                    if text_len is None
+                    else text_len,
+                    "ts_delta_s": np.where(i == 0, np.nan, rng.exponential(20, n).round(6)),
+                }
+            )
+        )
+
+    conv("a", 40)
+    conv("b_one_turn", 1)
+    conv("c", 67)
+    conv("d_two_turns", 2)
+    conv("e_constant", 12, text_len=np.full(12, 7.0))
+    conv("f", 9)
+    conv("g_one_class", 10, role=np.array(["user"] * 10, dtype=object))
+    conv("h_null_role", 15, role=np.array(["user", None, "assistant"] * 5, dtype=object))
+    conv("i", 130)
+    return pd.concat(frames, ignore_index=True)
+
+
+def _alone_and_batched(cfg=None):
+    from pymfe_spark.plans.extractor import (
+        KernelConfig,
+        _extract_contiguous,
+        extract_batch,
+    )
+    from pymfe_spark.plans.measures import GROUPS
+
+    names = tuple(n for g in CORE for n in sorted(GROUPS[g]))
+    cfg = cfg or KernelConfig()
+    pdf = _mixed_turns()
+    batched = next(_extract_contiguous(pdf, names, cfg))
+    alone = pd.concat(
+        [
+            extract_batch(g, names, cfg.summaries, cfg.max_kernel_turns, cfg=cfg)
+            for _, g in pdf.groupby("conv_id", sort=True)
+        ],
+        ignore_index=True,
+    )
+    return batched, alone
+
+
+def test_batched_kernel_equals_each_conversation_alone():
+    """extract_batch of each conversation alone (a one-segment call)
+    equals that conversation's rows when the whole mixed batch —
+    degenerate conversations included — is one kernel call."""
+    batched, alone = _alone_and_batched()
+    pd.testing.assert_frame_equal(batched, alone, check_exact=True)
+    got = batched.set_index(["conv_id", "mtf_name"])["mtf_val"]
+    # the degenerate cases keep their one-conversation values
+    assert got["b_one_turn", "nr_inst"] == 1.0
+    assert np.isnan(got["b_one_turn", "cov"])  # np.cov gives no matrix: fails alone
+    assert np.isnan(got["g_one_class", "gravity"])
+    assert got["h_null_role", "nr_class"] == 3.0  # the null role is a class
+    assert np.isfinite(got["h_null_role", "class_ent"])
+
+
+def test_batched_kernel_equals_alone_under_summaries():
+    """The same with a summary set that has no row-wise form."""
+    from pymfe_spark.plans.extractor import KernelConfig
+
+    cfg = KernelConfig(summaries=("mean", "quantiles", "histogram", "nansd", "kurtosis"))
+    batched, alone = _alone_and_batched(cfg)
+    pd.testing.assert_frame_equal(batched, alone, check_exact=True)
+
+
+def test_raising_segment_form_fails_one_conversation_only(monkeypatch):
+    """A segment form that raises on a batch is re-run one conversation
+    at a time: only the conversation it fails for gets NaN (as a bare
+    measure row), every other one keeps its values."""
+    import pymfe_spark.plans.measures as m
+    from pymfe_spark.plans.extractor import KernelConfig, _extract_contiguous
+
+    real = m.MEASURES["mean"]
+
+    def seg(b):  # fails for the constant-text_len conversation
+        if any((b.segment(s).N[:, 0] == 7.0).all() for s in range(b.S)):
+            raise ValueError("planted failure")
+        return real.seg(b)
+
+    monkeypatch.setitem(
+        m.MEASURES, "mean", m.MeasureDef("mean", "statistical", m._first(seg), False, seg)
+    )
+    pdf = _mixed_turns()
+    out = next(_extract_contiguous(pdf, ("mean",), KernelConfig()))
+    rows = {cid: dict(zip(g.mtf_name, g.mtf_val)) for cid, g in out.groupby("conv_id")}
+    assert list(rows["e_constant"]) == ["mean"] and np.isnan(rows["e_constant"]["mean"])
+    for cid, r in rows.items():
+        if cid != "e_constant":
+            assert sorted(r) == ["mean.mean", "mean.sd"], cid
+            assert np.isfinite(r["mean.mean"]), cid
+
+
+def test_extract_identical_across_arrow_batch_sizes(spark):
+    """extract() of the default groups gives bit-identical rows whether
+    an Arrow batch holds 10,000 turns, 7 or 1."""
+    from pymfe_spark.operators.base import turns
+    from pymfe_spark.plans.extractor import MFESpark
+
+    ex = MFESpark(groups=CORE)
+    t = turns(spark, SF_SMOKE)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    got = {}
+    try:
+        for size in ("10000", "7", "1"):
+            spark.conf.set(key, size)
+            got[size] = _sorted(ex.extract(t), ["conv_id", "mtf_name"])
+    finally:
+        spark.conf.set(key, old)
+    assert len(got["10000"]) > 0
+    for size in ("7", "1"):
+        pd.testing.assert_frame_equal(got[size], got["10000"], check_exact=True)

@@ -2,8 +2,8 @@
 queries (round-2 verdict "Next round" #3).
 
 The goldens are computed by the DRIVER-SIDE numpy twin — the same
-per-conversation kernels (`_extract_contiguous` / `_expanding_rows` /
-`bootstrap_rows`) fed from a DuckDB load of the turn table, with NO
+batched kernel (`_extract_contiguous` / `_expanding_rows` /
+`_confidence_rows`) fed from a DuckDB load of the turn table, with NO
 Spark involvement (no partitioning, no Arrow chunk carryover, no
 applyInPandas). tests/test_extract_goldens.py then compares each
 catalog query's Spark output against the frozen file value-for-value,
@@ -29,7 +29,6 @@ import os
 import sys
 
 import duckdb
-import numpy as np
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -37,12 +36,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pymfe_spark.operators.base import TURNS_SQL  # noqa: E402
 from pymfe_spark.plans.extractor import (  # noqa: E402
     MFESpark,
+    _confidence_rows,
     _extract_contiguous,
     _expanding_rows,
-    _measure_rows,
-    _batch_from_arrays,
 )
-from pymfe_spark.plans.postprocess import bootstrap_rows  # noqa: E402
 from pymfe_spark.sources.transcripts import TRANSCRIPTS_SQL  # noqa: E402
 
 SF_DEFAULT = "/root/testdata/sf0.001"
@@ -118,43 +115,10 @@ def _twin_confidence(
     from dataclasses import replace
 
     cfg = replace(ex.cfg, measure_time=None)
-    measure_names = ex.measure_names
-
-    def compute(arrays):
-        batch = _batch_from_arrays(*arrays, cfg=cfg)
-        rows, _ = _measure_rows(batch, arrays, measure_names, cfg)
-        return rows
-
-    frames = []
-    for conv_id, g in pdf.groupby("conv_id", sort=True):
-        g = g.sort_values("turn_idx")
-        arrays = (
-            g["text_len"].to_numpy(dtype=float),
-            np.nan_to_num(g["ts_delta_s"].to_numpy(dtype=float), nan=0.0),
-            g["turn_idx"].to_numpy(dtype=float),
-            g["role"].to_numpy(dtype=object),
-            np.where(
-                pd.isna(g["tool"].to_numpy(dtype=object)),
-                "NONE",
-                g["tool"].to_numpy(dtype=object),
-            ),
-        )
-        res = bootstrap_rows(
-            compute, arrays, str(conv_id), sample_num=sample_num
-        )
-        names = sorted(res)
-        frames.append(
-            pd.DataFrame(
-                {
-                    "conv_id": str(conv_id),
-                    "mtf_name": names,
-                    "mtf_val": [res[n][0] for n in names],
-                    "ci_low": [res[n][1] for n in names],
-                    "ci_high": [res[n][2] for n in names],
-                }
-            )
-        )
-    return pd.concat(frames, ignore_index=True)
+    return pd.concat(
+        list(_confidence_rows(pdf, ex.measure_names, cfg, sample_num)),
+        ignore_index=True,
+    )
 
 
 def _twin_hybrid_mega(pdf: pd.DataFrame, ex: MFESpark) -> pd.DataFrame:
