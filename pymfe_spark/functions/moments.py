@@ -205,6 +205,10 @@ def _pw_leaf(x: np.ndarray, lo: np.ndarray, n: np.ndarray) -> np.ndarray:
 
 
 def _pw(x: np.ndarray, lo: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """numpy's pairwise sum of every range: above 128 elements a range
+    is the sum of its halves (the first half rounded down to a multiple
+    of 8). All ranges split at once, so the recursion depth, not the
+    number of leaves, sets the number of calls."""
     big = n > _PW_BLOCK
     if not big.any():
         return _pw_leaf(x, lo, n)
@@ -213,21 +217,38 @@ def _pw(x: np.ndarray, lo: np.ndarray, n: np.ndarray) -> np.ndarray:
     nb = n[big]
     half = nb // 2
     half -= half % 8
-    out[..., big] = _pw(x, lo[big], half) + _pw(x, lo[big] + half, nb - half)
+    halves = _pw(x, np.concatenate([lo[big], lo[big] + half]), np.concatenate([half, nb - half]))
+    m = len(nb)
+    out[..., big] = halves[..., :m] + halves[..., m:]
     return out
+
+
+_BUFSIZE = 8192  # numpy's ufunc buffer: a longer sum adds 8192-element chunks in order
 
 
 def range_sum(x: np.ndarray, lo: np.ndarray, n: np.ndarray) -> np.ndarray:
     """:func:`seg_sum` of the ranges ``x[..., lo:lo + n]`` (n >= 1)."""
-    return _pw(np.asarray(x, dtype=float), np.asarray(lo), np.asarray(n))
+    x, lo, n = np.asarray(x, dtype=float), np.asarray(lo), np.asarray(n)
+    k = (n + _BUFSIZE - 1) // _BUFSIZE
+    if (k <= 1).all():
+        return _pw(x, lo, n)
+    first = np.cumsum(k) - k
+    i = np.arange(k.sum()) - np.repeat(first, k)
+    rng = np.repeat(np.arange(len(n)), k)
+    parts = _pw(x, lo[rng] + i * _BUFSIZE, np.minimum(_BUFSIZE, n[rng] - i * _BUFSIZE))
+    out = parts[..., first]
+    for j in range(1, int(k.max())):
+        out = out + np.where(j < k, parts[..., np.minimum(first + j, len(i) - 1)], 0.0)
+    return out
 
 
 def seg_sum(x: np.ndarray, starts: np.ndarray) -> np.ndarray:
     """Sum of each segment ``x[..., starts[i]:starts[i + 1]]`` in
-    numpy's own pairwise order, so every value is bit-identical to
-    ``ndarray.sum`` of that segment alone (``np.add.reduceat`` is not)
-    and independent of where the segment sits in the batch."""
-    return _pw(np.asarray(x, dtype=float), starts[:-1], np.diff(starts))
+    numpy's own order (pairwise within 8192-element chunks, chunks in
+    order), so every value is bit-identical to ``ndarray.sum`` of that
+    segment alone (``np.add.reduceat`` is not) and independent of where
+    the segment sits in the batch."""
+    return range_sum(x, starts[:-1], np.diff(starts))
 
 
 def NP(starts: np.ndarray) -> Engine:
