@@ -181,7 +181,7 @@ class ConvBatch:
             "seg:id", lambda: np.repeat(np.arange(self.S), self.lens())
         )
 
-    def np(self):
+    def engine(self):
         """The segmented numpy engine over this batch's segments."""
         return self._cached("seg:np", lambda: NP(self.bounds))
 
@@ -270,11 +270,11 @@ class ConvBatch:
         return self._cached("min", lambda: np.minimum.reduceat(self.NT(), self.bounds[:-1], axis=1))
 
     def col_max(self) -> np.ndarray:
-        return self._cached("max", lambda: self.np().max(self.NT()))
+        return self._cached("max", lambda: self.engine().max(self.NT()))
 
     def seg_mean(self) -> np.ndarray:
         """(d, S) column means."""
-        return self._cached("mean", lambda: self.np().sum(self.NT()) / self.lens())
+        return self._cached("mean", lambda: self.engine().sum(self.NT()) / self.lens())
 
     def centered(self) -> np.ndarray:
         """NT minus its segment means."""
@@ -571,7 +571,7 @@ def _distinct(b: ConvBatch) -> np.ndarray:
             prev, cur = s[:, :-1], s[:, 1:]
             new[:, 1:] = (cur != prev) & ~(np.isnan(cur) & np.isnan(prev))
         new[:, b.bounds[:-1]] = True
-        return b.np().sum(new.astype(np.int64)).T if s.shape[1] else np.zeros((b.S, 0))
+        return b.engine().sum(new.astype(np.int64)).T if s.shape[1] else np.zeros((b.S, 0))
 
     return b._cached("distinct", make)
 
@@ -605,7 +605,7 @@ batched("range", "statistical")(
 
 def _var(b: ConvBatch) -> np.ndarray:
     """(d, S) sample variance (ddof=1): NaN for a one-row segment."""
-    return b._cached("var", lambda: b.np().sum(b.centered() ** 2) / (b.lens() - 1))
+    return b._cached("var", lambda: b.engine().sum(b.centered() ** 2) / (b.lens() - 1))
 
 
 batched("sd", "statistical")(lambda b: _cols(np.sqrt(_var(b))))  # 1136-1159
@@ -627,14 +627,14 @@ def _mad(b: ConvBatch) -> Ragged:  # 741-768
 def _g_mean(b: ConvBatch) -> Ragged:
     """statistical.py:584-634: negative -> nan, zero -> 0."""
     mn = b.col_min()
-    gm = np.exp(b.np().sum(np.log(b.NT())) / b.lens())
+    gm = np.exp(b.engine().sum(np.log(b.NT())) / b.lens())
     return _cols(np.where(mn < 0, np.nan, np.where(mn == 0, 0.0, gm)))
 
 
 @batched("h_mean", "statistical")
 def _h_mean(b: ConvBatch) -> Ragged:
     """statistical.py:637-656."""
-    return _cols(b.lens() / b.np().sum(1.0 / b.NT()))
+    return _cols(b.lens() / b.engine().sum(1.0 / b.NT()))
 
 
 @batched("t_mean", "statistical")
@@ -650,7 +650,7 @@ def _moments(b: ConvBatch) -> tuple[np.ndarray, ...]:
 
     def make():
         d0 = b.centered()
-        return tuple(b.np().sum(d0**p) / b.lens() for p in (2, 3, 4))
+        return tuple(b.engine().sum(d0**p) / b.lens() for p in (2, 3, 4))
 
     return b._cached("cmoments", make)
 
